@@ -7,12 +7,14 @@ native "binary wire" between engines is Arrow/Parquet — columnar,
 typed, splittable — so:
   format="binary"    → parquet  (the scalable path; Arrow-backed)
   format="text"      → csv      (COPY text-format parity, incl. NULL marker)
-  format="pg_binary" → actual PGCOPY binary streams (pgwire codec) —
+  format="pg_binary" → actual PGCOPY binary streams —
         byte-compatible with `COPY ... (FORMAT binary)`, one
         self-delimiting stream per Spark partition, exactly the
         reference's one-COPY-per-task parallel unload
-        (postgres_binary_copy.cpp). Use for interchange with a real
-        Postgres; parquet remains the intra-Spark bulk format.
+        (postgres_binary_copy.cpp). Both directions run Arrow batches
+        through the column-wise codec (pgwire_vec) inside mapInArrow.
+        Use for interchange with a real Postgres; parquet remains the
+        intra-Spark bulk format.
 `pg_use_binary_copy` picks the default, same as the reference
 (postgres_extension.cpp:162).
 """
@@ -153,14 +155,17 @@ def _write_pg_binary(df: DataFrame, path: str, mode: str) -> None:
 
     counts = df.mapInArrow(write_part, "idx long, n long").collect()
     if not counts:  # zero-partition frame still yields a valid stream
-        from .pgwire import BinaryCopyWriter
+        from .pgwire_vec import VectorBinaryCopyWriter
         with open(os.path.join(path, "part-00000.pgcopy"), "wb") as fh:
-            BinaryCopyWriter(oids, array_elem, array_ndims).write(fh, [])
+            VectorBinaryCopyWriter(oids).write_batches(fh, [])
 
 
 def _read_pg_binary(spark: SparkSession, path: str, schema) -> DataFrame:
     """Decode a directory of PGCOPY streams in parallel (one task per
-    file). Like Postgres COPY FROM, the binary frame carries no type
+    file): mapInArrow hands each file's bytes to the column-wise
+    decoder (pgwire_vec.VectorBinaryCopyReader), which yields Arrow
+    batches of the target schema — no Python row objects, no RDD.
+    Like Postgres COPY FROM, the binary frame carries no type
     metadata — the target schema is required."""
     if schema is None:
         raise ValueError(
@@ -171,11 +176,13 @@ def _read_pg_binary(spark: SparkSession, path: str, schema) -> DataFrame:
     files = spark.read.format("binaryFile").load(
         os.path.join(path, "*.pgcopy")).select("content")
 
-    def decode_part(rows):
-        import io
-        from postgres_scanner_spark.pgwire import BinaryCopyReader
-        for r in rows:
-            yield from BinaryCopyReader(oids, array_cols).read(
-                io.BytesIO(bytes(r.content)))
+    def decode_part(batches):
+        from postgres_scanner_spark.pgwire_vec import (
+            VectorBinaryCopyReader,
+        )
+        reader = VectorBinaryCopyReader(oids, array_cols, schema)
+        for b in batches:
+            for content in b.column(0):
+                yield from reader.read([content.as_buffer()])
 
-    return spark.createDataFrame(files.rdd.mapPartitions(decode_part), schema)
+    return files.mapInArrow(decode_part, schema)

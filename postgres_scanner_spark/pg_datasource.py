@@ -20,8 +20,14 @@ Parity with the reference's execution strategy:
   rendered into the remote WHERE via pushdown.py — the others are
   returned to Spark to evaluate (same contract as
   postgres_scan_pushdown).
-- read(): yields Arrow record batches (the COPY-binary analog: a
-  columnar wire format, zero row-at-a-time Python).
+- read(): yields Arrow record batches typed to the declared schema.
+  Live PG reads `COPY (...) TO STDOUT (FORMAT binary)` in socket
+  blocks and decodes it column-wise (pgwire_vec
+  .VectorBinaryCopyReader — the reference's postgres_binary_reader
+  .hpp decodes into DuckDB vectors the same way); Python touches a
+  value only in the columns whose wire type has no numpy kernel
+  (numeric, interval, arrays, geometry…). duckdb:// yields DuckDB's
+  own Arrow batches.
 
 Backends:
 - `duckdb:///path/file.db` — a local DuckDB file standing in for the
@@ -35,6 +41,8 @@ Backends:
 
 from __future__ import annotations
 
+import logging
+from functools import partial
 from typing import Iterator
 
 from pyspark.sql import types as T
@@ -50,6 +58,7 @@ from .scan import plan_scan_tasks
 from .settings import SETTINGS
 
 _ROWS_PER_PAGE = 128  # rowid-page emulation for the duckdb backend
+_log = logging.getLogger(__name__)
 
 _DUCK_TO_SPARK = {
     "BOOLEAN": T.BooleanType(), "TINYINT": T.ByteType(),
@@ -342,10 +351,12 @@ class PostgresScanReader(DataSourceReader):
         reference sizes its parallel scan from the same catalog
         number (postgres_scanner.cpp PostgresBindData approx_num_pages
         from the pg_class probe). One cheap driver-side catalog
-        query; any failure degrades to a single-task scan."""
+        query; a database or socket error degrades to a single-task
+        scan and logs why. Anything else is a bug and propagates."""
         from .pgclient import pg_driver
+        dbapi = pg_driver()
         try:
-            with pg_driver().connect(self.dsn) as con, \
+            with dbapi.connect(self.dsn) as con, \
                     con.cursor() as cur:
                 cur.execute(
                     "SELECT (pg_relation_size(c.oid) / "
@@ -356,7 +367,10 @@ class PostgresScanReader(DataSourceReader):
                     (self.pg_schema, self.table))
                 row = cur.fetchone()
                 return int(row[0]) if row else 0
-        except Exception:
+        except (dbapi.Error, OSError) as exc:
+            _log.warning("page probe of %s.%s failed, planning a "
+                         "single-task scan: %s",
+                         self.pg_schema, self.table, exc)
             return 0
 
     def _col_cast(self, f: T.StructField) -> str:
@@ -470,18 +484,11 @@ class PostgresScanReader(DataSourceReader):
             return
         yield from self._read_live_pg(sql)
 
-    def _read_live_pg(self, sql: str):
-        """Live Postgres: stream `COPY (sql) TO STDOUT (FORMAT binary)`
-        and decode the PGCOPY frames with pgwire — the same wire path
-        as the reference (postgres_connection.cpp BeginCopyTo +
-        postgres_binary_reader.hpp). Yields plain tuples; Spark
-        converts per the declared schema. Tested end-to-end against a
-        mocked psycopg feeding recorded PGCOPY chunks
-        (tests/test_datasource.py) plus fixture-level decoder tests
-        (tests/test_pgwire.py) — everything but the TCP socket."""
-        from .pgclient import pg_driver
-        psycopg = pg_driver()
-        from .pgwire import BinaryCopyReader, ChunkStream, spark_field_oid
+    def _wire_layout(self):
+        """(wire OID per column, array columns) of the COPY the scan
+        issues: geometry columns by their probed udt, the rest by the
+        Spark type their server-side cast produces."""
+        from .pgwire import spark_field_oid
         from .types import GEOMETRY_OIDS
         oids = [
             GEOMETRY_OIDS.get(self.pg_udts.get(f.name),
@@ -491,11 +498,29 @@ class PostgresScanReader(DataSourceReader):
             i for i, f in enumerate(self.schema_.fields)
             if isinstance(f.dataType, T.ArrayType)
             and self.pg_udts.get(f.name) not in GEOMETRY_OIDS}
-        reader = BinaryCopyReader(oids, array_cols)
-        with psycopg.connect(self.dsn) as con, con.cursor() as cur:
+        return oids, array_cols
+
+    def _read_live_pg(self, sql: str):
+        """Live Postgres: stream `COPY (sql) TO STDOUT (FORMAT binary)`
+        and decode the PGCOPY frames column-wise into Arrow record
+        batches typed to the declared schema — the same wire path as
+        the reference (postgres_connection.cpp BeginCopyTo +
+        postgres_binary_reader.hpp, which decodes into vectors). The
+        vendored pgclient hands the COPY over in socket blocks with
+        the row offsets taken from the CopyData framing; psycopg's
+        chunk iterator is walked for them. Batches hold at
+        most VectorBinaryCopyReader._CHUNK rows and only one socket
+        block is held at a time. Tested end-to-end against a mocked
+        psycopg feeding ragged PGCOPY chunks (tests/test_datasource
+        .py), fixture-level decoder tests (tests/test_pgwire.py) and
+        a live server (tests/test_live_pg.py)."""
+        from .pgclient import pg_driver
+        from .pgwire_vec import VectorBinaryCopyReader
+        reader = VectorBinaryCopyReader(*self._wire_layout(), self.schema_)
+        with pg_driver().connect(self.dsn) as con, con.cursor() as cur:
             with cur.copy(
                     f"COPY ({sql}) TO STDOUT (FORMAT binary)") as cp:
-                yield from reader.read(ChunkStream(cp))
+                yield from reader.read(cp)
 
 
 from pyspark.sql.datasource import (
@@ -921,13 +946,19 @@ class PostgresScanWriter(DataSourceArrowWriter):
 
     # -- driver-side transaction
     def _decode_spool(self, message):
-        import io
+        """One spool as an Arrow RecordBatchReader of the write
+        schema, decoded column-wise as it is consumed."""
+        import pyarrow as pa
         from .copyio import _pg_binary_layout
-        from .pgwire import BinaryCopyReader
+        from .pgwire_vec import VectorBinaryCopyReader
         oids, _, _, array_cols = _pg_binary_layout(self.schema_)
-        reader = BinaryCopyReader(oids, array_cols)
-        with open(message.path, "rb") as fh:
-            yield from reader.read(io.BytesIO(fh.read()))
+        reader = VectorBinaryCopyReader(oids, array_cols, self.schema_)
+
+        def batches():
+            with open(message.path, "rb") as fh:
+                yield from reader.read(iter(partial(fh.read, 1 << 20),
+                                            b""))
+        return pa.RecordBatchReader.from_batches(reader.schema, batches())
 
     def commit(self, messages) -> None:
         import shutil
@@ -958,10 +989,9 @@ class PostgresScanWriter(DataSourceArrowWriter):
 
     def _commit_duckdb(self, messages) -> None:
         import duckdb
-        import pandas as pd
         fields = self.schema_.fields
-        # explicit column types + casted insert: pandas would register
-        # ns-precision timestamps / object columns that poison the
+        # explicit column types + casted insert: the registered Arrow
+        # types (utc timestamps, nested lists) must not decide the
         # table's declared types for every later reader
         cols = ", ".join(
             f'"{f.name}" {self._duck_sql_type(f.dataType)}'
@@ -980,12 +1010,10 @@ class PostgresScanWriter(DataSourceArrowWriter):
                 con.execute(f'DROP TABLE IF EXISTS "{self.table}"')
             con.execute(
                 f'CREATE TABLE IF NOT EXISTS "{self.table}" ({cols})')
-            # one spool at a time inside the SAME transaction: peak
-            # driver memory is one partition's rows, not the dataset
+            # one spool at a time inside the SAME transaction, streamed
+            # batch by batch: peak memory is one decoded batch
             for m in messages:
-                pdf = pd.DataFrame(list(self._decode_spool(m)),
-                                   columns=[f.name for f in fields])
-                con.register("_pg_spark_load", pdf)
+                con.register("_pg_spark_load", self._decode_spool(m))
                 # insert BY NAME so an existing table with a different
                 # column order maps correctly in append mode
                 con.execute(f'INSERT INTO "{self.table}" ({names}) '

@@ -23,7 +23,9 @@ this module implements just the message framing those paths need:
   test/sql/scanner/ssl.test — sslmode in the DSN)
 - simple query ('Q') with text-format result decoding by OID
 - COPY IN/OUT sub-protocol ('G'/'H'/'d'/'c'/'f') — payload bytes are
-  passed through untouched; pgwire does binary encode/decode
+  passed through untouched; pgwire_vec does binary encode/decode.
+  COPY OUT is also readable in socket blocks (`Copy.blocks`), whose
+  CopyData spans are the row offsets the column-wise decoder needs
 - transactions (BEGIN/COMMIT/ROLLBACK via the same simple protocol,
   tracked by ReadyForQuery's status byte)
 - DECLARE/FETCH named cursors for the streaming reader's chunked
@@ -59,6 +61,8 @@ from datetime import date, datetime, time, timezone
 from decimal import Decimal
 
 from .connection import parse_dsn
+
+_U32 = struct.Struct("!I").unpack_from
 
 
 class Error(Exception):
@@ -494,25 +498,33 @@ class _Proto:
 
     def __init__(self, sock: socket.socket):
         self.sock = sock
-        self._rbuf = b""
+        # received bytes; those before _rpos are consumed. The consumed
+        # prefix is dropped only when a refill is due, so a message
+        # costs O(its length), not O(bytes buffered behind it)
+        self._rbuf = bytearray()
+        self._rpos = 0
         self.tx_status = "I"        # ReadyForQuery: I / T / E
         self.notices: list[dict] = []
 
     # -- raw framing
     def _recv_exact(self, n: int) -> bytes:
-        while len(self._rbuf) < n:
-            chunk = self.sock.recv(65536)
+        buf, pos = self._rbuf, self._rpos
+        while len(buf) - pos < n:
+            chunk = self.sock.recv(max(65536, n - len(buf) + pos))
             if not chunk:
                 raise ConnectionClosed(
                     {"M": "server closed the connection"})
-            self._rbuf += chunk
-        out, self._rbuf = self._rbuf[:n], self._rbuf[n:]
-        return out
+            if pos:
+                del buf[:pos]
+                pos = 0
+            buf += chunk
+        self._rpos = pos + n
+        return bytes(buf[pos:pos + n])
 
     def read_msg(self) -> tuple[str, bytes]:
         hdr = self._recv_exact(5)
         tag = chr(hdr[0])
-        (length,) = struct.unpack("!I", hdr[1:5])
+        (length,) = _U32(hdr, 1)
         body = self._recv_exact(length - 4)
         if tag == "E":
             raise Error(_err_fields(body))
@@ -520,6 +532,63 @@ class _Proto:
             self.notices.append(_err_fields(body))
             return self.read_msg()
         return tag, body
+
+    def read_copy_block(self, size: int):
+        """COPY OUT in one socket block: receive into a fresh
+        bytearray (recv_into) until it is full or CopyDone arrives,
+        walking the message headers once. Returns (block, starts,
+        ends, done): the payload spans of the block's CopyData
+        messages — one row each, the server sends a message per row.
+        Bytes past the last whole message stay buffered for the next
+        call (or read_msg once done); the block is the caller's."""
+        tail = len(self._rbuf) - self._rpos
+        block = bytearray(max(size, 2 * tail))
+        block[:tail] = self._rbuf[self._rpos:]
+        self._rbuf, self._rpos = bytearray(), 0
+        starts: list[int] = []
+        ends: list[int] = []
+        pos, end, done = 0, tail, False
+        while True:
+            while pos + 5 <= end:
+                tag = block[pos]
+                (length,) = _U32(block, pos + 1)
+                nxt = pos + 1 + length
+                if nxt > end:
+                    break
+                if tag == 0x64:                     # 'd' CopyData
+                    starts.append(pos + 5)
+                    ends.append(nxt)
+                elif tag == 0x63:                   # 'c' CopyDone
+                    done = True
+                elif tag == 0x45:                   # 'E'
+                    self._rbuf[:] = block[nxt:end]
+                    raise Error(_err_fields(bytes(block[pos + 5:nxt])))
+                elif tag == 0x4E:                   # 'N'
+                    self.notices.append(
+                        _err_fields(bytes(block[pos + 5:nxt])))
+                elif tag != 0x53:                   # 'S' is harmless
+                    # keep the message and what follows buffered, so
+                    # the caller's drain to ReadyForQuery stays framed
+                    self._rbuf[:] = block[pos:end]
+                    raise Error({"M": f"unexpected {chr(tag)!r} "
+                                      f"during COPY OUT"})
+                pos = nxt
+                if done:
+                    break
+            if done or (starts and end == len(block)):
+                break
+            if end == len(block):   # full, yet no row: widen for the
+                need = 1 + _U32(block, pos + 1)[0] if end - pos >= 5 \
+                    else 5            # partial message at pos
+                block.extend(bytes(max(need - (end - pos), size)))
+            with memoryview(block) as mv:
+                got = self.sock.recv_into(mv[end:])
+            if not got:
+                raise ConnectionClosed(
+                    {"M": "server closed the connection"})
+            end += got
+        self._rbuf[:] = block[pos:end]
+        return block, starts, ends, done
 
     def send(self, tag: str, body: bytes = b"") -> None:
         try:
@@ -734,13 +803,14 @@ class Copy:
                 proto.tx_status = chr(body[0])
                 raise Error({"M": f"not a COPY statement: {sql!r}"})
 
-    def _read_drain(self) -> tuple[str, bytes]:
-        """read_msg, but on a server ErrorResponse consume through the
-        pending ReadyForQuery before re-raising — otherwise the stale
-        'Z' stays buffered and the NEXT command on this connection
-        (e.g. the context-manager rollback) desyncs the protocol."""
+    def _read_drain(self, read=None, *args):
+        """read_msg (or `read(*args)`), but on a server ErrorResponse
+        consume through the pending ReadyForQuery before re-raising —
+        otherwise the stale 'Z' stays buffered and the NEXT command on
+        this connection (e.g. the context-manager rollback) desyncs
+        the protocol."""
         try:
-            return self._p.read_msg()
+            return (read or self._p.read_msg)(*args)
         except ConnectionClosed:
             raise
         except Error:
@@ -765,6 +835,20 @@ class Copy:
             else:
                 raise Error({"M": f"unexpected {tag!r} during COPY OUT"})
         self._finish_out()
+
+    def blocks(self, size: int = 1 << 21):
+        """COPY TO STDOUT in socket blocks of about `size` bytes:
+        yields (block, row starts, row ends) per block — see
+        _Proto.read_copy_block. The bulk counterpart of iterating
+        message by message; VectorBinaryCopyReader decodes it."""
+        assert self._mode == "out"
+        while not self._done:
+            block, starts, ends, done = self._read_drain(
+                self._p.read_copy_block, size)
+            if done:
+                self._finish_out()
+            if starts:
+                yield block, starts, ends
 
     def read(self) -> bytes:
         """One CopyData chunk, b'' at end (psycopg3 Copy.read)."""

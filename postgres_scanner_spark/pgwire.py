@@ -13,11 +13,11 @@ type's binary *send* representation, then an int16 -1 trailer. All
 integers are network byte order.
 
 This module is pure Python + struct so it is unit-testable against
-fixture bytes with no server; pg_datasource uses it to decode live
-COPY streams (when psycopg is importable) and copyio uses it for
-format="pg_binary" bulk load/unload where every Spark partition
-reads/writes one self-delimiting PGCOPY stream — the same
-one-stream-per-task parallelism the reference uses.
+fixture bytes with no server. Its per-row BinaryCopyWriter/
+BinaryCopyReader are the wire CONTRACT and the test oracle; the
+runtime paths (the live scan, format="pg_binary" COPY, the DataSource
+writer) run pgwire_vec's column-wise codec, which calls this module's
+per-field codec only for the columns without a numpy kernel.
 """
 
 from __future__ import annotations
@@ -403,7 +403,9 @@ def decode_array(b: bytes) -> list:
 
 class BinaryCopyReader:
     """Decode one PGCOPY stream into tuples (reference:
-    postgres_binary_reader.hpp header/tuple/trailer loop)."""
+    postgres_binary_reader.hpp header/tuple/trailer loop). The test
+    oracle of pgwire_vec.VectorBinaryCopyReader, which runtime paths
+    use."""
 
     def __init__(self, oids: Sequence[int],
                  array_cols: set[int] | None = None):

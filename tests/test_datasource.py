@@ -195,7 +195,6 @@ def test_geometry_columns_decode_by_udt_not_spark_type():
     from postgres_scanner_spark import types as pgt
     from postgres_scanner_spark.pg_datasource import PostgresScanReader
     from postgres_scanner_spark.pgwire import BinaryCopyReader
-    from postgres_scanner_spark.types import GEOMETRY_OIDS
 
     schema = T.StructType([
         T.StructField("id", T.LongType()),
@@ -214,14 +213,8 @@ def test_geometry_columns_decode_by_udt_not_spark_type():
     assert r._col_cast(schema["b"]) == ""
     assert r._col_cast(schema["fs"]) == "::float8[]"
     # the OID/array-col derivation _read_live_pg performs
-    from postgres_scanner_spark.pgwire import spark_field_oid
-    oids = [GEOMETRY_OIDS.get(udts.get(f.name),
-                              spark_field_oid(f.dataType))
-            for f in schema.fields]
+    oids, array_cols = r._wire_layout()
     assert oids == [pgt.INT8OID, pgt.POINTOID, pgt.BOXOID, pgt.TEXTOID]
-    array_cols = {i for i, f in enumerate(schema.fields)
-                  if isinstance(f.dataType, T.ArrayType)
-                  and udts.get(f.name) not in GEOMETRY_OIDS}
     assert array_cols == {3}
     # and the wire decode of a full row in those native formats
     from tests.test_pgwire import _field, _header, TRAILER
@@ -244,9 +237,9 @@ def test_geometry_columns_decode_by_udt_not_spark_type():
 def test_read_live_pg_with_mocked_psycopg(monkeypatch):
     """Drive the ACTUAL live-scan method end-to-end: a fake psycopg
     module whose cursor.copy() yields recorded PGCOPY chunks (split at
-    awkward boundaries) — verifies the COPY SQL issued, the
-    ChunkStream reassembly, and the full frame→tuple decode, i.e.
-    everything except the TCP socket (reference:
+    awkward boundaries) — verifies the COPY SQL issued, the unframed
+    length-word walk across chunks, and the full frame→Arrow decode,
+    i.e. everything except the TCP socket (reference:
     postgres_connection.cpp BeginCopyTo + postgres_binary_reader.hpp)."""
     import struct
     import sys
@@ -265,15 +258,22 @@ def test_read_live_pg_with_mocked_psycopg(monkeypatch):
         + _field(struct.pack("!d", -2.25))
     )
     stream = _header() + rows + TRAILER
-    # ragged chunking exercises ChunkStream reassembly across frames
+    # ragged chunking exercises the walk's reassembly across frames
     chunks = [stream[i:i + 7] for i in range(0, len(stream), 7)]
     issued = []
 
     class _Copy:
+        """psycopg 3's Copy: iterable over chunks, and a read() that
+        takes no size (so it is not a file object)."""
         def __init__(self, sql):
             issued.append(sql)
+            self._it = iter(chunks)
+        def read(self):
+            return next(self._it, b"")
+        def __iter__(self):
+            return iter(self.read, b"")
         def __enter__(self):
-            return iter(chunks)
+            return self
         def __exit__(self, *a):
             return False
 
@@ -305,7 +305,10 @@ def test_read_live_pg_with_mocked_psycopg(monkeypatch):
     r = PostgresScanReader(schema, {
         "dsn": "host=fake dbname=db", "table": "t"})
     out = list(r._read_live_pg('SELECT "id", "name", "v" FROM "public"."t"'))
-    assert out == [(1, "alice", 1.5), (2, None, -2.25)]
+    from pyspark.sql.pandas.types import to_arrow_schema
+    assert all(b.schema == to_arrow_schema(schema) for b in out)
+    assert [tuple(row.values()) for b in out for row in b.to_pylist()] \
+        == [(1, "alice", 1.5), (2, None, -2.25)]
     assert issued == ['COPY (SELECT "id", "name", "v" FROM "public"."t") '
                       'TO STDOUT (FORMAT binary)']
 
@@ -945,3 +948,44 @@ def test_simple_stream_reader_batch_cap():
         off = off2
     assert [t[0] for t in seen] == list(range(55))
     assert off == {"last_key": 54}
+
+
+def _probe_reader(monkeypatch, connect):
+    """A live-PG reader whose client module's connect() is
+    `connect`."""
+    import types as pytypes
+    from pyspark.sql import types as T
+    from postgres_scanner_spark import pgclient
+    from postgres_scanner_spark.pg_datasource import PostgresScanReader
+    fake = pytypes.SimpleNamespace(Error=pgclient.Error, connect=connect)
+    monkeypatch.setattr(pgclient, "pg_driver", lambda: fake)
+    return PostgresScanReader(
+        T.StructType([T.StructField("id", T.IntegerType())]),
+        {"dsn": "host=fake dbname=db", "table": "t"})
+
+
+def test_page_probe_db_error_plans_one_task_and_logs(monkeypatch, caplog):
+    """A database error in the pg_relation_size probe degrades to a
+    single-task scan — and says so in the log, not silently."""
+    from postgres_scanner_spark import pgclient
+
+    def refuse(dsn):
+        raise pgclient.Error({"M": "permission denied for table t"})
+    r = _probe_reader(monkeypatch, refuse)
+    with caplog.at_level("WARNING",
+                         logger="postgres_scanner_spark.pg_datasource"):
+        tasks = r.partitions()
+    assert len(tasks) == 1 and "ctid" not in tasks[0].sql
+    assert any("permission denied" in rec.getMessage()
+               and "single-task" in rec.getMessage()
+               for rec in caplog.records)
+
+
+def test_page_probe_bug_propagates(monkeypatch):
+    """Anything but a database or socket error is a bug: it propagates
+    instead of quietly serializing the scan."""
+    def broken(dsn):
+        raise TypeError("unexpected keyword")
+    r = _probe_reader(monkeypatch, broken)
+    with pytest.raises(TypeError, match="unexpected keyword"):
+        r.partitions()

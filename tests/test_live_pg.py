@@ -47,12 +47,12 @@ def _have_server() -> bool:
     return True
 
 
-# slow: live-PG connector surface = verify-window tail (r13)
-pytestmark = [
-    pytest.mark.slow,
-    pytest.mark.skipif(
-        not _have_server(), reason="no postgres server binaries in PATH"),
-]
+# The scan-path tests (typed scan, parallel ctid scan, pushdown,
+# query-mode probe, COPY OUT wire interop, mid-scan backend kill) run
+# in the default tier: they pin the live Arrow-native read path. The
+# rest of the connector surface is marked `slow` test by test.
+pytestmark = pytest.mark.skipif(
+    not _have_server(), reason="no postgres server binaries in PATH")
 
 
 @pytest.fixture(scope="module")
@@ -115,6 +115,7 @@ def _scan(spark, dsn, table, **opts):
 
 
 # ------------------------------------------------------- wire client
+@pytest.mark.slow
 def test_pgclient_roundtrip(pg):
     """The vendored client against a real backend: typed decode,
     parameters, transactions, errors."""
@@ -147,6 +148,7 @@ def test_pgclient_roundtrip(pg):
     assert cur.fetchone() == (42,)
 
 
+@pytest.mark.slow
 def test_pgclient_transactions(pg_server):
     from postgres_scanner_spark import pgclient
     with pgclient.connect(pg_server) as con:
@@ -162,6 +164,7 @@ def test_pgclient_transactions(pg_server):
     con.close()
 
 
+@pytest.mark.slow
 def test_pgclient_named_cursor(pg):
     """Server-side cursor drains in chunks (the streaming reader's
     fetch path)."""
@@ -213,8 +216,21 @@ def test_live_attach_types_scan(registered, pg, pg_server):
     assert list(r1.ta) == ["x", "y"]
     r2 = rows[2]
     assert r2.b is False and r2.i2 is None and r2.ia is None
+    # the scan's column-wise decode of this very COPY, framed by the
+    # server's CopyData messages, is Arrow-identical to the scalar
+    # reader + PySpark's converters on every type family above
+    from postgres_scanner_spark.pg_datasource import PostgresScanReader
+    from tests.test_pgwire import _oracle, assert_arrow_identical
+    reader = PostgresScanReader(df.schema, {"dsn": pg_server,
+                                            "table": "all_types"})
+    sql = reader._sql("")
+    with cur.copy(f"COPY ({sql}) TO STDOUT (FORMAT binary)") as cp:
+        data = b"".join(cp)
+    assert_arrow_identical(reader._read_live_pg(sql), _oracle(
+        *reader._wire_layout(), df.schema, data))
 
 
+@pytest.mark.slow
 def test_live_schema_probe_catalog(registered, pg, pg_server):
     """The information_schema/pg_attribute probe types the scan
     without an explicit .schema() (reference: postgres_scanner.cpp
@@ -294,6 +310,7 @@ def test_live_filter_pushdown(registered, pg, pg_server):
 
 
 # -------------------------------------- binary COPY write (S7/S26)
+@pytest.mark.slow
 def test_live_binary_copy_write_roundtrip(registered, pg, pg_server):
     """reference: test/sql/misc/postgres_binary.test — Spark DF →
     COPY FROM STDIN (FORMAT binary) → read back through the scan."""
@@ -334,6 +351,7 @@ def test_live_binary_copy_write_roundtrip(registered, pg, pg_server):
     assert _scan(spark, pg_server, "bin_rt").count() == 3
 
 
+@pytest.mark.slow
 def test_live_overwrite_truncate_preserves_index(registered, pg,
                                                  pg_server):
     """Overwrite with an identical column layout TRUNCATEs (indexes
@@ -360,6 +378,7 @@ def test_live_overwrite_truncate_preserves_index(registered, pg,
     assert cur.fetchall() == []                            # DROP path
 
 
+@pytest.mark.slow
 def test_live_overwrite_datetime_typmod_drops(registered, pg,
                                               pg_server):
     """A surviving timestamp(0) column must NOT 'match' an incoming
@@ -394,6 +413,7 @@ def test_live_overwrite_datetime_typmod_drops(registered, pg,
 
 
 # --------------------------------------- streaming source (S29/S30)
+@pytest.mark.slow
 def test_live_partitioned_stream_read(registered, pg, pg_server,
                                       tmp_path):
     """S29 against a real server: the partitioned executor-side
@@ -428,6 +448,7 @@ def test_live_partitioned_stream_read(registered, pg, pg_server,
     assert out.filter("id > 10").count() == 5
 
 
+@pytest.mark.slow
 def test_live_stream_write_quadrant(registered, pg, pg_server,
                                     tmp_path):
     """S30 against a real server — the full live quadrant: the
@@ -489,8 +510,21 @@ def test_live_copy_out_wire_interop(pg):
     assert len(rows) == 50
     assert rows[0] == (1, 1.5, "r1")
     assert rows[-1] == (50, 75.0, "r50")
+    # and the column-wise reader, framed by the server's messages
+    from postgres_scanner_spark.pgwire_vec import VectorBinaryCopyReader
+    schema = T.StructType([T.StructField("id", T.IntegerType()),
+                           T.StructField("x", T.DoubleType()),
+                           T.StructField("s", T.StringType())])
+    with cur.copy("COPY (SELECT id::int4, x::float8, s::text "
+                  "FROM wire_t ORDER BY id) TO STDOUT "
+                  "(FORMAT binary)") as cp:
+        got = [tuple(r.values()) for b in VectorBinaryCopyReader(
+            [pgt.INT4OID, pgt.FLOAT8OID, pgt.TEXTOID], set(), schema
+        ).read(cp) for r in b.to_pylist()]
+    assert got == rows
 
 
+@pytest.mark.slow
 def test_pgclient_literal_fuzz(pg):
     """Property test on the client's literal escaping + text-protocol
     decode against a REAL backend: arbitrary (NUL/surrogate-free)
@@ -521,6 +555,7 @@ def test_pgclient_literal_fuzz(pg):
 
 
 # ------------------------------- failure-mode matrix under load (r10)
+@pytest.mark.slow
 def test_live_concurrent_partitioned_scans(registered, pg, pg_server):
     """4 threads each run a multi-partition ctid scan of the same
     table concurrently (the gate's threaded-worker shape): every
@@ -554,6 +589,7 @@ def test_live_concurrent_partitioned_scans(registered, pg, pg_server):
     assert results == [want] * 4
 
 
+@pytest.mark.slow
 def test_live_mid_copy_backend_kill_error_surface(pg_server):
     """pg_terminate_backend mid-COPY: the wire client must surface
     the server's 57P01 ErrorResponse (or the ensuing close) as the
