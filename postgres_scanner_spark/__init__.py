@@ -42,13 +42,20 @@ def get_spark(app: str = "postgres_scanner_spark", *, cpus: str | int = "*",
     # Python workers must import this package regardless of the
     # driver's cwd (the external driver loads __spark_entry__ by path
     # from elsewhere): export the package parent on PYTHONPATH before
-    # the JVM launches so every spawned worker inherits it
+    # the JVM launches so every spawned worker inherits it. The worker
+    # site hook goes first: its sitecustomize shadows any other, and
+    # runs it; see _worker_site/sitecustomize.py
     import os
     from pathlib import Path
-    parent = str(Path(__file__).resolve().parent.parent)
+    here = Path(__file__).resolve().parent
+    site, parent = str(here / "_worker_site"), str(here.parent)
     pp = os.environ.get("PYTHONPATH", "")
-    if parent not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (pp + os.pathsep if pp else "") + parent
+    pp = pp.split(os.pathsep) if pp else []
+    if parent not in pp:
+        pp.append(parent)
+    if site not in pp:
+        pp.insert(0, site)
+    os.environ["PYTHONPATH"] = os.pathsep.join(pp)
     sess = (
         SparkSession.builder.master(f"local[{cpus}]").appName(app)
         .config("spark.sql.session.timeZone", "UTC")

@@ -449,7 +449,7 @@ class PostgresScanReader(DataSourceReader):
         if preds:
             sql += " WHERE " + " AND ".join(preds)
         if SETTINGS.pg_debug_show_queries:
-            print(sql)
+            _log.info("pg scan %s", sql)
         return sql
 
     # -- execution: Arrow batches (the COPY-binary analog)
@@ -555,10 +555,13 @@ class _ProbeConn:
             self._con = duckdb.connect(dsn[len("duckdb://"):],
                                        read_only=True)
             self._duck = True
+            self._errors = (duckdb.Error, OSError)
         else:
             from .pgclient import pg_driver
-            self._con = pg_driver().connect(dsn)
+            dbapi = pg_driver()
+            self._con = dbapi.connect(dsn)
             self._duck = False
+            self._errors = (dbapi.Error, OSError)
 
     def exec(self, sql: str):
         if self._duck:
@@ -573,8 +576,8 @@ class _ProbeConn:
     def __exit__(self, *exc):
         try:
             self._con.close()
-        except Exception:
-            pass
+        except self._errors as err:  # the probes' results are already in hand
+            _log.warning("closing probe connection failed: %s", err)
         return False
 
 

@@ -15,6 +15,7 @@ replaces ctid ranges (parquet row groups are the moral equivalent).
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
 from typing import Sequence
 
@@ -23,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from .connection import ConnectionInfo, parse_dsn
 from .pushdown import render_select, transform_filters
 from .settings import SETTINGS
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -139,12 +142,13 @@ def build_jdbc_options(
             predicates = [f"{p} AND ({cond})" for p in predicates]
         props["dbtable"] = f'"{schema}"."{table}"'
         if SETTINGS.pg_debug_show_queries:
-            print(props["dbtable"], predicates[0])
+            _log.info("pg scan %s WHERE %s (+%d more tasks)",
+                      props["dbtable"], predicates[0], len(predicates) - 1)
         return info.jdbc_url, props, predicates
     inner = render_select(table, columns, filters, schema=schema)
     props["dbtable"] = f"({inner}) AS scan_subq"
     if SETTINGS.pg_debug_show_queries:
-        print(inner)
+        _log.info("pg scan %s", inner)
     return info.jdbc_url, props, predicates
 
 

@@ -50,12 +50,10 @@ def ensure_session_defaults(spark: SparkSession) -> None:
     """Pin the conf the engine's determinism contract needs, even when
     the caller built its own SparkSession (the external driver does):
     UTC session time — timestamp literals/epochs then match the
-    DuckDB oracle's naive-timestamp semantics on every query."""
-    try:
-        if spark.conf.get("spark.sql.session.timeZone") != "UTC":
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:
-        pass
+    DuckDB oracle's naive-timestamp semantics on every query. A
+    stopped session raises here, as it would on the next read."""
+    if spark.conf.get("spark.sql.session.timeZone") != "UTC":
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 def _cache_max_bytes() -> int:

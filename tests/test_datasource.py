@@ -989,3 +989,49 @@ def test_page_probe_bug_propagates(monkeypatch):
     r = _probe_reader(monkeypatch, broken)
     with pytest.raises(TypeError, match="unexpected keyword"):
         r.partitions()
+
+
+def test_debug_show_queries_logs_reader_sql(monkeypatch, caplog):
+    from postgres_scanner_spark.settings import SETTINGS
+    r = _probe_reader(monkeypatch, None)
+    SETTINGS.set("pg_debug_show_queries", True)
+    try:
+        with caplog.at_level("INFO",
+                             logger="postgres_scanner_spark.pg_datasource"):
+            sql = r._sql("id > 3")
+    finally:
+        SETTINGS.set("pg_debug_show_queries", False)
+    assert [rec.getMessage() for rec in caplog.records] == [f"pg scan {sql}"]
+    assert sql.endswith("WHERE id > 3")
+
+
+def _probe_conn(monkeypatch, close):
+    import types as pytypes
+    from postgres_scanner_spark import pgclient
+    from postgres_scanner_spark.pg_datasource import _ProbeConn
+    con = pytypes.SimpleNamespace(close=close)
+    fake = pytypes.SimpleNamespace(Error=pgclient.Error,
+                                   connect=lambda dsn: con)
+    monkeypatch.setattr(pgclient, "pg_driver", lambda: fake)
+    return _ProbeConn("host=fake dbname=db")
+
+
+def test_probe_conn_close_db_error_is_logged(monkeypatch, caplog):
+    from postgres_scanner_spark import pgclient
+
+    def close():
+        raise pgclient.Error({"M": "terminating connection"})
+    with caplog.at_level("WARNING",
+                         logger="postgres_scanner_spark.pg_datasource"):
+        with _probe_conn(monkeypatch, close):
+            pass
+    assert any("terminating connection" in rec.getMessage()
+               for rec in caplog.records)
+
+
+def test_probe_conn_close_bug_propagates(monkeypatch):
+    def close():
+        raise TypeError("close() takes no arguments")
+    with pytest.raises(TypeError, match="takes no arguments"):
+        with _probe_conn(monkeypatch, close):
+            pass

@@ -204,3 +204,18 @@ def test_scratch_persist_lifecycle():
 
     runtime.scratch_persist(_Dead())
     assert runtime.release_scratch() == 1      # swallows, still clears
+
+
+def test_debug_show_queries_logs_pushed_sql(caplog):
+    SETTINGS.set("pg_debug_show_queries", True)
+    try:
+        with caplog.at_level("INFO", logger="postgres_scanner_spark.scan"):
+            build_jdbc_options("host=h dbname=d", "t", columns=["x"],
+                               filters=[("x", ">", 1)])
+            build_jdbc_options("host=h dbname=d", "t", columns=["x"],
+                               filters=[("x", ">", 1)], approx_pages=5000)
+    finally:
+        SETTINGS.set("pg_debug_show_queries", False)
+    single, ctid = (r.getMessage() for r in caplog.records)
+    assert single.startswith("pg scan SELECT") and '"x" > 1' in single
+    assert "ctid BETWEEN" in ctid and "+4 more tasks" in ctid
