@@ -4,7 +4,8 @@ data-processing capabilities of duckdb/postgres_scanner (reference at
 
 Public API mirrors the reference's function surface:
   attach / detach            (ATTACH ... TYPE postgres)
-  scan / jdbc_scan           (postgres_scan)
+  PostgresScanDataSource     (postgres_scan: format("postgres_scan"))
+  plan_scan_tasks            (ctid page-range task planning)
   pg_query / pg_execute      (postgres_query / postgres_execute)
   execute_statement          (session SQL: ATTACH / USE / DETACH / DML)
   copy_to / copy_from        (COPY ... incl. binary format)
@@ -20,16 +21,16 @@ from .catalog import AttachedDatabase, Catalog
 from .connection import ConnectionInfo, parse_dsn
 from .copyio import copy_from, copy_to
 from .queryfn import execute_statement, pg_execute, pg_query
-from .scan import build_jdbc_options, jdbc_scan, parquet_scan, plan_scan_tasks
+from .scan import parquet_scan, plan_scan_tasks
 from .settings import SETTINGS, Settings
 from .pg_datasource import PostgresScanDataSource
 from .storage import ManagedStore
 
 __all__ = [
     "AttachedDatabase", "Catalog", "ConnectionInfo", "ManagedStore",
-    "PostgresScanDataSource", "SETTINGS", "Settings", "build_jdbc_options",
+    "PostgresScanDataSource", "SETTINGS", "Settings",
     "copy_from", "copy_to", "execute_statement",
-    "get_spark", "jdbc_scan", "parse_dsn", "parquet_scan", "pg_execute",
+    "get_spark", "parse_dsn", "parquet_scan", "pg_execute",
     "pg_query", "plan_scan_tasks",
 ]
 

@@ -6,22 +6,34 @@ queryable relations, supports listing, size introspection, a schema
 cache with pg_clear_cache, and (through storage.py) writable DML.
 
 Spark-first: an attached source registers each table as a temp view
-`{alias}_{table}` and in `spark.sql` via those names. Two backends:
-  - "parquet": a directory of {table}.parquet (the test container's
-    stand-in for a database) or a managed store dir (storage.py).
-  - "jdbc": a live Postgres via scan.jdbc_scan (not reachable in the
-    test container; construction logic unit-tested).
+`{alias}_{table}` and in `spark.sql` via those names. Backends:
+  - "parquet": a directory of {table}.parquet (a database stand-in).
+  - "store": a ManagedStore directory (storage.py), writable.
+  - "duckdb" (`duckdb://file`) and "postgres" (a libpq DSN, a
+    `postgres:` prefix or a `secret:` name): read through the
+    `postgres_scan` DataSource (pg_datasource.py); only the DSN
+    differs. A postgres attach is lazy: no connection is opened and
+    no views are registered until a table is read.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from .connection import ConnectionInfo, parse_dsn, resolve_secret
-from .scan import jdbc_scan, parquet_scan
+from .scan import parquet_scan
+
+_log = logging.getLogger(__name__)
+
+# what reading another attach's table can raise when that table is
+# gone or unreadable: a missing attach or store entry, a missing file,
+# or Spark's analysis error for a missing path or remote table
+_LOOKUP_ERRORS = (KeyError, ValueError, OSError, AnalysisException)
 
 
 def _is_store_dir(path: str) -> bool:
@@ -45,9 +57,9 @@ def _is_store_dir(path: str) -> bool:
 class AttachedDatabase:
     alias: str
     source: str                   # dsn or directory path
-    backend: str                  # "parquet" | "store" | "duckdb" | "jdbc"
+    backend: str                  # "parquet" | "store" | "duckdb" | "postgres"
     read_only: bool = False
-    conn: ConnectionInfo | None = None
+    conn: ConnectionInfo | None = None   # backend == "postgres"
     store: object = None          # ManagedStore when backend == "store"
     schema: str | None = None     # attach restricted to one schema
     _table_cache: dict[str, DataFrame] = field(default_factory=dict)
@@ -69,23 +81,25 @@ class AttachedDatabase:
                 for f in os.listdir(self.source)
                 if f.endswith(".parquet")
             )
-        if self.backend == "duckdb":
-            import duckdb
-            con = duckdb.connect(self.source[len("duckdb://"):],
-                                 read_only=True)
-            if self.schema is not None:
-                # source_schema restriction (reference: bug63.test
-                # postgres_attach(..., source_schema='some_schema'))
-                names = [r[0] for r in con.execute(
-                    "SELECT table_name FROM information_schema.tables "
-                    "WHERE table_schema = ? ORDER BY table_name",
-                    [self.schema]).fetchall()]
-            else:
-                names = [r[0] for r in
-                         con.execute("SHOW TABLES").fetchall()]
-            con.close()
-            return sorted(names)
-        raise NotImplementedError("jdbc catalog listing needs a live server")
+        # duckdb:// or live Postgres: the tables of the attached schema
+        # (reference: postgres_table_set.cpp LoadEntries), restricted
+        # to `schema` when given (bug63.test source_schema)
+        from .pg_datasource import _ProbeConn
+        from .pushdown import quote_literal
+        default = "main" if self.backend == "duckdb" else "public"
+        with _ProbeConn(self.dsn) as pc:
+            rows = pc.exec(
+                "SELECT table_name FROM information_schema.tables "
+                "WHERE table_catalog = current_database() AND "
+                f"table_schema = {quote_literal(self.schema or default)}")
+        return sorted(r[0] for r in rows)
+
+    @property
+    def dsn(self) -> str:
+        """What the `postgres_scan` DataSource connects with: the
+        duckdb:// source, or a postgres attach's libpq DSN rendered
+        from `conn` (so a secret or `postgres:` prefix never leaks)."""
+        return self.conn.dsn if self.conn is not None else self.source
 
 
 class Catalog:
@@ -116,13 +130,10 @@ class Catalog:
         if source.startswith("secret:"):
             # credential-free attach (reference: attach_secret.test):
             # the DSN comes from the secret registry, never the string
-            info = resolve_secret(source[len("secret:"):])
-            db = AttachedDatabase(alias, source, "jdbc", read_only,
-                                  conn=info)
-            db.schema = schema
-            self.attached[alias] = db
-            return db
-        if os.path.isdir(source) and _is_store_dir(source):
+            db = AttachedDatabase(
+                alias, source, "postgres", read_only,
+                conn=resolve_secret(source[len("secret:"):]))
+        elif os.path.isdir(source) and _is_store_dir(source):
             # a ManagedStore directory: writable attached database
             from .storage import ManagedStore
             db = AttachedDatabase(alias, source, "store", read_only)
@@ -133,11 +144,6 @@ class Catalog:
             # live-database stand-in: reads go through the postgres_scan
             # DataSource connector (partitioned scan + pushdown)
             db = AttachedDatabase(alias, source, "duckdb", read_only)
-            from .pg_datasource import PostgresScanDataSource
-            try:
-                self.spark.dataSource.register(PostgresScanDataSource)
-            except Exception:
-                pass  # already registered
         else:
             if os.path.sep in source and "=" not in source \
                     and "://" not in source:
@@ -151,9 +157,12 @@ class Catalog:
                         f"scheme, e.g. 'duckdb://{source}')")
                 raise ValueError(
                     f"database path {source!r} does not exist")
-            db = AttachedDatabase(alias, source, "jdbc", read_only,
+            db = AttachedDatabase(alias, source, "postgres", read_only,
                                   conn=parse_dsn(source))
         db.schema = schema
+        if db.backend in ("duckdb", "postgres"):
+            from .pg_datasource import ensure_registered
+            ensure_registered(self.spark)
         self.attached[alias] = db
         try:
             if register_views and db.backend in ("parquet", "duckdb",
@@ -221,8 +230,10 @@ class Catalog:
                     src = self.table(other.alias, name)
                 src.createOrReplaceTempView(name)
                 return
-            except Exception:
-                continue
+            except _LOOKUP_ERRORS as exc:
+                _log.warning("view %r: cannot rebind it to attached "
+                             "database %r, trying the next: %s",
+                             name, other.alias, exc)
         self.spark.catalog.dropTempView(name)
 
     def detach(self, alias: str) -> None:
@@ -249,18 +260,18 @@ class Catalog:
             return db.store.scan(name)   # never cache: DML moves the pointer
         if db.backend == "parquet":
             df = parquet_scan(self.spark, os.path.join(db.source, f"{name}.parquet"))
-        elif db.backend == "duckdb":
-            # pushdown off: attached relations are long-lived (temp views,
-            # repeated queries) and the Python DS API scopes pushed
-            # filters to the relation, not the query (see pg_datasource)
+        else:
+            # duckdb:// or postgres: the postgres_scan DataSource.
+            # Pushdown off: attached relations are long-lived (temp
+            # views, repeated queries) and the Python DS API scopes
+            # pushed filters to the relation, not the query (see
+            # pg_datasource)
             r = (self.spark.read.format("postgres_scan")
-                 .option("dsn", db.source).option("table", name)
+                 .option("dsn", db.dsn).option("table", name)
                  .option("pushdown", "false"))
             if db.schema is not None:
                 r = r.option("schema", db.schema)
             df = r.load()
-        else:
-            df = jdbc_scan(self.spark, db.conn, name)
         db._table_cache[name] = df
         return df
 

@@ -1,17 +1,33 @@
-"""libpq DSN handling → Spark JDBC options.
+"""libpq connection strings: parse, render, and the secret registry.
 
-The reference takes libpq key=value connection strings
+The reference takes libpq key=value connection strings and URIs
 (reference: README.md ATTACH examples, src/postgres_connection.cpp).
-Spark's native Postgres access is the JDBC source, so we parse the
-same DSN surface and emit `spark.read.format("jdbc")` options. No
-live Postgres exists in the test container, so everything here is
-pure and unit-tested; `scan.py` uses it to build reader options.
+`parse_dsn` reads the same surface with libpq's own quoting rules,
+and `ConnectionInfo.dsn` renders one back, so a DSN from a secret or
+a `postgres:`-prefixed ATTACH reaches psycopg or the vendored
+pgclient as a plain libpq string. Pure; unit-tested without a server.
 """
 
 from __future__ import annotations
 
-import shlex
+import re
 from dataclasses import dataclass, field
+
+# one libpq conninfo pair (libpq conninfo_parse): blanks may surround
+# `=`, a value is single-quoted or bare up to the next blank, and a
+# backslash takes the next character literally in both forms
+_PAIR_RE = re.compile(
+    r"\s*([^=\s]+)\s*=\s*(?:'((?:[^'\\]|\\.)*)'|(?!')((?:[^\s\\]|\\.)*))",
+    re.ASCII | re.DOTALL)
+_ESCAPE_RE = re.compile(r"\\(.)", re.DOTALL)
+
+
+def _quote(value: str) -> str:
+    """One libpq conninfo value: bare when it can be, else single-quoted
+    with backslash escapes for `'` and `\\`."""
+    if value and not re.search(r"[\s'\\]", value, re.ASCII):
+        return value
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 @dataclass
@@ -24,28 +40,36 @@ class ConnectionInfo:
     options: dict[str, str] = field(default_factory=dict)
 
     @property
-    def jdbc_url(self) -> str:
-        return f"jdbc:postgresql://{self.host}:{self.port}/{self.dbname}"
+    def dsn(self) -> str:
+        """libpq key=value form; `parse_dsn(info.dsn) == info`."""
+        pairs = [("host", self.host), ("port", str(self.port)),
+                 ("dbname", self.dbname)]
+        if self.user is not None:
+            pairs.append(("user", self.user))
+        if self.password is not None:
+            pairs.append(("password", self.password))
+        pairs += self.options.items()
+        return " ".join(f"{k}={_quote(v)}" for k, v in pairs)
 
-    def jdbc_properties(self) -> dict[str, str]:
-        props = {"driver": "org.postgresql.Driver"}
-        if self.user:
-            props["user"] = self.user
-        if self.password:
-            props["password"] = self.password
-        for k in ("connect_timeout", "sslmode", "application_name"):
-            if k in self.options:
-                jk = {"connect_timeout": "connectTimeout",
-                      "sslmode": "sslmode",
-                      "application_name": "ApplicationName"}[k]
-                props[jk] = self.options[k]
-        return props
+
+def _conninfo_pairs(dsn: str):
+    """Yield (key, value) from a libpq key=value string."""
+    pos, end = 0, len(dsn.rstrip(" \t\n\r\f\v"))
+    while pos < end:
+        m = _PAIR_RE.match(dsn, pos)
+        if not m:
+            # no excerpt: the string may hold a password
+            raise ValueError(f"invalid connection string at offset "
+                             f"{pos}: expected key=value or a closing "
+                             f"quote")
+        pos = m.end()
+        yield m[1], _ESCAPE_RE.sub(r"\1", m[2] if m[2] is not None else m[3])
 
 
 def parse_dsn(dsn: str) -> ConnectionInfo:
-    """Parse a libpq 'key=value key=value' DSN (single-quoted values
-    supported, per libpq rules). Unknown keys are preserved in
-    .options, matching libpq's permissive parameter list."""
+    """Parse a libpq 'key=value key=value' DSN or a postgres:// URI.
+    Unknown keys are preserved in .options, matching libpq's
+    permissive parameter list."""
     info = ConnectionInfo()
     if dsn.startswith(("postgres:", "postgresql:")) and "://" not in dsn:
         # bare 'postgres:' prefix selects the engine type without a
@@ -70,10 +94,8 @@ def parse_dsn(dsn: str) -> ConnectionInfo:
                 k, _, v = pair.partition("=")
                 info.options[k] = v
         return info
-    for token in shlex.split(dsn):
-        key, _, value = token.partition("=")
-        key = key.strip().lower()
-        value = value.strip()
+    for key, value in _conninfo_pairs(dsn):
+        key = key.lower()
         if key == "host":
             info.host = value
         elif key == "hostaddr":

@@ -1258,7 +1258,7 @@ class PostgresScanDataSource(DataSource):
     def name(cls) -> str:
         return "postgres_scan"
 
-    _pg_udts: dict  # probed col → PG udt name (live-PG attach only)
+    _pg_udts: dict  # probed col → PG udt name (live-PG table scans only)
 
     def schema(self):
         self._pg_udts = {}

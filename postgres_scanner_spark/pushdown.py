@@ -7,8 +7,9 @@ rendered as a conjunction appended to the generated COPY/SELECT.
 
 The filter model here is the stable tuple form Spark's DataSource
 pushdown uses (("col", "op", value)), plus nested ("and"/"or",
-[children]). The catalog's JDBC path feeds these from DataFrame
-filter expressions; unit tests feed them directly.
+[children]). The `postgres_scan` DataSource feeds these from
+Catalyst's pushed filters (pg_datasource._spark_filter_to_tuple);
+unit tests feed them directly.
 """
 
 from __future__ import annotations
@@ -110,30 +111,3 @@ def transform_filters(filters: Sequence[Sequence[Any]] | None) -> str:
     if not filters:
         return ""
     return "WHERE " + " AND ".join(transform_filter(f) for f in filters)
-
-
-def render_select(
-    table: str,
-    columns: Sequence[str] | None,
-    filters: Sequence[Sequence[Any]] | None = None,
-    *,
-    schema: str = "public",
-    limit: int | None = None,
-    ctid_range: tuple[int, int] | None = None,
-) -> str:
-    """Generated remote query — projection pushdown + filter pushdown +
-    ctid-range task predicate (reference: postgres_scanner.cpp:205-243)."""
-    cols = ", ".join(quote_ident(c) for c in columns) if columns else "*"
-    sql = f'SELECT {cols} FROM "{schema}"."{table}"'
-    preds: list[str] = []
-    if ctid_range is not None:
-        lo, hi = ctid_range
-        preds.append(f"ctid BETWEEN '({lo},0)'::tid AND '({hi},0)'::tid")
-    where = transform_filters(filters)
-    if where:
-        preds.append(where[len("WHERE "):])
-    if preds:
-        sql += " WHERE " + " AND ".join(preds)
-    if limit is not None:
-        sql += f" LIMIT {limit}"
-    return sql

@@ -6,10 +6,12 @@ DDL/DML remotely, no result).
 
 Spark-first: for an attached parquet-backed database the "remote
 side" is Spark SQL over the registered views — the query text runs
-unchanged through Catalyst. For a JDBC-attached database the query
-ships to Postgres as a subquery-dbtable (true passthrough: Postgres
-executes it, Spark scans the result — identical split of work to the
-reference).
+unchanged through Catalyst. For a live Postgres (or duckdb://) attach
+the query ships to the remote engine through the `postgres_scan`
+DataSource's query mode (true passthrough: the remote engine executes
+it, Spark scans the result — identical split of work to the
+reference), and postgres_execute runs on one connection from
+`pgclient.pg_driver()`.
 """
 
 from __future__ import annotations
@@ -37,12 +39,7 @@ def pg_query(catalog: Catalog, alias: str, sql: str) -> DataFrame:
         # routing DDL here would bypass pg_execute's READ_ONLY gate
         raise ValueError(
             "postgres_query: input must be a SELECT statement")
-    if db.backend == "jdbc":
-        info = db.conn
-        return catalog.spark.read.jdbc(
-            info.jdbc_url, f"({sql}) AS pg_query_subq",
-            properties=info.jdbc_properties())
-    if db.backend == "duckdb":
+    if db.backend in ("duckdb", "postgres"):
         # true passthrough: the attached engine executes the SQL and the
         # postgres_scan DataSource streams the result on the EXECUTORS
         # (reference: PostgresQueryBind runs the text on the PG side and
@@ -52,7 +49,7 @@ def pg_query(catalog: Catalog, alias: str, sql: str) -> DataFrame:
         from .pg_datasource import ensure_registered
         ensure_registered(catalog.spark)
         return (catalog.spark.read.format("postgres_scan")
-                .option("dsn", db.source).option("query", sql)
+                .option("dsn", db.dsn).option("query", sql)
                 .option("pushdown", "false").load())
     if db.backend == "store":
         # DESCRIBE / PRAGMA table_info carry constraint+default info
@@ -604,27 +601,6 @@ def _split_assignments(set_clause: str) -> dict[str, str]:
     return out
 
 
-def jdbc_execute(jvm, info, sql: str) -> None:
-    """Run one statement on a live Postgres over the driver's JDBC
-    connection (reference: src/postgres_execute.cpp — a single
-    PQexec on the bound connection; no result set).
-
-    Takes the py4j `jvm` gateway as a parameter so the statement
-    routing is unit-testable with a fake gateway (no server in this
-    container)."""
-    props = info.jdbc_properties()
-    conn = jvm.java.sql.DriverManager.getConnection(
-        info.jdbc_url, props.get("user", ""), props.get("password", ""))
-    try:
-        stmt = conn.createStatement()
-        try:
-            stmt.execute(sql)
-        finally:
-            stmt.close()
-    finally:
-        conn.close()
-
-
 def pg_execute(catalog: Catalog, alias: str, sql: str) -> None:
     """postgres_execute(db, sql): DDL/DML with no result set.
 
@@ -632,14 +608,21 @@ def pg_execute(catalog: Catalog, alias: str, sql: str) -> None:
     writable attached store, the statement routes to the managed
     store's distributed DML (DELETE/UPDATE = snapshot rewrite, INSERT
     = file append, CTAS/DROP = catalog ops — reference:
-    test/sql/storage/attach_delete.test, attach_update.test); anything
-    else runs through Spark SQL against the registered views.
+    test/sql/storage/attach_delete.test, attach_update.test). A live
+    Postgres attach runs the statement on one connection and commits
+    on success. Anything else runs through Spark SQL against the
+    registered views.
     """
     db = catalog.attached[alias]
     if db.read_only:
         raise PermissionError(f"database {alias!r} attached READ_ONLY")
-    if db.backend == "jdbc":
-        jdbc_execute(catalog.spark._sc._jvm, db.conn, sql)
+    if db.backend == "postgres":
+        from .pgclient import pg_driver
+        # the connection's exit commits on success, rolls back on error
+        with pg_driver().connect(db.dsn) as con, con.cursor() as cur:
+            cur.execute(sql)
+        # a cached table's schema may be stale after remote DDL
+        catalog.clear_cache(alias)
         return
     if db.backend == "store":
         # postgres_execute accepts multiple ';'-separated statements

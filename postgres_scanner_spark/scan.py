@@ -6,7 +6,8 @@ Parity with reference src/postgres_scanner.cpp:
 - PostgresInitScanTask (line ~238): each task scans
   `ctid BETWEEN '(lo,0)' AND '(hi,0)'`.
 
-Spark-first: each task becomes one JDBC partition predicate, so a
+Spark-first: each task becomes one `postgres_scan` DataSource
+partition (pg_datasource.PostgresScanReader.partitions), so a
 1000-executor cluster pulls disjoint page ranges concurrently — the
 same parallelism strategy the reference uses for its own threads.
 For the local parquet backend Spark's own file-split parallelism
@@ -15,17 +16,11 @@ replaces ctid ranges (parquet row groups are the moral equivalent).
 
 from __future__ import annotations
 
-import logging
 from dataclasses import dataclass
-from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .connection import ConnectionInfo, parse_dsn
-from .pushdown import render_select, transform_filters
 from .settings import SETTINGS
-
-_log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -67,89 +62,6 @@ def plan_scan_tasks(approx_pages: int, *, pages_per_task: int | None = None,
         tasks.append(ScanTask(lo, 2**31 - 1 if i == n_tasks - 1 else hi))
         lo = hi
     return tasks
-
-
-def jdbc_scan(
-    spark: SparkSession,
-    dsn: str | ConnectionInfo,
-    table: str,
-    *,
-    schema: str = "public",
-    columns: Sequence[str] | None = None,
-    filters: Sequence[Sequence] | None = None,
-    approx_pages: int | None = None,
-) -> DataFrame:
-    """Scan a live Postgres table through Spark's JDBC source with
-    ctid-range partition predicates — the distributed analog of the
-    reference's threaded COPY scan. Untestable without a server in
-    this container; the option-construction is what the tests cover
-    (build_jdbc_options)."""
-    url, props, predicates = build_jdbc_options(
-        dsn, table, schema=schema, columns=columns, filters=filters,
-        approx_pages=approx_pages)
-    dbtable = props.pop("dbtable")
-    if predicates:
-        # partitioned read: dbtable is the BASE table (ctid is a system
-        # column — it cannot resolve against a subquery), and the pushed
-        # WHERE filters ride inside each per-partition predicate.
-        # Projection happens via .select — Spark's JDBC relation compiles
-        # the required-column list into its generated SELECT.
-        df = spark.read.jdbc(url, dbtable, predicates=predicates,
-                             properties=props)
-        return df.select(*columns) if columns else df
-    reader = spark.read.format("jdbc").option("url", url) \
-        .option("dbtable", dbtable)
-    for k, v in props.items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
-def build_jdbc_options(
-    dsn: str | ConnectionInfo,
-    table: str,
-    *,
-    schema: str = "public",
-    columns: Sequence[str] | None = None,
-    filters: Sequence[Sequence] | None = None,
-    approx_pages: int | None = None,
-) -> tuple[str, dict, list[str]]:
-    """Pure planner: (jdbc_url, properties, partition_predicates).
-
-    Projection+filter pushdown land in a subquery dbtable (the JDBC
-    source's pushdown vehicle); ctid tasks become the `predicates`
-    list so each Spark partition reads a disjoint page range.
-    """
-    info = parse_dsn(dsn) if isinstance(dsn, str) else dsn
-    props = dict(info.jdbc_properties())
-    props["fetchsize"] = "10000"
-    if not SETTINGS.pg_experimental_filter_pushdown:
-        # reference: pg_experimental_filter_pushdown=false keeps filters
-        # local (Spark still applies them post-scan; semantics identical)
-        filters = None
-    predicates: list[str] = []
-    if approx_pages and SETTINGS.pg_use_ctid_scan:
-        tasks = plan_scan_tasks(approx_pages,
-                                max_tasks=SETTINGS.pg_connection_limit)
-        if len(tasks) > 1:
-            predicates = [t.predicate for t in tasks]
-    if predicates:
-        # ctid partitioning: dbtable must stay the base table so the
-        # system column resolves; fold pushed filters into each
-        # per-partition predicate instead of a subquery
-        where = transform_filters(filters or [])
-        if where:
-            cond = where[len("WHERE "):]
-            predicates = [f"{p} AND ({cond})" for p in predicates]
-        props["dbtable"] = f'"{schema}"."{table}"'
-        if SETTINGS.pg_debug_show_queries:
-            _log.info("pg scan %s WHERE %s (+%d more tasks)",
-                      props["dbtable"], predicates[0], len(predicates) - 1)
-        return info.jdbc_url, props, predicates
-    inner = render_select(table, columns, filters, schema=schema)
-    props["dbtable"] = f"({inner}) AS scan_subq"
-    if SETTINGS.pg_debug_show_queries:
-        _log.info("pg scan %s", inner)
-    return info.jdbc_url, props, predicates
 
 
 def parquet_scan(spark: SparkSession, path: str, *, columns=None,

@@ -73,7 +73,7 @@ RANGE_SUBTYPE: dict[int, int] = {
     TSTZRANGEOID: TIMESTAMPTZOID, DATERANGEOID: DATEOID,
 }
 
-# name-keyed map (what you get from information_schema / JDBC metadata)
+# name-keyed map (what you get from information_schema)
 _NAME_TO_SPARK: dict[str, T.DataType] = {
     "bool": T.BooleanType(),
     "boolean": T.BooleanType(),

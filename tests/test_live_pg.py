@@ -309,6 +309,67 @@ def test_live_filter_pushdown(registered, pg, pg_server):
         SETTINGS.pg_experimental_filter_pushdown = old
 
 
+# ------------------------------------------- ATTACH (S1/S5/S10)
+def test_live_attach_end_to_end(registered, pg, pg_server, tmp_path):
+    """reference: attach_*.test, postgres_query.cpp, postgres_execute
+    .cpp against a live server — ATTACH by libpq DSN and by secret,
+    listing, table scans, remote pg_query, pg_execute DDL/DML, the
+    READ_ONLY gate, and COPY FROM DATABASE of a schema-scoped attach."""
+    from postgres_scanner_spark.catalog import Catalog
+    from postgres_scanner_spark.connection import (
+        create_secret, drop_secret, parse_dsn)
+    from postgres_scanner_spark.queryfn import (
+        execute_statement, pg_execute, pg_query)
+    from postgres_scanner_spark.storage import ManagedStore
+    cur = pg.cursor()
+    cur.execute("DROP TABLE IF EXISTS att_items")
+    cur.execute("CREATE TABLE att_items AS SELECT g AS id, g % 3 AS grp, "
+                "'v' || g AS name FROM generate_series(1, 300) g")
+    cur.execute("DROP SCHEMA IF EXISTS att_s CASCADE")
+    cur.execute("CREATE SCHEMA att_s")
+    cur.execute("CREATE TABLE att_s.a AS SELECT 1 AS i")
+    cur.execute("CREATE TABLE att_s.b AS SELECT 'x'::text AS s")
+    info = parse_dsn(pg_server)
+    create_secret("att_live", host=info.host, port=info.port,
+                  database=info.dbname, user=info.user, replace=True)
+    direct = sorted(_scan(registered, pg_server, "att_items").collect())
+    cat = Catalog(registered)
+    try:
+        for src, alias in ((pg_server, "live"),
+                           ("secret:att_live", "live_sec")):
+            execute_statement(cat, f"ATTACH '{src}' AS {alias}")
+            assert "att_items" in cat.list_tables(alias)
+            assert sorted(cat.table(alias, "att_items").collect()) == direct
+            q = pg_query(cat, alias, "SELECT grp, count(*) AS n "
+                                     "FROM att_items GROUP BY grp")
+            # the GROUP BY ran on the server: no aggregate in Spark's plan
+            plan = q._jdf.queryExecution().executedPlan().toString()
+            assert "Aggregate" not in plan, plan
+            assert sorted(tuple(r) for r in q.collect()) == \
+                [(0, 100), (1, 100), (2, 100)]
+            pg_execute(cat, alias, "CREATE TABLE att_tmp (i int)")
+            pg_execute(cat, alias, "INSERT INTO att_tmp VALUES (1), (2)")
+            assert "att_tmp" in cat.list_tables(alias)
+            assert sorted(r.i for r in
+                          cat.table(alias, "att_tmp").collect()) == [1, 2]
+            pg_execute(cat, alias, "DROP TABLE att_tmp")
+            assert "att_tmp" not in cat.list_tables(alias)
+            execute_statement(cat, f"DETACH {alias}")
+        execute_statement(
+            cat, f"ATTACH '{pg_server}' AS live_ro (TYPE POSTGRES, READ_ONLY)")
+        with pytest.raises(PermissionError, match="READ_ONLY"):
+            pg_execute(cat, "live_ro", "DROP TABLE att_items")
+        cat.attach("secret:att_live", alias="live_s", schema="att_s")
+        assert cat.list_tables("live_s") == ["a", "b"]
+        store = ManagedStore(registered, str(tmp_path / "copy"))
+        assert cat.copy_database("live_s", store) == ["a", "b"]
+        assert store.scan("b").collect()[0].s == "x"
+    finally:
+        drop_secret("att_live")
+    cur.execute("SELECT count(*) FROM att_items")
+    assert cur.fetchone() == (300,)
+
+
 # -------------------------------------- binary COPY write (S7/S26)
 @pytest.mark.slow
 def test_live_binary_copy_write_roundtrip(registered, pg, pg_server):

@@ -21,16 +21,17 @@ OS = entry_mod.oracle_sql()
 # queries and every money-converted query stay in the default run;
 # the slow set still gates every round locally (full-suite runs in
 # OPTIMIZATION_r13.md) and via tools/gate_check.py, which always
-# runs all 207.
+# runs all 207. Operators rewritten into NumPy kernels (d5, d14, d27,
+# a6) are back in the default run: each is under 15 s at sf0.001.
 SLOW_ORACLE = {
     "a11_mmr_diversified", "a12_ivfpq_ann", "a5_pq_ann",
-    "a6_kmeans_lloyd", "a7_ann_recall", "a9_mih_hamming_ann",
-    "d12_dedup_eval", "d13_dedup_apply", "d14_semantic_dedup",
+    "a7_ann_recall", "a9_mih_hamming_ann",
+    "d12_dedup_eval", "d13_dedup_apply",
     "d16_cdc_chunk_dedup", "d19_unicode_shingle_dedup",
     "d21_repeated_substring_excision", "d22_prefix_filter_join",
     "d23_benchmark_span_excision", "d24_cc_two_phase",
-    "d25_chunk_cluster", "d27_scaled_semantic_dedup",
-    "d3_simhash_dedup", "d4_ngram_jaccard", "d5_embedding_dedup",
+    "d25_chunk_cluster",
+    "d3_simhash_dedup", "d4_ngram_jaccard",
     "d6_dedup_clusters", "d7_contamination", "d9_incremental_lsh",
     "e10_late_data_policy", "e11_streaming_sessions",
     "e12_stream_static_join", "e13_checkpoint_resume",

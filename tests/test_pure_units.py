@@ -2,12 +2,14 @@
 the same surfaces the reference unit-tests natively: DSN parsing,
 filter pushdown SQL generation, ctid task planning, type mapping."""
 
-from postgres_scanner_spark.connection import parse_dsn
+import pytest
+from hypothesis import given, settings as hsettings, strategies as st
+
+from postgres_scanner_spark.connection import ConnectionInfo, parse_dsn
 from postgres_scanner_spark.pushdown import (
-    quote_ident, quote_literal, render_select, transform_filter,
-    transform_filters,
+    quote_ident, quote_literal, transform_filter, transform_filters,
 )
-from postgres_scanner_spark.scan import build_jdbc_options, plan_scan_tasks
+from postgres_scanner_spark.scan import plan_scan_tasks
 from postgres_scanner_spark.settings import SETTINGS, Settings
 from postgres_scanner_spark.types import (
     composite_to_struct, pg_oid_to_spark, pg_type_to_spark, spark_type_to_pg,
@@ -22,10 +24,8 @@ def test_parse_dsn_keyvalue():
                      "connect_timeout=10")
     assert info.host == "db1" and info.port == 5433
     assert info.dbname == "mydb"
-    assert info.jdbc_url == "jdbc:postgresql://db1:5433/mydb"
-    props = info.jdbc_properties()
-    assert props["user"] == "u" and props["password"] == "p"
-    assert props["connectTimeout"] == "10"
+    assert info.user == "u" and info.password == "p"
+    assert info.options == {"connect_timeout": "10"}
 
 
 def test_parse_dsn_uri():
@@ -37,6 +37,41 @@ def test_parse_dsn_uri():
 def test_parse_dsn_defaults():
     info = parse_dsn("dbname=postgresscanner")
     assert info.host == "localhost" and info.port == 5432
+
+
+def test_parse_dsn_libpq_quoting():
+    """libpq conninfo rules: a backslash escapes the next character
+    inside and outside quotes, and blanks may surround `=`."""
+    assert parse_dsn(r"password='a\'b'").password == "a'b"
+    assert parse_dsn(r"password='c:\\d'").password == "c:\\d"
+    assert parse_dsn(r"password=x\ y").password == "x y"
+    info = parse_dsn("host = h1  dbname= 'my db' sslmode =require")
+    assert (info.host, info.dbname) == ("h1", "my db")
+    assert info.options == {"sslmode": "require"}
+    for bad in ("host=h password='open", "host", "host=h \\"):
+        with pytest.raises(ValueError, match="invalid connection string"):
+            parse_dsn(bad)
+
+
+_DSN_TEXT = st.text(
+    alphabet=st.characters(blacklist_characters="\x00"), max_size=12) | \
+    st.text(alphabet=" '\\=ab\t", max_size=8)
+_RESERVED = {"host", "hostaddr", "port", "dbname", "database", "user",
+             "password"}
+
+
+@hsettings(max_examples=300, deadline=None)
+@given(host=_DSN_TEXT, port=st.integers(1, 65535), dbname=_DSN_TEXT,
+       user=st.none() | _DSN_TEXT, password=st.none() | _DSN_TEXT,
+       options=st.dictionaries(
+           st.from_regex(r"[a-z_]{1,12}", fullmatch=True).filter(
+               lambda k: k not in _RESERVED),
+           _DSN_TEXT, max_size=3))
+def test_connection_info_dsn_roundtrip(host, port, dbname, user,
+                                       password, options):
+    info = ConnectionInfo(host=host, port=port, dbname=dbname,
+                          user=user, password=password, options=options)
+    assert parse_dsn(info.dsn) == info
 
 
 # ---- pushdown (reference: src/postgres_filter_pushdown.cpp) -------
@@ -56,14 +91,6 @@ def test_transform_conjunctions_and_struct():
     f = ("or", [("a", "=", 1), ("and", [("b", "<", 2), ("c", "isnull")])])
     assert transform_filter(f) == '("a" = 1 OR ("b" < 2 AND "c" IS NULL))'
     assert quote_ident("s.f") == '("s")."f"'
-
-
-def test_render_select_projection_filter_ctid():
-    sql = render_select("t", ["a", "b"], [("a", ">", 1)],
-                        ctid_range=(0, 1000))
-    assert sql == ('SELECT "a", "b" FROM "public"."t" WHERE '
-                   "ctid BETWEEN '(0,0)'::tid AND '(1000,0)'::tid "
-                   'AND "a" > 1')
 
 
 def test_quote_literal_bytes():
@@ -92,26 +119,42 @@ def test_plan_scan_tasks_zero_ppt_resets_to_default():
     assert s.pg_pages_per_task == 1000
 
 
-def test_build_jdbc_options_predicates():
-    url, props, preds = build_jdbc_options(
-        "host=h dbname=d", "items", columns=["x"],
-        filters=[("x", ">", 10)], approx_pages=5000)
-    assert url == "jdbc:postgresql://h:5432/d"
-    # partitioned path: dbtable is the BASE table (ctid can't resolve
-    # against a subquery); pushed filters live inside each predicate
-    assert props["dbtable"] == '"public"."items"'
-    assert len(preds) == 5
-    assert all("ctid BETWEEN" in p for p in preds)
-    assert all('"x" > 10' in p for p in preds)
+def _live_reader(approx_pages, filters):
+    """A postgres_scan reader on a libpq DSN, planned without a server:
+    projection is the reader's schema (column x of items, wider on
+    the server), filters go through pushFilters as Catalyst hands
+    them over. Returns (reader, filters Spark keeps)."""
+    from pyspark.sql.datasource import GreaterThan, IsNull
+    from postgres_scanner_spark.pg_datasource import PostgresScanReader
+    ops = {">": GreaterThan, "isnull": IsNull}
+    reader = PostgresScanReader(
+        T.StructType([T.StructField("x", T.LongType())]),
+        {"dsn": "host=h dbname=d", "table": "items",
+         "approx_pages": str(approx_pages)})
+    kept = list(reader.pushFilters(
+        [ops[op](("x",), *v) for op, *v in filters]))
+    return reader, kept
 
 
-def test_build_jdbc_options_subquery_when_single_task():
-    _, props, preds = build_jdbc_options(
-        "host=h dbname=d", "items", columns=["x"],
-        filters=[("x", ">", 10)])
-    assert preds == []
-    assert props["dbtable"].startswith("(SELECT")
-    assert '"x" > 10' in props["dbtable"]
+def test_reader_ctid_tasks_push_filter_and_projection():
+    reader, kept = _live_reader(5000, [(">", 10)])
+    assert kept == []
+    sqls = [t.sql for t in reader.partitions()]
+    assert len(sqls) == 5
+    for i, sql in enumerate(sqls):
+        # the base table, projected to the schema's columns; each task
+        # its own page range AND the pushed filter
+        assert sql.startswith(
+            'SELECT "x"::int8 AS "x" FROM "public"."items" WHERE ctid '
+            f"BETWEEN '({i * 1000},0)'::tid AND ")
+        assert sql.endswith(' AND "x" > 10')
+
+
+def test_reader_single_task_pushes_filter_without_ctid():
+    reader, _ = _live_reader(500, [(">", 10)])
+    (task,) = reader.partitions()
+    assert task.sql == ('SELECT "x"::int8 AS "x" FROM "public"."items" '
+                        'WHERE "x" > 10')
 
 
 # ---- types (reference: postgres_utils.cpp, postgres_type_oids.hpp) -
@@ -149,16 +192,21 @@ def test_inverse_type_map():
 
 
 def test_filter_pushdown_setting_gates_remote_where():
+    filters = [(">", 1), ("isnull",)]
     SETTINGS.set("pg_experimental_filter_pushdown", False)
     try:
-        _, props, _ = build_jdbc_options(
-            "host=h dbname=d", "t", filters=[("x", ">", 1)])
-        assert "WHERE" not in props["dbtable"]
+        reader, kept = _live_reader(500, filters)
+        assert len(kept) == 2       # Spark evaluates every filter
+        assert all("WHERE" not in t.sql for t in reader.partitions())
+        reader, kept = _live_reader(5000, filters)
+        assert all("WHERE" not in t.sql.replace("WHERE ctid", "")
+                   for t in reader.partitions())
     finally:
         SETTINGS.set("pg_experimental_filter_pushdown", True)
-    _, props, _ = build_jdbc_options(
-        "host=h dbname=d", "t", filters=[("x", ">", 1)])
-    assert 'WHERE "x" > 1' in props["dbtable"]
+    reader, kept = _live_reader(500, filters)
+    assert kept == []
+    assert reader.partitions()[0].sql.endswith(
+        'WHERE "x" > 1 AND "x" IS NULL')
 
 
 def test_parse_dsn_bare_prefix():
@@ -209,13 +257,14 @@ def test_scratch_persist_lifecycle():
 def test_debug_show_queries_logs_pushed_sql(caplog):
     SETTINGS.set("pg_debug_show_queries", True)
     try:
-        with caplog.at_level("INFO", logger="postgres_scanner_spark.scan"):
-            build_jdbc_options("host=h dbname=d", "t", columns=["x"],
-                               filters=[("x", ">", 1)])
-            build_jdbc_options("host=h dbname=d", "t", columns=["x"],
-                               filters=[("x", ">", 1)], approx_pages=5000)
+        with caplog.at_level(
+                "INFO", logger="postgres_scanner_spark.pg_datasource"):
+            single = _live_reader(500, [(">", 1)])[0].partitions()
+            ctid = _live_reader(5000, [(">", 1)])[0].partitions()
     finally:
         SETTINGS.set("pg_debug_show_queries", False)
-    single, ctid = (r.getMessage() for r in caplog.records)
-    assert single.startswith("pg scan SELECT") and '"x" > 1' in single
-    assert "ctid BETWEEN" in ctid and "+4 more tasks" in ctid
+    # one line per planned task, carrying that task's pushed SQL
+    assert [r.getMessage() for r in caplog.records] == [
+        f"pg scan {t.sql}" for t in single + ctid]
+    assert '"x" > 1' in single[0].sql and "ctid" not in single[0].sql
+    assert all("ctid BETWEEN" in t.sql for t in ctid) and len(ctid) == 5

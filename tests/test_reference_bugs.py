@@ -1103,7 +1103,7 @@ def test_attach_prefix(spark):
     cat = Catalog(spark)
     db = cat.attach("postgres:dbname=postgresscanner host=h1",
                     alias="s", register_views=False)
-    assert db.backend == "jdbc"
+    assert db.backend == "postgres"
     assert db.conn.dbname == "postgresscanner"
     assert db.conn.host == "h1"
     cat.detach("s")

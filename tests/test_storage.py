@@ -196,51 +196,125 @@ def test_sql_dml_quoted_identifiers(spark, tmp_path):
     cat.detach("qdb")
 
 
-def test_jdbc_execute_statement_routing():
-    """pg_execute on a JDBC backend routes the raw statement through
-    java.sql.DriverManager (reference: src/postgres_execute.cpp) —
-    verified against a fake py4j gateway (no server in container)."""
-    from postgres_scanner_spark.connection import parse_dsn
-    from postgres_scanner_spark.queryfn import jdbc_execute
+def _fake_pg_driver(monkeypatch, log, fail_on=None):
+    """Swap pgclient.pg_driver() for a driver that logs connect,
+    execute and how each connection ends (commit / rollback)."""
+    import types as pytypes
+    from postgres_scanner_spark import pgclient
 
-    class FakeStmt:
-        def __init__(self, log):
-            self.log = log
-
+    class Cur:
         def execute(self, sql):
-            self.log.append(("execute", sql))
+            log.append(("execute", sql))
+            if sql == fail_on:
+                raise pgclient.Error({"M": "syntax error"})
 
-        def close(self):
-            self.log.append(("stmt_close",))
+        def __enter__(self):
+            return self
 
-    class FakeConn:
-        def __init__(self, log):
-            self.log = log
+        def __exit__(self, *exc):
+            return False
 
-        def createStatement(self):
-            return FakeStmt(self.log)
+    class Conn:
+        def cursor(self):
+            return Cur()
 
-        def close(self):
-            self.log.append(("conn_close",))
+        def __enter__(self):
+            return self
 
+        def __exit__(self, exc_type, *exc):
+            log.append("rollback" if exc_type else "commit")
+            return False
+
+    def connect(dsn):
+        log.append(("connect", dsn))
+        return Conn()
+    monkeypatch.setattr(pgclient, "pg_driver", lambda: pytypes.SimpleNamespace(
+        Error=pgclient.Error, connect=connect))
+
+
+def test_pg_execute_postgres_routing(monkeypatch):
+    """pg_execute on a live Postgres attach runs the raw statement on
+    one pg_driver() connection that commits on success and rolls back
+    on error (reference: src/postgres_execute.cpp), connects with the
+    libpq DSN rendered from the attach (the `postgres:` prefix gone,
+    quoting kept), and drops the attach's cached tables. No server:
+    a fake driver records the calls."""
+    import types as pytypes
+
+    from postgres_scanner_spark import pgclient
+    from postgres_scanner_spark.catalog import Catalog
+    from postgres_scanner_spark.queryfn import pg_execute
     log = []
+    _fake_pg_driver(monkeypatch, log, fail_on="BAD")
+    cat = Catalog(pytypes.SimpleNamespace(dataSource=pytypes.SimpleNamespace(
+        register=lambda ds: None)))
+    db = cat.attach("postgres:host=h dbname=d user=u password='p w'",
+                    alias="live")
+    assert log == []                    # attach opens no connection
+    dsn = "host=h port=5432 dbname=d user=u password='p w'"
+    assert db.dsn == dsn
+    db._table_cache["t"] = object()
+    pg_execute(cat, "live", "CREATE TABLE t (i INT)")
+    assert log == [("connect", dsn),
+                   ("execute", "CREATE TABLE t (i INT)"), "commit"]
+    assert db._table_cache == {}
+    log.clear()
+    with pytest.raises(pgclient.Error, match="syntax error"):
+        pg_execute(cat, "live", "BAD")
+    assert log == [("connect", dsn), ("execute", "BAD"), "rollback"]
+    cat.detach("live")
+    cat.attach("postgres:host=h dbname=d", alias="ro", read_only=True)
+    with pytest.raises(PermissionError, match="READ_ONLY"):
+        pg_execute(cat, "ro", "DROP TABLE t")
 
-    class DM:
-        @staticmethod
-        def getConnection(url, user, pw):
-            log.append(("connect", url, user))
-            return FakeConn(log)
 
-    class JVM:
-        class java:
-            class sql:
-                DriverManager = DM
+def test_attach_datasource_register_error_propagates(tmp_path):
+    """Only DATA_SOURCE_ALREADY_EXISTS is tolerated when a DataSource
+    attach registers postgres_scan; any other error surfaces and the
+    alias is not left half-attached."""
+    import types as pytypes
 
-    info = parse_dsn("host=h dbname=d user=u password=p")
-    jdbc_execute(JVM, info, "CREATE TABLE t (i INT)")
-    assert ("execute", "CREATE TABLE t (i INT)") in log
-    assert log[0] == ("connect", "jdbc:postgresql://h:5432/d", "u")
-    assert log[-1] == ("conn_close",)
+    from postgres_scanner_spark.catalog import Catalog
+
+    def register(ds):
+        raise TypeError("bad DataSource class")
+    spark = pytypes.SimpleNamespace(
+        dataSource=pytypes.SimpleNamespace(register=register))
+    cat = Catalog(spark)
+    for source in (f"duckdb://{tmp_path / 'src.db'}", "host=h dbname=d"):
+        with pytest.raises(TypeError, match="bad DataSource"):
+            cat.attach(source, alias="d")
+        assert "d" not in cat.attached
+
+
+def test_release_view_rebind_failure_is_logged(caplog):
+    """Detaching one of two attaches that share a bare view name
+    re-binds it to the other; a lookup error there is logged and the
+    view dropped, any other error propagates."""
+    import types as pytypes
+
+    from postgres_scanner_spark.catalog import AttachedDatabase, Catalog
+    dropped = []
+    spark = pytypes.SimpleNamespace(catalog=pytypes.SimpleNamespace(
+        dropTempView=dropped.append))
+    cat = Catalog(spark)
+    a = AttachedDatabase("a", "/x", "parquet", views=["t"])
+    b = AttachedDatabase("b", "/y", "parquet", views=["t"])
+    cat.attached = {"a": a, "b": b}
+
+    def gone(alias, name):
+        raise FileNotFoundError(f"{alias}/{name}.parquet")
+    cat.table = gone
+    with caplog.at_level("WARNING", logger="postgres_scanner_spark.catalog"):
+        cat._release_view(a, "t")
+    assert dropped == ["t"]
+    assert "cannot rebind" in caplog.text and "b/t.parquet" in caplog.text
+
+    def bug(alias, name):
+        raise TypeError("bug")
+    cat.table = bug
+    with pytest.raises(TypeError):
+        cat._release_view(a, "t")
 
 
 def test_detach_drops_bare_views(spark, tmp_path):
@@ -353,7 +427,7 @@ def test_store_views_survive_reattach(spark, tmp_path):
     assert not spark.catalog.tableExists("re_v5")
 
 
-def test_secret_attach():
+def test_secret_attach(spark):
     """Credential-free attach via the secret registry (reference:
     attach_secret.test)."""
     from postgres_scanner_spark.catalog import Catalog
@@ -364,12 +438,11 @@ def test_secret_attach():
                   sslmode="require")
     try:
         assert "corp" in list_secrets()
-        cat = Catalog(None)
+        cat = Catalog(spark)
         db = cat.attach("secret:corp", alias="sec")
-        assert db.backend == "jdbc"
-        assert db.conn.jdbc_url == "jdbc:postgresql://db.internal:5433/prod"
-        props = db.conn.jdbc_properties()
-        assert props["user"] == "svc" and props["sslmode"] == "require"
+        assert db.backend == "postgres"
+        assert db.dsn == ("host=db.internal port=5433 dbname=prod "
+                          "user=svc password=pw sslmode=require")
         with pytest.raises(KeyError):
             cat.attach("secret:nope", alias="x")
     finally:
