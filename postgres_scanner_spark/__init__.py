@@ -88,10 +88,11 @@ def _quiet_bounded_window_warns(spark: SparkSession) -> None:
     REAL unbounded window hide. The machine-checked guard is the
     plan lint there, which fails any query whose physical plan
     carries an unpartitioned Window node outside that allowlist."""
+    from py4j.protocol import Py4JError
     try:
         jvm = spark.sparkContext._jvm
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
             "org.apache.spark.sql.execution.window.WindowExec",
             jvm.org.apache.logging.log4j.Level.ERROR)
-    except Exception:
+    except Py4JError:
         pass  # log4j2 API absent (custom logging backend) — cosmetic

@@ -1,4 +1,15 @@
-"""Worker-only site hook: re-read a zip on sys.path only when it changed.
+"""Worker-only site hook: import PySpark from the installed release, and
+re-read a zip on sys.path only when it changed.
+
+Spark puts $SPARK_HOME/python/lib/pyspark.zip and py4j-*-src.zip first
+on a worker's sys.path. zipimport never caches bytecode, so every
+worker daemon compiled pyspark from source (~1.0 s CPU a daemon). When
+an archive holds the same release as a copy importable from the rest
+of sys.path (byte-equal pyspark/version.py or py4j/version.py), the
+archive moves to the end of sys.path, so imports come from the
+installed, bytecode-cached package; the archive stays as a fallback.
+A different release, no installed copy or an unreadable archive leaves
+sys.path exactly as Spark built it.
 
 PySpark calls importlib.invalidate_caches() on every worker call. Before
 Python 3.13 each zipimporter then re-parses its archive's whole central
@@ -6,7 +17,7 @@ directory (pyspark.zip, py4j, the spark-core jar: ~28k entries, ~0.2 s
 CPU a call). Here a re-read happens only when the archive's
 (st_mtime_ns, st_size, st_ino) differs from when it was last read, so
 a rewritten archive is still picked up. 3.13's invalidate_caches only
-drops the cache entry, so the hook does nothing there. get_spark puts
+drops the cache entry, so that part does nothing there. get_spark puts
 this directory on the workers' PYTHONPATH. This module shadows any
 other sitecustomize later on sys.path, so it runs that one first.
 """
@@ -14,6 +25,8 @@ import importlib.machinery
 import importlib.util
 import os
 import sys
+import zipfile
+import zlib
 
 
 def _stamp(path):
@@ -40,7 +53,39 @@ def _chain():
     spec.loader.exec_module(module)
 
 
+def _package(archive):
+    name = os.path.basename(archive)
+    if name == "pyspark.zip":
+        return "pyspark"
+    if name.startswith("py4j-") and name.endswith(".zip"):
+        return "py4j"
+    return None
+
+
+def _installed_first():
+    """Move a Spark archive behind an installed copy of its release."""
+    for archive in list(sys.path):
+        pkg = _package(archive)
+        if pkg is None:
+            continue
+        rest = [p for p in sys.path if p != archive]
+        try:
+            with zipfile.ZipFile(archive) as zf:
+                packed = zf.read(f"{pkg}/version.py")
+            spec = importlib.machinery.PathFinder.find_spec(pkg, rest)
+            if spec is None or not spec.origin:
+                continue
+            version = os.path.join(os.path.dirname(spec.origin), "version.py")
+            with open(version, "rb") as f:
+                installed = f.read()
+        except (OSError, KeyError, EOFError, zipfile.BadZipFile, zlib.error):
+            continue  # unreadable archive or copy: keep Spark's order
+        if packed == installed:
+            sys.path[:] = rest + [archive]
+
+
 _chain()
+_installed_first()
 
 if sys.version_info < (3, 13):
     import zipimport

@@ -647,7 +647,9 @@ def _km_assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     p = spark.sparkContext.defaultParallelism
     reps = spark.range(p).select(F.col("id").alias("blk"))
     crep = cents.crossJoin(F.broadcast(reps))
-    lhs = vecs.select("vec_id", "x", (F.col("vec_id") % p).alias("blk"))
+    # pmod: a negative vec_id still lands in a replicated group
+    lhs = vecs.select("vec_id", "x",
+                      F.pmod(F.col("vec_id"), F.lit(p)).alias("blk"))
     return (lhs.groupBy("blk")
             .cogroup(crep.groupBy("blk"))
             .applyInArrow(

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import uuid
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -77,7 +78,7 @@ def _lint_stream_plan(q) -> None:
     every drain, and fail loudly."""
     try:
         plan = q._jsq.explainInternal(False)
-    except Exception:
+    except Py4JError:
         return          # no batch executed (empty source) — nothing to lint
     if "CartesianProduct" in plan:
         raise AssertionError(
@@ -89,17 +90,19 @@ def _lint_stream_plan(q) -> None:
     # as a global window and the text heuristic false-positives (r11
     # advice). The object walk is exact for every *Window*Exec variant.
     try:
-        root = q._jsq.streamingQuery().lastExecution().executedPlan()
-    except Exception:
+        last = q._jsq.streamingQuery().lastExecution()
+    except Py4JError:
         return          # wrapper/plan shape changed — text lint above ran
-    stack = [root]
+    if last is None:
+        return          # no batch executed (empty source) — nothing to lint
+    stack = [last.executedPlan()]
     while stack:
         node = stack.pop()
         name = node.getClass().getSimpleName()
         if "Window" in name:
             try:
                 unpartitioned = node.partitionSpec().isEmpty()
-            except Exception:
+            except Py4JError:
                 unpartitioned = False   # variant without a partitionSpec
             if unpartitioned:
                 raise AssertionError(

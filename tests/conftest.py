@@ -20,3 +20,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(autouse=True)
+def _release_scratch():
+    """Unpersist the scratch a test's queries recorded, so it cannot
+    leak into the next test (runtime.release_scratch is per thread)."""
+    yield
+    from postgres_scanner_spark import runtime
+    runtime.release_scratch()

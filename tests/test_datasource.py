@@ -536,6 +536,51 @@ def test_write_live_pg_with_mocked_psycopg(monkeypatch):
     assert not os.path.exists(w.spool)
 
 
+
+def test_writer_row_iterator_matches_scalar_codec():
+    """Rows handed to PostgresScanWriter.write go through Arrow and the
+    vectorized encoder; the spool is byte-identical to the scalar
+    pgwire.BinaryCopyWriter oracle over the same rows."""
+    import io
+    import shutil
+    from datetime import date, datetime, timezone
+    from decimal import Decimal
+    from pyspark.sql import types as T
+    from postgres_scanner_spark.copyio import _pg_binary_layout
+    from postgres_scanner_spark.pg_datasource import PostgresScanWriter
+    from postgres_scanner_spark.pgwire import BinaryCopyWriter
+
+    schema = T.StructType([T.StructField(n, t) for n, t in [
+        ("b", T.BooleanType()), ("s", T.ShortType()),
+        ("i", T.IntegerType()), ("l", T.LongType()),
+        ("f", T.FloatType()), ("d", T.DoubleType()),
+        ("m", T.DecimalType(12, 3)), ("t", T.StringType()),
+        ("y", T.BinaryType()), ("dt", T.DateType()),
+        ("ts", T.TimestampType()), ("ntz", T.TimestampNTZType()),
+        ("a", T.ArrayType(T.IntegerType())),
+        ("aa", T.ArrayType(T.ArrayType(T.StringType())))]])
+    rows = [(True, -3, 7, 1 << 40, 1.5, -2.25, Decimal("-12.345"),
+             "x\u00e9y", b"\x00\xff", date(1999, 12, 31),
+             datetime(2024, 5, 6, 7, 8, 9, 123456, tzinfo=timezone.utc),
+             datetime(1970, 1, 1, 0, 0, 1), [1, None, 3],
+             [["a", "b"], ["c", None]]),
+            (None,) * 14,
+            (False, 0, 0, 0, 0.0, 0.0, Decimal("0.000"), "", b"",
+             date(2000, 1, 1),
+             datetime(2000, 1, 1, tzinfo=timezone.utc),
+             datetime(2000, 1, 1), [], [])]
+    w = PostgresScanWriter(schema, {"dsn": "duckdb://x", "table": "t"},
+                           overwrite=False)
+    msg = w.write(iter(rows))
+    oids, array_elem, array_ndims, _ = _pg_binary_layout(schema)
+    want = io.BytesIO()
+    BinaryCopyWriter(oids, array_elem, array_ndims).write(want, rows)
+    with open(msg.path, "rb") as fh:
+        assert fh.read() == want.getvalue()
+    assert msg.n_rows == 3
+    assert w.write(iter([])).n_rows == 0
+    shutil.rmtree(w.spool)
+
 def test_write_overwrite_replaces_schema(registered, tmp_path):
     """Overwrite must REPLACE the table definition: a pre-existing
     table with different column order/types must not survive and

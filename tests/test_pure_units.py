@@ -268,3 +268,59 @@ def test_debug_show_queries_logs_pushed_sql(caplog):
         f"pg scan {t.sql}" for t in single + ctid]
     assert '"x" > 1' in single[0].sql and "ctid" not in single[0].sql
     assert all("ctid BETWEEN" in t.sql for t in ctid) and len(ctid) == 5
+
+
+class _FakeQuery:
+    """A streaming query as the drain lint reads it; no micro-batch
+    has run, so its last execution is null."""
+    def __init__(self, explain):
+        self._jsq, self._explain = self, explain
+
+    def explainInternal(self, extended):
+        return self._explain()
+
+    def streamingQuery(self):
+        return self
+
+    def lastExecution(self):
+        return None
+
+
+def _raises(exc):
+    def f(*_):
+        raise exc
+    return f
+
+
+def test_stream_drain_lint_tolerates_only_py4j_errors():
+    from py4j.protocol import Py4JError
+    from postgres_scanner_spark.streaming.events import _lint_stream_plan
+
+    # no plan over py4j, or no micro-batch executed: nothing to lint
+    _lint_stream_plan(_FakeQuery(_raises(Py4JError("no plan"))))
+    _lint_stream_plan(_FakeQuery(lambda: "No physical plan."))
+    # anything else is a bug and propagates
+    with pytest.raises(TypeError, match="bug"):
+        _lint_stream_plan(_FakeQuery(_raises(TypeError("bug"))))
+    with pytest.raises(AssertionError, match="CartesianProduct"):
+        _lint_stream_plan(_FakeQuery(lambda: "CartesianProduct x"))
+
+
+def test_quiet_window_warns_tolerates_only_py4j_errors():
+    from types import SimpleNamespace as NS
+    from py4j.protocol import Py4JError
+    from postgres_scanner_spark import _quiet_bounded_window_warns
+
+    def session(set_level):
+        log4j = NS(core=NS(config=NS(Configurator=NS(setLevel=set_level))),
+                   Level=NS(ERROR="ERROR"))
+        jvm = NS(org=NS(apache=NS(logging=NS(log4j=log4j))))
+        return NS(sparkContext=NS(_jvm=jvm))
+
+    calls = []
+    _quiet_bounded_window_warns(session(lambda *a: calls.append(a)))
+    assert calls == [("org.apache.spark.sql.execution.window.WindowExec",
+                      "ERROR")]
+    _quiet_bounded_window_warns(session(_raises(Py4JError("no log4j2"))))
+    with pytest.raises(TypeError):
+        _quiet_bounded_window_warns(session(_raises(TypeError("bug"))))

@@ -88,6 +88,29 @@ def test_a6_partitions_everything_and_improves(spark):
     assert inertia2 <= inertia1 + 1e-6
 
 
+def test_km_assign_negative_vec_ids(spark):
+    """Negative vec_ids get the same assignments as the same vectors
+    under shifted non-negative ids (vec_id % p made a group with no
+    centroid replica, and the kernel raised)."""
+    import random
+    from postgres_scanner_spark.operators.ann import _km_assign
+    rnd = random.Random(7)
+    xs = [[rnd.uniform(-1, 1) for _ in range(4)] for _ in range(40)]
+    cents = spark.createDataFrame(
+        [(i, xs[i * 7]) for i in range(3)], "cent_id int, c array<double>")
+
+    def assign(shift):
+        vecs = spark.createDataFrame(
+            [(i - 20 + shift, x) for i, x in enumerate(xs)],
+            "vec_id bigint, x array<double>")
+        return {r.vec_id - shift: (r.cluster, r.dist2)
+                for r in _km_assign(vecs, cents).collect()}
+
+    got = assign(0)
+    assert len(got) == 40 and min(got) == -20
+    assert got == assign(20)
+
+
 def test_e13_second_run_is_incremental(spark):
     """run2_rows must equal the second half's row count — the resume
     processed only the newly-landed file, and the sink equals the
