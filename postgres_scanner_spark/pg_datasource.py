@@ -28,6 +28,10 @@ Parity with the reference's execution strategy:
   value only in the columns whose wire type has no numpy kernel
   (numeric, interval, arrays, geometry…). duckdb:// yields DuckDB's
   own Arrow batches.
+- streaming (`spark.readStream.format("postgres_scan")`): the same
+  read() serves each micro-batch's stream-key slices
+  (PostgresScanPartitionedStreamReader), so every row, batch or
+  streamed, takes the one COPY-binary → Arrow path.
 
 Backends:
 - `duckdb:///path/file.db` — a local DuckDB file standing in for the
@@ -49,9 +53,9 @@ from typing import Iterator
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource, DataSourceArrowWriter, DataSourceReader,
-    DataSourceWriter, EqualTo, Filter, GreaterThan, GreaterThanOrEqual,
-    In, InputPartition, IsNotNull, IsNull, LessThan, LessThanOrEqual,
-    WriterCommitMessage,
+    DataSourceStreamReader, EqualTo, Filter,
+    GreaterThan, GreaterThanOrEqual, In, InputPartition, IsNotNull,
+    IsNull, LessThan, LessThanOrEqual, WriterCommitMessage,
 )
 
 from .pushdown import transform_filters
@@ -424,6 +428,15 @@ class PostgresScanReader(DataSourceReader):
             return f"::numeric({dt.precision},{dt.scale})"
         return ""
 
+    def _relation(self) -> str:
+        """The scanned table as it appears in every query's FROM."""
+        if self.dsn.startswith("duckdb://") and not self.schema_explicit:
+            # the duckdb stand-in stays unqualified by default because
+            # duckdb's default schema is main, not public; an EXPLICIT
+            # schema qualifies it (source_schema attaches, bug63.test)
+            return f'"{self.table}"'
+        return f'"{self.pg_schema}"."{self.table}"'
+
     def _sql(self, task_where: str) -> str:
         if self.dsn.startswith("duckdb://"):
             cols = ", ".join(f'"{f.name}"' for f in self.schema_.fields)
@@ -437,16 +450,7 @@ class PostgresScanReader(DataSourceReader):
             preds.append(task_where)
         if where:
             preds.append(where[len("WHERE "):])
-        if not self.dsn.startswith("duckdb://"):
-            sql = f'SELECT {cols} FROM "{self.pg_schema}"."{self.table}"'
-        elif self.schema_explicit:
-            # duckdb stand-in with an EXPLICIT schema (source_schema
-            # attaches, bug63.test); the default stays unqualified
-            # because duckdb's default schema is main, not public
-            sql = (f'SELECT {cols} FROM '
-                   f'"{self.pg_schema}"."{self.table}"')
-        else:
-            sql = f'SELECT {cols} FROM "{self.table}"'
+        sql = f"SELECT {cols} FROM {self._relation()}"
         if preds:
             sql += " WHERE " + " AND ".join(preds)
         if SETTINGS.pg_debug_show_queries:
@@ -524,31 +528,13 @@ class PostgresScanReader(DataSourceReader):
                 yield from reader.read(cp)
 
 
-from pyspark.sql.datasource import (
-    DataSourceStreamReader, SimpleDataSourceStreamReader,
-)
-
-
-def _stream_exec(dsn: str, sql: str):
-    """Run one streaming key-range SQL against the source and return
-    all rows. Shared by the driver-side Simple reader and the
-    executor-side partitioned reader (where it runs inside the task
-    that owns the key slice). duckdb:// opens read-only so concurrent
-    executor tasks can share the file; libpq DSNs open one short
-    connection per call — the per-task connection model the
-    reference's scan also uses (postgres_scanner.cpp: one connection
-    per parallel scan task)."""
-    with _ProbeConn(dsn) as pc:
-        return pc.exec(sql)
-
-
 class _ProbeConn:
     """ONE connection reused across a sequence of scalar probes — the
     keyset boundary walk issues O(backlog/max_rows) probes on a fresh
     stream's initial backlog, and a connect/auth/close per probe
-    (what _stream_exec does) would make connection setup dominate the
-    walk. Steady state is still one probe; this only changes the
-    cold-start cost from O(slices) handshakes to one."""
+    would make connection setup dominate the walk. Steady state is
+    still one probe; this only changes the cold-start cost from
+    O(slices) handshakes to one."""
 
     def __init__(self, dsn: str):
         if dsn.startswith("duckdb://"):
@@ -582,38 +568,11 @@ class _ProbeConn:
         return False
 
 
-def _stream_exec_iter(dsn: str, sql: str, arraysize: int = 10_000):
-    """Streaming variant of _stream_exec for row-bearing scans: yields
-    rows in fetchmany chunks so a task never builds its whole slice
-    as one Python list. duckdb:// drains incrementally from the
-    relation; live PG uses a SERVER-SIDE (named) cursor so the
-    server, not the client, holds the un-fetched tail. Scalar probes
-    keep using _stream_exec (1-row results)."""
-    if dsn.startswith("duckdb://"):
-        import duckdb
-        con = duckdb.connect(dsn[len("duckdb://"):], read_only=True)
-        try:
-            cur = con.execute(sql)
-            while chunk := cur.fetchmany(arraysize):
-                yield from chunk
-        finally:
-            con.close()
-        return
-    from .pgclient import pg_driver
-    psycopg = pg_driver()
-    with psycopg.connect(dsn) as con:
-        with con.cursor(name="pg_spark_slice") as cur:
-            cur.itersize = arraysize
-            cur.execute(sql)
-            yield from cur
-
-
 def _validate_stream_key(schema: T.StructType, options):
-    """Common option validation for both stream readers: stream_key
-    must name an integer column of the declared schema (offsets must
-    JSON-serialize into the checkpoint and splice into SQL without
-    quoting/injection concerns — a bigserial/identity column, the
-    usual CDC key)."""
+    """stream_key must name an integer column of the declared schema
+    (offsets must JSON-serialize into the checkpoint and splice into
+    SQL without quoting/injection concerns — a bigserial/identity
+    column, the usual CDC key)."""
     key = options.get("stream_key", "")
     if not key:
         raise ValueError(
@@ -629,114 +588,6 @@ def _validate_stream_key(schema: T.StructType, options):
     return key
 
 
-class PostgresScanStreamReader(SimpleDataSourceStreamReader):
-    """STREAMING read path — `spark.readStream.format("postgres_scan")`
-    — the CDC-style polling source the reference cannot express (its
-    scan surface is batch-only): each micro-batch reads only the rows
-    whose monotonic key (`stream_key` option, e.g. a bigserial id)
-    exceeds the last committed offset. Offsets live in the stream's
-    checkpoint, so restarts resume exactly where the last run
-    committed (same guarantee e13 pins for the file source).
-
-    Built on Spark 4's SimpleDataSourceStreamReader: read(start)
-    returns the new rows plus the advanced offset;
-    readBetweenOffsets(start, end) re-reads a committed range
-    deterministically for recovery — both are key-range scans a
-    clustered/indexed source serves without a full table pass."""
-
-    def __init__(self, schema: T.StructType, options):
-        self.schema_ = schema
-        self.dsn = options.get("dsn", "")
-        self.table = options.get("table", "")
-        self.key = _validate_stream_key(schema, options)
-        # bound each SOURCE FETCH during catch-up: read() drains the
-        # backlog present at poll time (so Trigger.AvailableNow
-        # honors its process-everything-available contract in one
-        # run), but pulls it from the database in max_rows-sized
-        # key-range scans, so no single FETCH materializes an
-        # unbounded resultset on the driver
-        self.max_rows = int(options.get("max_rows_per_poll", "0"))
-        # bound the TOTAL rows one read() call assembles: the Simple
-        # reader API holds the whole batch in driver memory, so a
-        # huge initial backlog with only the fetch cap set would
-        # still OOM the driver. When set, a batch stops at the first
-        # fetch that crosses this count (whole key groups kept) and
-        # the next micro-batch resumes from its offset — availableNow
-        # then drains the backlog across SEVERAL bounded batches
-        # instead of one unbounded one. The partitioned reader
-        # (default) never holds rows on the driver at all.
-        self.max_batch = int(options.get("max_rows_per_batch", "0"))
-        if self.max_batch and not self.max_rows:
-            self.max_rows = self.max_batch
-        self.cols = ", ".join(f'"{f.name}"' for f in schema.fields)
-        self.key_idx = [f.name for f in schema.fields].index(self.key)
-
-    def initialOffset(self) -> dict:
-        return {"last_key": None}
-
-    def _scan(self, lo, hi=None, limit=0):
-        where = []
-        if lo is not None:
-            where.append(f'"{self.key}" > {int(lo)}')
-        if hi is not None:
-            where.append(f'"{self.key}" <= {int(hi)}')
-        sql = (f'SELECT {self.cols} FROM "{self.table}"'
-               + (" WHERE " + " AND ".join(where) if where else "")
-               + f' ORDER BY "{self.key}"'
-               + (f" LIMIT {int(limit)}" if limit else ""))
-        return _stream_exec(self.dsn, sql)
-
-    def _scan_capped_whole_keys(self, lo):
-        """One capped fetch that never SPLITS a key group: offsets are
-        key values and the next scan starts strictly above the last
-        key, so a run of EQUAL keys straddling the LIMIT boundary
-        would silently lose its tail. When a fetch fills the limit,
-        drop the boundary key's rows and re-fetch that key's WHOLE
-        group (keys are integers, so (k-1, k] selects exactly k)."""
-        rows = self._scan(lo, limit=self.max_rows)
-        if rows and len(rows) == self.max_rows:
-            k = int(rows[-1][self.key_idx])
-            rows = [r for r in rows if int(r[self.key_idx]) != k]
-            rows += self._scan(k - 1, k)
-        return rows
-
-    def read(self, start: dict):
-        if not self.max_rows:
-            rows = self._scan(start.get("last_key"))
-            if not rows:
-                return iter([]), start
-            return iter(rows), {"last_key": int(rows[-1][self.key_idx])}
-        # capped fetch loop: drain the backlog available NOW in
-        # max_rows-sized scans, so each DATABASE FETCH stays bounded
-        # while availableNow still covers the whole backlog in one
-        # run. The ASSEMBLED batch is held on the driver — inherent
-        # to SimpleDataSourceStreamReader, which prefetches and
-        # caches read()'s result — so max_rows_per_batch additionally
-        # caps the total; a backlog too large for driver memory
-        # belongs on the partitioned reader (the default), which
-        # reads every slice executor-side
-        chunks, total, last = [], 0, start.get("last_key")
-        while True:
-            rows = self._scan_capped_whole_keys(last)
-            if not rows:
-                break
-            chunks.append(rows)
-            total += len(rows)
-            last = int(rows[-1][self.key_idx])
-            if self.max_batch and total >= self.max_batch:
-                break
-        if not chunks:
-            return iter([]), start
-        return itertools.chain.from_iterable(chunks), {"last_key": last}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return iter(self._scan(start.get("last_key"),
-                               end.get("last_key")))
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the stream checkpoint
-
-
 class _KeySlice(InputPartition):
     """One (lo, hi] stream-key range — the unit of executor-side
     streaming work. Slices are VALUE ranges, so a run of equal keys
@@ -749,72 +600,54 @@ class _KeySlice(InputPartition):
 
 
 class PostgresScanPartitionedStreamReader(DataSourceStreamReader):
-    """Default STREAMING read path — the partition-based evolution of
-    the Simple reader above, mirroring the reference's
-    split-per-task scan design (reference: src/postgres_scanner.cpp:
-    238 PostgresInitGlobalState carves the table into per-task
-    ranges; here the carve is by stream key instead of ctid pages).
+    """STREAMING read path — `spark.readStream.format("postgres_scan")`
+    — the CDC-style polling source the reference cannot express (its
+    scan surface is batch-only): each micro-batch reads only the rows
+    whose monotonic key (`stream_key` option, e.g. a bigserial id)
+    exceeds the last committed offset. Offsets are max-key watermarks
+    ({"last_key": k}) kept in the stream's checkpoint, so restarts
+    resume exactly where the last run committed. Assumes an
+    append-only monotonic key (the CDC contract): rows inserted BELOW
+    the committed watermark are never re-observed.
 
-    Why this exists: SimpleDataSourceStreamReader executes read() on
-    the DRIVER and ships every CDC row through that one process —
-    fine at sandbox scale, a funnel at 100x. This reader keeps the
-    driver's work to two scalar-ish probes per micro-batch and moves
-    ALL row traffic to executors:
+    The work splits like the reference's scan (reference:
+    src/postgres_scanner.cpp:238 PostgresInitGlobalState carves the
+    table into per-task ranges; here the carve is by stream key
+    instead of ctid pages), and no row ever transits the driver:
 
     - latestOffset(): one `SELECT max(key)` scalar on the driver.
-    - partitions(start, end): KEYSET-STEPPED boundary probes — one
-      `ORDER BY key OFFSET max_rows-1 LIMIT 1` index walk per slice,
-      so slices are ~max_rows rows each, EXACT under sparse or
-      duplicate keys (a numeric stride would misbalance both) and
-      probe cost tracks SLICE COUNT, not backlog size: in steady
-      state (small new range) it is a single short index probe,
-      where a row_number() window over (lo, hi] would re-sort the
-      whole backlog on the driver connection every trigger. max_rows
-      comes from max_rows_per_poll, else max_rows_per_batch, else a
-      bounded default — a fresh stream's initial backlog always
-      splits.
-    - read(partition): runs ON THE EXECUTOR that owns the slice,
-      scanning `key > lo AND key <= hi` — an index range scan the
-      source serves without a full table pass. No row ever transits
-      the driver.
+    - partitions(start, end): KEYSET-STEPPED boundary probes on one
+      connection — one `ORDER BY key OFFSET max_rows-1 LIMIT 1` index
+      walk per slice, so slices are ~max_rows rows each, EXACT under
+      sparse or duplicate keys (a numeric stride would misbalance
+      both), and probe cost tracks SLICE COUNT, not backlog size: in
+      steady state (small new range) it is a single short index
+      probe. max_rows is max_rows_per_poll, else a bounded default —
+      a fresh stream's initial backlog always splits.
+    - read(partition): runs ON THE EXECUTOR that owns the slice, as a
+      batch scan task whose WHERE is `key > lo AND key <= hi` — the
+      same COPY binary → Arrow read as a ctid task
+      (PostgresScanReader.read: server-side casts, geometry udts and
+      pg_debug_show_queries included), an index range scan the source
+      serves without a full table pass.
 
-    Offsets are max-key watermarks ({"last_key": k}), identical in
-    shape to the Simple reader's, so a checkpoint written by one
-    reader restarts cleanly under the other. Assumes an append-only
-    monotonic key (the CDC contract): rows inserted BELOW the
-    committed watermark are never re-observed.
+    Every query names the table through the batch reader's
+    _relation(), so the `schema` option qualifies it the same way.
     """
 
     def __init__(self, schema: T.StructType, options):
-        self.schema_ = schema
-        self.dsn = options.get("dsn", "")
-        self.table = options.get("table", "")
         self.key = _validate_stream_key(schema, options)
-        # slice size: max_rows_per_poll if given, else the Simple
-        # reader's max_rows_per_batch (same memory-cap intent), else
-        # a bounded default — the INITIAL BACKLOG of a new stream on
-        # a large table must never plan as one whole-range slice
-        self.max_rows = (int(options.get("max_rows_per_poll", "0"))
-                         or int(options.get("max_rows_per_batch", "0"))
-                         or 1_000_000)
-        self.cols = ", ".join(f'"{f.name}"' for f in schema.fields)
+        self._scan = PostgresScanReader(schema, options)
+        self.max_rows = int(options.get("max_rows_per_poll", "0")) \
+            or 1_000_000
 
     def initialOffset(self) -> dict:
         return {"last_key": None}
 
-    def _range_sql(self, lo, hi):
-        where = []
-        if lo is not None:
-            where.append(f'"{self.key}" > {int(lo)}')
-        if hi is not None:
-            where.append(f'"{self.key}" <= {int(hi)}')
-        return (f'SELECT {self.cols} FROM "{self.table}"'
-                + (" WHERE " + " AND ".join(where) if where else "")
-                + f' ORDER BY "{self.key}"')
-
     def latestOffset(self) -> dict:
-        rows = _stream_exec(
-            self.dsn, f'SELECT max("{self.key}") FROM "{self.table}"')
+        with _ProbeConn(self._scan.dsn) as pc:
+            rows = pc.exec(f'SELECT max("{self.key}") '
+                           f'FROM {self._scan._relation()}')
         mx = rows[0][0] if rows else None
         return {"last_key": None if mx is None else int(mx)}
 
@@ -827,16 +660,16 @@ class PostgresScanPartitionedStreamReader(DataSourceStreamReader):
         # no sort, no backlog-sized materialization, and the loop
         # stops as soon as the remainder fits one slice. A slice can
         # exceed max_rows only when a duplicate-key group straddles
-        # its boundary (same collapse the old DISTINCT applied).
+        # its boundary.
         hi = int(hi)
         slices, prev = [], lo
-        with _ProbeConn(self.dsn) as pc:   # one conn for the whole walk
+        with _ProbeConn(self._scan.dsn) as pc:  # one conn for the walk
             while True:
                 cond = f'"{self.key}" <= {hi}'
                 if prev is not None:
                     cond += f' AND "{self.key}" > {int(prev)}'
                 rows = pc.exec(
-                    f'SELECT "{self.key}" FROM "{self.table}" '
+                    f'SELECT "{self.key}" FROM {self._scan._relation()} '
                     f'WHERE {cond} ORDER BY "{self.key}" '
                     f'OFFSET {self.max_rows - 1} LIMIT 1')
                 b = int(rows[0][0]) if rows and rows[0][0] is not None \
@@ -847,12 +680,11 @@ class PostgresScanPartitionedStreamReader(DataSourceStreamReader):
                 slices.append(_KeySlice(prev, b))
                 prev = b
 
-    def read(self, partition):
-        # executor-side: this is the only place rows move — streamed
-        # in fetchmany chunks (server-side cursor on live PG), never
-        # materialized as one list in the task
-        return _stream_exec_iter(
-            self.dsn, self._range_sql(partition.lo, partition.hi))
+    def read(self, partition: _KeySlice) -> Iterator:
+        where = f'"{self.key}" <= {int(partition.hi)}'
+        if partition.lo is not None:
+            where = f'"{self.key}" > {int(partition.lo)} AND {where}'
+        return self._scan.read(_Task(self._scan._sql(where)))
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the stream checkpoint
@@ -1350,13 +1182,17 @@ class PostgresScanDataSource(DataSource):
                 f"table {pg_schema}.{table} not found on remote server")
         return T.StructType(fields)
 
-    def reader(self, schema: T.StructType) -> PostgresScanReader:
+    def _reader_options(self) -> dict:
+        """The options with the schema probe's udts (pg_udts JSON)."""
         import json
         opts = dict(self.options)
         udts = getattr(self, "_pg_udts", {})
         if udts:
             opts["pg_udts"] = json.dumps(udts)
-        return PostgresScanReader(schema, opts)
+        return opts
+
+    def reader(self, schema: T.StructType) -> PostgresScanReader:
+        return PostgresScanReader(schema, self._reader_options())
 
     def writer(self, schema: T.StructType,
                overwrite: bool) -> PostgresScanWriter:
@@ -1365,22 +1201,8 @@ class PostgresScanDataSource(DataSource):
     def streamReader(
             self, schema: T.StructType
     ) -> PostgresScanPartitionedStreamReader:
-        """Spark prefers streamReader() over simpleStreamReader();
-        the partitioned (executor-side) reader is the default.
-        .option('stream_reader', 'simple') opts back into the
-        driver-side Simple reader (raising NOT_IMPLEMENTED here is
-        the documented fallback trigger in pyspark's
-        datasource_internal._streamReader)."""
-        if self.options.get("stream_reader", "") == "simple":
-            from pyspark.errors import PySparkNotImplementedError
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"})
-        return PostgresScanPartitionedStreamReader(schema, self.options)
-
-    def simpleStreamReader(
-            self, schema: T.StructType) -> PostgresScanStreamReader:
-        return PostgresScanStreamReader(schema, self.options)
+        return PostgresScanPartitionedStreamReader(
+            schema, self._reader_options())
 
     def streamWriter(self, schema: T.StructType,
                      overwrite: bool) -> PostgresScanStreamWriter:

@@ -2,11 +2,11 @@
 
 The live-scan paths in this package speak a small psycopg subset:
 ``connect(dsn)`` / ``Connection.cursor()`` / ``Cursor.execute`` /
-``fetchall`` / ``description`` / ``Cursor.copy`` (COPY sub-protocol)
-/ named server-side cursors. No Postgres driver ships in this
-container, but the frontend/backend protocol v3 is public and small
-(PostgreSQL docs, "Frontend/Backend Protocol"), and this repo already
-owns the hard part — the PGCOPY binary payload codec (pgwire.py). So
+``fetchall`` / ``description`` / ``Cursor.copy`` (COPY sub-protocol).
+They must run without an installed Postgres driver, but the
+frontend/backend protocol v3 is public and small (PostgreSQL docs,
+"Frontend/Backend Protocol"), and this repo already owns the hard
+part — the PGCOPY binary payload codec (pgwire.py). So
 this module implements just the message framing those paths need:
 
 - startup + auth: trust, cleartext password, md5, and
@@ -28,8 +28,6 @@ this module implements just the message framing those paths need:
   CopyData spans are the row offsets the column-wise decoder needs
 - transactions (BEGIN/COMMIT/ROLLBACK via the same simple protocol,
   tracked by ReadyForQuery's status byte)
-- DECLARE/FETCH named cursors for the streaming reader's chunked
-  drain
 
 It intentionally does NOT implement the extended (Parse/Bind)
 protocol or listen/notify — the reference's scanner also runs over
@@ -49,6 +47,7 @@ from __future__ import annotations
 import base64
 import hashlib
 import hmac
+import logging
 import os
 import re
 import socket
@@ -63,6 +62,7 @@ from decimal import Decimal
 from .connection import parse_dsn
 
 _U32 = struct.Struct("!I").unpack_from
+_log = logging.getLogger(__name__)
 
 
 class Error(Exception):
@@ -424,19 +424,31 @@ def tls_server_end_point(der: bytes) -> bytes:
     """RFC 5929 tls-server-end-point channel-binding data: the hash
     of the server certificate (DER) using the certificate's own
     signature hash algorithm, with MD5/SHA-1 upgraded to SHA-256 (the
-    RFC's rule; also PG be_tls_get_certificate_hash). Falls back to
-    SHA-256 when the cert can't be parsed — matching what PG hashes
-    for every certificate it can actually serve."""
-    name = "sha256"
+    RFC's rule; also PG be_tls_get_certificate_hash). Without
+    `cryptography`, or for a certificate it cannot parse or whose
+    signature hash it does not know, the hash is SHA-256 — what PG
+    hashes for every certificate it can actually serve — and the
+    fallback is logged, since a wrong guess surfaces only as a SCRAM
+    channel-binding failure."""
     try:
         from cryptography import x509
+        from cryptography.exceptions import UnsupportedAlgorithm
+    except ImportError as exc:
+        _log.warning("channel binding hashes the server certificate "
+                     "with SHA-256: cryptography is unavailable (%s)",
+                     exc)
+        return hashlib.sha256(der).digest()
+    try:
         algo = x509.load_der_x509_certificate(
             der).signature_hash_algorithm
-        if algo is not None and algo.name.lower() not in ("md5", "sha1"):
-            name = algo.name.lower()
-    except Exception:
-        pass
-    return hashlib.new(name, der).digest()
+    except (ValueError, UnsupportedAlgorithm) as exc:
+        _log.warning("channel binding hashes the server certificate "
+                     "with SHA-256: cannot read its signature hash (%s)",
+                     exc)
+        algo = None
+    if algo is None or algo.name.lower() in ("md5", "sha1"):
+        return hashlib.sha256(der).digest()
+    return hashlib.new(algo.name.lower(), der).digest()
 
 
 # ------------------------------------------------- SSL negotiation
@@ -979,64 +991,6 @@ class Cursor:
         return False
 
 
-class ServerCursor(Cursor):
-    """Named cursor: DECLARE ... CURSOR FOR + chunked FETCH — the
-    server holds the un-fetched tail (psycopg3 server-side cursor
-    semantics; used by _stream_exec_iter)."""
-
-    def __init__(self, conn: "Connection", name: str):
-        super().__init__(conn)
-        self.name = name
-        self.itersize = 2000
-        self._declared = False
-        self._exhausted = False
-
-    def execute(self, sql: str, params=None) -> "ServerCursor":
-        self._conn._ensure_tx(force_begin=True)   # cursors need a tx
-        self._conn._simple_query(
-            f'DECLARE "{self.name}" NO SCROLL CURSOR FOR '
-            + _interpolate(sql, params))
-        self._declared = True
-        self._exhausted = False
-        self._res = _Result()
-        self._pos = 0
-        return self
-
-    def _fetch_chunk(self) -> bool:
-        res = self._conn._simple_query(
-            f'FETCH FORWARD {int(self.itersize)} FROM "{self.name}"')
-        if self._res.description is None:
-            self._res.description = res.description
-        self._res.rows = res.rows
-        self._pos = 0
-        if not res.rows:
-            self._exhausted = True
-        return bool(res.rows)
-
-    def fetchone(self):
-        if self._pos >= len(self._res.rows):
-            if self._exhausted or not self._fetch_chunk():
-                return None
-        return super().fetchone()
-
-    def fetchall(self):
-        out = list(self)
-        return out
-
-    def __iter__(self):
-        while (row := self.fetchone()) is not None:
-            yield row
-
-    def close(self) -> None:
-        if self._declared and not self._conn.closed:
-            try:
-                self._conn._simple_query(f'CLOSE "{self.name}"')
-            except Error:
-                pass
-        self._declared = False
-        super().close()
-
-
 # ------------------------------------------------------- connection
 class Connection:
     def __init__(self, dsn: str, autocommit: bool = False):
@@ -1145,11 +1099,10 @@ class Connection:
             raise
 
     # -- internals
-    def _ensure_tx(self, force_begin: bool = False) -> None:
+    def _ensure_tx(self) -> None:
         if self.closed:
             raise Error({"M": "connection is closed"})
-        if (not self.autocommit or force_begin) and \
-                self._proto.tx_status == "I":
+        if not self.autocommit and self._proto.tx_status == "I":
             self._simple_query("BEGIN")
 
     def _simple_query(self, sql: str) -> _Result:
@@ -1207,8 +1160,8 @@ class Connection:
                 raise Error({"M": f"unexpected message {tag!r}"})
 
     # -- psycopg-compatible surface
-    def cursor(self, name: str | None = None) -> Cursor:
-        return ServerCursor(self, name) if name else Cursor(self)
+    def cursor(self) -> Cursor:
+        return Cursor(self)
 
     def execute(self, sql: str, params=None) -> Cursor:
         cur = Cursor(self)

@@ -34,10 +34,7 @@ def _clear_registered_caches() -> None:
         fn = ref()
         if fn is not None:
             alive.append(ref)
-            try:
-                fn()
-            except Exception:
-                pass  # a half-detached catalog must not break SET
+            fn()
     _CACHE_CLEARERS[:] = alive
 
 

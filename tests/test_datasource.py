@@ -715,72 +715,6 @@ def test_stream_reader_poll_cap(registered, tmp_path):
     assert out.select("id").distinct().count() == 25
 
 
-def test_stream_reader_capped_scan_loop():
-    """Executor-free check of the capped drain: read() must issue
-    successive capped scans (each no larger than the cap) and return
-    the union with the final offset in ONE call."""
-    from pyspark.sql import types as T
-    from postgres_scanner_spark.pg_datasource import (
-        PostgresScanStreamReader,
-    )
-
-    schema = T.StructType([T.StructField("id", T.LongType())])
-    r = PostgresScanStreamReader(
-        schema, {"dsn": "duckdb://ignored", "table": "ev",
-                 "stream_key": "id", "max_rows_per_poll": "10"})
-    calls = []
-
-    def fake_scan(lo, hi=None, limit=0):
-        calls.append((lo, hi, limit))
-        rows = [(i,) for i in range(0 if lo is None else lo + 1, 25)
-                if hi is None or i <= hi]
-        return rows[:limit] if limit else rows
-
-    r._scan = fake_scan
-    it, off = r.read({"last_key": None})
-    assert [row[0] for row in it] == list(range(25))
-    assert off == {"last_key": 24}
-    # every database fetch is capped at 10 (the whole-key-group
-    # re-fetches are keyed single-value range scans, uncapped by
-    # design), and the loop ends on an empty probe
-    assert all(limit == 10 for lo, hi, limit in calls if hi is None)
-    assert calls[-1] == (24, None, 10)
-    # empty backlog: offset unchanged, single probe
-    calls.clear()
-    it, off = r.read({"last_key": 24})
-    assert list(it) == [] and off == {"last_key": 24}
-    assert calls == [(24, None, 10)]
-
-
-def test_stream_reader_capped_scan_whole_key_groups():
-    """A run of EQUAL stream-key values straddling the LIMIT boundary
-    must not lose its tail: the capped fetch drops the boundary key
-    and re-fetches that key's whole group (keys are offsets, so a
-    split group would be skipped by the next '> last' scan)."""
-    from pyspark.sql import types as T
-    from postgres_scanner_spark.pg_datasource import (
-        PostgresScanStreamReader,
-    )
-
-    schema = T.StructType([T.StructField("id", T.LongType())])
-    r = PostgresScanStreamReader(
-        schema, {"dsn": "duckdb://ignored", "table": "ev",
-                 "stream_key": "id", "max_rows_per_poll": "4"})
-    # 3 rows of key 1, then 4 rows of key 2, then key 3
-    data = [(1,), (1,), (1,), (2,), (2,), (2,), (2,), (3,)]
-
-    def fake_scan(lo, hi=None, limit=0):
-        rows = [t for t in data
-                if (lo is None or t[0] > lo)
-                and (hi is None or t[0] <= hi)]
-        return rows[:limit] if limit else rows
-
-    r._scan = fake_scan
-    it, off = r.read({"last_key": None})
-    assert list(it) == data          # nothing lost, nothing doubled
-    assert off == {"last_key": 3}
-
-
 def test_call_postgres_attach_rejects_malformed_and_collision(
         registered, tmp_path):
     """Malformed/positional CALL arguments raise instead of silently
@@ -882,7 +816,7 @@ def test_partitioned_stream_reader_empty_and_uncapped(tmp_path):
     touching the source; with no explicit cap the default still
     SLICES (boundary probe against the source — a fresh stream's
     backlog must never plan as one unbounded slice), and
-    max_rows_per_batch is honored as the slice size."""
+    max_rows_per_poll is the slice size."""
     import duckdb
     from pyspark.sql import types as T
     from postgres_scanner_spark import pg_datasource as pgd
@@ -905,22 +839,22 @@ def test_partitioned_stream_reader_empty_and_uncapped(tmp_path):
                  "stream_key": "id"})
     (s1,) = r2.partitions({"last_key": 3}, {"last_key": 9})
     assert (s1.lo, s1.hi) == (3, 9)          # under the cap: one slice
-    # the Simple reader's memory-cap option doubles as the slice size
     r3 = pgd.PostgresScanPartitionedStreamReader(
         schema, {"dsn": f"duckdb://{db}", "table": "ev",
-                 "stream_key": "id", "max_rows_per_batch": "2"})
+                 "stream_key": "id", "max_rows_per_poll": "2"})
     assert r3.max_rows == 2
     parts = r3.partitions({"last_key": None}, {"last_key": 9})
     assert len(parts) == 5                   # 10 rows / 2 per slice
-    got = [row[0] for p_ in parts for row in r3.read(p_)]
+    # each slice reads as the batch scan's Arrow record batches
+    got = [v for p_ in parts for b in r3.read(p_)
+           for v in b.column("id").to_pylist()]
     assert got == list(range(10))
 
 
 def test_partitioned_stream_reader_end_to_end(registered, tmp_path):
-    """Default streaming path e2e: capped run drains the backlog via
-    executor-side slices (no driver row funnel), resumes from the
-    checkpoint, and a Simple-reader run against the SAME checkpoint
-    continues cleanly (offset wire-compat)."""
+    """Streaming path e2e: a capped run drains the backlog via
+    executor-side slices (no driver row funnel), and a second run
+    resumes from the checkpoint with only the new keys."""
     import duckdb
     from pyspark.sql import types as T
     spark = registered
@@ -933,12 +867,11 @@ def test_partitioned_stream_reader_end_to_end(registered, tmp_path):
                            T.StructField("v", T.StringType())])
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ck")
 
-    def run(extra=()):
+    def run():
         q = (spark.readStream.format("postgres_scan").schema(schema)
              .option("dsn", f"duckdb://{db}").option("table", "ev")
              .option("stream_key", "id")
              .option("max_rows_per_poll", "10")
-             .options(**dict(extra))
              .load()
              .writeStream.format("parquet").option("path", sink)
              .option("checkpointLocation", ckpt)
@@ -953,46 +886,10 @@ def test_partitioned_stream_reader_end_to_end(registered, tmp_path):
     con.execute("INSERT INTO ev SELECT range + 37, 'n' || range "
                 "FROM range(8)")
     con.close()
-    # resume under the SIMPLE reader from the partitioned checkpoint
-    run(extra={"stream_reader": "simple"})
+    run()                                    # resume from the checkpoint
     out = spark.read.parquet(sink)
     assert out.count() == 45                 # nothing re-read or lost
     assert out.filter("id >= 37").count() == 8
-
-
-def test_simple_stream_reader_batch_cap():
-    """max_rows_per_batch bounds the TOTAL rows one Simple read()
-    assembles on the driver (whole key groups kept); the next batch
-    resumes from the returned offset, so several bounded batches
-    drain what one unbounded batch used to."""
-    from pyspark.sql import types as T
-    from postgres_scanner_spark.pg_datasource import (
-        PostgresScanStreamReader,
-    )
-
-    schema = T.StructType([T.StructField("id", T.LongType())])
-    r = PostgresScanStreamReader(
-        schema, {"dsn": "duckdb://ignored", "table": "ev",
-                 "stream_key": "id", "max_rows_per_poll": "10",
-                 "max_rows_per_batch": "20"})
-
-    def fake_scan(lo, hi=None, limit=0):
-        rows = [(i,) for i in range(0 if lo is None else lo + 1, 55)
-                if hi is None or i <= hi]
-        return rows[:limit] if limit else rows
-
-    r._scan = fake_scan
-    seen, off = [], {"last_key": None}
-    for _ in range(10):
-        it, off2 = r.read(off)
-        rows = list(it)
-        if not rows:
-            break
-        assert len(rows) <= 20               # the driver-memory cap
-        seen += rows
-        off = off2
-    assert [t[0] for t in seen] == list(range(55))
-    assert off == {"last_key": 54}
 
 
 def _probe_reader(monkeypatch, connect):

@@ -48,9 +48,10 @@ def _have_server() -> bool:
 
 
 # The scan-path tests (typed scan, parallel ctid scan, pushdown,
-# query-mode probe, COPY OUT wire interop, mid-scan backend kill) run
-# in the default tier: they pin the live Arrow-native read path. The
-# rest of the connector surface is marked `slow` test by test.
+# query-mode probe, stream reads, COPY OUT wire interop, mid-scan
+# backend kill) run in the default tier: they pin the live
+# Arrow-native read path. The rest of the connector surface is
+# marked `slow` test by test.
 pytestmark = pytest.mark.skipif(
     not _have_server(), reason="no postgres server binaries in PATH")
 
@@ -162,17 +163,6 @@ def test_pgclient_transactions(pg_server):
     cur.execute("SELECT count(*) FROM txt1")
     assert cur.fetchone() == (1,)
     con.close()
-
-
-@pytest.mark.slow
-def test_pgclient_named_cursor(pg):
-    """Server-side cursor drains in chunks (the streaming reader's
-    fetch path)."""
-    cur = pg.cursor(name="live_nc")
-    cur.itersize = 3
-    cur.execute("SELECT g FROM generate_series(1, 10) g")
-    assert [r[0] for r in cur] == list(range(1, 11))
-    cur.close()
 
 
 # ----------------------------------------------- typed scan (S2/S8)
@@ -474,7 +464,6 @@ def test_live_overwrite_datetime_typmod_drops(registered, pg,
 
 
 # --------------------------------------- streaming source (S29/S30)
-@pytest.mark.slow
 def test_live_partitioned_stream_read(registered, pg, pg_server,
                                       tmp_path):
     """S29 against a real server: the partitioned executor-side
@@ -507,6 +496,71 @@ def test_live_partitioned_stream_read(registered, pg, pg_server,
     out = spark.read.parquet(sink)
     assert out.count() == 15
     assert out.filter("id > 10").count() == 5
+
+
+def test_live_stream_honors_schema_option(registered, pg, pg_server,
+                                          tmp_path):
+    """The stream source reads the table of the `schema` option: the
+    max-key probe, the keyset walk and the slice reads all name
+    s.sev, never the same-named public.sev (which holds other
+    rows)."""
+    spark = registered
+    cur = pg.cursor()
+    cur.execute("DROP TABLE IF EXISTS public.sev")
+    cur.execute("CREATE TABLE public.sev (id int8, v text)")
+    cur.execute("INSERT INTO public.sev SELECT g, 'public' || g "
+                "FROM generate_series(1, 50) g")
+    cur.execute("DROP SCHEMA IF EXISTS s CASCADE")
+    cur.execute("CREATE SCHEMA s")
+    cur.execute("CREATE TABLE s.sev (id int8, v text)")
+    cur.execute("INSERT INTO s.sev SELECT g, 's' || g "
+                "FROM generate_series(1, 7) g")
+    schema = T.StructType([T.StructField("id", T.LongType()),
+                           T.StructField("v", T.StringType())])
+    q = (spark.readStream.format("postgres_scan").schema(schema)
+         .option("dsn", pg_server).option("schema", "s")
+         .option("table", "sev").option("stream_key", "id")
+         .option("max_rows_per_poll", "3").load()
+         .writeStream.format("parquet")
+         .option("path", str(tmp_path / "sink"))
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .trigger(availableNow=True).start())
+    assert q.awaitTermination(120)
+    got = {(r.id, r.v)
+           for r in spark.read.parquet(str(tmp_path / "sink")).collect()}
+    assert got == {(i, f"s{i}") for i in range(1, 8)}
+
+
+def test_live_typed_stream_matches_batch_scan(registered, pg, pg_server):
+    """Stream slices read through the batch scan's COPY binary →
+    Arrow path: a stream over typed columns, cut into 3-row slices,
+    returns exactly what a batch postgres_scan of the table does,
+    NULLs included."""
+    spark = registered
+    cur = pg.cursor()
+    cur.execute("DROP TABLE IF EXISTS styped")
+    cur.execute("CREATE TABLE styped (id int4, n numeric(12,2), "
+                "ts timestamptz, u uuid, ta text[], js jsonb)")
+    cur.execute("""
+        INSERT INTO styped
+        SELECT g, g * 1.25, '2024-03-04 05:06:07+00'::timestamptz
+                             + g * interval '1 hour',
+               ('a0eebc99-9c0b-4ef8-bb6d-6bb9bd380a' || lpad(g::text, 2,
+                                                             '0'))::uuid,
+               ARRAY['x' || g, NULL, 'y'],
+               jsonb_build_object('k', g, 'tags', jsonb_build_array(g))
+        FROM generate_series(1, 8) g
+    """)
+    cur.execute("INSERT INTO styped (id) VALUES (9)")
+    batch = sorted(_scan(spark, pg_server, "styped").collect())
+    assert len(batch) == 9 and batch[-1].n is None
+    (spark.readStream.format("postgres_scan")
+     .option("dsn", pg_server).option("table", "styped")
+     .option("stream_key", "id").option("max_rows_per_poll", "3")
+     .load()
+     .writeStream.format("memory").queryName("styped_stream")
+     .trigger(availableNow=True).start().awaitTermination(120))
+    assert sorted(spark.table("styped_stream").collect()) == batch
 
 
 @pytest.mark.slow

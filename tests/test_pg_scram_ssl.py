@@ -91,11 +91,14 @@ def test_scram_plus_channel_binding_cbind_input():
     assert f1.split(b",p=")[1] != f2.split(b",p=")[1]   # proof differs
 
 
-def test_tls_server_end_point_hash():
+def test_tls_server_end_point_hash(monkeypatch, caplog):
     """RFC 5929: hash the cert DER with its signature hash; SHA-256
     certs hash with sha256, and a SHA-1-signed cert upgrades to
-    sha256 rather than using the broken digest."""
+    sha256 rather than using the broken digest. Without cryptography,
+    or for DER it cannot read, the hash falls back to SHA-256 with a
+    logged reason; any other error (not DER at all) propagates."""
     import datetime
+    import sys
     import hashlib as hl
     from cryptography import x509
     from cryptography.hazmat.primitives import hashes
@@ -121,6 +124,18 @@ def test_tls_server_end_point_hash():
         __import__("cryptography.hazmat.primitives.serialization",
                    fromlist=["Encoding"]).Encoding.DER)
     assert tls_server_end_point(der384) == hl.sha384(der384).digest()
+
+    garbage = b"\x30\x03not a certificate"
+    with caplog.at_level("WARNING", logger="postgres_scanner_spark"):
+        assert tls_server_end_point(garbage) == hl.sha256(garbage).digest()
+    assert "cannot read its signature hash" in caplog.text
+    with pytest.raises(TypeError):
+        tls_server_end_point(None)
+    caplog.clear()
+    monkeypatch.setitem(sys.modules, "cryptography", None)
+    with caplog.at_level("WARNING", logger="postgres_scanner_spark"):
+        assert tls_server_end_point(der384) == hl.sha256(der384).digest()
+    assert "cryptography is unavailable" in caplog.text
 
 
 def test_saslprep_ascii_and_unicode():

@@ -186,6 +186,26 @@ def test_array_as_varchar_setting():
         SETTINGS.set("pg_array_as_varchar", False)
 
 
+def test_array_as_varchar_clearer_error_propagates():
+    """A cache clearer that fails makes the SET fail: a stale schema
+    cache must never survive the flip silently."""
+    from postgres_scanner_spark import settings as st_mod
+
+    class Broken:
+        def clear(self):
+            raise RuntimeError("clearer failed")
+
+    broken = Broken()
+    st_mod.register_cache_clearer(broken.clear)
+    try:
+        with pytest.raises(RuntimeError, match="clearer failed"):
+            SETTINGS.set("pg_array_as_varchar", True)
+    finally:
+        st_mod._CACHE_CLEARERS[:] = [
+            r for r in st_mod._CACHE_CLEARERS if r() != broken.clear]
+        SETTINGS.set("pg_array_as_varchar", False)
+
+
 def test_inverse_type_map():
     assert spark_type_to_pg(T.DecimalType(12, 2)) == "NUMERIC(12,2)"
     assert spark_type_to_pg(T.ArrayType(T.LongType())) == "BIGINT[]"
