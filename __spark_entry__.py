@@ -55,87 +55,86 @@ _MODULES = (
 # from the r5 cohort. Regenerate with tools/rotate_order.py
 # --write after each round (--explain shows per-query evidence).
 _COST_ORDER = [
+    "d5_embedding_dedup", "d14_semantic_dedup",
+    "d27_scaled_semantic_dedup", "a6_kmeans_lloyd", "a1_cosine_topk",
+    "e4_top_users", "q6_forecast_revenue", "p4_filter_pushdown",
+    "a13_norm_bound_mips", "q15_top_supplier",
+    "e20_streaming_neardup_ingest", "ds1_above_avg_customers",
+    "ds6_top_customers_per_region", "w15_gapfill_locf",
+    "ds15_channel_growth_ratio", "ds19_two_fact_growth",
+    "ds20_category_share_window", "ds21_disjunctive_bands",
+    "a10_filtered_ann", "a11_mmr_diversified", "e21_watermark_dedup",
+    "ds13_low_revenue_parts", "a3_ivf_ann", "a8_sq8_ann", "a2_lsh_ann",
+    "e16_connector_stream", "q9_product_profit", "ds3_brand_year",
+    "p3_decimals", "p11_struct_fields", "p10_verify_checksum",
+    "p8_json", "q19_discounted_revenue", "q14_promo_effect",
+    "w5_lag_delta", "ds2_weekday_share", "q17_small_quantity",
+    "e1_hourly_event_rollup", "ds10_avg_measures",
+    "e19_idempotent_replay", "ds16_above_avg_balance_nations",
+    "ds17_substr_cohort_revenue", "w9_continuous_aggregate",
+    "w10_skew_join", "ds5_nation_share", "a12_ivfpq_ann",
+    "ds7_yoy_growth", "ds9_channel_rollup", "a4_knn_label",
+    "e12_stream_static_join", "e13_checkpoint_resume",
+    "ds4_price_buckets", "ds11_timeband_counts", "x2_hash_sample",
+    "e5_event_funnel", "p6_interval", "t3_token_count", "p2_nulls",
+    "t4_fingerprint", "t13_context_chunks", "p5_arrays",
+    "x3_vocab_topk", "x18_weighted_reservoir_sample",
+    "m14_page_pruned_scan", "w21_time_decay_attribution",
+    "t20_kneser_ney_logprob", "m13_bloom_pruned_probe",
+    "x17_dsir_select", "d21_repeated_substring_excision",
+    "t2_quality_score", "x5_sequence_pack", "x11_quality_topk_sample",
+    "w3_window_rank", "x8_epoch_plan", "m7_npy_tensor_parse",
+    "e17_streaming_dedup_ingest", "t17_perplexity_buckets",
+    "m9_shard_repack_plan", "x12_corpus_compile", "d17_lsh_param_sweep",
+    "w19_ema_daily_revenue", "w16_time_weighted_avg",
+    "w18_retention_cohorts", "m11_parquet_footer_manifest",
+    "w13_dist_windows", "m4_wav_features", "m12_pruned_rowgroup_scan",
+    "e22_streaming_contamination_guard", "x4_source_mix",
+    "e7_streaming_dedup", "e6_stateful_anomaly",
+    "d19_unicode_shingle_dedup", "t19_source_kl_divergence",
+    "d7_contamination", "d23_benchmark_span_excision", "a7_ann_recall",
+    "d12_dedup_eval", "t15_bpe_encode", "e10_late_data_policy",
+    "e14_streaming_upsert", "x16_domain_reweight",
+    "x15_length_bucketed_batches", "t12_zipf_fit", "t8_entropy_quality",
+    "t7_repetition_stats", "t10_tfidf_keywords", "t9_bigram_logprob",
+    "x9_temperature_mix", "e23_stateful_quota_admission",
+    "d22_prefix_filter_join", "d20_repeated_substrings", "w2_cube",
+    "p7_timestamp_parts", "w4_moving_avg", "p9_uuid", "t1_language_id",
+    "t6_pii_redact", "t11_bpe_pairs", "x10_leakage_safe_split",
+    "w7_percentiles", "ds8_customer_cohort", "m2_frame_sample",
+    "t22_unigram_lm_encode", "d25_chunk_cluster", "d26_neardup_apply",
+    "d16_cdc_chunk_dedup", "t21_unigram_lm_train", "d24_cc_two_phase",
+    "d2_minhash_lsh_dedup", "q21_suppliers_waiting",
+    "ds12_order_size_band", "ds14_shipping_lag", "x7_dataset_card",
+    "a9_mih_hamming_ann", "e18_streaming_quality_router",
+    "w17_ohlc_bars", "ds18_multi_exists_cohort", "d15_source_overlap",
+    "x13_neardup_safe_split", "m10_webdataset_samples",
+    "p14_timezone_convert", "x14_snapshot_diff", "d18_doc_novelty",
+    "w14_first_touch", "w12_range_frame", "w11_grouping_sets",
+    "x6_global_shuffle", "e2_sessionization", "d8_incremental_dedup",
+    "m5_video_container", "t18_script_id", "w20_asof_directional",
+    "m3_image_dims", "m8_jsonl_shard_codec", "m6_tar_shard_manifest",
+    "d10_boilerplate_removal", "e11_streaming_sessions", "a5_pq_ann",
     "t23_classifier_train", "t24_classifier_apply",
-    "d27_scaled_semantic_dedup", "w22_ltob_downsample",
-    "x19_cms_heavy_hitters", "e24_streaming_cms_maintenance",
-    "x20_source_overlap_matrix", "m16_dictionary_audit",
-    "p15_bucketed_colocated_join", "t25_pmi_collocations",
-    "e25_streaming_hll_distinct", "m15_dhash_neardup",
-    "e9_stream_ingest_store", "m1_decode_features", "w8_range_join",
-    "d11_verbatim_spans", "d9_incremental_lsh", "e3_streaming_hourly",
-    "e15_stream_left_outer", "e8_stream_stream_join", "d13_dedup_apply",
-    "d6_dedup_clusters", "w6_asof_join", "x1_sketch_aggregates",
-    "p13_range_arrays", "t16_quality_classifier", "t14_bpe_train",
-    "q1_pricing_summary", "q23_session_sql", "d1_exact_dedup",
-    "d3_simhash_dedup", "d4_ngram_jaccard", "q13_customer_distribution",
+    "w22_ltob_downsample", "x19_cms_heavy_hitters",
+    "e24_streaming_cms_maintenance", "x20_source_overlap_matrix",
+    "m16_dictionary_audit", "p15_bucketed_colocated_join",
+    "t25_pmi_collocations", "e25_streaming_hll_distinct",
+    "m15_dhash_neardup", "e9_stream_ingest_store", "m1_decode_features",
+    "w8_range_join", "d11_verbatim_spans", "d9_incremental_lsh",
+    "e3_streaming_hourly", "e15_stream_left_outer",
+    "e8_stream_stream_join", "d13_dedup_apply", "d6_dedup_clusters",
+    "w6_asof_join", "x1_sketch_aggregates", "p13_range_arrays",
+    "t16_quality_classifier", "t14_bpe_train", "q1_pricing_summary",
+    "q23_session_sql", "d1_exact_dedup", "d3_simhash_dedup",
+    "d4_ngram_jaccard", "q13_customer_distribution",
     "q20_potential_promo", "w1_rollup", "q10_returned_items",
     "q12_shipmode", "q18_large_volume_customer",
     "q22_global_sales_opportunity", "q16_parts_supplier",
     "t5_filter_pipeline", "q11_important_stock", "q7_volume_shipping",
     "q8_market_share", "q3_shipping_priority", "q4_order_priority",
     "p12_binary_ops", "q5_local_supplier_volume",
-    "q2_min_cost_supplier", "p1_count_star", "ds4_price_buckets",
-    "e4_top_users", "ds11_timeband_counts", "q6_forecast_revenue",
-    "x2_hash_sample", "e5_event_funnel", "p4_filter_pushdown",
-    "p6_interval", "t3_token_count", "p2_nulls", "t4_fingerprint",
-    "t13_context_chunks", "p5_arrays", "x3_vocab_topk",
-    "x18_weighted_reservoir_sample", "m14_page_pruned_scan",
-    "a13_norm_bound_mips", "w21_time_decay_attribution",
-    "t20_kneser_ney_logprob", "m13_bloom_pruned_probe",
-    "x17_dsir_select", "d21_repeated_substring_excision",
-    "t2_quality_score", "x5_sequence_pack", "x11_quality_topk_sample",
-    "w3_window_rank", "q15_top_supplier", "x8_epoch_plan",
-    "m7_npy_tensor_parse", "e17_streaming_dedup_ingest",
-    "t17_perplexity_buckets", "m9_shard_repack_plan",
-    "x12_corpus_compile", "e20_streaming_neardup_ingest",
-    "d17_lsh_param_sweep", "w19_ema_daily_revenue",
-    "ds1_above_avg_customers", "ds6_top_customers_per_region",
-    "w15_gapfill_locf", "w16_time_weighted_avg",
-    "ds15_channel_growth_ratio", "ds19_two_fact_growth",
-    "ds20_category_share_window", "ds21_disjunctive_bands",
-    "a10_filtered_ann", "w18_retention_cohorts", "a11_mmr_diversified",
-    "m11_parquet_footer_manifest", "w13_dist_windows",
-    "m4_wav_features", "e21_watermark_dedup",
-    "m12_pruned_rowgroup_scan", "e22_streaming_contamination_guard",
-    "x4_source_mix", "e7_streaming_dedup", "e6_stateful_anomaly",
-    "d19_unicode_shingle_dedup", "t19_source_kl_divergence",
-    "ds13_low_revenue_parts", "d7_contamination", "a6_kmeans_lloyd",
-    "a3_ivf_ann", "d23_benchmark_span_excision", "a8_sq8_ann",
-    "a2_lsh_ann", "a7_ann_recall", "d12_dedup_eval", "t15_bpe_encode",
-    "d14_semantic_dedup", "e10_late_data_policy",
-    "e14_streaming_upsert", "e16_connector_stream",
-    "x16_domain_reweight", "x15_length_bucketed_batches",
-    "a1_cosine_topk", "d5_embedding_dedup", "t12_zipf_fit",
-    "t8_entropy_quality", "t7_repetition_stats", "t10_tfidf_keywords",
-    "t9_bigram_logprob", "x9_temperature_mix",
-    "e23_stateful_quota_admission", "q9_product_profit",
-    "d22_prefix_filter_join", "d20_repeated_substrings",
-    "ds3_brand_year", "w2_cube", "p3_decimals", "p7_timestamp_parts",
-    "p11_struct_fields", "p10_verify_checksum", "p8_json",
-    "w4_moving_avg", "q19_discounted_revenue", "p9_uuid",
-    "t1_language_id", "t6_pii_redact", "t11_bpe_pairs",
-    "x10_leakage_safe_split", "q14_promo_effect", "w5_lag_delta",
-    "ds2_weekday_share", "w7_percentiles", "q17_small_quantity",
-    "ds8_customer_cohort", "m2_frame_sample", "e1_hourly_event_rollup",
-    "t22_unigram_lm_encode", "d25_chunk_cluster", "d26_neardup_apply",
-    "d16_cdc_chunk_dedup", "t21_unigram_lm_train", "d24_cc_two_phase",
-    "d2_minhash_lsh_dedup", "q21_suppliers_waiting",
-    "ds12_order_size_band", "ds14_shipping_lag", "x7_dataset_card",
-    "ds10_avg_measures", "a9_mih_hamming_ann",
-    "e18_streaming_quality_router", "w17_ohlc_bars",
-    "e19_idempotent_replay", "ds16_above_avg_balance_nations",
-    "ds17_substr_cohort_revenue", "ds18_multi_exists_cohort",
-    "d15_source_overlap", "x13_neardup_safe_split",
-    "m10_webdataset_samples", "p14_timezone_convert",
-    "x14_snapshot_diff", "d18_doc_novelty", "w9_continuous_aggregate",
-    "w14_first_touch", "w12_range_frame", "w11_grouping_sets",
-    "w10_skew_join", "x6_global_shuffle", "e2_sessionization",
-    "d8_incremental_dedup", "m5_video_container", "ds5_nation_share",
-    "t18_script_id", "a12_ivfpq_ann", "w20_asof_directional",
-    "m3_image_dims", "ds7_yoy_growth", "m8_jsonl_shard_codec",
-    "ds9_channel_rollup", "m6_tar_shard_manifest", "a4_knn_label",
-    "d10_boilerplate_removal", "e12_stream_static_join",
-    "e13_checkpoint_resume", "e11_streaming_sessions", "a5_pq_ann",
+    "q2_min_cost_supplier", "p1_count_star",
 ]
 _RANK = {n: i for i, n in enumerate(_COST_ORDER)}
 

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..runtime import det_round, scratch_persist
+from . import kernels
+from .kernels import SQL_DOT, dot
 
 N_QUERIES = 5     # vec_id < 5 are the query vectors
 TOP_K = 3
@@ -48,20 +50,10 @@ def _planes() -> list[list[int]]:
 PLANES = _planes()
 
 
-def _dot(u: Column, v: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(u, v, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, z: acc + z)
-
-
-_SQL_DOT = ("list_sum(list_transform(range(len({u})), i -> "
-            "CAST({u}[i+1] AS DOUBLE) * CAST({v}[i+1] AS DOUBLE)))")
-
-
 def _with_norm(e: DataFrame) -> DataFrame:
     return e.select(
         "vec_id", "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("norm"))
+        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("norm"))
 
 
 # ------------------------------------------------------ A1 brute force
@@ -75,7 +67,7 @@ def a1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("q_emb"),
         F.col("norm").alias("q_norm"))
     c = e.filter(F.col("vec_id") >= N_QUERIES)
-    cos = _dot(F.col("q_emb"), F.col("embedding")) \
+    cos = dot(F.col("q_emb"), F.col("embedding")) \
         / (F.col("q_norm") * F.col("norm"))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_raw"), F.col("neighbor_id"))
@@ -95,14 +87,14 @@ def a1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _A1_SQL = f"""
 WITH n AS (
   SELECT vec_id, embedding,
-         sqrt({_SQL_DOT.format(u='embedding', v='embedding')}) AS norm
+         sqrt({SQL_DOT.format(u='embedding', v='embedding')}) AS norm
   FROM embeddings),
 q AS (SELECT vec_id AS query_id, embedding AS q_emb, norm AS q_norm
       FROM n WHERE vec_id < {N_QUERIES}),
 c AS (SELECT * FROM n WHERE vec_id >= {N_QUERIES}),
 scored AS (
   SELECT query_id, c.vec_id AS neighbor_id,
-         {_SQL_DOT.format(u='q_emb', v='c.embedding')} / (q_norm * c.norm) AS cos_raw
+         {SQL_DOT.format(u='q_emb', v='c.embedding')} / (q_norm * c.norm) AS cos_raw
   FROM c CROSS JOIN q),
 ranked AS (
   SELECT query_id, neighbor_id, cos_raw,
@@ -121,7 +113,7 @@ def _bucket(emb: str) -> Column:
     bits = []
     for row in PLANES:
         plane = F.array(*[F.lit(float(x)) for x in row])
-        s = _dot(F.col(emb), plane)
+        s = dot(F.col(emb), plane)
         bits.append(F.when(s >= 0, F.lit("1")).otherwise(F.lit("0")))
     return F.concat(*bits)
 
@@ -130,7 +122,7 @@ def _sql_bucket(emb: str) -> str:
     bits = []
     for row in PLANES:
         plane = "[" + ", ".join(f"{float(x)!r}" for x in row) + "]"
-        s = _SQL_DOT.format(u=emb, v=plane).replace(
+        s = SQL_DOT.format(u=emb, v=plane).replace(
             f"len({emb})", str(DIM))
         bits.append(f"(CASE WHEN {s} >= 0 THEN '1' ELSE '0' END)")
     return "||".join(bits)
@@ -147,7 +139,7 @@ def a2_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"),
         F.col("norm").alias("q_norm"), F.col("bucket").alias("q_bucket"))
     c = e.filter(F.col("vec_id") >= N_QUERIES)
-    cos = _dot(F.col("q_emb"), F.col("embedding")) \
+    cos = dot(F.col("q_emb"), F.col("embedding")) \
         / (F.col("q_norm") * F.col("norm"))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_raw"), F.col("neighbor_id"))
@@ -168,7 +160,7 @@ def _a2_sql() -> str:
     return f"""
 WITH n AS (
   SELECT vec_id, embedding,
-         sqrt({_SQL_DOT.format(u='embedding', v='embedding')}) AS norm,
+         sqrt({SQL_DOT.format(u='embedding', v='embedding')}) AS norm,
          {_sql_bucket('embedding')} AS bucket
   FROM embeddings),
 q AS (SELECT vec_id AS query_id, embedding AS q_emb, norm AS q_norm,
@@ -177,7 +169,7 @@ q AS (SELECT vec_id AS query_id, embedding AS q_emb, norm AS q_norm,
 c AS (SELECT * FROM n WHERE vec_id >= {N_QUERIES}),
 scored AS (
   SELECT query_id, c.vec_id AS neighbor_id,
-         {_SQL_DOT.format(u='q_emb', v='c.embedding')} / (q_norm * c.norm) AS cos_raw
+         {SQL_DOT.format(u='q_emb', v='c.embedding')} / (q_norm * c.norm) AS cos_raw
   FROM c JOIN q ON c.bucket = q.q_bucket),
 ranked AS (
   SELECT query_id, neighbor_id, cos_raw,
@@ -213,7 +205,7 @@ def a3_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("cent_id"),
         F.col("embedding").alias("c_emb"), F.col("norm").alias("c_norm"))
     # assign every vector to its nearest centroid (cosine)
-    sim = _dot(F.col("embedding"), F.col("c_emb")) \
+    sim = dot(F.col("embedding"), F.col("c_emb")) \
         / (F.col("norm") * F.col("c_norm"))
     wa = Window.partitionBy("vec_id").orderBy(F.desc("c_sim"), "cent_id")
     assigned = scratch_persist(
@@ -229,7 +221,7 @@ def a3_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("query_id"),
                 F.col("embedding").alias("q_emb"),
                 F.col("norm").alias("q_norm"), "cent_id")
-    cos = _dot(F.col("q_emb"), F.col("embedding")) \
+    cos = dot(F.col("q_emb"), F.col("embedding")) \
         / (F.col("q_norm") * F.col("norm"))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_raw"), F.col("neighbor_id"))
@@ -251,14 +243,14 @@ def _a3_sql() -> str:
     return f"""
 WITH n AS (
   SELECT vec_id, embedding,
-         sqrt({_SQL_DOT.format(u='embedding', v='embedding')}) AS norm
+         sqrt({SQL_DOT.format(u='embedding', v='embedding')}) AS norm
   FROM embeddings),
 cent AS (SELECT vec_id AS cent_id, embedding AS c_emb, norm AS c_norm
          FROM n WHERE vec_id < {N_CENTROIDS}),
 assigned AS (
   SELECT vec_id, embedding, norm, cent_id,
          ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY
-           {_SQL_DOT.format(u='embedding', v='c_emb')} / (norm * c_norm) DESC,
+           {SQL_DOT.format(u='embedding', v='c_emb')} / (norm * c_norm) DESC,
            cent_id) AS crk
   FROM n CROSS JOIN cent),
 corpus_lists AS (
@@ -269,7 +261,7 @@ probes AS (
   FROM assigned WHERE crk <= {N_PROBE} AND vec_id < {N_QUERIES}),
 scored AS (
   SELECT DISTINCT query_id, c.vec_id AS neighbor_id,
-         {_SQL_DOT.format(u='q_emb', v='c.embedding')} / (q_norm * c.norm)
+         {SQL_DOT.format(u='q_emb', v='c.embedding')} / (q_norm * c.norm)
            AS cos_raw
   FROM corpus_lists c JOIN probes USING (cent_id)),
 ranked AS (
@@ -302,13 +294,13 @@ def a4_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = tables.load(spark, sf_dir, "embeddings")
     n = e.select(
         "vec_id", "label", "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("norm"))
+        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("norm"))
     q = n.filter(F.col("vec_id") < _KNN_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("label").alias("true_label"),
         F.col("embedding").alias("q_emb"), F.col("norm").alias("q_norm"))
     c = n.filter(F.col("vec_id") >= _KNN_QUERIES)
-    cos = _dot(F.col("q_emb"), F.col("embedding")) \
+    cos = dot(F.col("q_emb"), F.col("embedding")) \
         / (F.col("q_norm") * F.col("norm"))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_raw"), F.col("vec_id"))
@@ -336,7 +328,7 @@ def a4_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
 _A4_SQL = f"""
 WITH n AS (
   SELECT vec_id, label, embedding,
-         sqrt({_SQL_DOT.format(u='embedding', v='embedding')}) AS norm
+         sqrt({SQL_DOT.format(u='embedding', v='embedding')}) AS norm
   FROM embeddings),
 q AS (SELECT vec_id AS query_id, label AS true_label,
              embedding AS q_emb, norm AS q_norm
@@ -344,7 +336,7 @@ q AS (SELECT vec_id AS query_id, label AS true_label,
 c AS (SELECT * FROM n WHERE vec_id >= {_KNN_QUERIES}),
 scored AS (
   SELECT query_id, true_label, c.vec_id, c.label,
-         {_SQL_DOT.format(u='q_emb', v='c.embedding')} / (q_norm * c.norm)
+         {SQL_DOT.format(u='q_emb', v='c.embedding')} / (q_norm * c.norm)
            AS cos_raw
   FROM c CROSS JOIN q),
 top AS (
@@ -429,7 +421,7 @@ def _pq_exact_rerank(e: DataFrame, shortlist: DataFrame) -> DataFrame:
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"), F.col("norm").alias("q_norm"))
-    cos = _dot(F.col("q_emb"), F.col("embedding")) \
+    cos = dot(F.col("q_emb"), F.col("embedding")) \
         / (F.col("q_norm") * F.col("norm"))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_raw"), F.col("neighbor_id"))
@@ -497,7 +489,7 @@ def _pq_sql_common(cent_name: str) -> str:
           ).format(n=_PQ_SUB)
     return f"""n AS MATERIALIZED (
   SELECT vec_id, embedding,
-         sqrt({_SQL_DOT.format(u='embedding', v='embedding')}) AS norm
+         sqrt({SQL_DOT.format(u='embedding', v='embedding')}) AS norm
   FROM embeddings),
 ms AS (SELECT CAST(unnest(range({_PQ_M})) AS INT) AS m),
 {cent_name} AS MATERIALIZED (
@@ -533,7 +525,7 @@ q AS (SELECT vec_id AS query_id, embedding AS q_emb, norm AS q_norm
       FROM n WHERE vec_id < {N_QUERIES}),
 scored AS (
   SELECT s.query_id, s.neighbor_id,
-         {_SQL_DOT.format(u='q_emb', v='c.embedding')} / (q_norm * c.norm)
+         {SQL_DOT.format(u='q_emb', v='c.embedding')} / (q_norm * c.norm)
            AS cos_raw
   FROM shortlist s
   JOIN n c ON s.neighbor_id = c.vec_id
@@ -572,15 +564,16 @@ def _km_assign_fn():
     interpreted per-(vector, centroid) HOF fold + (dist2, cent_id)
     row_number window it replaces (guide §4.2):
 
-    - dist2 is the SAME left-to-right fold — t = x_k − c_k,
-      acc = acc + t·t for k in dimension order — vectorized across
-      the group's rows. Per element the IEEE operation sequence is
-      identical to Catalyst's `aggregate(zip_with(...))`, so every
-      dist2 double is bit-identical by construction (no GEMM, no
-      reordering, hence no guard band needed);
+    - dist2 is `kernels.fold_sq_dist`, the SAME left-to-right fold
+      as Catalyst's `aggregate(zip_with(...))` vectorized across the
+      group's rows, so every dist2 double is bit-identical by
+      construction (no GEMM, no reordering, hence no guard band);
     - the argmin walks centroids in ascending cent_id with a STRICT
       `<`, reproducing the window's (dist2, cent_id) tie-break
-      exactly (exact double comparisons both sides).
+      exactly (exact double comparisons both sides);
+    - a vector with a NaN or ±inf component raises ValueError naming
+      its vec_id (`kernels.require_finite`) instead of taking the
+      lowest centroid id with a nan/inf dist2.
 
     Replaces a 4× crossJoin row expansion + a full-corpus window
     shuffle that carried x AND c per expanded row with one cogroup
@@ -593,12 +586,6 @@ def _km_assign_fn():
                         ("cluster", pa.int32()),
                         ("dist2", pa.float64())])
 
-    def _mat(tbl, name):
-        col = tbl.column(name).combine_chunks()
-        flat = col.flatten().to_numpy(zero_copy_only=False).astype(
-            np.float64, copy=False)
-        return np.ascontiguousarray(flat.reshape(tbl.num_rows, -1))
-
     def fn(left: pa.Table, right: pa.Table) -> pa.Table:
         n = left.num_rows
         if n == 0:
@@ -607,18 +594,15 @@ def _km_assign_fn():
             # every corpus group must see the full centroid set —
             # dropping vectors silently would corrupt the assignment
             raise ValueError("km assign group without centroids")
-        X = _mat(left, "x")
+        X = kernels.matrix(left, "x")
+        kernels.require_finite(left.column("vec_id").to_numpy(), X,
+                               "distance")
         cids = right.column("cent_id").to_numpy()
-        C = _mat(right, "c")
-        dim = C.shape[1]
+        C = kernels.matrix(right, "c")
         best_d = None
         best_c = None
         for i in np.argsort(cids, kind="stable"):
-            c = C[i]
-            acc = np.zeros(n)
-            for k in range(dim):
-                t = X[:, k] - c[k]
-                acc += t * t
+            acc = kernels.fold_sq_dist(X, C[i])
             if best_d is None:
                 best_d = acc
                 best_c = np.full(n, cids[i], np.int32)
@@ -695,6 +679,10 @@ def a6_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
       round to 9 decimals;
     - the final fingerprint (cluster sizes, id-sums, decimal-summed
       inertia) is integer/decimal-exact.
+
+    Degenerate input: a vector with a NaN or ±inf component raises
+    ValueError naming its vec_id (`kernels.require_finite`); a
+    zero-norm vector is an ordinary point here.
 
     Scale design (100 TB): each iteration is one corpus scan + one
     (cluster, dim)-keyed partial aggregation; centroids (K×DIM
@@ -868,9 +856,9 @@ def a8_sq8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.desc("approx"), F.col("neighbor_id"))
     pre = scored.withColumn("arnk", F.row_number().over(wa)) \
         .filter(F.col("arnk") <= _SQ_PRESELECT)
-    cos = _dot(F.col("q_emb"), F.col("embedding")) / (
-        F.sqrt(_dot(F.col("q_emb"), F.col("q_emb")))
-        * F.sqrt(_dot(F.col("embedding"), F.col("embedding"))))
+    cos = dot(F.col("q_emb"), F.col("embedding")) / (
+        F.sqrt(dot(F.col("q_emb"), F.col("q_emb")))
+        * F.sqrt(dot(F.col("embedding"), F.col("embedding"))))
     wr = Window.partitionBy("query_id").orderBy(
         F.desc("cos_raw"), F.col("neighbor_id"))
     return (pre.withColumn("cos_raw", cos)
@@ -916,9 +904,9 @@ pre AS (
   FROM scored),
 rer AS (
   SELECT query_id, neighbor_id,
-         {_SQL_DOT.format(u='q_emb', v='embedding')}
-         / (sqrt({_SQL_DOT.format(u='q_emb', v='q_emb')})
-            * sqrt({_SQL_DOT.format(u='embedding', v='embedding')}))
+         {SQL_DOT.format(u='q_emb', v='embedding')}
+         / (sqrt({SQL_DOT.format(u='q_emb', v='q_emb')})
+            * sqrt({SQL_DOT.format(u='embedding', v='embedding')}))
            AS cos_raw
   FROM pre WHERE arnk <= {_SQ_PRESELECT}),
 ranked AS (
@@ -1075,7 +1063,7 @@ def a10_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"),
         F.col("norm").alias("q_norm"), F.col("label").alias("q_label"))
     c = norm.filter(F.col("vec_id") >= N_QUERIES)
-    cos = _dot(F.col("q_emb"), F.col("embedding")) \
+    cos = dot(F.col("q_emb"), F.col("embedding")) \
         / (F.col("q_norm") * F.col("norm"))
     scored = (c.join(F.broadcast(q),
                      F.col("label") == F.col("q_label"))
@@ -1111,11 +1099,11 @@ def a10_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _a10_sql() -> str:
-    dot = _SQL_DOT.format(u="q_emb", v="c.embedding")
+    dot = SQL_DOT.format(u="q_emb", v="c.embedding")
     return f"""
 WITH n AS (
   SELECT vec_id, embedding, label,
-         sqrt({_SQL_DOT.format(u='embedding', v='embedding')}) AS norm
+         sqrt({SQL_DOT.format(u='embedding', v='embedding')}) AS norm
   FROM embeddings),
 q AS (SELECT vec_id AS query_id, embedding AS q_emb, norm AS q_norm,
              label AS q_label
@@ -1182,7 +1170,7 @@ def a11_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"),
         F.col("norm").alias("q_norm"))
     c = e.filter(F.col("vec_id") >= N_QUERIES)
-    cos = _dot(F.col("q_emb"), F.col("embedding")) \
+    cos = dot(F.col("q_emb"), F.col("embedding")) \
         / (F.col("q_norm") * F.col("norm"))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("rel"), F.col("neighbor_id"))
@@ -1196,7 +1184,7 @@ def a11_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = scratch_persist(cand)
     # pairwise candidate-candidate cosines (≤ 8×8 per query)
     a, b = cand.alias("a"), cand.alias("b")
-    pair_cos = _dot(F.col("a.embedding"), F.col("b.embedding")) \
+    pair_cos = dot(F.col("a.embedding"), F.col("b.embedding")) \
         / (F.col("a.norm") * F.col("b.norm"))
     pairs = scratch_persist(
         a.join(b, (F.col("a.query_id") == F.col("b.query_id"))
@@ -1240,12 +1228,12 @@ def a11_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _a11_sql() -> str:
-    dot_qc = _SQL_DOT.format(u="q_emb", v="c.embedding")
-    dot_ab = _SQL_DOT.format(u="a.embedding", v="b.embedding")
+    dot_qc = SQL_DOT.format(u="q_emb", v="c.embedding")
+    dot_ab = SQL_DOT.format(u="a.embedding", v="b.embedding")
     return f"""
 WITH n AS (
   SELECT vec_id, embedding,
-         sqrt({_SQL_DOT.format(u='embedding', v='embedding')}) AS norm
+         sqrt({SQL_DOT.format(u='embedding', v='embedding')}) AS norm
   FROM embeddings),
 q AS (SELECT vec_id AS query_id, embedding AS q_emb, norm AS q_norm
       FROM n WHERE vec_id < {N_QUERIES}),
@@ -1346,7 +1334,7 @@ def a12_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = e.filter(F.col("vec_id") < N_CENTROIDS).select(
         F.col("vec_id").alias("cent_id"),
         F.col("embedding").alias("c_emb"), F.col("norm").alias("c_norm"))
-    csim = _dot(F.col("embedding"), F.col("c_emb")) \
+    csim = dot(F.col("embedding"), F.col("c_emb")) \
         / (F.col("norm") * F.col("c_norm"))
     wa = Window.partitionBy("vec_id").orderBy(F.desc("c_sim"), "cent_id")
     assigned = scratch_persist(
@@ -1389,7 +1377,7 @@ cent AS (SELECT vec_id AS cent_id, embedding AS c_emb, norm AS c_norm
 assigned AS MATERIALIZED (
   SELECT vec_id, cent_id,
          ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY
-           {_SQL_DOT.format(u='embedding', v='c_emb')} / (norm * c_norm)
+           {SQL_DOT.format(u='embedding', v='c_emb')} / (norm * c_norm)
              DESC, cent_id) AS crk
   FROM n CROSS JOIN cent),
 lists AS (SELECT vec_id, cent_id FROM assigned
@@ -1437,7 +1425,7 @@ def a13_norm_bound_mips(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep (and what the pin corpus models).
 
     Both engines compute identical IEEE doubles (shared _dot fold /
-    _SQL_DOT spelling, sqrt is correctly rounded), so the survivor
+    SQL_DOT spelling, sqrt is correctly rounded), so the survivor
     SET is bit-deterministic and the oracle measures it: n_scanned
     per query is part of the contract — the pruning is graded, not
     asserted (m12's 'selected' discipline).
@@ -1462,7 +1450,7 @@ def a13_norm_bound_mips(spark: SparkSession, sf_dir: str) -> DataFrame:
     # VALUE at rank k is tie-order-independent, so no tiebreak needed
     thr = (seeds.crossJoin(F.broadcast(q))
            .select("query_id",
-                   _dot(F.col("q_emb"), F.col("s_emb")).alias("d"))
+                   dot(F.col("q_emb"), F.col("s_emb")).alias("d"))
            .groupBy("query_id")
            .agg(F.sort_array(F.collect_list("d"), asc=False)
                 .alias("ds"))
@@ -1475,7 +1463,7 @@ def a13_norm_bound_mips(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("norm") * F.col("q_norm") >= F.col("lq")))
     scored = surv.select(
         "query_id", F.col("vec_id").alias("neighbor_id"),
-        _dot(F.col("q_emb"), F.col("embedding")).alias("dot_raw"))
+        dot(F.col("q_emb"), F.col("embedding")).alias("dot_raw"))
     scored = scratch_persist(scored)
     w = Window.partitionBy("query_id").orderBy(
         F.desc("dot_raw"), F.col("neighbor_id"))
@@ -1494,7 +1482,7 @@ def a13_norm_bound_mips(spark: SparkSession, sf_dir: str) -> DataFrame:
 _A13_SQL = f"""
 WITH n AS (
   SELECT vec_id, embedding,
-         sqrt({_SQL_DOT.format(u='embedding', v='embedding')}) AS norm
+         sqrt({SQL_DOT.format(u='embedding', v='embedding')}) AS norm
   FROM embeddings),
 q AS (SELECT vec_id AS query_id, embedding AS q_emb, norm AS q_norm
       FROM n WHERE vec_id < {N_QUERIES}),
@@ -1504,7 +1492,7 @@ seeds AS (
   ORDER BY norm DESC, vec_id LIMIT {_A13_SEEDS}),
 sd AS (
   SELECT query_id,
-         {_SQL_DOT.format(u='q_emb', v='s_emb')} AS d
+         {SQL_DOT.format(u='q_emb', v='s_emb')} AS d
   FROM seeds CROSS JOIN q),
 thr AS (
   SELECT query_id,
@@ -1512,7 +1500,7 @@ thr AS (
   FROM sd GROUP BY query_id),
 surv AS (
   SELECT query_id, c.vec_id AS neighbor_id, q_norm, lq,
-         {_SQL_DOT.format(u='q_emb', v='c.embedding')} AS dot_raw
+         {SQL_DOT.format(u='q_emb', v='c.embedding')} AS dot_raw
   FROM c CROSS JOIN (SELECT * FROM q JOIN thr USING (query_id))
   WHERE c.norm * q_norm >= lq),
 ranked AS (

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..runtime import det_round, scratch_persist
+from . import kernels
 from pyspark.sql import functions as F
 
 N_MINHASH = 8      # minhash permutations
@@ -476,35 +477,15 @@ ORDER BY doc_a, doc_b
 
 
 # ------------------------------------- D5 embedding cosine near-dup
-_D5_BLOCKS = 8     # block-pair grid; raise with cluster size
-# 4 MB fp64 cosine block per lhs chunk: the ~10 elementwise passes
-# (divide/guard/floor/threshold) then run from cache instead of DRAM
-# — measured 13 -> 325+ Mpairs/s aggregate at 32 workers vs the old
-# 64 MB blocks, identical output (chunking-invariance is pinned)
-_TILE_CHUNK_ELEMS = 512_000
-_TILE_GUARD_BAND = 1e-6   # ~700x the GEMM-vs-fold bound on t (see below)
-
-
 def _cos_tile_fn(emb: str, emb2: str, tau: float, dim: int,
                  out_a: str, out_b: str, cluster_col: str | None = None):
-    """Cogrouped-tile cosine kernel, bit-identical to the per-pair
-    interpreted `_dot` HOF fold it replaces (guide §4.2).
-
-    Fast path: the tile dot matrix comes from one BLAS GEMM. GEMM
-    reorders the 64-term summation, so a pair's double can differ
-    from the left-to-right fold by ≤ 2·γ₆₄·Σ|xᵢyᵢ| (standard fp
-    summation bound, γ₆₄ = 64u/(1−64u), u = 2⁻⁵³) — after dividing
-    by the norm product and scaling to t = cos·1e5 + 0.5, at most
-    ~1.5e-9. The only way that difference can survive det_round's
-    floor is t sitting within it of an integer, so every pair with
-    |t − nearest-integer| ≤ 1e-6 (≈700× the bound) is recomputed
-    with the EXACT fold — one multiply + one add per term in
-    k-order, seeded 0.0, then the same norm-product divide and
-    det_round steps Catalyst performs. Non-flagged pairs floor to
-    the identical integer by construction; flagged pairs are
-    replayed exactly; hence bit-identical output at GEMM speed.
-    Emits only pairs above tau, already least/greatest oriented, so
-    the O(n²) pair space never crosses the Arrow boundary."""
+    """Cogrouped-tile cosine kernel over one `kernels.block_pair_tiles`
+    tile, bit-identical to the per-pair interpreted `dot` HOF fold
+    it replaces (guide §4.2): `kernels.cosine_tile` gives the GEMM
+    speed and the exact-fold replay. Emits only pairs above tau,
+    already least/greatest oriented, so the O(n²) pair space never
+    crosses the Arrow boundary. `dim` is the vector width; the
+    kernel reads it from the Arrow lists."""
     import numpy as np
     import pyarrow as pa
 
@@ -513,69 +494,26 @@ def _cos_tile_fn(emb: str, emb2: str, tau: float, dim: int,
         + ([("cluster", pa.int32())] if cluster_col else [])
         + [("cos_sim", pa.float64())])
 
-    def _mat(tbl, name):
-        flat = tbl.column(name).combine_chunks().flatten()
-        x = flat.to_numpy(zero_copy_only=False).astype(
-            np.float64, copy=False)
-        return np.ascontiguousarray(x.reshape(-1, dim))
-
-    def _norms(m):
-        # sqrt of the same left-to-right x·x fold the HOF performed,
-        # vectorized across rows — bit-identical per vector
-        acc = np.zeros(m.shape[0])
-        for k in range(dim):
-            acc += m[:, k] * m[:, k]
-        return np.sqrt(acc)
-
     def fn(left: pa.Table, right: pa.Table) -> pa.Table:
-        nl, nr = left.num_rows, right.num_rows
-        if nl == 0 or nr == 0:
+        if left.num_rows == 0 or right.num_rows == 0:
             return schema.empty_table()
         same = (left.column("bi")[0].as_py()
                 == left.column("bj")[0].as_py())
         idl = left.column("vec_id").to_numpy()
         idr = right.column("vec_id2").to_numpy()
-        el, er = _mat(left, emb), _mat(right, emb2)
-        nml, nmr = _norms(el), _norms(er)
-        out_va, out_vb, out_cs = [], [], []
-        step = max(1, _TILE_CHUNK_ELEMS // nr)
-        for s in range(0, nl, step):
-            e = min(nl, s + step)
-            acc = el[s:e] @ er.T
-            tmp = np.multiply(nml[s:e, None], nmr[None, :])
-            np.divide(acc, tmp, out=acc)
-            if not np.isfinite(acc).all():
-                # a non-finite cosine would hit engine-specific NaN
-                # comparison semantics — fail loudly, never diverge
-                raise ValueError("non-finite cosine in tile kernel")
-            acc *= 100000.0
-            acc += 0.5
-            ii, jj = np.nonzero(
-                np.abs(acc - np.rint(acc)) <= _TILE_GUARD_BAND)
-            np.floor(acc, out=acc)
-            acc /= 100000.0
-            if ii.size:
-                # exact left-to-right fold replay for boundary pairs
-                xf, yf = el[s + ii], er[jj]
-                d = np.zeros(ii.size)
-                for k in range(dim):
-                    d += xf[:, k] * yf[:, k]
-                c = d / (nml[s + ii] * nmr[jj])
-                acc[ii, jj] = np.floor(c * 100000.0 + 0.5) / 100000.0
-            keep = acc > tau
+        el, er = kernels.matrix(left, emb), kernels.matrix(right, emb2)
+        nml, nmr = (np.sqrt(kernels.fold_dot(m, m)) for m in (el, er))
+        kernels.require_finite(idl, nml, "cosine", positive=True)
+        kernels.require_finite(idr, nmr, "cosine", positive=True)
+        hits = []
+        for s, cos in kernels.cosine_tile(el, er, nml, nmr, idl):
+            keep = cos > tau
             if same:
-                keep &= idl[s:e, None] < idr[None, :]
+                keep &= idl[s:s + len(cos), None] < idr[None, :]
             ii, jj = np.nonzero(keep)
-            if ii.size:
-                a, b = idl[s + ii], idr[jj]
-                out_va.append(np.minimum(a, b))
-                out_vb.append(np.maximum(a, b))
-                out_cs.append(acc[ii, jj])
-        if not out_va:
-            return schema.empty_table()
-        va = np.concatenate(out_va)
-        vb = np.concatenate(out_vb)
-        cs = np.concatenate(out_cs)
+            a, b = idl[s + ii], idr[jj]
+            hits.append((np.minimum(a, b), np.maximum(a, b), cos[ii, jj]))
+        va, vb, cs = (np.concatenate(h) for h in zip(*hits))
         cols = [pa.array(va, pa.int64()), pa.array(vb, pa.int64())]
         if cluster_col:
             cl = left.column(cluster_col)[0].as_py()
@@ -592,12 +530,9 @@ def _pair_cos_fn(tau: float):
     (u, v, cluster, xa, na, xb, nb) → (u, v, cluster, cos_sim),
     keeping only pairs above tau. Bit-identical to the per-pair
     interpreted HOF `dot(xa, xb) / (na·nb)` + det_round(…, 5) it
-    replaces: the dot is the SAME left-to-right fold (acc = acc +
-    xa_k·xb_k in k-order, seeded 0.0) vectorized across the batch's
-    pairs — per element the IEEE operation sequence is identical, so
-    no reordering occurs and no guard band is needed (unlike the
-    GEMM tile kernel). floor(c·1e5 + 0.5)/1e5 replays det_round's
-    exact steps (guide §4.2)."""
+    replaces: `kernels.fold_dot` is the SAME left-to-right fold
+    vectorized across the batch's pairs, so no reordering occurs and
+    no guard band is needed (unlike the GEMM tile kernel)."""
     import numpy as np
     import pyarrow as pa
 
@@ -605,31 +540,22 @@ def _pair_cos_fn(tau: float):
                         ("cluster", pa.int32()),
                         ("cos_sim", pa.float64())])
 
-    def _mat(t, name, n):
-        flat = t.column(name).combine_chunks().flatten().to_numpy(
-            zero_copy_only=False).astype(np.float64, copy=False)
-        return np.ascontiguousarray(flat.reshape(n, -1))
-
     def fn(batches):
         for b in batches:
             t = pa.Table.from_batches([b])
-            n = t.num_rows
-            if n == 0:
+            if t.num_rows == 0:
                 continue
-            xa, xb = _mat(t, "xa", n), _mat(t, "xb", n)
+            u = t.column("u").to_numpy()
+            v = t.column("v").to_numpy()
+            xa, xb = kernels.matrix(t, "xa"), kernels.matrix(t, "xb")
             na = t.column("na").to_numpy(zero_copy_only=False)
             nb = t.column("nb").to_numpy(zero_copy_only=False)
-            dim = xa.shape[1]
-            acc = np.zeros(n)
-            for k in range(dim):
-                acc += xa[:, k] * xb[:, k]
+            kernels.require_finite(u, na, "cosine", positive=True)
+            kernels.require_finite(v, nb, "cosine", positive=True)
+            acc = kernels.fold_dot(xa, xb)
             acc /= na * nb
-            if not np.isfinite(acc).all():
-                raise ValueError("non-finite cosine in pair kernel")
-            acc *= 100000.0
-            acc += 0.5
-            np.floor(acc, out=acc)
-            acc /= 100000.0
+            kernels.require_finite(u, acc, "cosine")
+            kernels.det_round(acc, 5)
             keep = acc > tau
             if not keep.any():
                 continue
@@ -651,39 +577,19 @@ def d5_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines produce bit-identical doubles; output rounded to 5
     decimals.
 
-    Pair generation is the block-pair all-pairs decomposition, not a
-    `vec_id < vec_id` theta-join: a non-equi self-join plans as a
-    BroadcastNestedLoopJoin, which serializes O(n²) work on however
-    many partitions one side happens to have. Instead each vector lands
-    in block vec_id % B, the B·(B+1)/2 block pairs become a broadcast
-    dimension, and the pair space becomes an *equi*-join on pair_id —
-    every (n/B)² tile computes in parallel, scaling with B². The exact
-    O(n²) result set is unchanged (this is deliberately the exhaustive
-    variant; ann.a2/a3 are the sub-quadratic scaled paths)."""
+    Pair generation is `kernels.block_pair_tiles`, an equi-join on
+    block pairs, not a `vec_id < vec_id` theta-join, which would plan
+    as a BroadcastNestedLoopJoin. The exact O(n²) result set is
+    unchanged (this is deliberately the exhaustive variant; ann.a2/a3
+    are the sub-quadratic scaled paths).
+
+    Degenerate input: a vector with a NaN or ±inf component raises
+    ValueError, and so does a zero-norm vector (its cosine is 0/0);
+    the message names the vec_id (`kernels.require_finite`)."""
     from .. import tables
     e = tables.load(spark, sf_dir, "embeddings")
-
-    # norms are computed inside the tile kernel (the identical x·x
-    # fold + sqrt, vectorized) — no interpreted HOF pass remains
-    n = scratch_persist(e.select(
-        "vec_id", "embedding",
-        (F.col("vec_id") % _D5_BLOCKS).alias("blk")))
-    B = _D5_BLOCKS
-    pairs = spark.createDataFrame(
-        [(i * B + j, i, j) for i in range(B) for j in range(i, B)],
-        "pair_id INT, bi INT, bj INT")
-    lhs = n.join(F.broadcast(pairs), F.col("blk") == F.col("bi")) \
-        .select("pair_id", "bi", "bj", "vec_id", "embedding")
-    rhs = n.join(F.broadcast(pairs), F.col("blk") == F.col("bj")) \
-        .select(F.col("pair_id").alias("pid2"),
-                F.col("vec_id").alias("vec_id2"),
-                F.col("embedding").alias("embedding2"))
-    # per-tile Arrow kernel instead of a pair-exploding equi-join +
-    # per-pair interpreted HOF dot: same tile decomposition, same
-    # same-block id-order filter, bit-identical doubles (the kernel
-    # replays the exact fold; see _cos_tile_fn), but the O(n²) pair
-    # space stays inside NumPy — nothing per-pair is shuffled or
-    # interpreted (guide §4.2)
+    # the tile kernel computes the norms, by the same x·x fold
+    lhs, rhs = kernels.block_pair_tiles(e, "vec_id", "embedding")
     return (
         lhs.groupBy("pair_id")
         .cogroup(rhs.groupBy("pid2"))
@@ -695,19 +601,16 @@ def d5_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_D5_DOT = ("list_sum(list_transform(range(len({u})), i -> "
-           "CAST({u}[i+1] AS DOUBLE) * CAST({v}[i+1] AS DOUBLE)))")
-
 _D5_SQL = f"""
 WITH n AS (
   SELECT vec_id, embedding,
-         sqrt({_D5_DOT.format(u='embedding', v='embedding')}) AS norm
+         sqrt({kernels.SQL_DOT.format(u='embedding', v='embedding')}) AS norm
   FROM embeddings)
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       FLOOR(({_D5_DOT.format(u='a.embedding', v='b.embedding')}
+       FLOOR(({kernels.SQL_DOT.format(u='a.embedding', v='b.embedding')}
              / (a.norm * b.norm)) * 100000.0 + 0.5) / 100000.0 AS cos_sim
 FROM n a JOIN n b ON a.vec_id < b.vec_id
-WHERE FLOOR(({_D5_DOT.format(u='a.embedding', v='b.embedding')}
+WHERE FLOOR(({kernels.SQL_DOT.format(u='a.embedding', v='b.embedding')}
             / (a.norm * b.norm)) * 100000.0 + 0.5) / 100000.0 > 0.45
 ORDER BY vec_a, vec_b
 """
@@ -1450,7 +1353,19 @@ SELECT (SELECT COUNT(*) FROM truth) AS n_truth,
 
 # ------------------------------------------ D14 semantic dedup (SemDeDup)
 _D14_TAU = 0.45
-_D14_BLOCKS = 8
+
+
+def _min_id_survivors(pairs: DataFrame) -> DataFrame:
+    """SemDeDup's drop manifest from (u, v, cluster, cos_sim) pairs,
+    u < v: each v is dropped, with its smallest-id witness u as
+    kept_vec (the D1/D13 min-id convention)."""
+    return (pairs.groupBy("v", "cluster")
+            .agg(F.min(F.struct("u", "cos_sim")).alias("w"))
+            .select(F.col("v").alias("dropped_vec"),
+                    F.col("w.u").alias("kept_vec"),
+                    "cluster",
+                    F.col("w.cos_sim").alias("cos_sim"))
+            .orderBy("dropped_vec"))
 
 
 def d14_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1465,9 +1380,14 @@ def d14_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Clusters come from `ann.km_trained_assignment` — the exact
     training A6 runs (seed → Lloyd update → assign), so the oracle
     replays the identical deterministic loop. Within a cluster the
-    pair space uses D5's block-tile decomposition keyed on
+    pair space uses D5's `kernels.block_pair_tiles` keyed on
     (cluster, tile): an equi-join, never a BroadcastNestedLoopJoin,
     parallel in clusters × tiles.
+
+    Degenerate input: a vector with a NaN or ±inf component raises
+    ValueError in the k-means step, and a zero-norm vector raises in
+    the tile kernel (its cosine is 0/0); the message names the vec_id
+    (`kernels.require_finite`).
 
     Survivor rule (deterministic greedy): a vector is dropped when a
     smaller-id cluster-mate sits above cos τ; the manifest records
@@ -1485,41 +1405,20 @@ def d14_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("embedding", lambda v: v.cast("double")).alias("x"))
     a2 = km_trained_assignment(vecs)
 
-    # norms are computed inside the tile kernel (the identical x·x
-    # fold + sqrt, vectorized) — no interpreted HOF pass remains
-    m = scratch_persist(a2.select(
-        "vec_id", "x", F.col("cluster").cast("int").alias("cluster"),
-        (F.col("vec_id") % _D14_BLOCKS).alias("blk")))
-    B = _D14_BLOCKS
-    tiles = spark.createDataFrame(
-        [(i * B + j, i, j) for i in range(B) for j in range(i, B)],
-        "tile_id INT, bi INT, bj INT")
-    lhs = m.join(F.broadcast(tiles), F.col("blk") == F.col("bi")) \
-        .select("tile_id", "bi", "bj", "cluster", "vec_id", "x")
-    rhs = m.join(F.broadcast(tiles), F.col("blk") == F.col("bj")) \
-        .select(F.col("tile_id").alias("tid2"),
-                F.col("cluster").alias("cl2"),
-                F.col("vec_id").alias("vec_id2"),
-                F.col("x").alias("x2"))
     # per-(tile, cluster) Arrow kernel — D5's exact-fold tile kernel
     # with the cluster key folded into the cogroup, so the quadratic
     # step still never leaves a cluster and nothing per-pair is
-    # shuffled or interpreted (guide §4.2); doubles bit-identical to
-    # the HOF pipeline (see _cos_tile_fn)
+    # shuffled or interpreted (guide §4.2)
+    lhs, rhs = kernels.block_pair_tiles(
+        a2, "vec_id", "x", F.col("cluster").cast("int").alias("cluster"))
     pairs = (
-        lhs.groupBy("tile_id", "cluster")
-        .cogroup(rhs.groupBy("tid2", "cl2"))
+        lhs.groupBy("pair_id", "cluster")
+        .cogroup(rhs.groupBy("pid2", "cluster2"))
         .applyInArrow(
             _cos_tile_fn("x", "x2", _D14_TAU, 64, "u", "v",
                          cluster_col="cluster"),
             schema="u bigint, v bigint, cluster int, cos_sim double"))
-    return (pairs.groupBy("v", "cluster")
-            .agg(F.min(F.struct("u", "cos_sim")).alias("w"))
-            .select(F.col("v").alias("dropped_vec"),
-                    F.col("w.u").alias("kept_vec"),
-                    "cluster",
-                    F.col("w.cos_sim").alias("cos_sim"))
-            .orderBy("dropped_vec"))
+    return _min_id_survivors(pairs)
 
 
 def _d14_sql() -> str:
@@ -3007,6 +2906,11 @@ def d27_scaled_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic ((rank-1)·k2 div n). Survivor rule and cos
     verification are exactly D14's (min-id witness, det_round 5).
 
+    Degenerate input: a vector with a NaN or ±inf component raises
+    ValueError in the k-means step, and a zero-norm vector raises
+    when a candidate pair holding it is verified (its cosine is 0/0);
+    the message names the vec_id (`kernels.require_finite`).
+
     Scale shape (100 TB): embeddings shuffle once on (cluster, l) for
     the ranked splits and once on (cluster, l, sub) for the leaf
     self-join over (id, norm-free) keys; verification joins the slim
@@ -3022,10 +2926,6 @@ def d27_scaled_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     p_off = int(vecs.agg(F.max("vec_id")).first()[0] or 0) + 1
     a2 = km_trained_assignment(vecs)
 
-    def dot(u: Column, v: Column) -> Column:
-        return F.aggregate(F.zip_with(u, v, lambda a, b: a * b),
-                           F.lit(0.0), lambda acc, z: acc + z)
-
     base = a2.select("vec_id", "x",
                      F.col("cluster").cast("int").alias("cluster"))
     seeds = base.filter(F.col("vec_id") < 10)
@@ -3040,8 +2940,10 @@ def d27_scaled_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = scratch_persist(
         base.unionByName(plants)
         .select("vec_id", "x", "cluster",
-                F.sqrt(dot(F.col("x"), F.col("x"))).alias("norm")))
-    scores = [dot(F.col("x"), F.array(*[F.lit(float(w)) for w in wl]))
+                F.sqrt(kernels.dot(F.col("x"), F.col("x")))
+                .alias("norm")))
+    scores = [kernels.dot(F.col("x"),
+                          F.array(*[F.lit(float(w)) for w in wl]))
               for wl in _D27_W]
     stack = ", ".join(f"{l}, s{l}" for l in range(_D27_L))
     proj = (sig.select(
@@ -3088,13 +2990,7 @@ def d27_scaled_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                  _pair_cos_fn(_D27_TAU),
                  schema="u bigint, v bigint, cluster int, "
                         "cos_sim double"))
-    return (pairs.groupBy("v", "cluster")
-            .agg(F.min(F.struct("u", "cos_sim")).alias("w"))
-            .select(F.col("v").alias("dropped_vec"),
-                    F.col("w.u").alias("kept_vec"),
-                    "cluster",
-                    F.col("w.cos_sim").alias("cos_sim"))
-            .orderBy("dropped_vec"))
+    return _min_id_survivors(pairs)
 
 
 def _d27_sql() -> str:

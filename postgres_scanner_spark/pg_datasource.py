@@ -285,12 +285,15 @@ class PostgresScanReader(DataSourceReader):
         # separate Python worker, so per-scan overrides travel as options
         self.pages_per_task = int(options.get(
             "pages_per_task", SETTINGS.pg_pages_per_task))
-        # Spark persists the reader's post-pushFilters pickle on the
-        # relation and reuses it for later queries WITHOUT re-calling
-        # pushFilters — so pushed filters are relation-scoped, not
-        # query-scoped. Safe for the typical one-query-per-load()
-        # pattern; for long-lived relations (catalog temp views) set
-        # option("pushdown", "false") and let Spark filter post-scan.
+        # Known bug (ROADMAP item 10): pushed filters leak into later
+        # queries on the same DataFrame. PythonScanBuilder.pushFilters
+        # stores the pushed read plan on the relation's shared
+        # PythonDataSourceV2 (setReadInfo); a later query that pushes
+        # nothing gets no Python pushdown call, and planInputPartitions
+        # reads that plan back through getOrCreateReadInfo. After
+        # df.filter("x < 10").count() == 9, df.count() also returns 9
+        # (test_live_pushed_filter_stays_in_its_query). A fresh load()
+        # per query, or option("pushdown", "false"), reads correctly.
         self.enable_pushdown = options.get("pushdown", "true") == "true"
         self.pushed: list[tuple] = []
         # PG-declared type names from the schema probe (JSON col→udt):

@@ -85,7 +85,11 @@ def sum_money(col, digits: int = 2):
     to the DOUBLE the legacy decimal-sum produced (bit-identical:
     the division by 10^digits is exact — result scale ≥ digits — and
     decimal→double of equal values is the same double). The buffer is
-    decimal(38,0): compact-long fast path per add, never wraps.
+    decimal(38,0), so it never wraps, but it has no compact-long fast
+    path: a decimal of precision > 18 is stored in the aggregation
+    buffer as bytes, and every add goes through BigDecimal. A plain
+    long sum is about twice as fast on q1 but can wrap; ROADMAP item 4
+    records the measurement and an exact alternative.
 
     Hard limit digits <= 6: Spark's decimal-division precision
     adjustment caps the quotient scale of decimal(38,0)/lit at 6, so
