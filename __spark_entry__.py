@@ -55,35 +55,34 @@ _MODULES = (
 # from the r5 cohort. Regenerate with tools/rotate_order.py
 # --write after each round (--explain shows per-query evidence).
 _COST_ORDER = [
-    "d5_embedding_dedup", "d14_semantic_dedup",
-    "d27_scaled_semantic_dedup", "a6_kmeans_lloyd", "a1_cosine_topk",
-    "e4_top_users", "q6_forecast_revenue", "p4_filter_pushdown",
-    "a13_norm_bound_mips", "q15_top_supplier",
+    "e16_connector_stream", "e4_top_users", "p4_filter_pushdown",
+    "a6_kmeans_lloyd", "a13_norm_bound_mips", "q15_top_supplier",
     "e20_streaming_neardup_ingest", "ds1_above_avg_customers",
     "ds6_top_customers_per_region", "w15_gapfill_locf",
     "ds15_channel_growth_ratio", "ds19_two_fact_growth",
     "ds20_category_share_window", "ds21_disjunctive_bands",
     "a10_filtered_ann", "a11_mmr_diversified", "e21_watermark_dedup",
-    "ds13_low_revenue_parts", "a3_ivf_ann", "a8_sq8_ann", "a2_lsh_ann",
-    "e16_connector_stream", "q9_product_profit", "ds3_brand_year",
+    "ds13_low_revenue_parts", "a3_ivf_ann", "m13_bloom_pruned_probe",
+    "d5_embedding_dedup", "d14_semantic_dedup", "a1_cosine_topk",
+    "a8_sq8_ann", "a2_lsh_ann", "q9_product_profit", "ds3_brand_year",
     "p3_decimals", "p11_struct_fields", "p10_verify_checksum",
-    "p8_json", "q19_discounted_revenue", "q14_promo_effect",
-    "w5_lag_delta", "ds2_weekday_share", "q17_small_quantity",
+    "p8_json", "q14_promo_effect", "w5_lag_delta", "ds2_weekday_share",
     "e1_hourly_event_rollup", "ds10_avg_measures",
     "e19_idempotent_replay", "ds16_above_avg_balance_nations",
     "ds17_substr_cohort_revenue", "w9_continuous_aggregate",
     "w10_skew_join", "ds5_nation_share", "a12_ivfpq_ann",
     "ds7_yoy_growth", "ds9_channel_rollup", "a4_knn_label",
     "e12_stream_static_join", "e13_checkpoint_resume",
+    "d27_scaled_semantic_dedup", "q6_forecast_revenue",
     "ds4_price_buckets", "ds11_timeband_counts", "x2_hash_sample",
     "e5_event_funnel", "p6_interval", "t3_token_count", "p2_nulls",
     "t4_fingerprint", "t13_context_chunks", "p5_arrays",
     "x3_vocab_topk", "x18_weighted_reservoir_sample",
     "m14_page_pruned_scan", "w21_time_decay_attribution",
-    "t20_kneser_ney_logprob", "m13_bloom_pruned_probe",
-    "x17_dsir_select", "d21_repeated_substring_excision",
-    "t2_quality_score", "x5_sequence_pack", "x11_quality_topk_sample",
-    "w3_window_rank", "x8_epoch_plan", "m7_npy_tensor_parse",
+    "t20_kneser_ney_logprob", "x17_dsir_select",
+    "d21_repeated_substring_excision", "t2_quality_score",
+    "x5_sequence_pack", "x11_quality_topk_sample", "w3_window_rank",
+    "x8_epoch_plan", "m7_npy_tensor_parse",
     "e17_streaming_dedup_ingest", "t17_perplexity_buckets",
     "m9_shard_repack_plan", "x12_corpus_compile", "d17_lsh_param_sweep",
     "w19_ema_daily_revenue", "w16_time_weighted_avg",
@@ -92,22 +91,23 @@ _COST_ORDER = [
     "e22_streaming_contamination_guard", "x4_source_mix",
     "e7_streaming_dedup", "e6_stateful_anomaly",
     "d19_unicode_shingle_dedup", "t19_source_kl_divergence",
-    "d7_contamination", "d23_benchmark_span_excision", "a7_ann_recall",
-    "d12_dedup_eval", "t15_bpe_encode", "e10_late_data_policy",
-    "e14_streaming_upsert", "x16_domain_reweight",
-    "x15_length_bucketed_batches", "t12_zipf_fit", "t8_entropy_quality",
-    "t7_repetition_stats", "t10_tfidf_keywords", "t9_bigram_logprob",
-    "x9_temperature_mix", "e23_stateful_quota_admission",
-    "d22_prefix_filter_join", "d20_repeated_substrings", "w2_cube",
-    "p7_timestamp_parts", "w4_moving_avg", "p9_uuid", "t1_language_id",
-    "t6_pii_redact", "t11_bpe_pairs", "x10_leakage_safe_split",
-    "w7_percentiles", "ds8_customer_cohort", "m2_frame_sample",
-    "t22_unigram_lm_encode", "d25_chunk_cluster", "d26_neardup_apply",
-    "d16_cdc_chunk_dedup", "t21_unigram_lm_train", "d24_cc_two_phase",
-    "d2_minhash_lsh_dedup", "q21_suppliers_waiting",
-    "ds12_order_size_band", "ds14_shipping_lag", "x7_dataset_card",
-    "a9_mih_hamming_ann", "e18_streaming_quality_router",
-    "w17_ohlc_bars", "ds18_multi_exists_cohort", "d15_source_overlap",
+    "d7_contamination", "q19_discounted_revenue", "q17_small_quantity",
+    "d23_benchmark_span_excision", "a7_ann_recall", "d12_dedup_eval",
+    "t15_bpe_encode", "e10_late_data_policy", "e14_streaming_upsert",
+    "x16_domain_reweight", "x15_length_bucketed_batches",
+    "t12_zipf_fit", "t8_entropy_quality", "t7_repetition_stats",
+    "t10_tfidf_keywords", "t9_bigram_logprob", "x9_temperature_mix",
+    "e23_stateful_quota_admission", "d22_prefix_filter_join",
+    "d20_repeated_substrings", "w2_cube", "p7_timestamp_parts",
+    "w4_moving_avg", "p9_uuid", "t1_language_id", "t6_pii_redact",
+    "t11_bpe_pairs", "x10_leakage_safe_split", "w7_percentiles",
+    "ds8_customer_cohort", "m2_frame_sample", "t22_unigram_lm_encode",
+    "d25_chunk_cluster", "d26_neardup_apply", "d16_cdc_chunk_dedup",
+    "t21_unigram_lm_train", "d24_cc_two_phase", "d2_minhash_lsh_dedup",
+    "q21_suppliers_waiting", "ds12_order_size_band",
+    "ds14_shipping_lag", "x7_dataset_card", "a9_mih_hamming_ann",
+    "e18_streaming_quality_router", "w17_ohlc_bars",
+    "ds18_multi_exists_cohort", "d15_source_overlap",
     "x13_neardup_safe_split", "m10_webdataset_samples",
     "p14_timezone_convert", "x14_snapshot_diff", "d18_doc_novelty",
     "w14_first_touch", "w12_range_frame", "w11_grouping_sets",

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .connection import ConnectionInfo, parse_dsn, resolve_secret
 from .scan import parquet_scan
+from .settings import SETTINGS, register_cache_clearer
 
 _log = logging.getLogger(__name__)
 
@@ -112,9 +113,8 @@ class Catalog:
         # session's current database (SQL USE); owned here so the
         # direct API and the SQL router stay consistent
         self.current: str | None = None
-        # SET pg_array_as_varchar invalidates cached table schemas
-        # (reference: postgres_extension.cpp:171-173 ClearCacheOnSetting)
-        from .settings import register_cache_clearer
+        # a changed setting invalidates cached tables, which carry the
+        # settings as options (reference: postgres_extension.cpp:171-173)
         register_cache_clearer(self.clear_cache)
 
     # -- reference: postgres_attach.cpp AttachFunction
@@ -261,14 +261,15 @@ class Catalog:
         if db.backend == "parquet":
             df = parquet_scan(self.spark, os.path.join(db.source, f"{name}.parquet"))
         else:
-            # duckdb:// or postgres: the postgres_scan DataSource.
-            # Pushdown off: attached relations are long-lived (temp
-            # views, repeated queries) and the Python DS API scopes
-            # pushed filters to the relation, not the query (see
-            # pg_datasource)
+            # duckdb:// or postgres: the postgres_scan DataSource, with
+            # the session's settings as options. Pushdown off: attached
+            # relations are long-lived (temp views, repeated queries)
+            # and the Python DS API scopes pushed filters to the
+            # relation, not the query (see pg_datasource)
             r = (self.spark.read.format("postgres_scan")
+                 .options(**SETTINGS.scan_options())
                  .option("dsn", db.dsn).option("table", name)
-                 .option("pushdown", "false"))
+                 .option("pg_experimental_filter_pushdown", "false"))
             if db.schema is not None:
                 r = r.option("schema", db.schema)
             df = r.load()

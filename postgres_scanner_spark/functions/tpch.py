@@ -38,10 +38,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return tables.load(spark, sf_dir, name)
 
 
-def _dbl(expr) -> F.Column:
-    return expr.cast("double")
-
-
 # ---- exact integer-scaled money arithmetic (r12 optimization) ----
 # Every money/rate column in the testdata is an exact 2-decimal value
 # (verified across sf0.001/0.01/0.1: ROUND(x,2)==x for every

@@ -45,22 +45,6 @@ def _binary_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _decode_stub(payload: bytes) -> dict:
-    """STUB for a media decoder (image resize / audio features).
-
-    Real deployments plug PIL/ffmpeg here; the container has neither,
-    so this computes deterministic fake 'features' from the raw bytes
-    while exercising the identical batch plumbing.
-    """
-    import hashlib
-    arr = bytearray(payload)
-    return {
-        "n_bytes": len(arr),
-        "checksum": hashlib.md5(payload).hexdigest(),
-        "byte_mean": (sum(arr) / len(arr)) if arr else 0.0,
-    }
-
-
 _M1_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
     T.StructField("n_bytes", T.LongType()),

@@ -60,7 +60,7 @@ from pyspark.sql.datasource import (
 
 from .pushdown import transform_filters
 from .scan import plan_scan_tasks
-from .settings import SETTINGS
+from .settings import Settings
 
 _ROWS_PER_PAGE = 128  # rowid-page emulation for the duckdb backend
 _log = logging.getLogger(__name__)
@@ -281,10 +281,9 @@ class PostgresScanReader(DataSourceReader):
         self.pg_schema = options.get("schema", "public")
         self.schema_explicit = "schema" in options
         self.approx_pages = int(options.get("approx_pages", "0"))
-        # settings are process-global on the driver; the reader plans in a
-        # separate Python worker, so per-scan overrides travel as options
-        self.pages_per_task = int(options.get(
-            "pages_per_task", SETTINGS.pg_pages_per_task))
+        # the reader plans and reads in Python workers, which never see
+        # the driver's settings: a scan's settings are its pg_* options
+        self.settings = Settings.from_options(options)
         # Known bug (ROADMAP item 10): pushed filters leak into later
         # queries on the same DataFrame. PythonScanBuilder.pushFilters
         # stores the pushed read plan on the relation's shared
@@ -292,9 +291,8 @@ class PostgresScanReader(DataSourceReader):
         # nothing gets no Python pushdown call, and planInputPartitions
         # reads that plan back through getOrCreateReadInfo. After
         # df.filter("x < 10").count() == 9, df.count() also returns 9
-        # (test_live_pushed_filter_stays_in_its_query). A fresh load()
-        # per query, or option("pushdown", "false"), reads correctly.
-        self.enable_pushdown = options.get("pushdown", "true") == "true"
+        # (test_live_pushed_filter_stays_in_its_query). A fresh load() per
+        # query, or pg_experimental_filter_pushdown=false, reads correctly.
         self.pushed: list[tuple] = []
         # PG-declared type names from the schema probe (JSON col→udt):
         # geometry columns (point/box/...) surface as Struct/Array
@@ -303,8 +301,7 @@ class PostgresScanReader(DataSourceReader):
         # suppresses the server-side cast so the native send format
         # arrives (reference: postgres_binary_reader.hpp ReadGeometry)
         import json as _json
-        self.pg_udts: dict[str, str] = _json.loads(
-            options.get("pg_udts", "{}"))
+        self.udts: dict[str, str] = _json.loads(options.get("udts", "{}"))
 
     # -- filter pushdown (reference: postgres_filter_pushdown.cpp)
     def pushFilters(self, filters: list[Filter]):
@@ -315,8 +312,7 @@ class PostgresScanReader(DataSourceReader):
             # (accepting them here would silently drop them)
             yield from filters
             return
-        if not self.enable_pushdown or \
-                not SETTINGS.pg_experimental_filter_pushdown:
+        if not self.settings.pg_experimental_filter_pushdown:
             yield from filters
             return
         for f in filters:
@@ -340,9 +336,11 @@ class PostgresScanReader(DataSourceReader):
         if self.approx_pages <= 0 and \
                 not self.dsn.startswith("duckdb://"):
             self.approx_pages = self._probe_pages()
+        s = self.settings
         tasks = plan_scan_tasks(self.approx_pages,
-                                pages_per_task=self.pages_per_task,
-                                max_tasks=SETTINGS.pg_connection_limit)
+                                pages_per_task=s.pg_pages_per_task,
+                                use_ctid_scan=s.pg_use_ctid_scan,
+                                max_tasks=s.pg_connection_limit)
         if self.dsn.startswith("duckdb://"):
             task_wheres = [""] if len(tasks) == 1 else [
                 f"rowid >= {t.page_min * _ROWS_PER_PAGE} AND "
@@ -387,7 +385,7 @@ class PostgresScanReader(DataSourceReader):
         has dedicated branches — instead of an invalid ::float8[]/
         struct cast derived from the Spark type."""
         from .types import GEOMETRY_OIDS
-        if self.pg_udts.get(f.name) in GEOMETRY_OIDS:
+        if self.udts.get(f.name) in GEOMETRY_OIDS:
             return ""
         return self._pg_cast(f.dataType)
 
@@ -447,7 +445,8 @@ class PostgresScanReader(DataSourceReader):
             cols = ", ".join(
                 f'"{f.name}"{self._col_cast(f)} AS "{f.name}"'
                 for f in self.schema_.fields)
-        where = transform_filters(self.pushed)
+        where = transform_filters(
+            self.pushed, self.settings.pg_null_byte_replacement)
         preds = []
         if task_where:
             preds.append(task_where)
@@ -456,8 +455,10 @@ class PostgresScanReader(DataSourceReader):
         sql = f"SELECT {cols} FROM {self._relation()}"
         if preds:
             sql += " WHERE " + " AND ".join(preds)
-        if SETTINGS.pg_debug_show_queries:
-            _log.info("pg scan %s", sql)
+        if self.settings.pg_debug_show_queries:
+            # WARNING: a PySpark worker drops INFO records; Python's
+            # last-resort handler prints this to the driver's stderr
+            _log.warning("pg scan %s", sql)
         return sql
 
     # -- execution: Arrow batches (the COPY-binary analog)
@@ -499,13 +500,13 @@ class PostgresScanReader(DataSourceReader):
         from .pgwire import spark_field_oid
         from .types import GEOMETRY_OIDS
         oids = [
-            GEOMETRY_OIDS.get(self.pg_udts.get(f.name),
+            GEOMETRY_OIDS.get(self.udts.get(f.name),
                               spark_field_oid(f.dataType))
             for f in self.schema_.fields]
         array_cols = {
             i for i, f in enumerate(self.schema_.fields)
             if isinstance(f.dataType, T.ArrayType)
-            and self.pg_udts.get(f.name) not in GEOMETRY_OIDS}
+            and self.udts.get(f.name) not in GEOMETRY_OIDS}
         return oids, array_cols
 
     def _read_live_pg(self, sql: str):
@@ -747,11 +748,8 @@ class PostgresScanWriter(DataSourceArrowWriter):
         self.table = self.options.get("table", "")
         if not self.table:
             raise ValueError("postgres_scan write needs .option('table')")
-        # captured at plan time on the driver: SETTINGS is process-
-        # global there, but write() runs in executor Python workers
-        self.null_byte_replacement = self.options.get(
-            "null_byte_replacement",
-            SETTINGS.pg_null_byte_replacement)
+        self.null_byte_replacement = Settings.from_options(
+            self.options).pg_null_byte_replacement
         self.spool = f"/tmp/pg_spark_write_{uuid.uuid4().hex[:12]}"
 
     def write(self, it: Iterator) -> _SpoolMsg:
@@ -952,7 +950,7 @@ class PostgresScanWriter(DataSourceArrowWriter):
         # default Spark→PG DDL map, so a varchar-in-Spark column can
         # CREATE as its server-side UDT (enum/domain) — closing the
         # enum-writes-back-as-VARCHAR gap (reference: bug71.test reads
-        # a UDT column; the scan side already types it via _pg_udts)
+        # a UDT column; the scan side already types it via _udts)
         import json
         import re
         overrides = json.loads(self.options.get("column_types", "{}"))
@@ -1092,10 +1090,11 @@ class PostgresScanDataSource(DataSource):
     def name(cls) -> str:
         return "postgres_scan"
 
-    _pg_udts: dict  # probed col → PG udt name (live-PG table scans only)
+    _udts: dict  # probed col → PG udt name (live-PG table scans only)
 
     def schema(self):
-        self._pg_udts = {}
+        self._udts = {}
+        as_varchar = Settings.from_options(self.options).pg_array_as_varchar
         dsn = self.options.get("dsn", "")
         table = self.options.get("table", "")
         query = self.options.get("query", "")
@@ -1142,7 +1141,8 @@ class PostgresScanDataSource(DataSource):
                         col.name,
                         spark_type_from_oid(col.type_code,
                                             precision=col.precision,
-                                            scale=col.scale),
+                                            scale=col.scale,
+                                            array_as_varchar=as_varchar),
                         True)
                     for col in cur.description
                 ])
@@ -1174,11 +1174,12 @@ class PostgresScanDataSource(DataSource):
             for name, dtyp, udt, prec, scale, ndims in cur.fetchall():
                 if dtyp == "ARRAY":
                     dt = pg_type_to_spark(udt.lstrip("_"),
-                                          array_dims=max(ndims, 1))
+                                          array_dims=max(ndims, 1),
+                                          array_as_varchar=as_varchar)
                 else:
                     dt = pg_type_to_spark(
                         udt or dtyp, precision=prec, scale=scale)
-                self._pg_udts[name] = (udt or dtyp or "").lower()
+                self._udts[name] = (udt or dtyp or "").lower()
                 fields.append(T.StructField(name, dt, True))
         if not fields:
             raise ValueError(
@@ -1186,12 +1187,12 @@ class PostgresScanDataSource(DataSource):
         return T.StructType(fields)
 
     def _reader_options(self) -> dict:
-        """The options with the schema probe's udts (pg_udts JSON)."""
+        """The options with the schema probe's udts (udts JSON)."""
         import json
         opts = dict(self.options)
-        udts = getattr(self, "_pg_udts", {})
+        udts = getattr(self, "_udts", {})
         if udts:
-            opts["pg_udts"] = json.dumps(udts)
+            opts["udts"] = json.dumps(udts)
         return opts
 
     def reader(self, schema: T.StructType) -> PostgresScanReader:

@@ -41,7 +41,8 @@ def quote_ident(name: str) -> str:
     return '"' + name.replace('"', '""') + '"'
 
 
-def quote_literal(value: Any) -> str:
+def quote_literal(value: Any,
+                  null_byte_replacement: str | None = None) -> str:
     """Render a python value as a PG literal (reference:
     postgres_filter_pushdown.cpp TransformLiteral → Value::ToSQLString)."""
     if value is None:
@@ -69,12 +70,12 @@ def quote_literal(value: Any) -> str:
         # NUL is illegal inside PG text values; apply the same
         # replacement policy the reference exposes
         # (pg_null_byte_replacement, postgres_extension.cpp:179)
-        from .settings import SETTINGS
-        s = s.replace("\x00", SETTINGS.pg_null_byte_replacement or "")
+        s = s.replace("\x00", null_byte_replacement or "")
     return f"'{s}'"
 
 
-def transform_filter(f: Sequence[Any]) -> str:
+def transform_filter(f: Sequence[Any],
+                     null_byte_replacement: str | None = None) -> str:
     """One filter → SQL fragment.
 
     Accepted shapes:
@@ -86,11 +87,11 @@ def transform_filter(f: Sequence[Any]) -> str:
     """
     head = f[0]
     if head in ("and", "or"):
-        parts = [transform_filter(c) for c in f[1]]
+        parts = [transform_filter(c, null_byte_replacement) for c in f[1]]
         joiner = " AND " if head == "and" else " OR "
         return "(" + joiner.join(parts) + ")"
     if head == "not":
-        return "NOT (" + transform_filter(f[1]) + ")"
+        return "NOT (" + transform_filter(f[1], null_byte_replacement) + ")"
     col = quote_ident(head)
     op = f[1].lower()
     if op == "isnull":
@@ -98,16 +99,20 @@ def transform_filter(f: Sequence[Any]) -> str:
     if op == "isnotnull":
         return f"{col} IS NOT NULL"
     if op == "in":
-        vals = ", ".join(quote_literal(v) for v in f[2])
+        vals = ", ".join(quote_literal(v, null_byte_replacement)
+                         for v in f[2])
         return f"{col} IN ({vals})"
     if op in _COMPARISON_OPS:
-        return f"{col} {_COMPARISON_OPS[op]} {quote_literal(f[2])}"
+        lit = quote_literal(f[2], null_byte_replacement)
+        return f"{col} {_COMPARISON_OPS[op]} {lit}"
     raise ValueError(f"unsupported pushdown op: {op!r}")
 
 
-def transform_filters(filters: Sequence[Sequence[Any]] | None) -> str:
+def transform_filters(filters: Sequence[Sequence[Any]] | None,
+                      null_byte_replacement: str | None = None) -> str:
     """All filters → 'WHERE ...' (empty string when none), mirroring
     reference TransformFilters which ANDs every table filter."""
     if not filters:
         return ""
-    return "WHERE " + " AND ".join(transform_filter(f) for f in filters)
+    return "WHERE " + " AND ".join(
+        transform_filter(f, null_byte_replacement) for f in filters)

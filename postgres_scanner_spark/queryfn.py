@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import Catalog
+from .settings import SETTINGS
 
 
 def pg_query(catalog: Catalog, alias: str, sql: str) -> DataFrame:
@@ -49,8 +50,9 @@ def pg_query(catalog: Catalog, alias: str, sql: str) -> DataFrame:
         from .pg_datasource import ensure_registered
         ensure_registered(catalog.spark)
         return (catalog.spark.read.format("postgres_scan")
+                .options(**SETTINGS.scan_options())
                 .option("dsn", db.dsn).option("query", sql)
-                .option("pushdown", "false").load())
+                .option("pg_experimental_filter_pushdown", "false").load())
     if db.backend == "store":
         # DESCRIBE / PRAGMA table_info carry constraint+default info
         # the session catalog doesn't know (attach_describe.test)
@@ -519,8 +521,9 @@ def _parse_coldefs(coldefs: str):
                     "n": int(pm.group(2)),
                     "pad": base in ("char", "character", "bpchar",
                                     "nchar")}
-        fields.append(T.StructField(
-            name, pg_type_to_spark(typ, precision=prec, scale=scale), True))
+        fields.append(T.StructField(name, pg_type_to_spark(
+            typ, precision=prec, scale=scale,
+            array_as_varchar=SETTINGS.pg_array_as_varchar), True))
     return T.StructType(fields), meta
 
 

@@ -20,7 +20,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .settings import SETTINGS
+from .settings import DEFAULT_PAGES_PER_TASK
 
 
 @dataclass
@@ -35,8 +35,9 @@ class ScanTask:
         return f"ctid BETWEEN '({self.page_min},0)'::tid AND '({self.page_max},0)'::tid"
 
 
-def plan_scan_tasks(approx_pages: int, *, pages_per_task: int | None = None,
-                    use_ctid_scan: bool | None = None,
+def plan_scan_tasks(approx_pages: int, *,
+                    pages_per_task: int = DEFAULT_PAGES_PER_TASK,
+                    use_ctid_scan: bool = True,
                     max_tasks: int | None = None) -> list[ScanTask]:
     """Split a table of ~approx_pages heap pages into scan tasks.
 
@@ -45,11 +46,8 @@ def plan_scan_tasks(approx_pages: int, *, pages_per_task: int | None = None,
     `max_tasks` caps fan-out the way pg_connection_limit bounds the
     reference's concurrent connections.
     """
-    ppt = pages_per_task if pages_per_task is not None else SETTINGS.pg_pages_per_task
-    use_ctid = use_ctid_scan if use_ctid_scan is not None else SETTINGS.pg_use_ctid_scan
-    if ppt <= 0:
-        ppt = SETTINGS.pg_pages_per_task
-    if not use_ctid or approx_pages <= 0:
+    ppt = pages_per_task if pages_per_task > 0 else DEFAULT_PAGES_PER_TASK
+    if not use_ctid_scan or approx_pages <= 0:
         return [ScanTask(0, 2**31 - 1)]
     n_tasks = max(approx_pages // ppt, 1)
     if max_tasks is not None:

@@ -2,25 +2,26 @@
 
 Parity with the reference extension options
 (reference: src/postgres_extension.cpp:162-183) — same names and
-defaults, re-expressed as a plain registry that the scan planner and
-catalog consult. On a real cluster these would be set per-session;
-they are process-global here, like DuckDB's config.
+defaults. `SETTINGS` is the driver's process-global registry, like
+DuckDB's config. The `postgres_scan` DataSource runs in Python workers
+that never see it: a scan takes its settings from options of the same
+names (`Settings.from_options`), which `Catalog.table` and `pg_query`
+fill from `SETTINGS.scan_options()`.
 """
 
 from __future__ import annotations
 
 import weakref
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, fields
 from typing import Any
 
 DEFAULT_PAGES_PER_TASK = 1000  # reference: postgres_scanner.hpp DEFAULT_PAGES_PER_TASK
 
-# Catalogs register their clear_cache here; flipping a schema-shaping
-# setting invalidates every cached table schema, mirroring the
-# reference's ClearCacheOnSetting callback on pg_array_as_varchar
-# (reference: postgres_extension.cpp:171-173) — without it a table
-# probed before SET keeps its old array typing forever.
+# Catalogs register their clear_cache here: a cached Catalog.table
+# DataFrame carries the settings in its options, so any changed setting
+# invalidates it (reference: postgres_extension.cpp:171-173
+# ClearCacheOnSetting).
 _CACHE_CLEARERS: list = []      # weakref.WeakMethod entries
 
 
@@ -46,51 +47,61 @@ class Settings:
     pg_use_ctid_scan: bool = True
     pg_pages_per_task: int = DEFAULT_PAGES_PER_TASK
     pg_connection_limit: int = 64
-    pg_connection_cache: bool = True
     pg_array_as_varchar: bool = False
     pg_experimental_filter_pushdown: bool = True
     pg_null_byte_replacement: str | None = None
     pg_debug_show_queries: bool = False
-    _extra: dict[str, Any] = field(default_factory=dict)
 
-    def set(self, name: str, value: Any) -> None:
+    def _assign(self, name: str, value: Any) -> bool:
+        """Coerce, validate and store one setting; True if it changed."""
+        if name not in {f.name for f in fields(self)}:
+            # DuckDB: unrecognized configuration parameter "..."
+            raise ValueError(
+                f"unrecognized configuration parameter {name!r}")
         if name == "pg_null_byte_replacement" and value is not None \
                 and "\x00" in str(value):
             # reference: attach_null_byte.test (SET ...=chr(0) errors)
             raise ValueError(
                 "NULL byte replacement string cannot contain NULL values")
-        if hasattr(self, name) and not name.startswith("_"):
-            cur = getattr(self, name)
-            if isinstance(cur, bool):
-                value = value in (True, "true", "True", 1, "1", "on")
-            elif isinstance(cur, int) and cur is not None:
-                value = int(value)
-            setattr(self, name, value)
-            if name == "pg_pages_per_task" and self.pg_pages_per_task == 0:
+        cur = getattr(self, name)
+        if isinstance(cur, bool):
+            value = value in (True, "true", "True", 1, "1", "on")
+        elif isinstance(cur, int):
+            value = int(value)
+            if name == "pg_pages_per_task" and value == 0:
                 # reference: postgres_scanner.cpp:107 — 0 resets to default
-                self.pg_pages_per_task = DEFAULT_PAGES_PER_TASK
-            if name == "pg_array_as_varchar" and value != cur:
-                _clear_registered_caches()
-        else:
-            self._extra[name] = value
+                value = DEFAULT_PAGES_PER_TASK
+        setattr(self, name, value)
+        return value != cur
 
-    def get(self, name: str, default: Any = None) -> Any:
-        if hasattr(self, name) and not name.startswith("_"):
-            return getattr(self, name)
-        return self._extra.get(name, default)
+    def set(self, name: str, value: Any) -> None:
+        if self._assign(name, value):
+            _clear_registered_caches()
 
     def reset(self) -> None:
         fresh = Settings()
-        flipped = self.pg_array_as_varchar != fresh.pg_array_as_varchar
-        for k in vars(fresh):
-            if not k.startswith("_"):
-                setattr(self, k, getattr(fresh, k))
-        self._extra.clear()
-        if flipped:
-            # RESET changes the setting like SET does — same
-            # ClearCacheOnSetting semantics (a stale schema surviving
-            # reset is the exact bug the clearer exists to prevent)
+        changed = self != fresh
+        for f in fields(self):
+            setattr(self, f.name, getattr(fresh, f.name))
+        if changed:             # RESET clears caches like SET does
             _clear_registered_caches()
+
+    @classmethod
+    def from_options(cls, options) -> Settings:
+        """A scan's settings: every `pg_*` DataSource option must name
+        one and overrides its default; no cache is cleared."""
+        s = cls()
+        for name, value in options.items():
+            if name.startswith("pg_"):
+                s._assign(name, value)
+        return s
+
+    def scan_options(self) -> dict[str, str]:
+        """The non-default settings, as DataSource options."""
+        fresh = Settings()
+        return {f.name: str(v).lower() if isinstance(v, bool) else str(v)
+                for f in fields(self)
+                if (v := getattr(self, f.name)) != getattr(fresh, f.name)}
 
 
 SETTINGS = Settings()

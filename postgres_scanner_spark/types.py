@@ -14,8 +14,6 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-from .settings import SETTINGS
-
 # OIDs from reference: src/include/postgres_type_oids.hpp
 BOOLOID = 16
 BYTEAOID = 17
@@ -185,6 +183,7 @@ def spark_type_from_oid(
     *,
     precision: int | None = None,
     scale: int | None = None,
+    array_as_varchar: bool = False,
 ) -> T.DataType:
     """Map a wire-protocol type OID (what cursor.description reports
     for an arbitrary result set) to Spark — the result-set analog of
@@ -197,7 +196,8 @@ def spark_type_from_oid(
     if elem is not None:
         name = _OID_TO_NAME.get(elem, "varchar")
         return pg_type_to_spark(name, precision=precision, scale=scale,
-                                array_dims=1)
+                                array_dims=1,
+                                array_as_varchar=array_as_varchar)
     name = _OID_TO_NAME.get(oid)
     if name is None:
         return T.StringType()
@@ -210,6 +210,7 @@ def pg_type_to_spark(
     precision: int | None = None,
     scale: int | None = None,
     array_dims: int = 0,
+    array_as_varchar: bool = False,
 ) -> T.DataType:
     """Map a Postgres type name (optionally an N-dim array) to Spark.
 
@@ -217,7 +218,7 @@ def pg_type_to_spark(
     - numeric with known precision/scale → decimal(p,s); unknown → double
       (the reference falls back to double for unconstrained NUMERIC)
     - enum/unknown → varchar
-    - arrays → list (or varchar if pg_array_as_varchar)
+    - arrays → list (or varchar if array_as_varchar: pg_array_as_varchar)
     """
     base_name = type_name.strip().lower()
     if base_name.endswith("[]"):
@@ -231,7 +232,7 @@ def pg_type_to_spark(
     else:
         dt = _NAME_TO_SPARK.get(base_name, T.StringType())  # enum/unknown → varchar
     if array_dims > 0:
-        if SETTINGS.pg_array_as_varchar:
+        if array_as_varchar:
             return T.StringType()
         for _ in range(array_dims):
             dt = T.ArrayType(dt)

@@ -9,6 +9,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from postgres_scanner_spark.settings import SETTINGS
+
 
 @pytest.fixture(scope="module")
 def duck_db(tmp_path_factory):
@@ -54,7 +56,8 @@ def test_partitioned_scan_matches(registered, duck_db):
     # 10000 rows / 128 rows-per-page ≈ 79 pages → pages_per_task=10 → 7 tasks
     df = _scan(registered, duck_db, approx_pages="79")
     assert df.count() == 10000
-    df2 = _scan(registered, duck_db, approx_pages="79", pages_per_task="10")
+    df2 = _scan(registered, duck_db, approx_pages="79",
+                pg_pages_per_task="10")
     assert df2.rdd.getNumPartitions() > 1
     assert df2.count() == 10000            # disjoint page ranges, no loss
     assert df2.agg(F.sum("id")).collect()[0][0] == sum(range(10000))
@@ -104,10 +107,94 @@ def test_relation_reuse_no_filter_leak(registered, duck_db):
     df = (registered.read.format("postgres_scan")
           .option("dsn", f"duckdb://{duck_db}")
           .option("table", "items")
-          .option("pushdown", "false").load())
+          .option("pg_experimental_filter_pushdown", "false").load())
     assert df.count() == 10000
     assert df.filter(F.col("bucket").isNull()).count() == 1000
     assert df.count() == 10000    # unchanged after the filtered query
+
+
+def test_bare_scan_takes_settings_as_options(registered, duck_db):
+    """A direct read takes each setting as an option of its own name,
+    parsed in the worker that plans the scan: 1,024 approx pages at
+    pg_pages_per_task=100 plan 10 tasks, pg_connection_limit=2 caps
+    them at 2, pg_use_ctid_scan=false plans 1, and an unknown pg_*
+    option fails the load, naming it."""
+    def n_parts(**opts):
+        return _scan(registered, duck_db, approx_pages="1024",
+                     pg_pages_per_task="100",
+                     **opts).rdd.getNumPartitions()
+    assert n_parts() == 10
+    assert n_parts(pg_connection_limit="2") == 2
+    assert n_parts(pg_use_ctid_scan="false") == 1
+    with pytest.raises(Exception, match="pg_pages_per_tsk"):
+        _scan(registered, duck_db, pg_pages_per_tsk="5")
+
+
+def test_pushdown_option_leaves_filter_to_spark(registered, duck_db):
+    """pg_experimental_filter_pushdown=false keeps a Filter above the
+    BatchScan; by default the DataSource takes the filter and Spark
+    drops it."""
+    def plan(**opts):
+        df = _scan(registered, duck_db, **opts).filter(F.col("id") < 10)
+        assert df.count() == 10
+        return df._jdf.queryExecution().executedPlan().toString()
+    off = plan(pg_experimental_filter_pushdown="false")
+    assert "Filter (" in off
+    assert off.index("Filter (") < off.index("BatchScan")
+    assert "Filter (" not in plan()
+
+
+def test_debug_show_queries_reach_driver_stderr(duck_db):
+    """pg_debug_show_queries logs each task's SQL in the Python worker
+    that plans the scan. A child process runs a two-task scan with
+    pushdown off under a filter: both task SQLs, with no pushed WHERE,
+    reach its stderr."""
+    import subprocess
+    import sys
+    from pathlib import Path
+    from postgres_scanner_spark.pg_datasource import PostgresScanDataSource
+    opts = {"dsn": f"duckdb://{duck_db}", "table": "items",
+            "approx_pages": "2", "pg_pages_per_task": "1",
+            "pg_experimental_filter_pushdown": "false",
+            "pg_debug_show_queries": "true"}
+    ds = PostgresScanDataSource(opts)
+    want = [t.sql for t in ds.reader(ds.schema()).partitions()]
+    assert len(want) == 2 and all("rowid" in w for w in want)
+    script = (
+        "from postgres_scanner_spark import get_spark\n"
+        "from postgres_scanner_spark.pg_datasource import "
+        "ensure_registered\n"
+        "spark = get_spark(cpus=2)\n"
+        "ensure_registered(spark)\n"
+        f"df = spark.read.format('postgres_scan').options(**{opts!r})"
+        ".load()\n"
+        "print('ROWS', df.filter('id < 10').count())\n"
+        "spark.stop()\n")
+    out = subprocess.run([sys.executable, "-c", script],
+                         capture_output=True, text=True, timeout=600,
+                         cwd=Path(__file__).resolve().parents[1])
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "ROWS 10" in out.stdout
+    lines = [ln for ln in out.stderr.splitlines() if "pg scan " in ln]
+    for sql in want:
+        assert any(ln.endswith(f"pg scan {sql}") for ln in lines), lines
+    assert not any('"id" < 10' in ln for ln in lines), lines
+
+
+def test_write_takes_null_byte_replacement_option(registered, tmp_path):
+    """The writer runs in a Python worker: pg_null_byte_replacement
+    reaches it as an option, not through the driver's SETTINGS."""
+    db = str(tmp_path / "nul.db")
+    df = registered.createDataFrame([(1, "a\x00b")], "id BIGINT, s STRING")
+
+    def write(**opts):
+        w = (df.write.format("postgres_scan")
+             .option("dsn", f"duckdb://{db}").option("table", "t"))
+        w.options(**opts).mode("overwrite").save()
+    with pytest.raises(Exception, match="pg_null_byte_replacement"):
+        write()
+    write(pg_null_byte_replacement="X")
+    assert _scan(registered, db, table="t").collect()[0].s == "aXb"
 
 
 def test_pg_query_passthrough_duckdb(registered, duck_db):
@@ -207,7 +294,7 @@ def test_geometry_columns_decode_by_udt_not_spark_type():
     udts = {"p": "point", "b": "box"}
     r = PostgresScanReader(schema, {
         "dsn": "host=h dbname=d", "table": "t",
-        "pg_udts": json.dumps(udts)})
+        "udts": json.dumps(udts)})
     # cast: geometry ships native; the true array still casts
     assert r._col_cast(schema["p"]) == ""
     assert r._col_cast(schema["b"]) == ""
@@ -903,7 +990,8 @@ def _probe_reader(monkeypatch, connect):
     monkeypatch.setattr(pgclient, "pg_driver", lambda: fake)
     return PostgresScanReader(
         T.StructType([T.StructField("id", T.IntegerType())]),
-        {"dsn": "host=fake dbname=db", "table": "t"})
+        {**SETTINGS.scan_options(), "dsn": "host=fake dbname=db",
+         "table": "t"})
 
 
 def test_page_probe_db_error_plans_one_task_and_logs(monkeypatch, caplog):
@@ -934,11 +1022,10 @@ def test_page_probe_bug_propagates(monkeypatch):
 
 
 def test_debug_show_queries_logs_reader_sql(monkeypatch, caplog):
-    from postgres_scanner_spark.settings import SETTINGS
-    r = _probe_reader(monkeypatch, None)
     SETTINGS.set("pg_debug_show_queries", True)
     try:
-        with caplog.at_level("INFO",
+        r = _probe_reader(monkeypatch, None)
+        with caplog.at_level("WARNING",
                              logger="postgres_scanner_spark.pg_datasource"):
             sql = r._sql("id > 3")
     finally:

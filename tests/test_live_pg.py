@@ -269,7 +269,7 @@ def test_live_parallel_ctid_scan(registered, pg, pg_server):
                 "current_setting('block_size')::int")
     pages = cur.fetchone()[0]
     assert pages > 10          # enough pages for multi-task split
-    df = _scan(registered, pg_server, "big_t", pages_per_task="100")
+    df = _scan(registered, pg_server, "big_t", pg_pages_per_task="100")
     assert df.rdd.getNumPartitions() > 1
     agg = df.agg(F.count("*").alias("n"),
                  F.sum("id").alias("s")).collect()[0]
@@ -377,6 +377,44 @@ def test_live_attach_end_to_end(registered, pg, pg_server, tmp_path):
         drop_secret("att_live")
     cur.execute("SELECT count(*) FROM att_items")
     assert cur.fetchone() == (300,)
+
+
+def test_live_session_settings_reach_attached_scans(registered, pg,
+                                                    pg_server):
+    """SETTINGS set on the driver reach a Catalog.table scan of a live
+    attach, whose schema probe and planner run in Python workers: the
+    catalog passes them as options. The table has >= 1,000 heap
+    pages."""
+    from postgres_scanner_spark.catalog import Catalog
+    from postgres_scanner_spark.settings import SETTINGS
+    cur = pg.cursor()
+    cur.execute("DROP TABLE IF EXISTS set_t")
+    cur.execute("CREATE TABLE set_t AS SELECT g AS id, "
+                "ARRAY[g, g + 1] AS ia, repeat('s', 200) AS pad "
+                "FROM generate_series(1, 40000) g")
+    cur.execute("SELECT pg_relation_size('set_t') / "
+                "current_setting('block_size')::int")
+    assert cur.fetchone()[0] >= 1000
+    cat = Catalog(registered)
+    cat.attach(pg_server, alias="live_set")
+
+    def table():
+        return cat.table("live_set", "set_t")
+    try:
+        SETTINGS.set("pg_pages_per_task", 100)
+        assert table().rdd.getNumPartitions() >= 10
+        SETTINGS.set("pg_connection_limit", 2)
+        assert table().rdd.getNumPartitions() <= 2
+        SETTINGS.reset()
+        SETTINGS.set("pg_use_ctid_scan", False)
+        assert table().rdd.getNumPartitions() == 1
+        SETTINGS.set("pg_array_as_varchar", True)
+        df = table()
+        assert df.schema["ia"].dataType == T.StringType()
+        assert df.filter("id = 1").collect()[0].ia == "{1,2}"
+    finally:
+        SETTINGS.reset()
+        cat.detach("live_set")
 
 
 # -------------------------------------- binary COPY write (S7/S26)
@@ -707,7 +745,7 @@ def test_live_concurrent_partitioned_scans(registered, pg, pg_server):
     def run():
         try:
             df = _scan(registered, pg_server, "conc_t",
-                       pages_per_task="80")
+                       pg_pages_per_task="80")
             row = df.agg(F.count("*").alias("n"),
                          F.sum("id").alias("s")).collect()[0]
             results.append((row.n, row.s))
@@ -781,7 +819,7 @@ def test_live_mid_scan_backend_kill(registered, pg, pg_server):
     def run():
         try:
             df = _scan(registered, pg_server, "kill_t",
-                       pages_per_task="40")
+                       pg_pages_per_task="40")
             row = df.agg(F.count("*").alias("n"),
                          F.sum("id").alias("s")).collect()[0]
             outcome["result"] = (row.n, row.s)

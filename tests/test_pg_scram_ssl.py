@@ -607,7 +607,7 @@ def test_live_scan_over_scram_ssl(registered, pgs, pg_ssl_server):
                 "repeat('x', 100) AS pad FROM generate_series(1, 5000) g")
     df = (registered.read.format("postgres_scan")
           .option("dsn", dsn).option("table", "ssl_t")
-          .option("pages_per_task", "30").load())
+          .option("pg_pages_per_task", "30").load())
     assert df.rdd.getNumPartitions() > 1
     agg = df.agg(F.count("*").alias("n"), F.sum("id").alias("s")) \
             .collect()[0]

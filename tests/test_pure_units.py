@@ -123,14 +123,15 @@ def _live_reader(approx_pages, filters):
     """A postgres_scan reader on a libpq DSN, planned without a server:
     projection is the reader's schema (column x of items, wider on
     the server), filters go through pushFilters as Catalyst hands
-    them over. Returns (reader, filters Spark keeps)."""
+    them over. The session's settings ride along as options, as
+    Catalog.table passes them. Returns (reader, filters Spark keeps)."""
     from pyspark.sql.datasource import GreaterThan, IsNull
     from postgres_scanner_spark.pg_datasource import PostgresScanReader
     ops = {">": GreaterThan, "isnull": IsNull}
     reader = PostgresScanReader(
         T.StructType([T.StructField("x", T.LongType())]),
-        {"dsn": "host=h dbname=d", "table": "items",
-         "approx_pages": str(approx_pages)})
+        {**SETTINGS.scan_options(), "dsn": "host=h dbname=d",
+         "table": "items", "approx_pages": str(approx_pages)})
     kept = list(reader.pushFilters(
         [ops[op](("x",), *v) for op, *v in filters]))
     return reader, kept
@@ -181,7 +182,8 @@ def test_array_and_composite_types():
 def test_array_as_varchar_setting():
     SETTINGS.set("pg_array_as_varchar", True)
     try:
-        assert pg_type_to_spark("int4[]") == T.StringType()
+        assert pg_type_to_spark("int4[]", array_as_varchar=SETTINGS
+                                .pg_array_as_varchar) == T.StringType()
     finally:
         SETTINGS.set("pg_array_as_varchar", False)
 
@@ -204,6 +206,87 @@ def test_array_as_varchar_clearer_error_propagates():
         st_mod._CACHE_CLEARERS[:] = [
             r for r in st_mod._CACHE_CLEARERS if r() != broken.clear]
         SETTINGS.set("pg_array_as_varchar", False)
+
+
+def test_unknown_setting_name_raises():
+    """A misspelled name fails loudly, naming it (DuckDB: unrecognized
+    configuration parameter), and changes nothing."""
+    with pytest.raises(ValueError, match="pg_pages_per_tsk"):
+        SETTINGS.set("pg_pages_per_tsk", 5)
+    assert SETTINGS == Settings()
+    with pytest.raises(ValueError, match="pg_pages_per_tsk"):
+        Settings.from_options({"pg_pages_per_tsk": "5"})
+
+
+def test_scan_options_roundtrip_without_side_effects():
+    """scan_options renders only non-default settings; from_options
+    parses them back with set()'s coercion and clears no cache."""
+    from postgres_scanner_spark import settings as st_mod
+    assert SETTINGS.scan_options() == {}
+    s = Settings()
+    s.pg_pages_per_task, s.pg_use_ctid_scan = 100, False
+    s.pg_null_byte_replacement = ""
+    opts = s.scan_options()
+    assert opts == {"pg_pages_per_task": "100",
+                    "pg_use_ctid_scan": "false",
+                    "pg_null_byte_replacement": ""}
+
+    class Broken:
+        def clear(self):
+            raise RuntimeError("cleared from a scan's options")
+
+    broken = Broken()
+    st_mod.register_cache_clearer(broken.clear)
+    try:
+        parsed = Settings.from_options(
+            {**opts, "pg_array_as_varchar": "true", "dsn": "x",
+             "udts": "{}"})
+    finally:
+        st_mod._CACHE_CLEARERS[:] = [
+            r for r in st_mod._CACHE_CLEARERS if r() != broken.clear]
+    assert (parsed.pg_pages_per_task, parsed.pg_use_ctid_scan,
+            parsed.pg_null_byte_replacement, parsed.pg_array_as_varchar
+            ) == (100, False, "", True)
+    assert Settings.from_options({"pg_pages_per_task": "0"}) \
+        .pg_pages_per_task == 1000
+
+
+def test_any_changed_setting_clears_caches():
+    """Every changed value clears the registered caches (a cached
+    Catalog.table carries all settings as options); an unchanged one
+    does not."""
+    from postgres_scanner_spark import settings as st_mod
+    calls = []
+
+    class Counter:
+        def clear(self):
+            calls.append(1)
+
+    c = Counter()
+    st_mod.register_cache_clearer(c.clear)
+    try:
+        SETTINGS.set("pg_pages_per_task", 1000)        # unchanged
+        assert calls == []
+        SETTINGS.set("pg_pages_per_task", 100)
+        assert calls == [1]
+        SETTINGS.reset()
+        assert calls == [1, 1]
+        SETTINGS.reset()                               # already default
+        assert calls == [1, 1]
+    finally:
+        st_mod._CACHE_CLEARERS[:] = [
+            r for r in st_mod._CACHE_CLEARERS if r() != c.clear]
+        SETTINGS.reset()
+
+
+def test_scan_modules_never_read_session_settings():
+    """The DataSource and the scan planner run in Python workers, where
+    the driver's SETTINGS holds only defaults: they take settings from
+    options or arguments and never name the global."""
+    from pathlib import Path
+    pkg = Path(__file__).resolve().parents[1] / "postgres_scanner_spark"
+    for mod in ("pg_datasource.py", "scan.py", "pushdown.py", "types.py"):
+        assert "SETTINGS" not in (pkg / mod).read_text(), mod
 
 
 def test_inverse_type_map():
@@ -278,7 +361,7 @@ def test_debug_show_queries_logs_pushed_sql(caplog):
     SETTINGS.set("pg_debug_show_queries", True)
     try:
         with caplog.at_level(
-                "INFO", logger="postgres_scanner_spark.pg_datasource"):
+                "WARNING", logger="postgres_scanner_spark.pg_datasource"):
             single = _live_reader(500, [(">", 1)])[0].partitions()
             ctid = _live_reader(5000, [(">", 1)])[0].partitions()
     finally:

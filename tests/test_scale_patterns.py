@@ -331,13 +331,13 @@ def test_connection_limit_concurrent_scans(spark, tmp_path):
     scans want more source connections than pg_connection_limit, the
     engine QUEUES (each query plans at most `limit` scan tasks and
     Spark's scheduler drains them as slots free) rather than failing
-    or oversubscribing. 4 concurrent full scans against a 2-connection
-    limit must all return complete, correct results, and each query's
-    plan must carry at most 2 source partitions."""
+    or oversubscribing. Uncapped, the scan plans 10 tasks; 4
+    concurrent scans against a 2-connection limit must all return
+    complete, correct results, and each query's plan must carry at
+    most 2 source partitions."""
     import threading
     import duckdb
     from postgres_scanner_spark.pg_datasource import ensure_registered
-    from postgres_scanner_spark.settings import SETTINGS
 
     ensure_registered(spark)
     db = str(tmp_path / "pool.db")
@@ -345,38 +345,35 @@ def test_connection_limit_concurrent_scans(spark, tmp_path):
     con.execute("CREATE TABLE big AS SELECT range AS id FROM range(4096)")
     con.close()
 
-    old = SETTINGS.pg_connection_limit
-    SETTINGS.pg_connection_limit = 2
-    try:
-        def scan():
-            return (spark.read.format("postgres_scan")
-                    .option("dsn", f"duckdb://{db}")
-                    .option("table", "big")
-                    .option("approx_pages", "1024")   # wants 10+ tasks
-                    .load())
+    def scan(**settings):
+        return (spark.read.format("postgres_scan")
+                .option("dsn", f"duckdb://{db}")
+                .option("table", "big")
+                .option("approx_pages", "1024")
+                .option("pg_pages_per_task", "100")   # 10 tasks
+                .options(**settings).load())
 
-        # the cap binds at plan time: <= 2 source partitions per query
-        assert scan().rdd.getNumPartitions() <= 2
+    assert scan().rdd.getNumPartitions() >= 10
+    # the cap binds at plan time: <= 2 source partitions per query
+    assert scan(pg_connection_limit="2").rdd.getNumPartitions() == 2
 
-        results, errors = [None] * 4, []
+    results, errors = [None] * 4, []
 
-        def worker(i):
-            try:
-                df = scan().agg({"id": "sum"})
-                results[i] = df.collect()[0][0]
-            except Exception as exc:  # noqa: BLE001
-                errors.append(exc)
+    def worker(i):
+        try:
+            df = scan(pg_connection_limit="2").agg({"id": "sum"})
+            results[i] = df.collect()[0][0]
+        except Exception as exc:  # noqa: BLE001
+            errors.append(exc)
 
-        threads = [threading.Thread(target=worker, args=(i,))
-                   for i in range(4)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(120)
-        assert not errors, errors
-        assert results == [4096 * 4095 // 2] * 4
-    finally:
-        SETTINGS.pg_connection_limit = old
+    threads = [threading.Thread(target=worker, args=(i,))
+               for i in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(120)
+    assert not errors, errors
+    assert results == [4096 * 4095 // 2] * 4
 
 
 def test_aqe_skew_join_split_fires(spark):
