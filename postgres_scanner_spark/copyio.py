@@ -27,6 +27,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from .settings import SETTINGS
+from .types import wire_layout
 
 _TEXT_OPTS = {"header": "false", "nullValue": "\\N", "delimiter": "\t",
               "timestampFormat": "yyyy-MM-dd HH:mm:ss[.SSSSSS]"}
@@ -95,29 +96,6 @@ def copy_from(spark: SparkSession, path: str, *, format: str | None = None,
     raise ValueError(f"unknown COPY format {fmt!r}")
 
 
-def _pg_binary_layout(schema):
-    """(oids, array_elem_oids, array_ndims, array_cols) for a Spark
-    schema. Nested ArrayTypes unwrap to the LEAF element OID plus a
-    dimension count — an array<array<int>> column emits a genuine 2-D
-    PG array frame, never a text-serialized inner list."""
-    from pyspark.sql import types as T
-    from .pgwire import spark_field_oid
-    oids, array_elem, array_ndims, array_cols = [], {}, {}, set()
-    for i, f in enumerate(schema.fields):
-        if isinstance(f.dataType, T.ArrayType):
-            inner, depth = f.dataType, 0
-            while isinstance(inner, T.ArrayType):
-                inner = inner.elementType
-                depth += 1
-            oids.append(0)
-            array_elem[i] = spark_field_oid(inner)
-            array_ndims[i] = depth
-            array_cols.add(i)
-        else:
-            oids.append(spark_field_oid(f.dataType))
-    return oids, array_elem, array_ndims, array_cols
-
-
 def _write_pg_binary(df: DataFrame, path: str, mode: str) -> None:
     """Each partition emits one PGCOPY stream file (part-N.pgcopy) —
     a per-partition imperative sink for a wire format Spark has no
@@ -127,7 +105,7 @@ def _write_pg_binary(df: DataFrame, path: str, mode: str) -> None:
     contract, ~7x its throughput), so rows never materialize as
     Python objects on the hot path (the reference's writer is the
     vectorized C++ src/postgres_binary_copy.cpp)."""
-    oids, array_elem, array_ndims, _ = _pg_binary_layout(df.schema)
+    oids, array_elem, array_ndims, _ = wire_layout(df.schema)
     if mode == "overwrite":
         shutil.rmtree(path, ignore_errors=True)
     elif os.path.exists(path) and mode == "error":
@@ -172,7 +150,7 @@ def _read_pg_binary(spark: SparkSession, path: str, schema) -> DataFrame:
             "format='pg_binary' needs an explicit schema: the PGCOPY "
             "frame carries field bytes, not types (same contract as "
             "COPY table FROM ... (FORMAT binary))")
-    oids, _, _, array_cols = _pg_binary_layout(schema)
+    oids, _, _, array_cols = wire_layout(schema)
     files = spark.read.format("binaryFile").load(
         os.path.join(path, "*.pgcopy")).select("content")
 

@@ -296,10 +296,10 @@ class PostgresScanReader(DataSourceReader):
         self.pushed: list[tuple] = []
         # PG-declared type names from the schema probe (JSON col→udt):
         # geometry columns (point/box/...) surface as Struct/Array
-        # Spark types, which spark_field_oid cannot disambiguate from
-        # real composites/float8[] — the udt picks the wire OID and
-        # suppresses the server-side cast so the native send format
-        # arrives (reference: postgres_binary_reader.hpp ReadGeometry)
+        # Spark types, the same as real composites/float8[] — the
+        # udt picks the wire OID and suppresses the server-side cast
+        # so the native send format arrives (reference:
+        # postgres_binary_reader.hpp ReadGeometry)
         import json as _json
         self.udts: dict[str, str] = _json.loads(options.get("udts", "{}"))
 
@@ -380,54 +380,20 @@ class PostgresScanReader(DataSourceReader):
             return 0
 
     def _col_cast(self, f: T.StructField) -> str:
-        """Per-column server-side cast; geometry columns (known from
-        the probe's udt) ship their NATIVE send format — the decoder
-        has dedicated branches — instead of an invalid ::float8[]/
-        struct cast derived from the Spark type."""
-        from .types import GEOMETRY_OIDS
-        if self.udts.get(f.name) in GEOMETRY_OIDS:
-            return ""
-        return self._pg_cast(f.dataType)
-
-    @staticmethod
-    def _pg_cast(dt: T.DataType) -> str:
-        """Server-side cast so every column arrives over COPY binary
-        in EXACTLY the wire format the Spark-type→OID decode expects
+        """Per-column server-side cast, so every column arrives over
+        COPY binary in EXACTLY the wire format `wire_layout` decodes
         (a uuid/json/inet column probed as StringType must ship as
-        text, not its native 16-byte/uvarlena send format)."""
-        if isinstance(dt, T.ArrayType):
-            inner = dt
-            depth = 0
-            while isinstance(inner, T.ArrayType):
-                inner = inner.elementType
-                depth += 1
-            base = PostgresScanReader._pg_cast(inner)
-            return (base or "::text") + "[]" * depth
-        if isinstance(dt, T.StringType):
-            return "::text"
-        if isinstance(dt, T.DoubleType):
-            return "::float8"
-        if isinstance(dt, T.FloatType):
-            return "::float4"
-        if isinstance(dt, T.LongType):
-            return "::int8"
-        if isinstance(dt, T.IntegerType):
-            return "::int4"
-        if isinstance(dt, (T.ShortType, T.ByteType)):
-            return "::int2"
-        if isinstance(dt, T.BooleanType):
-            return "::bool"
-        if isinstance(dt, T.BinaryType):
-            return "::bytea"
-        if isinstance(dt, T.DateType):
-            return "::date"
-        if isinstance(dt, T.TimestampType):
-            return "::timestamptz"
-        if isinstance(dt, T.TimestampNTZType):
-            return "::timestamp"
-        if isinstance(dt, T.DecimalType):
-            return f"::numeric({dt.precision},{dt.scale})"
-        return ""
+        text, not its native 16-byte/uvarlena send format). Geometry
+        columns (known from the probe's udt) ship their NATIVE send
+        format — the decoder has dedicated branches — and a type
+        outside the Spark→Postgres table (struct, map) gets no cast."""
+        from .types import GEOMETRY_OIDS, SPARK_TO_OID, spark_type_to_pg
+        dt = f.dataType
+        if self.udts.get(f.name) in GEOMETRY_OIDS or (
+                type(dt) not in SPARK_TO_OID
+                and not isinstance(dt, T.ArrayType)):
+            return ""
+        return "::" + spark_type_to_pg(dt)
 
     def _relation(self) -> str:
         """The scanned table as it appears in every query's FROM."""
@@ -493,22 +459,6 @@ class PostgresScanReader(DataSourceReader):
             return
         yield from self._read_live_pg(sql)
 
-    def _wire_layout(self):
-        """(wire OID per column, array columns) of the COPY the scan
-        issues: geometry columns by their probed udt, the rest by the
-        Spark type their server-side cast produces."""
-        from .pgwire import spark_field_oid
-        from .types import GEOMETRY_OIDS
-        oids = [
-            GEOMETRY_OIDS.get(self.udts.get(f.name),
-                              spark_field_oid(f.dataType))
-            for f in self.schema_.fields]
-        array_cols = {
-            i for i, f in enumerate(self.schema_.fields)
-            if isinstance(f.dataType, T.ArrayType)
-            and self.udts.get(f.name) not in GEOMETRY_OIDS}
-        return oids, array_cols
-
     def _read_live_pg(self, sql: str):
         """Live Postgres: stream `COPY (sql) TO STDOUT (FORMAT binary)`
         and decode the PGCOPY frames column-wise into Arrow record
@@ -525,7 +475,9 @@ class PostgresScanReader(DataSourceReader):
         a live server (tests/test_live_pg.py)."""
         from .pgclient import pg_driver
         from .pgwire_vec import VectorBinaryCopyReader
-        reader = VectorBinaryCopyReader(*self._wire_layout(), self.schema_)
+        from .types import wire_layout
+        oids, _, _, array_cols = wire_layout(self.schema_, self.udts)
+        reader = VectorBinaryCopyReader(oids, array_cols, self.schema_)
         with pg_driver().connect(self.dsn) as con, con.cursor() as cur:
             with cur.copy(
                     f"COPY ({sql}) TO STDOUT (FORMAT binary)") as cp:
@@ -694,12 +646,16 @@ class PostgresScanPartitionedStreamReader(DataSourceStreamReader):
         pass  # offsets live in the stream checkpoint
 
 
-# udts whose typmod is a sub-second datetime precision — the
-# overwrite definition-match probe compares it via
-# information_schema.datetime_precision (date is excluded: it
-# reports 0 there but carries no typmod)
-_DT_UDTS = frozenset(
-    {"timestamp", "timestamptz", "time", "timetz", "interval"})
+# Overwrite definition match: two relations' (name, type) per live
+# column, in order, with the types spelled by Postgres (format_type
+# keeps every typmod, array element typmods included); NULL — no
+# match — when the target does not exist. _WANT holds the wanted
+# definition, parsed by the server as a temp table.
+_WANT = "pg_temp._pg_spark_want"
+_COLUMNS = ("(SELECT array_agg((attname, format_type(atttypid, atttypmod))"
+            " ORDER BY attnum) FROM pg_attribute WHERE attrelid = "
+            "to_regclass(%s) AND attnum > 0 AND NOT attisdropped)")
+_SAME_COLUMNS = f"SELECT {_COLUMNS} = {_COLUMNS}"
 
 
 class _SpoolMsg(WriterCommitMessage):
@@ -763,9 +719,9 @@ class PostgresScanWriter(DataSourceArrowWriter):
         Arrow batches of the write schema first."""
         import os
         import uuid
-        from .copyio import _pg_binary_layout
         from .pgwire_vec import VectorBinaryCopyWriter
-        oids, array_elem, array_ndims, _ = _pg_binary_layout(self.schema_)
+        from .types import wire_layout
+        oids, array_elem, array_ndims, _ = wire_layout(self.schema_)
         os.makedirs(self.spool, exist_ok=True)
         path = os.path.join(self.spool, f"{uuid.uuid4().hex}.pgcopy")
         it = iter(it)
@@ -784,9 +740,9 @@ class PostgresScanWriter(DataSourceArrowWriter):
         """One spool as an Arrow RecordBatchReader of the write
         schema, decoded column-wise as it is consumed."""
         import pyarrow as pa
-        from .copyio import _pg_binary_layout
         from .pgwire_vec import VectorBinaryCopyReader
-        oids, _, _, array_cols = _pg_binary_layout(self.schema_)
+        from .types import wire_layout
+        oids, _, _, array_cols = wire_layout(self.schema_)
         reader = VectorBinaryCopyReader(oids, array_cols, self.schema_)
 
         def batches():
@@ -861,93 +817,14 @@ class PostgresScanWriter(DataSourceArrowWriter):
         finally:
             con.close()
 
-    @staticmethod
-    def _pg_sql_type(dt: T.DataType) -> str:
-        if isinstance(dt, T.ArrayType):
-            return PostgresScanWriter._pg_sql_type(dt.elementType) + "[]"
-        if isinstance(dt, T.DecimalType):
-            return f"NUMERIC({dt.precision},{dt.scale})"
-        return {
-            T.LongType(): "BIGINT", T.IntegerType(): "INTEGER",
-            T.ShortType(): "SMALLINT", T.ByteType(): "SMALLINT",
-            T.DoubleType(): "DOUBLE PRECISION", T.FloatType(): "REAL",
-            T.StringType(): "TEXT", T.BooleanType(): "BOOLEAN",
-            T.DateType(): "DATE", T.TimestampNTZType(): "TIMESTAMP",
-            T.TimestampType(): "TIMESTAMPTZ",
-            T.BinaryType(): "BYTEA",
-        }.get(dt, "TEXT")
-
-    @staticmethod
-    def _typmod(sql_type: str, udt: str
-                ) -> tuple[int | None, int | None, int | None,
-                           int | None]:
-        """DDL type modifiers → the (character_maximum_length,
-        numeric_precision, numeric_scale, datetime_precision) tuple
-        information_schema reports, for the overwrite
-        definition-match probe. Datetime/time/interval sub-second
-        precision and bit lengths are modeled too — a surviving
-        timestamp(0) column must NOT 'match' an unconstrained
-        incoming TIMESTAMP, or the TRUNCATE path would silently
-        round sub-second values on COPY (same silent-coercion class
-        the numeric check prevents). Defaults mirror PG: bare
-        datetime types report precision 6, bare bpchar/bit report
-        length 1, unconstrained varchar/varbit/numeric report NULL."""
-        import re
-        m = re.search(r"\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\)",
-                      sql_type.strip().lower())
-        a = int(m.group(1)) if m else None
-        b = int(m.group(2)) if m and m.group(2) is not None else None
-        if udt == "numeric":
-            if a is None:
-                return (None, None, None, None)
-            # numeric(p) means scale 0 in PG
-            return (None, a, b if b is not None else 0, None)
-        if udt in ("varchar", "varbit"):
-            return (a, None, None, None)
-        if udt in ("bpchar", "bit"):
-            return (a if a is not None else 1, None, None, None)
-        if udt in _DT_UDTS:
-            return (None, None, None, a if a is not None else 6)
-        return (None, None, None, None)
-
-    @staticmethod
-    def _udt_name(sql_type: str) -> str:
-        """DDL type name → the udt_name information_schema reports for
-        it, for the overwrite definition-match probe. Arrays report
-        '_elem' (any dimensionality); enums/domains report their own
-        name, which the identity fallback covers."""
-        import re
-        base = sql_type.strip().lower()
-        dims = 0
-        while base.endswith("[]"):
-            base = base[:-2].strip()
-            dims += 1
-        base = re.sub(r"\(.*\)$", "", base).strip()
-        udt = {
-            "smallint": "int2", "integer": "int4", "int": "int4",
-            "bigint": "int8", "real": "float4",
-            "double precision": "float8", "boolean": "bool",
-            "timestamp": "timestamp",
-            "timestamp without time zone": "timestamp",
-            "timestamptz": "timestamptz",
-            "timestamp with time zone": "timestamptz",
-            "decimal": "numeric", "character varying": "varchar",
-            "char": "bpchar", "character": "bpchar",
-            "time": "time", "time without time zone": "time",
-            "time with time zone": "timetz",
-            "bit varying": "varbit",
-        }.get(base, base)
-        if udt.startswith("interval"):
-            udt = "interval"    # interval day to second → udt interval
-        return ("_" + udt) if dims else udt
-
     def _commit_live_pg(self, messages) -> None:
         from .pgclient import pg_driver
+        from .types import spark_type_to_pg
         psycopg = pg_driver()
         pg_schema = self.options.get("schema", "public")
         target = f'"{pg_schema}"."{self.table}"'
         # column_types option: JSON {column: pg_type} overriding the
-        # default Spark→PG DDL map, so a varchar-in-Spark column can
+        # default Spark→PG DDL type, so a varchar-in-Spark column can
         # CREATE as its server-side UDT (enum/domain) — closing the
         # enum-writes-back-as-VARCHAR gap (reference: bug71.test reads
         # a UDT column; the scan side already types it via _udts)
@@ -956,11 +833,13 @@ class PostgresScanWriter(DataSourceArrowWriter):
         overrides = json.loads(self.options.get("column_types", "{}"))
         # a type name: word chars/spaces (TIMESTAMP WITH TIME ZONE),
         # optional schema qualifier, optional (p[,s]) with NUMBERS
-        # only, optional [] suffixes — no quotes, no free commas, so
-        # a value cannot smuggle extra column definitions into the
-        # CREATE TABLE it is spliced into
+        # only and words after it (timestamp(3) with time zone),
+        # optional [] suffixes — no quotes, no free commas, so a value
+        # cannot smuggle extra column definitions into the CREATE
+        # TABLE it is spliced into
         type_re = (r"[A-Za-z_][\w ]*(?:\.[A-Za-z_][\w ]*)?"
-                   r"(?:\(\s*\d+(?:\s*,\s*\d+)?\s*\))?(?:\[\])*")
+                   r"(?:\(\s*\d+(?:\s*,\s*\d+)?\s*\)"
+                   r"(?:\s+[A-Za-z_][\w ]*)?)?(?:\[\])*")
         for cname, ctype in overrides.items():
             if not re.fullmatch(type_re, ctype.strip()):
                 raise ValueError(
@@ -968,53 +847,30 @@ class PostgresScanWriter(DataSourceArrowWriter):
                     f"plain type name")
         cols = ", ".join(
             f'"{f.name}" '
-            f'{overrides.get(f.name, self._pg_sql_type(f.dataType))}'
+            f'{overrides.get(f.name, spark_type_to_pg(f.dataType))}'
             for f in self.schema_.fields)
         with psycopg.connect(self.dsn) as con, con.cursor() as cur:
             # overwrite: TRUNCATE when the existing definition already
             # matches the incoming one COLUMN-FOR-COLUMN (names, order,
-            # and wire type) — preserving the table's indexes,
+            # types and typmods) — preserving the table's indexes,
             # constraints, grants, defaults, and dependent views.
             # Otherwise DROP + CREATE: binary COPY maps columns
             # POSITIONALLY, so a surviving table with a different
             # column order or types would load mis-mapped rows or fail
-            # mid-COPY. The DROP path is DESTRUCTIVE to dependent
-            # objects by design — redefine-on-overwrite is the only
-            # way to honor Spark's mode("overwrite") contract when the
-            # shapes diverge.
+            # mid-COPY, and a surviving numeric(10,2) or timestamp(0)
+            # would silently round what the write means to keep. The
+            # DROP path is DESTRUCTIVE to dependent objects by design —
+            # redefine-on-overwrite is the only way to honor Spark's
+            # mode("overwrite") contract when the shapes diverge.
+            # Postgres itself parses the wanted definition (a temp
+            # table) and spells both sides with format_type, so
+            # synonyms, schema-qualified UDTs and array typmods
+            # compare as the server sees them.
             if self.overwrite:
-                # typmods matter too: numeric(10,2) surviving a
-                # TRUNCATE would silently round values an incoming
-                # numeric(12,6) write expects to keep, and a shorter
-                # varchar(n) would abort the COPY mid-write — so the
-                # match covers length/precision/scale, not just the
-                # base udt. Non-numeric udts normalize prec/scale to
-                # None (information_schema reports intrinsic widths
-                # like int4→32 that are not typmods).
-                cur.execute(
-                    "SELECT column_name, udt_name, "
-                    "character_maximum_length, numeric_precision, "
-                    "numeric_scale, datetime_precision "
-                    "FROM information_schema.columns "
-                    "WHERE table_schema = %s AND table_name = %s "
-                    "ORDER BY ordinal_position",
-                    (pg_schema, self.table))
-                existing = [
-                    (n, u, cl,
-                     p if u == "numeric" else None,
-                     s if u == "numeric" else None,
-                     # date reports datetime_precision 0 yet has no
-                     # typmod — only the sub-second family compares
-                     dtp if u in _DT_UDTS else None)
-                    for n, u, cl, p, s, dtp in cur.fetchall()]
-                want = []
-                for f in self.schema_.fields:
-                    ddl = overrides.get(f.name,
-                                        self._pg_sql_type(f.dataType))
-                    u = self._udt_name(ddl)
-                    cl, p, s, dtp = self._typmod(ddl, u)
-                    want.append((f.name, u, cl, p, s, dtp))
-                if existing and existing == want:
+                cur.execute(f"CREATE TEMP TABLE {_WANT} ({cols}) "
+                            "ON COMMIT DROP")
+                cur.execute(_SAME_COLUMNS, (target, _WANT))
+                if cur.fetchone()[0]:
                     cur.execute(f"TRUNCATE TABLE {target}")
                 else:
                     cur.execute(f"DROP TABLE IF EXISTS {target}")
@@ -1112,10 +968,18 @@ class PostgresScanDataSource(DataSource):
                 desc = con.execute(f'DESCRIBE {probe}').fetchall()
             finally:
                 con.close()
-            return T.StructType([
+            schema = T.StructType([
                 T.StructField(n, _duck_type(t), True)
                 for n, t, *_ in desc
             ])
+            arrays = [f.name for f in schema.fields
+                      if isinstance(f.dataType, T.ArrayType)]
+            if as_varchar and arrays:
+                # DuckDB has no Postgres array text form to read back
+                raise ValueError(
+                    "pg_array_as_varchar is not supported by the "
+                    f"duckdb:// stand-in (array columns: {arrays})")
+            return schema
         from .pgclient import pg_driver
         psycopg = pg_driver()
         from .types import pg_type_to_spark

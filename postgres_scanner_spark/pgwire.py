@@ -463,34 +463,3 @@ class ChunkStream:
         out = bytes(self._buf[:n])
         del self._buf[:n]
         return out
-
-
-# ------------------------------------------------- Spark-type bridging
-def spark_field_oid(dt) -> int:
-    """Spark DataType → the OID whose send format we emit for it."""
-    from pyspark.sql import types as T
-    if isinstance(dt, T.BooleanType):
-        return pgt.BOOLOID
-    if isinstance(dt, (T.ShortType, T.ByteType)):
-        return pgt.INT2OID
-    if isinstance(dt, T.IntegerType):
-        return pgt.INT4OID
-    if isinstance(dt, T.LongType):
-        return pgt.INT8OID
-    if isinstance(dt, T.FloatType):
-        return pgt.FLOAT4OID
-    if isinstance(dt, T.DoubleType):
-        return pgt.FLOAT8OID
-    if isinstance(dt, T.DecimalType):
-        return pgt.NUMERICOID
-    if isinstance(dt, T.BinaryType):
-        return pgt.BYTEAOID
-    if isinstance(dt, T.DateType):
-        return pgt.DATEOID
-    if isinstance(dt, T.TimestampNTZType):
-        return pgt.TIMESTAMPOID
-    if isinstance(dt, T.TimestampType):
-        return pgt.TIMESTAMPTZOID
-    if isinstance(dt, T.DayTimeIntervalType):
-        return pgt.INTERVALOID
-    return pgt.TEXTOID

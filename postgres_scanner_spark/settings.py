@@ -18,6 +18,10 @@ from typing import Any
 
 DEFAULT_PAGES_PER_TASK = 1000  # reference: postgres_scanner.hpp DEFAULT_PAGES_PER_TASK
 
+# Settings only the driver reads (copyio's default COPY format): a
+# scan always reads and writes COPY binary, so none is a scan option.
+_DRIVER_ONLY = frozenset({"pg_use_binary_copy"})
+
 # Catalogs register their clear_cache here: a cached Catalog.table
 # DataFrame carries the settings in its options, so any changed setting
 # invalidates it (reference: postgres_extension.cpp:171-173
@@ -89,19 +93,25 @@ class Settings:
     @classmethod
     def from_options(cls, options) -> Settings:
         """A scan's settings: every `pg_*` DataSource option must name
-        one and overrides its default; no cache is cleared."""
+        a scan setting and overrides its default; no cache is
+        cleared."""
         s = cls()
         for name, value in options.items():
+            if name in _DRIVER_ONLY:
+                raise ValueError(
+                    f"{name} is not a postgres_scan option: a scan "
+                    "always reads and writes COPY binary; the setting "
+                    "only picks copy_to/copy_from's default format")
             if name.startswith("pg_"):
                 s._assign(name, value)
         return s
 
     def scan_options(self) -> dict[str, str]:
-        """The non-default settings, as DataSource options."""
+        """The non-default scan settings, as DataSource options."""
         fresh = Settings()
         return {f.name: str(v).lower() if isinstance(v, bool) else str(v)
-                for f in fields(self)
-                if (v := getattr(self, f.name)) != getattr(fresh, f.name)}
+                for f in fields(self) if f.name not in _DRIVER_ONLY
+                and (v := getattr(self, f.name)) != getattr(fresh, f.name)}
 
 
 SETTINGS = Settings()

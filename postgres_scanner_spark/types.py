@@ -1,6 +1,6 @@
-"""Postgres type system → Spark DataType mapping.
+"""Postgres ↔ Spark type mapping, both directions.
 
-Parity with the reference's OID map (reference:
+Postgres → Spark: parity with the reference's OID map (reference:
 src/include/postgres_type_oids.hpp, src/postgres_utils.cpp
 PostgresUtils::TypeToLogicalType). Arrays map to ArrayType, composite
 types to StructType, numeric to DecimalType (or double when
@@ -8,6 +8,16 @@ precision/scale unknown — same fallback the reference uses), and
 exotic types (uuid/json/range/inet/money/bit) to StringType, matching
 the reference's varchar fallback. `pg_array_as_varchar` flattens
 arrays to their text form (reference: postgres_extension.cpp:171).
+
+Spark → Postgres: ONE table, `SPARK_TO_OID`, maps each Spark type
+class to the Postgres type it travels as — the reference makes the
+same decision in one function, PostgresUtils::TypeToPostgres
+(src/postgres_utils.cpp). Everything else derives from it: the type's
+name (`spark_type_to_pg`: the `_OID_TO_NAME` spelling, `(p,s)` for
+decimals, `[]` per array level) is both the scan's `::cast` and the
+writer's DDL, and `wire_layout` gives the PGCOPY OIDs both codec
+directions use. A type outside the table (struct, map) travels as
+text and gets no read cast.
 """
 
 from __future__ import annotations
@@ -253,37 +263,53 @@ def composite_to_struct(fields: list[tuple[str, str]]) -> T.StructType:
     ])
 
 
+# Spark type class → the Postgres type it is written as, read back
+# through and sent on the wire as (reference: postgres_utils.cpp
+# TypeToPostgres); a class outside it travels as text
+SPARK_TO_OID: dict[type, int] = {
+    T.BooleanType: BOOLOID, T.ByteType: INT2OID, T.ShortType: INT2OID,
+    T.IntegerType: INT4OID, T.LongType: INT8OID,
+    T.FloatType: FLOAT4OID, T.DoubleType: FLOAT8OID,
+    T.DecimalType: NUMERICOID, T.StringType: TEXTOID,
+    T.BinaryType: BYTEAOID, T.DateType: DATEOID,
+    T.TimestampType: TIMESTAMPTZOID, T.TimestampNTZType: TIMESTAMPOID,
+    T.DayTimeIntervalType: INTERVALOID,
+}
+
+
+def spark_field_oid(dt: T.DataType) -> int:
+    """Spark DataType → the OID whose send format carries it."""
+    return SPARK_TO_OID.get(type(dt), TEXTOID)
+
+
 def spark_type_to_pg(dt: T.DataType) -> str:
-    """Inverse map for DDL generation when writing back
-    (reference: postgres_utils.cpp TypeToPostgres)."""
-    if isinstance(dt, T.BooleanType):
-        return "BOOLEAN"
-    if isinstance(dt, T.ByteType) or isinstance(dt, T.ShortType):
-        return "SMALLINT"
-    if isinstance(dt, T.IntegerType):
-        return "INTEGER"
-    if isinstance(dt, T.LongType):
-        return "BIGINT"
-    if isinstance(dt, T.FloatType):
-        return "REAL"
-    if isinstance(dt, T.DoubleType):
-        return "DOUBLE PRECISION"
-    if isinstance(dt, T.DecimalType):
-        return f"NUMERIC({dt.precision},{dt.scale})"
-    if isinstance(dt, T.StringType):
-        return "VARCHAR"
-    if isinstance(dt, T.BinaryType):
-        return "BYTEA"
-    if isinstance(dt, T.DateType):
-        return "DATE"
-    if isinstance(dt, (T.TimestampType,)):
-        return "TIMESTAMPTZ"
-    if isinstance(dt, (T.TimestampNTZType,)):
-        return "TIMESTAMP"
-    if isinstance(dt, T.DayTimeIntervalType):
-        return "INTERVAL"
+    """Spark DataType → its Postgres type name: the DDL type and the
+    scan's read cast."""
     if isinstance(dt, T.ArrayType):
         return spark_type_to_pg(dt.elementType) + "[]"
-    if isinstance(dt, T.StructType):
-        return "JSONB"  # structs round-trip as jsonb documents
-    return "VARCHAR"
+    name = _OID_TO_NAME[spark_field_oid(dt)]
+    if isinstance(dt, T.DecimalType):
+        return f"{name}({dt.precision},{dt.scale})"
+    return name
+
+
+def wire_layout(schema: T.StructType, udts: dict[str, str] | None = None):
+    """(oids, array_elem_oids, array_ndims, array_cols) of the PGCOPY
+    stream carrying `schema`. Nested ArrayTypes unwrap to the LEAF
+    element OID plus a dimension count — an array<array<int>> column
+    is a genuine 2-D PG array frame. A column whose probed udt is a
+    geometry type keeps its native send format, whatever its Spark
+    type (reference: postgres_binary_reader.hpp ReadGeometry)."""
+    oids, array_elem, array_ndims, array_cols = [], {}, {}, set()
+    for i, f in enumerate(schema.fields):
+        geom = GEOMETRY_OIDS.get((udts or {}).get(f.name))
+        dt, depth = f.dataType, 0
+        while geom is None and isinstance(dt, T.ArrayType):
+            dt, depth = dt.elementType, depth + 1
+        if depth:
+            oids.append(0)
+            array_elem[i], array_ndims[i] = spark_field_oid(dt), depth
+            array_cols.add(i)
+        else:
+            oids.append(geom or spark_field_oid(dt))
+    return oids, array_elem, array_ndims, array_cols

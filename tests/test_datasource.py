@@ -130,6 +130,59 @@ def test_bare_scan_takes_settings_as_options(registered, duck_db):
         _scan(registered, duck_db, pg_pages_per_tsk="5")
 
 
+def test_binary_copy_option_fails_the_load(registered, duck_db):
+    """A scan always reads COPY binary, so pg_use_binary_copy is not a
+    scan option: the load fails and says why."""
+    with pytest.raises(Exception, match="always reads and writes COPY"):
+        _scan(registered, duck_db, pg_use_binary_copy="false")
+
+
+def test_session_binary_copy_setting_keeps_catalog_reads(registered,
+                                                         duck_db):
+    """The driver-only setting stays on the driver: after a session SET,
+    Catalog.table passes no pg_use_binary_copy option and still
+    reads."""
+    from postgres_scanner_spark.catalog import Catalog
+    from postgres_scanner_spark.settings import SETTINGS
+    cat = Catalog(registered)
+    cat.attach(f"duckdb://{duck_db}", alias="bincopy")
+    SETTINGS.set("pg_use_binary_copy", False)
+    try:
+        assert SETTINGS.scan_options() == {}
+        assert cat.table("bincopy", "items").count() == 10000
+    finally:
+        SETTINGS.reset()
+        cat.detach("bincopy")
+
+
+def test_array_as_varchar_rejected_by_duckdb_standin(registered, tmp_path):
+    """The duckdb:// stand-in has no Postgres array text form: under
+    pg_array_as_varchar a table with an array column fails its schema
+    probe, naming the stand-in, instead of typing the column array<…>
+    as live Postgres would not. A table without arrays reads as
+    before."""
+    from pyspark.sql import types as T
+    db = str(tmp_path / "arr.db")
+    con = duckdb.connect(db)
+    con.execute("CREATE TABLE a AS SELECT 1 AS id, [1, 2] AS xs")
+    con.execute("CREATE TABLE b AS SELECT 1 AS id, 'x' AS s")
+    con.close()
+
+    def load(table, **opts):
+        r = (registered.read.format("postgres_scan")
+             .option("dsn", f"duckdb://{db}").option("table", table))
+        for k, v in opts.items():
+            r = r.option(k, v)
+        return r.load()
+
+    assert load("a").schema["xs"].dataType == \
+        T.ArrayType(T.IntegerType(), True)
+    with pytest.raises(Exception, match=r"duckdb:// stand-in.*\['xs'\]"):
+        load("a", pg_array_as_varchar="true")
+    assert [tuple(r) for r in
+            load("b", pg_array_as_varchar="true").collect()] == [(1, "x")]
+
+
 def test_pushdown_option_leaves_filter_to_spark(registered, duck_db):
     """pg_experimental_filter_pushdown=false keeps a Filter above the
     BatchScan; by default the DataSource takes the filter and Spark
@@ -282,6 +335,7 @@ def test_geometry_columns_decode_by_udt_not_spark_type():
     from postgres_scanner_spark import types as pgt
     from postgres_scanner_spark.pg_datasource import PostgresScanReader
     from postgres_scanner_spark.pgwire import BinaryCopyReader
+    from postgres_scanner_spark.types import wire_layout
 
     schema = T.StructType([
         T.StructField("id", T.LongType()),
@@ -300,8 +354,8 @@ def test_geometry_columns_decode_by_udt_not_spark_type():
     assert r._col_cast(schema["b"]) == ""
     assert r._col_cast(schema["fs"]) == "::float8[]"
     # the OID/array-col derivation _read_live_pg performs
-    oids, array_cols = r._wire_layout()
-    assert oids == [pgt.INT8OID, pgt.POINTOID, pgt.BOXOID, pgt.TEXTOID]
+    oids, _, _, array_cols = wire_layout(schema, udts)
+    assert oids == [pgt.INT8OID, pgt.POINTOID, pgt.BOXOID, 0]
     assert array_cols == {3}
     # and the wire decode of a full row in those native formats
     from tests.test_pgwire import _field, _header, TRAILER
@@ -516,15 +570,17 @@ def test_write_live_pg_with_mocked_psycopg(monkeypatch):
     schema, matching the duckdb backend) before any COPY, inside the
     same transaction: binary COPY maps columns positionally, so a
     surviving table with different column order/types would load
-    mis-mapped rows."""
+    mis-mapped rows. Whether the existing definition matches is the
+    server's answer to the probe (its live twins are in
+    test_live_pg.py)."""
     import io
     import sys
     import types as pytypes
     from decimal import Decimal
     from pyspark.sql import types as T
-    from postgres_scanner_spark.copyio import _pg_binary_layout
     from postgres_scanner_spark.pg_datasource import PostgresScanWriter
     from postgres_scanner_spark.pgwire import BinaryCopyReader
+    from postgres_scanner_spark.types import wire_layout
 
     executed, copied, committed = [], [], []
 
@@ -540,11 +596,11 @@ def test_write_live_pg_with_mocked_psycopg(monkeypatch):
             return False
 
     class _Cursor:
-        existing_def: list = []
+        same_columns = None     # the server's answer to the match probe
         def execute(self, sql, params=None):
             executed.append(sql)
-        def fetchall(self):
-            return list(_Cursor.existing_def)
+        def fetchone(self):
+            return (_Cursor.same_columns,)
         def copy(self, sql):
             return _Copy(sql)
         def __enter__(self):
@@ -579,11 +635,15 @@ def test_write_live_pg_with_mocked_psycopg(monkeypatch):
             w.write(iter([(3, None, None)]))]
     assert [m.n_rows for m in msgs] == [2, 1]
     w.commit(msgs)
-    create_sql = ('CREATE TABLE IF NOT EXISTS "public"."t" '
-                  '("id" INTEGER, "price" NUMERIC(10,2), '
-                  '"tags" INTEGER[])')
-    assert executed[0].startswith("SELECT column_name, udt_name")
-    assert executed[1:] == [
+    cols = '("id" int4, "price" numeric(10,2), "tags" int4[])'
+    create_sql = f'CREATE TABLE IF NOT EXISTS "public"."t" {cols}'
+    # the wanted definition goes to the server as a temp table, which
+    # the probe compares with the target
+    assert executed[0] == ("CREATE TEMP TABLE pg_temp._pg_spark_want "
+                           f"{cols} ON COMMIT DROP")
+    assert executed[1].startswith("SELECT (SELECT array_agg((attname, "
+                                  "format_type(atttypid, atttypmod))")
+    assert executed[2:] == [
         'DROP TABLE IF EXISTS "public"."t"',
         create_sql,
     ]
@@ -591,28 +651,23 @@ def test_write_live_pg_with_mocked_psycopg(monkeypatch):
     # overwrite onto a MATCHING existing definition TRUNCATEs instead
     # of DROP+CREATE — indexes/grants/views on the target survive
     executed.clear()
-    _Cursor.existing_def = [
-        ("id", "int4", None, 32, 0, None),    # intrinsic width,
-        ("price", "numeric", None, 10, 2, None),   # NOT an int4 typmod
-        ("tags", "_int4", None, None, None, None)]
+    _Cursor.same_columns = True
     msgs2 = [w.write(iter([(9, None, None)]))]
     w.commit(msgs2)
-    assert executed[1:] == ['TRUNCATE TABLE "public"."t"', create_sql]
+    assert executed[2:] == ['TRUNCATE TABLE "public"."t"', create_sql]
     # same base types but a DIFFERENT typmod (numeric scale) must
     # NOT truncate: the surviving column would silently round values
+    # (the server's judgement: test_live_overwrite_numeric_scale_drops)
     executed.clear()
-    _Cursor.existing_def = [
-        ("id", "int4", None, 32, 0, None),
-        ("price", "numeric", None, 12, 6, None),
-        ("tags", "_int4", None, None, None, None)]
+    _Cursor.same_columns = False
     w.commit([w.write(iter([(7, None, None)]))])
-    assert executed[1] == 'DROP TABLE IF EXISTS "public"."t"'
+    assert executed[2] == 'DROP TABLE IF EXISTS "public"."t"'
     copied.pop()
-    _Cursor.existing_def = []
+    _Cursor.same_columns = None
     assert [sql for sql, _ in copied] == [
         'COPY "public"."t" FROM STDIN (FORMAT binary)'] * 3
     copied.pop()            # the truncate-path batch; decode the rest
-    oids, _, _, array_cols = _pg_binary_layout(schema)
+    oids, _, _, array_cols = wire_layout(schema)
     decoded = [r for _, b in copied
                for r in BinaryCopyReader(oids, array_cols)
                .read(io.BytesIO(b))]
@@ -633,9 +688,9 @@ def test_writer_row_iterator_matches_scalar_codec():
     from datetime import date, datetime, timezone
     from decimal import Decimal
     from pyspark.sql import types as T
-    from postgres_scanner_spark.copyio import _pg_binary_layout
     from postgres_scanner_spark.pg_datasource import PostgresScanWriter
     from postgres_scanner_spark.pgwire import BinaryCopyWriter
+    from postgres_scanner_spark.types import wire_layout
 
     schema = T.StructType([T.StructField(n, t) for n, t in [
         ("b", T.BooleanType()), ("s", T.ShortType()),
@@ -659,7 +714,7 @@ def test_writer_row_iterator_matches_scalar_codec():
     w = PostgresScanWriter(schema, {"dsn": "duckdb://x", "table": "t"},
                            overwrite=False)
     msg = w.write(iter(rows))
-    oids, array_elem, array_ndims, _ = _pg_binary_layout(schema)
+    oids, array_elem, array_ndims, _ = wire_layout(schema)
     want = io.BytesIO()
     BinaryCopyWriter(oids, array_elem, array_ndims).write(want, rows)
     with open(msg.path, "rb") as fh:

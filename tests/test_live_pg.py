@@ -210,14 +210,16 @@ def test_live_attach_types_scan(registered, pg, pg_server):
     # server's CopyData messages, is Arrow-identical to the scalar
     # reader + PySpark's converters on every type family above
     from postgres_scanner_spark.pg_datasource import PostgresScanReader
+    from postgres_scanner_spark.types import wire_layout
     from tests.test_pgwire import _oracle, assert_arrow_identical
     reader = PostgresScanReader(df.schema, {"dsn": pg_server,
                                             "table": "all_types"})
     sql = reader._sql("")
     with cur.copy(f"COPY ({sql}) TO STDOUT (FORMAT binary)") as cp:
         data = b"".join(cp)
+    oids, _, _, array_cols = wire_layout(df.schema)
     assert_arrow_identical(reader._read_live_pg(sql), _oracle(
-        *reader._wire_layout(), df.schema, data))
+        oids, array_cols, df.schema, data))
 
 
 @pytest.mark.slow
@@ -418,7 +420,6 @@ def test_live_session_settings_reach_attached_scans(registered, pg,
 
 
 # -------------------------------------- binary COPY write (S7/S26)
-@pytest.mark.slow
 def test_live_binary_copy_write_roundtrip(registered, pg, pg_server):
     """reference: test/sql/misc/postgres_binary.test — Spark DF →
     COPY FROM STDIN (FORMAT binary) → read back through the scan."""
@@ -459,7 +460,6 @@ def test_live_binary_copy_write_roundtrip(registered, pg, pg_server):
     assert _scan(spark, pg_server, "bin_rt").count() == 3
 
 
-@pytest.mark.slow
 def test_live_overwrite_truncate_preserves_index(registered, pg,
                                                  pg_server):
     """Overwrite with an identical column layout TRUNCATEs (indexes
@@ -486,7 +486,6 @@ def test_live_overwrite_truncate_preserves_index(registered, pg,
     assert cur.fetchall() == []                            # DROP path
 
 
-@pytest.mark.slow
 def test_live_overwrite_datetime_typmod_drops(registered, pg,
                                               pg_server):
     """A surviving timestamp(0) column must NOT 'match' an incoming
@@ -518,6 +517,169 @@ def test_live_overwrite_datetime_typmod_drops(registered, pg,
     cur.execute(
         "SELECT indexname FROM pg_indexes WHERE tablename = 'dt_t'")
     assert [r[0] for r in cur.fetchall()] == ["dt_idx2"]  # TRUNCATE
+
+
+def _write(df, dsn, table, mode="overwrite", **opts):
+    w = (df.write.format("postgres_scan").option("dsn", dsn)
+         .option("table", table).mode(mode))
+    for k, v in opts.items():
+        w = w.option(k, v)
+    w.save()
+
+
+def _indexes(cur, table):
+    cur.execute("SELECT indexname FROM pg_indexes WHERE tablename = %s",
+                (table,))
+    return [r[0] for r in cur.fetchall()]
+
+
+def _column_type(cur, table, column):
+    cur.execute("SELECT format_type(atttypid, atttypmod) FROM pg_attribute "
+                "WHERE attrelid = %s::regclass AND attname = %s",
+                (table, column))
+    return cur.fetchone()[0]
+
+
+def test_live_interval_write_roundtrip(registered, pg, pg_server):
+    """A DayTimeIntervalType column is written as interval — the type
+    its wire bytes are — and reads back unchanged, arrays included."""
+    from datetime import timedelta
+    spark = registered
+    schema = T.StructType([
+        T.StructField("id", T.IntegerType()),
+        T.StructField("iv", T.DayTimeIntervalType()),
+        T.StructField("ivs", T.ArrayType(T.DayTimeIntervalType()))])
+    rows = [(1, timedelta(days=2, seconds=3, microseconds=4),
+             [timedelta(hours=-5), None]),
+            (2, timedelta(microseconds=-1), []),
+            (3, None, None)]
+    _write(spark.createDataFrame(rows, schema), pg_server, "iv_t")
+    cur = pg.cursor()
+    assert _column_type(cur, "iv_t", "iv") == "interval"
+    assert _column_type(cur, "iv_t", "ivs") == "interval[]"
+    back = _scan(spark, pg_server, "iv_t")
+    assert back.schema == schema
+    assert [tuple(r) for r in back.orderBy("id").collect()] == rows
+
+
+def test_live_overwrite_qualified_udt_override_truncates(registered, pg,
+                                                         pg_server):
+    """column_types={"m": "public.mood"} onto a table whose m column is
+    that enum matches it: the overwrite TRUNCATEs and the index
+    survives."""
+    spark = registered
+    cur = pg.cursor()
+    cur.execute("DROP TABLE IF EXISTS mood_t")
+    cur.execute("DROP TYPE IF EXISTS mood")
+    cur.execute("CREATE TYPE mood AS ENUM ('sad', 'ok', 'happy')")
+    cur.execute('CREATE TABLE mood_t ("id" int4, "m" mood)')
+    cur.execute("CREATE INDEX mood_idx ON mood_t (id)")
+    schema = T.StructType([T.StructField("id", T.IntegerType()),
+                           T.StructField("m", T.StringType())])
+    _write(spark.createDataFrame([(1, "happy"), (2, None)], schema),
+           pg_server, "mood_t", column_types='{"m": "public.mood"}')
+    assert _indexes(cur, "mood_t") == ["mood_idx"]
+    cur.execute("SELECT id, m::text FROM mood_t ORDER BY id")
+    assert cur.fetchall() == [(1, "happy"), (2, None)]
+
+
+def test_live_overwrite_numeric_array_typmod_drops(registered, pg,
+                                                   pg_server):
+    """A numeric(4,2)[] column does not match a numeric(12,6)[]
+    override, although information_schema shows neither typmod: the
+    overwrite DROPs and re-CREATEs, and values that would overflow
+    (or round in) the old column load intact."""
+    from decimal import Decimal
+    spark = registered
+    cur = pg.cursor()
+    cur.execute("DROP TABLE IF EXISTS na_t")
+    cur.execute('CREATE TABLE na_t ("id" int4, "v" numeric(4,2)[])')
+    cur.execute("CREATE INDEX na_idx ON na_t (id)")
+    schema = T.StructType([
+        T.StructField("id", T.IntegerType()),
+        T.StructField("v", T.ArrayType(T.DecimalType(12, 6)))])
+    vals = [Decimal("123456.123456"), Decimal("0.000001")]
+    _write(spark.createDataFrame([(1, vals)], schema), pg_server, "na_t",
+           column_types='{"v": "numeric(12,6)[]"}')
+    assert _indexes(cur, "na_t") == []              # DROP path
+    assert _column_type(cur, "na_t", "v") == "numeric(12,6)[]"
+    cur.execute("SELECT v FROM na_t")
+    assert cur.fetchone()[0] == vals
+
+
+def test_live_overwrite_numeric_scale_drops(registered, pg, pg_server):
+    """Same base types with a different numeric scale do not match
+    (the server-side twin of the mocked writer test's case): the
+    overwrite DROPs; the same write again TRUNCATEs."""
+    from decimal import Decimal
+    spark = registered
+    cur = pg.cursor()
+    cur.execute("DROP TABLE IF EXISTS ns_t")
+    cur.execute('CREATE TABLE ns_t ("id" int4, "price" numeric(12,6), '
+                '"tags" int4[])')
+    cur.execute("CREATE INDEX ns_idx ON ns_t (id)")
+    schema = T.StructType([
+        T.StructField("id", T.IntegerType()),
+        T.StructField("price", T.DecimalType(10, 2)),
+        T.StructField("tags", T.ArrayType(T.IntegerType()))])
+    df = spark.createDataFrame([(1, Decimal("10.25"), [1, 2])], schema)
+    _write(df, pg_server, "ns_t")
+    assert _indexes(cur, "ns_t") == []
+    assert _column_type(cur, "ns_t", "price") == "numeric(10,2)"
+    cur.execute("CREATE INDEX ns_idx2 ON ns_t (id)")
+    _write(df, pg_server, "ns_t")
+    assert _indexes(cur, "ns_t") == ["ns_idx2"]
+    assert _scan(spark, pg_server, "ns_t").collect()[0].price == \
+        Decimal("10.25")
+
+
+def test_live_column_types_typmod_then_words(registered, pg, pg_server):
+    """An override spelled with words after its typmod creates that
+    type, and a second overwrite with it matches (TRUNCATE)."""
+    from datetime import datetime, timezone
+    spark = registered
+    schema = T.StructType([T.StructField("id", T.IntegerType()),
+                           T.StructField("ts", T.TimestampType())])
+    df = spark.createDataFrame(
+        [(1, datetime(2024, 1, 1, 0, 0, 0, 123456, tzinfo=timezone.utc))],
+        schema)
+    opts = {"column_types": '{"ts": "timestamp(3) with time zone"}'}
+    _write(df, pg_server, "tw_t", **opts)
+    cur = pg.cursor()
+    assert _column_type(cur, "tw_t", "ts") == "timestamp(3) with time zone"
+    cur.execute("CREATE INDEX tw_idx ON tw_t (id)")
+    _write(df, pg_server, "tw_t", **opts)
+    assert _indexes(cur, "tw_t") == ["tw_idx"]
+
+
+def test_live_spark_type_table_matches_server(registered, pg, pg_server):
+    """Every entry of the Spark→Postgres table names, on the server,
+    the type whose OID it sends; and a table created from the derived
+    DDL types back to the same Spark types through the schema probe
+    (ByteType widens to smallint's ShortType)."""
+    from postgres_scanner_spark.types import (
+        SPARK_TO_OID, spark_field_oid, spark_type_to_pg,
+    )
+    cur = pg.cursor()
+    spark_types = [T.DecimalType(10, 2) if cls is T.DecimalType else cls()
+                   for cls in SPARK_TO_OID]
+    for dt in spark_types:
+        cur.execute("SELECT %s::regtype::oid", (spark_type_to_pg(dt),))
+        assert cur.fetchone()[0] == spark_field_oid(dt), dt
+        arr = T.ArrayType(dt)
+        cur.execute("SELECT typelem FROM pg_type WHERE oid = %s::regtype",
+                    (spark_type_to_pg(arr),))
+        assert cur.fetchone()[0] == spark_field_oid(dt), arr
+    spark_types += [T.ArrayType(T.StringType()),
+                    T.ArrayType(T.ArrayType(T.IntegerType()))]
+    cur.execute("DROP TABLE IF EXISTS types_t")
+    cur.execute("CREATE TABLE types_t (" + ", ".join(
+        f'"c{i}" {spark_type_to_pg(dt)}'
+        for i, dt in enumerate(spark_types)) + ")")
+    got = _scan(registered, pg_server, "types_t").schema
+    widened = {T.ByteType(): T.ShortType()}
+    assert [f.dataType for f in got.fields] == \
+        [widened.get(dt, dt) for dt in spark_types]
 
 
 # --------------------------------------- streaming source (S29/S30)

@@ -290,8 +290,128 @@ def test_scan_modules_never_read_session_settings():
 
 
 def test_inverse_type_map():
-    assert spark_type_to_pg(T.DecimalType(12, 2)) == "NUMERIC(12,2)"
-    assert spark_type_to_pg(T.ArrayType(T.LongType())) == "BIGINT[]"
+    assert spark_type_to_pg(T.DecimalType(12, 2)) == "numeric(12,2)"
+    assert spark_type_to_pg(T.ArrayType(T.LongType())) == "int8[]"
+
+
+def test_binary_copy_setting_is_driver_only():
+    """pg_use_binary_copy picks copy_to/copy_from's default format and
+    nothing a scan does: as a scan option it fails, naming the reason,
+    and scan_options never forwards the session's value."""
+    with pytest.raises(ValueError, match="pg_use_binary_copy.*COPY binary"):
+        Settings.from_options({"pg_use_binary_copy": "false"})
+    s = Settings()
+    s.pg_use_binary_copy, s.pg_use_ctid_scan = False, False
+    assert s.scan_options() == {"pg_use_ctid_scan": "false"}
+    assert Settings.from_options(s.scan_options()).pg_use_ctid_scan is False
+
+
+def test_column_types_accept_typmod_then_words(monkeypatch):
+    """A column_types override may carry words after its typmod, as
+    Postgres spells them (timestamp(3) with time zone); anything that
+    could splice a second column or statement still raises before
+    any connection."""
+    import json
+    import sys
+    import types as pytypes
+    from postgres_scanner_spark.pg_datasource import PostgresScanWriter
+
+    class _Reached(Exception):
+        pass
+
+    def connect(dsn):
+        raise _Reached
+
+    fake = pytypes.ModuleType("psycopg")
+    fake.connect = connect
+    monkeypatch.setitem(sys.modules, "psycopg", fake)
+    schema = T.StructType([T.StructField("c", T.StringType())])
+
+    def commit(ctype):
+        PostgresScanWriter(
+            schema, {"dsn": "host=fake dbname=db", "table": "t",
+                     "column_types": json.dumps({"c": ctype})},
+            overwrite=True)._commit_live_pg([])
+
+    for ok in ("timestamp(3) with time zone", "numeric(12,6)[]",
+               "public.mood", "bit varying(5)", "time(0) without time zone"):
+        with pytest.raises(_Reached):
+            commit(ok)
+    for bad in ("t; DROP TABLE x", "int4, x int4", "numeric(4,2), x int4",
+                'public."mood"', "timestamp(3) with time zone; x"):
+        with pytest.raises(ValueError, match="plain type name"):
+            commit(bad)
+
+
+# Spark type classes, for the guard below
+_SPARK_TYPES = {n for n in dir(T) if n.endswith("Type")
+                and isinstance(getattr(T, n), type)
+                and issubclass(getattr(T, n), T.DataType)}
+
+
+def _spark_to_pg_maps(source: str) -> list[str]:
+    """Where `source` maps Spark types to Postgres names or OIDs: a
+    dict keyed by Spark types, or an isinstance test on a Spark type
+    whose branch returns a type name or an OID. DuckDB's own dialect
+    map (`_duck_sql_type`, ROADMAP item 9) is not a Postgres one."""
+    import ast
+
+    def spark_ref(node):
+        return any(isinstance(n, ast.Attribute) and n.attr in _SPARK_TYPES
+                   or isinstance(n, ast.Name) and n.id in _SPARK_TYPES
+                   for n in ast.walk(node))
+
+    def names_type(ret):
+        v = ret.value
+        return (isinstance(v, ast.Constant) and isinstance(v.value, str)
+                and v.value.strip() != "" or isinstance(v, ast.JoinedStr)
+                or any(isinstance(n, (ast.Name, ast.Attribute))
+                       and (getattr(n, "id", None)
+                            or getattr(n, "attr", "")).endswith("OID")
+                       for n in ast.walk(v)))
+
+    found = []
+
+    def visit(node, scope):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scope = node.name
+            if scope == "_duck_sql_type":
+                return
+        if isinstance(node, ast.Dict) and any(
+                k is not None and spark_ref(k) for k in node.keys):
+            found.append(scope)
+        if isinstance(node, ast.If) and any(
+                isinstance(c, ast.Call) and getattr(c.func, "id", "")
+                == "isinstance" and spark_ref(c) for c in ast.walk(node.test)
+        ) and any(isinstance(r, ast.Return) and r.value is not None
+                  and names_type(r)
+                  for b in node.body for r in ast.walk(b)):
+            found.append(scope)
+        for child in ast.iter_child_nodes(node):
+            visit(child, scope)
+
+    visit(ast.parse(source), "<module>")
+    return found
+
+
+def test_spark_to_pg_type_decision_lives_in_types():
+    """One Spark→Postgres type table (types.SPARK_TO_OID): the scan,
+    writer and codec modules derive casts, DDL and wire OIDs from it
+    and hold no map of their own, so the decision cannot fork."""
+    from pathlib import Path
+    pkg = Path(__file__).resolve().parents[1] / "postgres_scanner_spark"
+    # the detector sees both shapes of such a map, and the real table
+    assert _spark_to_pg_maps(
+        "M = {T.LongType(): 'BIGINT'}\n"
+        "def f(dt):\n"
+        "    if isinstance(dt, T.LongType):\n"
+        "        return pgt.INT8OID\n"
+        "def g(dt):\n"
+        "    if isinstance(dt, (T.DateType, T.ByteType)):\n"
+        "        return f'DATE'\n") == ["<module>", "f", "g"]
+    assert "<module>" in _spark_to_pg_maps((pkg / "types.py").read_text())
+    for mod in ("pg_datasource.py", "copyio.py", "pgwire.py"):
+        assert _spark_to_pg_maps((pkg / mod).read_text()) == [], mod
 
 
 def test_filter_pushdown_setting_gates_remote_where():
