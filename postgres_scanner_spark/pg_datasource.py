@@ -26,28 +26,31 @@ Parity with the reference's execution strategy:
   .VectorBinaryCopyReader — the reference's postgres_binary_reader
   .hpp decodes into DuckDB vectors the same way); Python touches a
   value only in the columns whose wire type has no numpy kernel
-  (numeric, interval, arrays, geometry…). duckdb:// yields DuckDB's
-  own Arrow batches.
+  (numeric, interval, arrays, geometry…). The duckdb:// stand-in
+  yields DuckDB's own Arrow batches.
 - streaming (`spark.readStream.format("postgres_scan")`): the same
   read() serves each micro-batch's stream-key slices
   (PostgresScanPartitionedStreamReader), so every row, batch or
   streamed, takes the one COPY-binary → Arrow path.
 
 Backends:
-- `duckdb:///path/file.db` — a local DuckDB file standing in for the
-  Postgres server. Page ranges are emulated over rowid so task
-  decomposition is exercised for real.
 - libpq DSNs (`host=... dbname=...`) — a real PostgreSQL server over
   psycopg when installed, else the vendored pure-Python wire client
-  (pgclient.py). Exercised end-to-end against a live server in
-  tests/test_live_pg.py.
+  (pgclient.py). Every Postgres behaviour (types, ctid tasks,
+  pushdown, writes) is tested against a live server the test suite
+  starts (tests/conftest.py `pg_server`).
+- `duckdb:///path/file.db` — a local DuckDB file standing in for the
+  server where none is needed: the registry's e16 stream, the
+  catalog's `duckdb://` attach and `pg_query` on it. The stand-in is
+  read-only and plans one task; it reads the plain types
+  (`_DUCK_TO_SPARK`, DECIMAL(p,s) and arrays of them) and its schema
+  probe raises on any other column type.
 """
 
 from __future__ import annotations
 
 import itertools
 import logging
-from functools import partial
 from typing import Iterator
 
 from pyspark.sql import types as T
@@ -62,9 +65,10 @@ from .pushdown import transform_filters
 from .scan import plan_scan_tasks
 from .settings import Settings
 
-_ROWS_PER_PAGE = 128  # rowid-page emulation for the duckdb backend
 _log = logging.getLogger(__name__)
 
+# The scalars the duckdb:// stand-in reads (with DECIMAL(p,s) and
+# arrays of them): DuckDB hands them to Spark's Arrow ingest as they are
 _DUCK_TO_SPARK = {
     "BOOLEAN": T.BooleanType(), "TINYINT": T.ByteType(),
     "SMALLINT": T.ShortType(), "INTEGER": T.IntegerType(),
@@ -73,165 +77,23 @@ _DUCK_TO_SPARK = {
     "VARCHAR": T.StringType(), "BLOB": T.BinaryType(),
     "DATE": T.DateType(), "TIMESTAMP": T.TimestampNTZType(),
     "TIMESTAMP WITH TIME ZONE": T.TimestampType(),
-    "INTERVAL": T.DayTimeIntervalType(),
-    # unsigned family: widen to the next signed type that holds the
-    # full range (ubigint → decimal(20,0), PG's own numeric mapping —
-    # reference: attach_ubigint.test); the reader normalizes the
-    # arrow batches, whose unsigned ints Spark's ingest rejects
-    "UTINYINT": T.ShortType(), "USMALLINT": T.IntegerType(),
-    "UINTEGER": T.LongType(), "UBIGINT": T.DecimalType(20, 0),
-    # time-of-day: Spark has no TIME type — text form, the same
-    # fallback types.py uses for PG time/timetz (attach_types_time
-    # .test); the reader casts the arrow time64 batches to utf8
-    "TIME": T.StringType(), "TIME WITH TIME ZONE": T.StringType(),
 }
 
 
-def _arrow_norm_type(t):
-    """Target arrow type for Spark's ingest, recursively: Spark
-    rejects dictionary (duckdb enums), month_day_nano interval,
-    unsigned ints, and time64 — map them to the types the declared
-    Spark schema promises (varchar / duration / widened signed /
-    text), through lists and structs."""
-    import pyarrow as pa
-    if pa.types.is_dictionary(t):
-        return _arrow_norm_type(t.value_type)
-    if pa.types.is_interval(t):
-        return pa.duration("us")
-    if pa.types.is_unsigned_integer(t):
-        return {pa.uint8(): pa.int16(), pa.uint16(): pa.int32(),
-                pa.uint32(): pa.int64(),
-                pa.uint64(): pa.decimal128(20, 0)}[t]
-    if pa.types.is_time(t):
-        return pa.string()
-    if pa.types.is_list(t):
-        return pa.list_(_arrow_norm_type(t.value_type))
-    if pa.types.is_large_list(t):
-        return pa.large_list(_arrow_norm_type(t.value_type))
-    if pa.types.is_struct(t):
-        return pa.struct([(f.name, _arrow_norm_type(f.type))
-                          for f in t])
-    return t
-
-
-def _contains_interval(t) -> bool:
-    import pyarrow as pa
-    if pa.types.is_interval(t):
-        return True
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        return _contains_interval(t.value_type)
-    if pa.types.is_struct(t):
-        return any(_contains_interval(f.type) for f in t)
-    return False
-
-
-def _iv_us(v) -> int:
-    # months at PG's 30-day justify convention (interval.test)
-    return ((v.months * 30 + v.days) * 86_400_000_000
-            + v.nanoseconds // 1000)
-
-
-def _py_norm(v, t):
-    """Python-level conversion for interval-bearing values (arrow has
-    no month_day_nano→duration cast kernel); other leaves pass
-    through for pa.array to coerce to the target type."""
-    import pyarrow as pa
-    if v is None:
-        return None
-    if pa.types.is_interval(t):
-        return _iv_us(v)
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        return [_py_norm(x, t.value_type) for x in v]
-    if pa.types.is_struct(t):
-        return {f.name: _py_norm(v.get(f.name), f.type) for f in t}
-    if pa.types.is_time(t):
-        # match arrow's time64→utf8 cast format (micros always shown)
-        return v.strftime("%H:%M:%S.%f")
-    return v
-
-
-def _normalize_batch(batch):
-    """Rewrite an arrow batch so every column type is one Spark's
-    Arrow ingest accepts (enum dictionaries decoded, intervals →
-    duration, unsigned widened, time → text — recursively through
-    lists/structs)."""
-    import pyarrow as pa
-    if all(_arrow_norm_type(f.type) == f.type for f in batch.schema):
-        return batch
-    cols = []
-    for c in batch.columns:
-        if pa.types.is_dictionary(c.type):
-            c = c.dictionary_decode()
-        nt = _arrow_norm_type(c.type)
-        if nt != c.type:
-            if _contains_interval(c.type):
-                # no cast kernel for month_day_nano: python rebuild
-                c = pa.array([_py_norm(v, c.type)
-                              for v in c.to_pylist()], nt)
-            else:
-                c = c.cast(nt)
-        cols.append(c)
-    return pa.RecordBatch.from_arrays(cols, names=batch.schema.names)
-
-
-def _split_top(s: str) -> list[str]:
-    """Split on top-level commas, respecting parens and double quotes."""
-    parts, depth, cur, inq = [], 0, [], False
-    for ch in s:
-        if ch == '"':
-            inq = not inq
-        elif not inq:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                parts.append("".join(cur).strip())
-                cur = []
-                continue
-        cur.append(ch)
-    tail = "".join(cur).strip()
-    if tail:
-        parts.append(tail)
-    return parts
-
-
-def _duck_type(name: str) -> T.DataType:
-    """DuckDB type string → Spark DataType, recursively: scalars,
-    DECIMAL(p,s), N-dim arrays (`INTEGER[][]` → nested lists), STRUCT
-    (PG composite types surface as DuckDB STRUCTs — reference:
-    postgres_utils.cpp TypeToLogicalType composite/array handling,
-    attach_types_struct.test, attach_existing_multidimensional_array
-    .test), and MAP."""
-    s = name.strip()
-    up = s.upper()
-    if up.endswith("[]"):
-        return T.ArrayType(_duck_type(s[:-2]))
-    if up.startswith("DECIMAL"):
-        p, sc = s[s.index("(") + 1:s.index(")")].split(",")
+def _duck_type(column: str, name: str) -> T.DataType:
+    """The Spark type of a stand-in column of DuckDB type `name`; any
+    type outside the plain set raises, naming the column."""
+    if name.endswith("[]"):
+        return T.ArrayType(_duck_type(column, name[:-2]))
+    if name.startswith("DECIMAL("):
+        p, sc = name[len("DECIMAL("):-1].split(",")
         return T.DecimalType(int(p), int(sc))
-    if up.startswith("STRUCT(") and s.endswith(")"):
-        fields = []
-        for part in _split_top(s[len("STRUCT("):-1]):
-            if part.startswith('"'):
-                i = 1
-                while i < len(part):
-                    if part[i] == '"':
-                        if i + 1 < len(part) and part[i + 1] == '"':
-                            i += 2
-                            continue
-                        break
-                    i += 1
-                fname = part[1:i].replace('""', '"')
-                ftype = part[i + 1:].strip()
-            else:
-                fname, _, ftype = part.partition(" ")
-            fields.append(T.StructField(fname, _duck_type(ftype), True))
-        return T.StructType(fields)
-    if up.startswith("MAP(") and s.endswith(")"):
-        k, v = _split_top(s[len("MAP("):-1])
-        return T.MapType(_duck_type(k), _duck_type(v))
-    return _DUCK_TO_SPARK.get(up, T.StringType())
+    if name not in _DUCK_TO_SPARK:
+        raise ValueError(
+            f"the duckdb:// stand-in does not read column {column!r} of "
+            f"type {name}: it reads only plain types (use a Postgres "
+            f"server)")
+    return _DUCK_TO_SPARK[name]
 
 
 class _Task(InputPartition):
@@ -275,7 +137,7 @@ class PostgresScanReader(DataSourceReader):
         self.dsn = options.get("dsn", "")
         self.table = options.get("table", "")
         # ad-hoc passthrough (postgres_query): the remote engine runs
-        # this SQL; a query result has no ctid/rowid, so it reads as a
+        # this SQL; a query result has no ctid, so it reads as a
         # single stream (same as the reference's postgres_query)
         self.query = options.get("query", "")
         self.pg_schema = options.get("schema", "public")
@@ -324,33 +186,25 @@ class PostgresScanReader(DataSourceReader):
 
     # -- task decomposition (reference: postgres_scanner.cpp PrepareBind)
     def partitions(self):
+        if self.dsn.startswith("duckdb://"):
+            # the stand-in reads as one task
+            return [_Task(self.query or self._sql(""))]
         if self.query:
-            if self.dsn.startswith("duckdb://"):
-                return [_Task(self.query)]
-            # live PG: wrap so every output column is cast to the wire
-            # format the decoder expects (same as the table path)
+            # wrap so every output column is cast to the wire format
+            # the decoder expects (same as the table path)
             cols = ", ".join(
                 f'"{f.name}"{self._col_cast(f)} AS "{f.name}"'
                 for f in self.schema_.fields)
             return [_Task(f"SELECT {cols} FROM ({self.query}) AS q")]
-        if self.approx_pages <= 0 and \
-                not self.dsn.startswith("duckdb://"):
+        if self.approx_pages <= 0:
             self.approx_pages = self._probe_pages()
         s = self.settings
         tasks = plan_scan_tasks(self.approx_pages,
                                 pages_per_task=s.pg_pages_per_task,
                                 use_ctid_scan=s.pg_use_ctid_scan,
                                 max_tasks=s.pg_connection_limit)
-        if self.dsn.startswith("duckdb://"):
-            task_wheres = [""] if len(tasks) == 1 else [
-                f"rowid >= {t.page_min * _ROWS_PER_PAGE} AND "
-                f"rowid < {t.page_max * _ROWS_PER_PAGE}"
-                for t in tasks
-            ]
-        else:
-            task_wheres = [
-                t.predicate if len(tasks) > 1 else "" for t in tasks]
-        return [_Task(self._sql(w)) for w in task_wheres]
+        return [_Task(self._sql(t.predicate if len(tasks) > 1 else ""))
+                for t in tasks]
 
     def _probe_pages(self) -> int:
         """Live PG: exact heap page count via pg_relation_size — the
@@ -432,25 +286,10 @@ class PostgresScanReader(DataSourceReader):
         sql = partition.sql
         if self.dsn.startswith("duckdb://"):
             import duckdb
-            import pyarrow as pa
-            path = self.dsn[len("duckdb://"):]
-            con = duckdb.connect(path, read_only=True)
+            con = duckdb.connect(self.dsn[len("duckdb://"):],
+                                 read_only=True)
             try:
-                reader = con.execute(sql).fetch_record_batch(8192)
-                while True:
-                    try:
-                        batch = reader.read_next_batch()
-                    except StopIteration:
-                        break
-                    # arrow-normalize types Spark's ingest rejects —
-                    # enum dictionaries (→ declared varchar, the
-                    # reference's enum mapping: postgres_utils.cpp /
-                    # bug71.test), month_day_nano intervals
-                    # (→ duration, interval.test), unsigned ints
-                    # (→ widened signed, attach_ubigint.test), time64
-                    # (→ text, attach_types_time.test) — recursively
-                    # through lists and structs
-                    yield _normalize_batch(batch)
+                yield from con.execute(sql).fetch_record_batch(8192)
             finally:
                 # close even when the query errors or Spark abandons
                 # the generator (limit/take) — an open read_only handle
@@ -682,31 +521,59 @@ class PostgresScanWriter(DataSourceArrowWriter):
     Two-phase for Spark's exactly-once contract: each partition
     ENCODES its rows as a real PGCOPY binary stream into a spool file
     (executor-side, parallel — the expensive half), and commit()
-    loads every spool inside ONE transaction on ONE connection
-    (driver-side), so a failed job publishes nothing. Spools live on
-    the driver-shared filesystem here (local mode); on a cluster the
-    spool dir would be an object store — or, where per-partition
-    atomicity is acceptable, partitions would stream their COPY
-    directly, which is the reference's own (single-connection)
-    behavior.
+    replays every spool as `COPY "t" FROM STDIN (FORMAT binary)`
+    inside ONE transaction on ONE connection (driver-side), so a
+    failed job publishes nothing. Spools live on the driver-shared
+    filesystem here (local mode); on a cluster the spool dir would be
+    an object store — or, where per-partition atomicity is
+    acceptable, partitions would stream their COPY directly, which is
+    the reference's own (single-connection) behavior.
 
-    Backends match the reader: `duckdb://` loads the decoded batches
-    through an Arrow registration; libpq DSNs replay each spool as a
-    `COPY "t" FROM STDIN (FORMAT binary)` via psycopg.
+    The spool directory is made here, where Spark builds the writer,
+    and never by a task: once commit() or abort() has removed it, a
+    task still running fails to open its spool instead of leaving one
+    behind. The duckdb:// stand-in is read-only.
     """
 
-    def __init__(self, schema: T.StructType, options, overwrite: bool):
-        import uuid
+    def __init__(self, schema: T.StructType, options, overwrite: bool,
+                 spool: str | None = None):
+        import json
+        import re
+        import tempfile
         self.schema_ = schema
         self.options = dict(options)
         self.overwrite = overwrite
         self.dsn = self.options.get("dsn", "")
         self.table = self.options.get("table", "")
+        if self.dsn.startswith("duckdb://"):
+            raise ValueError(
+                "the duckdb:// stand-in is read-only: postgres_scan "
+                "writes go to a Postgres server")
         if not self.table:
             raise ValueError("postgres_scan write needs .option('table')")
         self.null_byte_replacement = Settings.from_options(
             self.options).pg_null_byte_replacement
-        self.spool = f"/tmp/pg_spark_write_{uuid.uuid4().hex[:12]}"
+        # column_types option: JSON {column: pg_type} overriding the
+        # default Spark→PG DDL type, so a varchar-in-Spark column can
+        # CREATE as its server-side UDT (enum/domain) — closing the
+        # enum-writes-back-as-VARCHAR gap (reference: bug71.test reads
+        # a UDT column; the scan side already types it via _udts)
+        self.overrides = json.loads(self.options.get("column_types", "{}"))
+        # a type name: word chars/spaces (TIMESTAMP WITH TIME ZONE),
+        # optional schema qualifier, optional (p[,s]) with NUMBERS
+        # only and words after it (timestamp(3) with time zone),
+        # optional [] suffixes — no quotes, no free commas, so a value
+        # cannot smuggle extra column definitions into the CREATE
+        # TABLE it is spliced into
+        type_re = (r"[A-Za-z_][\w ]*(?:\.[A-Za-z_][\w ]*)?"
+                   r"(?:\(\s*\d+(?:\s*,\s*\d+)?\s*\)"
+                   r"(?:\s+[A-Za-z_][\w ]*)?)?(?:\[\])*")
+        for cname, ctype in self.overrides.items():
+            if not re.fullmatch(type_re, ctype.strip()):
+                raise ValueError(
+                    f"column_types[{cname!r}] = {ctype!r} is not a "
+                    f"plain type name")
+        self.spool = spool or tempfile.mkdtemp(prefix="pg_spark_write_")
 
     def write(self, it: Iterator) -> _SpoolMsg:
         """Spool one partition as a PGCOPY binary stream. As a
@@ -722,7 +589,6 @@ class PostgresScanWriter(DataSourceArrowWriter):
         from .pgwire_vec import VectorBinaryCopyWriter
         from .types import wire_layout
         oids, array_elem, array_ndims, _ = wire_layout(self.schema_)
-        os.makedirs(self.spool, exist_ok=True)
         path = os.path.join(self.spool, f"{uuid.uuid4().hex}.pgcopy")
         it = iter(it)
         first = next(it, None)
@@ -736,86 +602,12 @@ class PostgresScanWriter(DataSourceArrowWriter):
         return _SpoolMsg(path, n)
 
     # -- driver-side transaction
-    def _decode_spool(self, message):
-        """One spool as an Arrow RecordBatchReader of the write
-        schema, decoded column-wise as it is consumed."""
-        import pyarrow as pa
-        from .pgwire_vec import VectorBinaryCopyReader
-        from .types import wire_layout
-        oids, _, _, array_cols = wire_layout(self.schema_)
-        reader = VectorBinaryCopyReader(oids, array_cols, self.schema_)
-
-        def batches():
-            with open(message.path, "rb") as fh:
-                yield from reader.read(iter(partial(fh.read, 1 << 20),
-                                            b""))
-        return pa.RecordBatchReader.from_batches(reader.schema, batches())
-
     def commit(self, messages) -> None:
-        import shutil
         messages = [m for m in messages if m is not None]
         try:
-            if self.dsn.startswith("duckdb://"):
-                self._commit_duckdb(messages)
-            else:
-                self._commit_live_pg(messages)
+            self._commit_live_pg(messages)
         finally:
-            shutil.rmtree(self.spool, ignore_errors=True)
-
-    @staticmethod
-    def _duck_sql_type(dt: T.DataType) -> str:
-        if isinstance(dt, T.ArrayType):
-            return PostgresScanWriter._duck_sql_type(dt.elementType) + "[]"
-        if isinstance(dt, T.DecimalType):
-            return f"DECIMAL({dt.precision},{dt.scale})"
-        return {
-            T.LongType(): "BIGINT", T.IntegerType(): "INTEGER",
-            T.ShortType(): "SMALLINT", T.ByteType(): "TINYINT",
-            T.DoubleType(): "DOUBLE", T.FloatType(): "FLOAT",
-            T.StringType(): "VARCHAR", T.BooleanType(): "BOOLEAN",
-            T.DateType(): "DATE", T.TimestampNTZType(): "TIMESTAMP",
-            T.TimestampType(): "TIMESTAMP WITH TIME ZONE",
-            T.BinaryType(): "BLOB",
-        }.get(dt, "VARCHAR")
-
-    def _commit_duckdb(self, messages) -> None:
-        import duckdb
-        fields = self.schema_.fields
-        # explicit column types + casted insert: the registered Arrow
-        # types (utc timestamps, nested lists) must not decide the
-        # table's declared types for every later reader
-        cols = ", ".join(
-            f'"{f.name}" {self._duck_sql_type(f.dataType)}'
-            for f in fields)
-        names = ", ".join(f'"{f.name}"' for f in fields)
-        casts = ", ".join(
-            f'CAST("{f.name}" AS {self._duck_sql_type(f.dataType)})'
-            for f in fields)
-        con = duckdb.connect(self.dsn[len("duckdb://"):])
-        try:
-            con.execute("BEGIN")
-            # overwrite REPLACES the table definition — a stale table
-            # with different column order/types must not survive and
-            # receive positionally-mismapped rows
-            if self.overwrite:
-                con.execute(f'DROP TABLE IF EXISTS "{self.table}"')
-            con.execute(
-                f'CREATE TABLE IF NOT EXISTS "{self.table}" ({cols})')
-            # one spool at a time inside the SAME transaction, streamed
-            # batch by batch: peak memory is one decoded batch
-            for m in messages:
-                con.register("_pg_spark_load", self._decode_spool(m))
-                # insert BY NAME so an existing table with a different
-                # column order maps correctly in append mode
-                con.execute(f'INSERT INTO "{self.table}" ({names}) '
-                            f"SELECT {casts} FROM _pg_spark_load")
-                con.unregister("_pg_spark_load")
-            con.execute("COMMIT")
-        except Exception:
-            con.execute("ROLLBACK")
-            raise
-        finally:
-            con.close()
+            self._drop_spools(messages)
 
     def _commit_live_pg(self, messages) -> None:
         from .pgclient import pg_driver
@@ -823,31 +615,9 @@ class PostgresScanWriter(DataSourceArrowWriter):
         psycopg = pg_driver()
         pg_schema = self.options.get("schema", "public")
         target = f'"{pg_schema}"."{self.table}"'
-        # column_types option: JSON {column: pg_type} overriding the
-        # default Spark→PG DDL type, so a varchar-in-Spark column can
-        # CREATE as its server-side UDT (enum/domain) — closing the
-        # enum-writes-back-as-VARCHAR gap (reference: bug71.test reads
-        # a UDT column; the scan side already types it via _udts)
-        import json
-        import re
-        overrides = json.loads(self.options.get("column_types", "{}"))
-        # a type name: word chars/spaces (TIMESTAMP WITH TIME ZONE),
-        # optional schema qualifier, optional (p[,s]) with NUMBERS
-        # only and words after it (timestamp(3) with time zone),
-        # optional [] suffixes — no quotes, no free commas, so a value
-        # cannot smuggle extra column definitions into the CREATE
-        # TABLE it is spliced into
-        type_re = (r"[A-Za-z_][\w ]*(?:\.[A-Za-z_][\w ]*)?"
-                   r"(?:\(\s*\d+(?:\s*,\s*\d+)?\s*\)"
-                   r"(?:\s+[A-Za-z_][\w ]*)?)?(?:\[\])*")
-        for cname, ctype in overrides.items():
-            if not re.fullmatch(type_re, ctype.strip()):
-                raise ValueError(
-                    f"column_types[{cname!r}] = {ctype!r} is not a "
-                    f"plain type name")
         cols = ", ".join(
             f'"{f.name}" '
-            f'{overrides.get(f.name, spark_type_to_pg(f.dataType))}'
+            f'{self.overrides.get(f.name, spark_type_to_pg(f.dataType))}'
             for f in self.schema_.fields)
         with psycopg.connect(self.dsn) as con, con.cursor() as cur:
             # overwrite: TRUNCATE when the existing definition already
@@ -884,8 +654,16 @@ class PostgresScanWriter(DataSourceArrowWriter):
             con.commit()
 
     def abort(self, messages) -> None:
+        self._drop_spools(messages)
+
+    def _drop_spools(self, messages) -> None:
+        """Remove this writer's spool directory and every directory
+        holding one of `messages`' spools."""
+        import os
         import shutil
-        shutil.rmtree(self.spool, ignore_errors=True)
+        for d in {self.spool} | {os.path.dirname(m.path)
+                                 for m in messages if m is not None}:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 from pyspark.sql.datasource import DataSourceStreamArrowWriter
@@ -896,21 +674,33 @@ class PostgresScanStreamWriter(DataSourceStreamArrowWriter):
     — each micro-batch lands through the same spool-then-commit
     PGCOPY protocol as the batch writer, one transaction per batch
     (exactly-once per micro-batch; the checkpoint makes batch replays
-    idempotent upstream). Pure delegation: ONE driver-minted spool
-    dir is shared by every task attempt (like the batch writer), so
-    commit/abort's cleanup also sweeps spools from failed attempts,
-    and `overwrite` (complete/truncate output modes pass True per
-    micro-batch) reaches the backend's drop-and-recreate path."""
+    idempotent upstream), and `overwrite` (complete/truncate output
+    modes pass True per micro-batch) reaches the drop-and-recreate
+    path.
+
+    Spark builds this writer once for the query's tasks and again for
+    each micro-batch's commit or abort, so the tasks' spool directory
+    is known to a commit only through the spools it names. Each
+    micro-batch's tasks make the directory and its commit or abort
+    removes it; a task that outlives an aborted micro-batch can still
+    leave its spool behind."""
 
     def __init__(self, schema: T.StructType, options, overwrite: bool):
+        import os
+        import tempfile
+        import uuid
+        spool = os.path.join(tempfile.gettempdir(),
+                             f"pg_spark_write_{uuid.uuid4().hex[:12]}")
         self._writer = PostgresScanWriter(schema, dict(options),
-                                          overwrite)
+                                          overwrite, spool)
 
     def write(self, iterator):
+        import os
+        os.makedirs(self._writer.spool, exist_ok=True)
         return self._writer.write(iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        self._writer.commit([m for m in messages if m is not None])
+        self._writer.commit(messages)
 
     def abort(self, messages, batchId: int) -> None:
         self._writer.abort(messages)
@@ -969,7 +759,7 @@ class PostgresScanDataSource(DataSource):
             finally:
                 con.close()
             schema = T.StructType([
-                T.StructField(n, _duck_type(t), True)
+                T.StructField(n, _duck_type(n, t), True)
                 for n, t, *_ in desc
             ])
             arrays = [f.name for f in schema.fields
@@ -982,7 +772,7 @@ class PostgresScanDataSource(DataSource):
             return schema
         from .pgclient import pg_driver
         psycopg = pg_driver()
-        from .types import pg_type_to_spark
+        from .types import numeric_typmod, pg_type_to_spark
         if query:
             # result-set probe: run the query LIMIT 0 server-side and
             # read the cursor's result descriptor — the reference does
@@ -1019,11 +809,15 @@ class PostgresScanDataSource(DataSource):
             # nested lists for ndim>1 frames and the declared schema
             # must match (reference: postgres_utils.cpp
             # TypeToLogicalType walks the same catalog dims;
-            # attach_existing_multidimensional_array.test)
+            # attach_existing_multidimensional_array.test). The typmod
+            # is the column's, its element's for an array and its
+            # base type's for a domain: it gives numeric(p,s)[] its
+            # precision, which information_schema reports only for
+            # scalars.
             cur.execute(
                 "SELECT c.column_name, c.data_type, c.udt_name, "
-                "c.numeric_precision, c.numeric_scale, "
-                "COALESCE(a.attndims, 1) "
+                "CASE WHEN t.typtype = 'd' THEN t.typtypmod "
+                "ELSE a.atttypmod END, COALESCE(a.attndims, 1) "
                 "FROM information_schema.columns c "
                 "JOIN pg_catalog.pg_class pc ON pc.relname = c.table_name "
                 "JOIN pg_catalog.pg_namespace pn "
@@ -1032,12 +826,15 @@ class PostgresScanDataSource(DataSource):
                 "JOIN pg_catalog.pg_attribute a "
                 "  ON a.attrelid = pc.oid "
                 " AND a.attname = c.column_name "
+                "JOIN pg_catalog.pg_type t ON t.oid = a.atttypid "
                 "WHERE c.table_schema = %s AND c.table_name = %s "
                 "ORDER BY c.ordinal_position", (pg_schema, table))
             fields = []
-            for name, dtyp, udt, prec, scale, ndims in cur.fetchall():
+            for name, dtyp, udt, typmod, ndims in cur.fetchall():
+                prec, scale = numeric_typmod(typmod)
                 if dtyp == "ARRAY":
                     dt = pg_type_to_spark(udt.lstrip("_"),
+                                          precision=prec, scale=scale,
                                           array_dims=max(ndims, 1),
                                           array_as_varchar=as_varchar)
                 else:

@@ -60,6 +60,7 @@ from datetime import date, datetime, time, timezone
 from decimal import Decimal
 
 from .connection import parse_dsn
+from .types import ARRAY_OID_TO_ELEM, NUMERICOID, numeric_typmod
 
 _U32 = struct.Struct("!I").unpack_from
 _log = logging.getLogger(__name__)
@@ -278,9 +279,8 @@ Column = namedtuple(
 
 def _column(name: str, oid: int, typmod: int) -> Column:
     prec = scale = None
-    if oid == 1700 and typmod >= 4:         # numeric typmod packing
-        prec = (typmod - 4) >> 16
-        scale = (typmod - 4) & 0xFFFF
+    if NUMERICOID in (oid, ARRAY_OID_TO_ELEM.get(oid)):  # numeric(p,s)[]
+        prec, scale = numeric_typmod(typmod)
     return Column(name, oid, None, None, prec, scale, None)
 
 

@@ -2,11 +2,12 @@
 
 Postgres → Spark: parity with the reference's OID map (reference:
 src/include/postgres_type_oids.hpp, src/postgres_utils.cpp
-PostgresUtils::TypeToLogicalType). Arrays map to ArrayType, composite
-types to StructType, numeric to DecimalType (or double when
-precision/scale unknown — same fallback the reference uses), and
-exotic types (uuid/json/range/inet/money/bit) to StringType, matching
-the reference's varchar fallback. `pg_array_as_varchar` flattens
+PostgresUtils::TypeToLogicalType). Arrays map to ArrayType, numeric
+to DecimalType (or double when precision/scale unknown — same
+fallback the reference uses), and composite, enum and exotic types
+(uuid/json/range/inet/money/bit) to StringType, the reference's
+varchar fallback (the reference reads a composite as a STRUCT; here
+it arrives as its text form). `pg_array_as_varchar` flattens
 arrays to their text form (reference: postgres_extension.cpp:171).
 
 Spark → Postgres: ONE table, `SPARK_TO_OID`, maps each Spark type
@@ -249,18 +250,12 @@ def pg_type_to_spark(
     return dt
 
 
-def pg_oid_to_spark(oid: int, *, precision: int | None = None,
-                    scale: int | None = None) -> T.DataType:
-    return pg_type_to_spark(_OID_TO_NAME.get(oid, "text"),
-                            precision=precision, scale=scale)
-
-
-def composite_to_struct(fields: list[tuple[str, str]]) -> T.StructType:
-    """Postgres composite type → StructType (reference: postgres_utils.cpp
-    composite handling in TypeToLogicalType)."""
-    return T.StructType([
-        T.StructField(n, pg_type_to_spark(t), True) for n, t in fields
-    ])
+def numeric_typmod(typmod: int) -> tuple[int | None, int | None]:
+    """(precision, scale) packed in a numeric (or numeric[]) column's
+    typmod; (None, None) for an unconstrained numeric (typmod -1)."""
+    if typmod < 4:
+        return None, None
+    return (typmod - 4) >> 16, (typmod - 4) & 0xFFFF
 
 
 # Spark type class → the Postgres type it is written as, read back

@@ -2,9 +2,10 @@
 
 This container ships the server binaries (initdb/pg_ctl/postgres)
 but no Python driver; the engine's live paths run over the vendored
-pure-Python wire client (postgres_scanner_spark/pgclient.py). Each
-module-scoped fixture initdb's a scratch cluster as the `postgres`
-system user, serves it on a private unix socket, and tears it down.
+pure-Python wire client (postgres_scanner_spark/pgclient.py). The
+session-scoped `pg_server` fixture (tests/conftest.py) initdb's a
+scratch cluster as the `postgres` system user, serves it on a private
+unix socket, and tears it down.
 
 Reference parity targets (the suites the reference runs against its
 live server):
@@ -21,90 +22,18 @@ Skips (never fails) when the server binaries or the postgres system
 user are unavailable.
 """
 
-import shutil
-import subprocess
-import tempfile
-import time as _time
-
 import pytest
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-PG_BIN = "/usr/local/bin"
-PG_PORT = 54333
-
-
-def _have_server() -> bool:
-    import os
-    if not (shutil.which("runuser") and os.path.exists(f"{PG_BIN}/initdb")):
-        return False
-    try:
-        import pwd
-        pwd.getpwnam("postgres")
-    except KeyError:
-        return False
-    return True
 
 
 # The scan-path tests (typed scan, parallel ctid scan, pushdown,
 # query-mode probe, stream reads, COPY OUT wire interop, mid-scan
 # backend kill) run in the default tier: they pin the live
 # Arrow-native read path. The rest of the connector surface is
-# marked `slow` test by test.
-pytestmark = pytest.mark.skipif(
-    not _have_server(), reason="no postgres server binaries in PATH")
-
-
-@pytest.fixture(scope="module")
-def pg_server():
-    """initdb + start a scratch cluster on a unix socket; yield the
-    libpq DSN; stop and delete on teardown."""
-    root = tempfile.mkdtemp(prefix="pg_live_")
-    subprocess.run(["chown", "postgres:postgres", root], check=True)
-    data = f"{root}/data"
-
-    def pg(cmd, **kw):
-        return subprocess.run(
-            ["runuser", "-u", "postgres", "--"] + cmd,
-            cwd="/tmp", capture_output=True, text=True, **kw)
-
-    r = pg([f"{PG_BIN}/initdb", "-D", data, "-A", "trust",
-            "-U", "postgres"])
-    if r.returncode != 0:
-        shutil.rmtree(root, ignore_errors=True)
-        pytest.skip(f"initdb failed: {r.stderr[-300:]}")
-    r = pg([f"{PG_BIN}/pg_ctl", "-D", data, "-l", f"{root}/pg.log",
-            "-o", f"-k {root} -h '' -p {PG_PORT}", "-w", "start"])
-    if r.returncode != 0:
-        shutil.rmtree(root, ignore_errors=True)
-        pytest.skip(f"pg_ctl start failed: {r.stderr[-300:]}")
-    dsn = f"host={root} port={PG_PORT} user=postgres dbname=postgres"
-    try:
-        yield dsn
-    finally:
-        pg([f"{PG_BIN}/pg_ctl", "-D", data, "-m", "immediate", "stop"])
-        _time.sleep(0.2)
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@pytest.fixture()
-def pg(pg_server):
-    """A pgclient connection to the scratch server (autocommit)."""
-    from postgres_scanner_spark import pgclient
-    con = pgclient.connect(pg_server, autocommit=True)
-    yield con
-    con.close()
-
-
-@pytest.fixture()
-def registered(spark):
-    from postgres_scanner_spark.pg_datasource import PostgresScanDataSource
-    try:
-        spark.dataSource.register(PostgresScanDataSource)
-    except Exception:
-        pass
-    return spark
+# marked `slow` test by test. The server fixtures (`pg_server`, `pg`,
+# `registered`) live in tests/conftest.py.
 
 
 def _scan(spark, dsn, table, **opts):
@@ -631,6 +560,63 @@ def test_live_overwrite_numeric_scale_drops(registered, pg, pg_server):
     assert _indexes(cur, "ns_t") == ["ns_idx2"]
     assert _scan(spark, pg_server, "ns_t").collect()[0].price == \
         Decimal("10.25")
+
+
+def test_live_numeric_array_probe_keeps_typmod(registered, pg, pg_server):
+    """The table probe reads precision and scale from the column's
+    typmod, which an array column carries for its element and a domain
+    for its base type: numeric(5,1)[][] is array<array<decimal(5,1)>>
+    (cast ::numeric(5,1)[][], not ::float8[][]) and a domain over
+    numeric(8,3) is decimal(8,3)."""
+    from decimal import Decimal
+    cur = pg.cursor()
+    cur.execute("DROP TABLE IF EXISTS nad_t")
+    cur.execute("DROP DOMAIN IF EXISTS nad_money")
+    cur.execute("CREATE DOMAIN nad_money AS numeric(8,3)")
+    cur.execute('CREATE TABLE nad_t ("m" numeric(5,1)[][], '
+                '"d" nad_money, "u" numeric[])')
+    cur.execute("INSERT INTO nad_t VALUES "
+                "('{{1.5,2.5},{3.5,NULL}}', 12.345, '{1.25}')")
+    df = _scan(registered, pg_server, "nad_t")
+    assert [f.dataType for f in df.schema.fields] == [
+        T.ArrayType(T.ArrayType(T.DecimalType(5, 1))),
+        T.DecimalType(8, 3), T.ArrayType(T.DoubleType())]
+    (row,) = df.collect()
+    assert row.m == [[Decimal("1.5"), Decimal("2.5")],
+                     [Decimal("3.5"), None]]
+    assert row.d == Decimal("12.345") and row.u == [1.25]
+
+
+def test_live_decimal_array_write_reads_back_decimals(registered, pg,
+                                                      pg_server):
+    """A written array<decimal(12,6)> creates numeric(12,6)[] and
+    reads back as Decimals, not doubles."""
+    from decimal import Decimal
+    schema = T.StructType([
+        T.StructField("id", T.IntegerType()),
+        T.StructField("v", T.ArrayType(T.DecimalType(12, 6)))])
+    vals = [Decimal("123456.123456"), Decimal("0.000001"), None]
+    _write(registered.createDataFrame([(1, vals)], schema), pg_server,
+           "dawr_t")
+    back = _scan(registered, pg_server, "dawr_t")
+    assert back.schema == schema
+    assert back.collect()[0].v == vals
+
+
+def test_live_query_probe_types_numeric_array(registered, pg, pg_server):
+    """The query-mode probe unpacks a numeric[] column's typmod as it
+    does a numeric's: numeric(12,6)[] is array<decimal(12,6)>."""
+    from decimal import Decimal
+    cur = pg.cursor()
+    cur.execute("DROP TABLE IF EXISTS qna_t")
+    cur.execute('CREATE TABLE qna_t ("v" numeric(12,6)[])')
+    cur.execute("INSERT INTO qna_t VALUES ('{1.5,-2.000001}')")
+    df = (registered.read.format("postgres_scan")
+          .option("dsn", pg_server)
+          .option("query", "SELECT v FROM qna_t").load())
+    assert df.schema["v"].dataType == T.ArrayType(T.DecimalType(12, 6))
+    assert df.collect()[0].v == [Decimal("1.500000"),
+                                 Decimal("-2.000001")]
 
 
 def test_live_column_types_typmod_then_words(registered, pg, pg_server):

@@ -454,16 +454,6 @@ def pgs(pg_ssl_server):
     con.close()
 
 
-@pytest.fixture()
-def registered(spark):
-    from postgres_scanner_spark.pg_datasource import PostgresScanDataSource
-    try:
-        spark.dataSource.register(PostgresScanDataSource)
-    except Exception:
-        pass
-    return spark
-
-
 # ------------------------------------------------------- live tests
 def test_scram_ssl_roundtrip(pgs):
     """SCRAM proof + TLS wrap against a real scram-only server;

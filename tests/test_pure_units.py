@@ -12,7 +12,7 @@ from postgres_scanner_spark.pushdown import (
 from postgres_scanner_spark.scan import plan_scan_tasks
 from postgres_scanner_spark.settings import SETTINGS, Settings
 from postgres_scanner_spark.types import (
-    composite_to_struct, pg_oid_to_spark, pg_type_to_spark, spark_type_to_pg,
+    pg_type_to_spark, spark_type_to_pg,
 )
 
 from pyspark.sql import types as T
@@ -166,17 +166,14 @@ def test_scalar_type_map():
     assert pg_type_to_spark("uuid") == T.StringType()
     assert pg_type_to_spark("numeric", precision=10, scale=2) == T.DecimalType(10, 2)
     assert pg_type_to_spark("numeric") == T.DoubleType()  # unconstrained
-    assert pg_oid_to_spark(16) == T.BooleanType()
 
 
 def test_array_and_composite_types():
     assert pg_type_to_spark("int4[]") == T.ArrayType(T.IntegerType())
     assert pg_type_to_spark("text", array_dims=2) == \
         T.ArrayType(T.ArrayType(T.StringType()))
-    st = composite_to_struct([("x", "int8"), ("y", "text")])
-    assert st == T.StructType([
-        T.StructField("x", T.LongType(), True),
-        T.StructField("y", T.StringType(), True)])
+    # a composite (any udt name) arrives as its text form
+    assert pg_type_to_spark("my_composite") == T.StringType()
 
 
 def test_array_as_varchar_setting():
@@ -331,7 +328,7 @@ def test_column_types_accept_typmod_then_words(monkeypatch):
         PostgresScanWriter(
             schema, {"dsn": "host=fake dbname=db", "table": "t",
                      "column_types": json.dumps({"c": ctype})},
-            overwrite=True)._commit_live_pg([])
+            overwrite=True).commit([])
 
     for ok in ("timestamp(3) with time zone", "numeric(12,6)[]",
                "public.mood", "bit varying(5)", "time(0) without time zone"):
@@ -352,8 +349,7 @@ _SPARK_TYPES = {n for n in dir(T) if n.endswith("Type")
 def _spark_to_pg_maps(source: str) -> list[str]:
     """Where `source` maps Spark types to Postgres names or OIDs: a
     dict keyed by Spark types, or an isinstance test on a Spark type
-    whose branch returns a type name or an OID. DuckDB's own dialect
-    map (`_duck_sql_type`, ROADMAP item 9) is not a Postgres one."""
+    whose branch returns a type name or an OID."""
     import ast
 
     def spark_ref(node):
@@ -375,8 +371,6 @@ def _spark_to_pg_maps(source: str) -> list[str]:
     def visit(node, scope):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             scope = node.name
-            if scope == "_duck_sql_type":
-                return
         if isinstance(node, ast.Dict) and any(
                 k is not None and spark_ref(k) for k in node.keys):
             found.append(scope)

@@ -326,7 +326,7 @@ def test_d7_bloom_prefilter(spark):
     assert "bit_get" in plan
 
 
-def test_connection_limit_concurrent_scans(spark, tmp_path):
+def test_connection_limit_concurrent_scans(registered, pg, pg_server):
     """reference: attach_connection_pool.test intent — when concurrent
     scans want more source connections than pg_connection_limit, the
     engine QUEUES (each query plans at most `limit` scan tasks and
@@ -336,19 +336,15 @@ def test_connection_limit_concurrent_scans(spark, tmp_path):
     complete, correct results, and each query's plan must carry at
     most 2 source partitions."""
     import threading
-    import duckdb
-    from postgres_scanner_spark.pg_datasource import ensure_registered
 
-    ensure_registered(spark)
-    db = str(tmp_path / "pool.db")
-    con = duckdb.connect(db)
-    con.execute("CREATE TABLE big AS SELECT range AS id FROM range(4096)")
-    con.close()
+    spark = registered
+    pg.cursor().execute("CREATE TABLE IF NOT EXISTS sp_big AS "
+                        "SELECT g::int8 AS id FROM generate_series(0, 4095) g")
 
     def scan(**settings):
         return (spark.read.format("postgres_scan")
-                .option("dsn", f"duckdb://{db}")
-                .option("table", "big")
+                .option("dsn", pg_server)
+                .option("table", "sp_big")
                 .option("approx_pages", "1024")
                 .option("pg_pages_per_task", "100")   # 10 tasks
                 .options(**settings).load())
