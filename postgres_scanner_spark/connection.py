@@ -4,14 +4,15 @@ The reference takes libpq key=value connection strings and URIs
 (reference: README.md ATTACH examples, src/postgres_connection.cpp).
 `parse_dsn` reads the same surface with libpq's own quoting rules,
 and `ConnectionInfo.dsn` renders one back, so a DSN from a secret or
-a `postgres:`-prefixed ATTACH reaches psycopg or the vendored
-pgclient as a plain libpq string. Pure; unit-tested without a server.
+a `postgres:`-prefixed ATTACH reaches pgclient as a plain libpq
+string. Pure; unit-tested without a server.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from urllib.parse import unquote
 
 # one libpq conninfo pair (libpq conninfo_parse): blanks may surround
 # `=`, a value is single-quoted or bare up to the next blank, and a
@@ -76,23 +77,25 @@ def parse_dsn(dsn: str) -> ConnectionInfo:
         # URI (reference: attach_prefix.test / postgres_storage.cpp)
         dsn = dsn.split(":", 1)[1]
     if dsn.startswith("postgres://") or dsn.startswith("postgresql://"):
+        # every URI component is percent-decoded, as libpq does
+        # (a password holding '@', options='-c%20search_path%3Ds1')
         rest = dsn.split("://", 1)[1]
         auth, _, hostpart = rest.rpartition("@")
         if auth:
             user, _, pw = auth.partition(":")
-            info.user = user or None
-            info.password = pw or None
+            info.user = unquote(user) or None
+            info.password = unquote(pw) or None
         hostport, _, db = hostpart.partition("/")
         db = db.split("?", 1)[0]
         host, _, port = hostport.partition(":")
-        info.host = host or info.host
+        info.host = unquote(host) or info.host
         if port:
             info.port = int(port)
-        info.dbname = db
+        info.dbname = unquote(db)
         if "?" in hostpart:
             for pair in hostpart.split("?", 1)[1].split("&"):
                 k, _, v = pair.partition("=")
-                info.options[k] = v
+                info.options[unquote(k)] = unquote(v)
         return info
     for key, value in _conninfo_pairs(dsn):
         key = key.lower()

@@ -321,14 +321,17 @@ _SIM_HAM = 2
 
 
 def d3_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frequency-weighted 24-bit SimHash (Charikar) near-dup pairs at
+    """Frequency-weighted 32-bit SimHash (Charikar) near-dup pairs at
     hamming ≤ 2. Each token contributes its per-doc count (±) to every
     bit dimension — the weighting is what discriminates documents that
     share a small vocabulary but differ in distribution.
 
-    Candidate generation blocks on the 6 hex nibbles of the simhash
+    Candidate generation blocks on the 8 hex nibbles of the simhash
     (pigeonhole: 2 bit errors touch ≤ 2 nibbles ⟹ ≥ 1 intact nibble),
-    so the pair join is bucket-local — no quadratic shuffle at scale."""
+    so the pair join is bucket-local. A nibble has only 16 values,
+    so the candidate count is still quadratic in the documents:
+    measured at sf0.1, 5,025 docs give 22,560,902 candidates for
+    20,636 output pairs, 1,093 candidates per output pair."""
     c = corpus_with_plants(spark, sf_dir)
     tok = (
         c.select("doc_id", F.explode(_tokens()).alias("tk"))

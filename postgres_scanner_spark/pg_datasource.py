@@ -35,10 +35,9 @@ Parity with the reference's execution strategy:
 
 Backends:
 - libpq DSNs (`host=... dbname=...`) — a real PostgreSQL server over
-  psycopg when installed, else the vendored pure-Python wire client
-  (pgclient.py). Every Postgres behaviour (types, ctid tasks,
-  pushdown, writes) is tested against a live server the test suite
-  starts (tests/conftest.py `pg_server`).
+  the vendored pure-Python wire client (pgclient.py). Every Postgres
+  behaviour (types, ctid tasks, pushdown, writes) is tested against a
+  live server the test suite starts (tests/conftest.py `pg_server`).
 - `duckdb:///path/file.db` — a local DuckDB file standing in for the
   server where none is needed: the registry's e16 stream, the
   catalog's `duckdb://` attach and `pg_query` on it. The stand-in is
@@ -213,10 +212,9 @@ class PostgresScanReader(DataSourceReader):
         from the pg_class probe). One cheap driver-side catalog
         query; a database or socket error degrades to a single-task
         scan and logs why. Anything else is a bug and propagates."""
-        from .pgclient import pg_driver
-        dbapi = pg_driver()
+        from . import pgclient
         try:
-            with dbapi.connect(self.dsn) as con, \
+            with pgclient.connect(self.dsn) as con, \
                     con.cursor() as cur:
                 cur.execute(
                     "SELECT (pg_relation_size(c.oid) / "
@@ -227,7 +225,7 @@ class PostgresScanReader(DataSourceReader):
                     (self.pg_schema, self.table))
                 row = cur.fetchone()
                 return int(row[0]) if row else 0
-        except (dbapi.Error, OSError) as exc:
+        except (pgclient.Error, OSError) as exc:
             _log.warning("page probe of %s.%s failed, planning a "
                          "single-task scan: %s",
                          self.pg_schema, self.table, exc)
@@ -303,21 +301,19 @@ class PostgresScanReader(DataSourceReader):
         and decode the PGCOPY frames column-wise into Arrow record
         batches typed to the declared schema — the same wire path as
         the reference (postgres_connection.cpp BeginCopyTo +
-        postgres_binary_reader.hpp, which decodes into vectors). The
-        vendored pgclient hands the COPY over in socket blocks with
-        the row offsets taken from the CopyData framing; psycopg's
-        chunk iterator is walked for them. Batches hold at
+        postgres_binary_reader.hpp, which decodes into vectors).
+        pgclient hands the COPY over in socket blocks with the row
+        offsets taken from the CopyData framing. Batches hold at
         most VectorBinaryCopyReader._CHUNK rows and only one socket
-        block is held at a time. Tested end-to-end against a mocked
-        psycopg feeding ragged PGCOPY chunks (tests/test_datasource
-        .py), fixture-level decoder tests (tests/test_pgwire.py) and
-        a live server (tests/test_live_pg.py)."""
-        from .pgclient import pg_driver
+        block is held at a time. Tested by fixture-level decoder
+        tests (tests/test_pgwire.py) and against a live server
+        (tests/test_live_pg.py, tests/test_datasource.py)."""
+        from . import pgclient
         from .pgwire_vec import VectorBinaryCopyReader
         from .types import wire_layout
         oids, _, _, array_cols = wire_layout(self.schema_, self.udts)
         reader = VectorBinaryCopyReader(oids, array_cols, self.schema_)
-        with pg_driver().connect(self.dsn) as con, con.cursor() as cur:
+        with pgclient.connect(self.dsn) as con, con.cursor() as cur:
             with cur.copy(
                     f"COPY ({sql}) TO STDOUT (FORMAT binary)") as cp:
                 yield from reader.read(cp)
@@ -339,11 +335,10 @@ class _ProbeConn:
             self._duck = True
             self._errors = (duckdb.Error, OSError)
         else:
-            from .pgclient import pg_driver
-            dbapi = pg_driver()
-            self._con = dbapi.connect(dsn)
+            from . import pgclient
+            self._con = pgclient.connect(dsn)
             self._duck = False
-            self._errors = (dbapi.Error, OSError)
+            self._errors = (pgclient.Error, OSError)
 
     def exec(self, sql: str):
         if self._duck:
@@ -610,16 +605,15 @@ class PostgresScanWriter(DataSourceArrowWriter):
             self._drop_spools(messages)
 
     def _commit_live_pg(self, messages) -> None:
-        from .pgclient import pg_driver
+        from . import pgclient
         from .types import spark_type_to_pg
-        psycopg = pg_driver()
         pg_schema = self.options.get("schema", "public")
         target = f'"{pg_schema}"."{self.table}"'
         cols = ", ".join(
             f'"{f.name}" '
             f'{self.overrides.get(f.name, spark_type_to_pg(f.dataType))}'
             for f in self.schema_.fields)
-        with psycopg.connect(self.dsn) as con, con.cursor() as cur:
+        with pgclient.connect(self.dsn) as con, con.cursor() as cur:
             # overwrite: TRUNCATE when the existing definition already
             # matches the incoming one COLUMN-FOR-COLUMN (names, order,
             # types and typmods) — preserving the table's indexes,
@@ -770,8 +764,7 @@ class PostgresScanDataSource(DataSource):
                     "pg_array_as_varchar is not supported by the "
                     f"duckdb:// stand-in (array columns: {arrays})")
             return schema
-        from .pgclient import pg_driver
-        psycopg = pg_driver()
+        from . import pgclient
         from .types import numeric_typmod, pg_type_to_spark
         if query:
             # result-set probe: run the query LIMIT 0 server-side and
@@ -784,7 +777,7 @@ class PostgresScanDataSource(DataSource):
                      f"{query.rstrip().rstrip(';')}) _pg_spark_probe "
                      f"LIMIT 0")
             from .types import spark_type_from_oid
-            with psycopg.connect(dsn) as con, con.cursor() as cur:
+            with pgclient.connect(dsn) as con, con.cursor() as cur:
                 cur.execute(probe)
                 if not cur.description:
                     raise ValueError(
@@ -801,7 +794,7 @@ class PostgresScanDataSource(DataSource):
                     for col in cur.description
                 ])
         pg_schema = self.options.get("schema", "public")
-        with psycopg.connect(dsn) as con, con.cursor() as cur:
+        with pgclient.connect(dsn) as con, con.cursor() as cur:
             # information_schema probe — the reference reads the same
             # catalog via PGQuery (postgres_scanner.cpp GetColumnInfo)
             # attndims gives the DECLARED dimensionality so the probe

@@ -1,13 +1,13 @@
-"""Minimal pure-Python PostgreSQL wire-protocol client.
+"""Minimal pure-Python PostgreSQL wire-protocol client: the package's
+one way to reach a Postgres server.
 
-The live-scan paths in this package speak a small psycopg subset:
-``connect(dsn)`` / ``Connection.cursor()`` / ``Cursor.execute`` /
-``fetchall`` / ``description`` / ``Cursor.copy`` (COPY sub-protocol).
-They must run without an installed Postgres driver, but the
-frontend/backend protocol v3 is public and small (PostgreSQL docs,
+The live paths need ``connect(dsn)``, ``Connection.cursor()``,
+``Cursor.execute`` / ``fetchone`` / ``fetchall`` / ``description``
+and ``Cursor.copy`` (the COPY sub-protocol). The frontend/backend
+protocol v3 is public and small (PostgreSQL docs,
 "Frontend/Backend Protocol"), and this repo already owns the hard
-part — the PGCOPY binary payload codec (pgwire.py). So
-this module implements just the message framing those paths need:
+part — the PGCOPY binary payload codec (pgwire.py). So this module
+implements just the message framing those paths need:
 
 - startup + auth: trust, cleartext password, md5, and
   SCRAM-SHA-256 / SCRAM-SHA-256-PLUS (RFC 5802/7677 over
@@ -34,12 +34,9 @@ protocol or listen/notify — the reference's scanner also runs over
 plain libpq simple queries + COPY (reference:
 src/postgres_connection.cpp PostgresConnection::Query / BeginCopyTo;
 the protocol constants below match libpq's protocol.h message
-bytes).
-
-``pg_driver()`` returns the installed psycopg module when present and
-this module otherwise, so every live path works in both worlds with
-one import line. The API mirrors the psycopg3 subset the package
-uses; anything else raises AttributeError — loudly, not silently.
+bytes). A DSN key it does not implement raises before any socket
+opens (`_DSN_KEYS`), so a DSN never means something other than what
+libpq would make of it.
 """
 
 from __future__ import annotations
@@ -91,20 +88,6 @@ class _SSLNegotiationFailed(Error):
 
     def __init__(self, cause: BaseException):
         super().__init__({"M": f"SSL negotiation failed: {cause}"})
-
-
-DatabaseError = Error  # dbapi-ish alias
-
-
-def pg_driver():
-    """psycopg when installed (it is not, in this container), else
-    this module — both expose the same ``connect`` surface."""
-    try:
-        import psycopg
-        return psycopg
-    except ImportError:
-        import sys
-        return sys.modules[__name__]
 
 
 # ---------------------------------------------------------- literals
@@ -195,9 +178,8 @@ _DECODERS = {
     1184: _dec_timestamptz,               # timestamptz
 }
 
-# array OID → element OID for the common wire families (psycopg
-# returns Python lists for these; raw text would leak '{1,2,3}'
-# strings into callers)
+# array OID → element OID for the common wire families, decoded to
+# Python lists (raw text would leak '{1,2,3}' strings into callers)
 _ARRAY_ELEM = {
     1000: 16,                 # bool[]
     1005: 21, 1007: 23, 1016: 20, 1028: 26,   # int2/4/8[], oid[]
@@ -272,16 +254,14 @@ def _decode(oid: int, raw: bytes):
     return dec(s) if dec else s
 
 
-Column = namedtuple(
-    "Column", "name type_code display_size internal_size precision "
-              "scale null_ok")
+Column = namedtuple("Column", "name type_code precision scale")
 
 
 def _column(name: str, oid: int, typmod: int) -> Column:
     prec = scale = None
     if NUMERICOID in (oid, ARRAY_OID_TO_ELEM.get(oid)):  # numeric(p,s)[]
         prec, scale = numeric_typmod(typmod)
-    return Column(name, oid, None, None, prec, scale, None)
+    return Column(name, oid, prec, scale)
 
 
 # ------------------------------------------------- SCRAM-SHA-256
@@ -643,11 +623,19 @@ class _Proto:
             raise ConnectionClosed(
                 {"M": f"server closed the connection ({e})"}) from e
 
-    def send_startup(self, user: str, dbname: str) -> None:
-        params = (f"user\0{user}\0database\0{dbname}\0"
-                  f"client_encoding\0UTF8\0"
-                  f"application_name\0postgres_scanner_spark\0\0")
-        body = struct.pack("!I", 196608) + params.encode()
+    def send_startup(self, user: str, dbname: str, dsn_options: dict) -> None:
+        """StartupMessage: the DSN's application_name (default
+        postgres_scanner_spark) and, when it has one, its `options`
+        (e.g. '-c search_path=s1'), which the server applies as
+        command-line settings of the session."""
+        params = [("user", user), ("database", dbname),
+                  ("client_encoding", "UTF8"),
+                  ("application_name", dsn_options.get(
+                      "application_name", "postgres_scanner_spark"))]
+        if "options" in dsn_options:
+            params.append(("options", dsn_options["options"]))
+        body = struct.pack("!I", 196608) + "".join(
+            f"{k}\0{v}\0" for k, v in params).encode() + b"\0"
         self.sock.sendall(struct.pack("!I", len(body) + 4) + body)
 
     def authenticate(self, user: str, password: str | None,
@@ -781,18 +769,17 @@ def _err_fields(body: bytes) -> dict:
 
 # ---------------------------------------------------------- results
 class _Result:
-    __slots__ = ("description", "rows", "tag")
+    __slots__ = ("description", "rows")
 
     def __init__(self):
         self.description: list[Column] | None = None
         self.rows: list[tuple] = []
-        self.tag: str | None = None
 
 
 # ------------------------------------------------------------- copy
 class Copy:
-    """COPY sub-protocol handle (psycopg3 ``cursor.copy()`` shape):
-    iterate for COPY TO STDOUT chunks, ``write()`` for COPY FROM
+    """COPY sub-protocol handle from ``cursor.copy()``: iterate (or
+    ``blocks()``) for COPY TO STDOUT, ``write()`` for COPY FROM
     STDIN. Payload bytes are opaque here — pgwire owns the PGCOPY
     binary framing."""
 
@@ -862,19 +849,6 @@ class Copy:
             if starts:
                 yield block, starts, ends
 
-    def read(self) -> bytes:
-        """One CopyData chunk, b'' at end (psycopg3 Copy.read)."""
-        assert self._mode == "out"
-        if self._done:
-            return b""
-        tag, body = self._read_drain()
-        if tag == "d":
-            return body
-        if tag == "c":
-            self._finish_out()
-            return b""
-        raise Error({"M": f"unexpected {tag!r} during COPY OUT"})
-
     def _finish_out(self):
         if self._done:
             return
@@ -933,26 +907,16 @@ class Cursor:
         self._conn = conn
         self._res = _Result()
         self._pos = 0
-        self.arraysize = 1000
 
-    # psycopg-compatible surface
     @property
     def description(self):
         return self._res.description
-
-    @property
-    def rowcount(self) -> int:
-        return len(self._res.rows)
 
     def execute(self, sql: str, params=None) -> "Cursor":
         self._conn._ensure_tx()
         self._res = self._conn._simple_query(_interpolate(sql, params))
         self._pos = 0
         return self
-
-    def executemany(self, sql: str, seq) -> None:
-        for params in seq:
-            self.execute(sql, params)
 
     def fetchone(self):
         if self._pos >= len(self._res.rows):
@@ -961,20 +925,10 @@ class Cursor:
         self._pos += 1
         return row
 
-    def fetchmany(self, n: int | None = None):
-        n = n if n is not None else self.arraysize   # fetchmany(0) == []
-        out = self._res.rows[self._pos:self._pos + n]
-        self._pos += len(out)
-        return out
-
     def fetchall(self):
         out = self._res.rows[self._pos:]
         self._pos = len(self._res.rows)
         return out
-
-    def __iter__(self):
-        while (row := self.fetchone()) is not None:
-            yield row
 
     def copy(self, sql: str) -> Copy:
         self._conn._ensure_tx()
@@ -992,10 +946,39 @@ class Cursor:
 
 
 # ------------------------------------------------------- connection
+# DSN keys, beside host/port/dbname/user/password, that this client
+# implements
+_DSN_KEYS = frozenset({
+    "sslmode", "channel_binding", "connect_timeout", "sslrootcert",
+    "sslcert", "sslkey", "options", "application_name"})
+# libpq keys refused on purpose, and why
+_REFUSED = {
+    "target_session_attrs": "pgclient connects to one host and never "
+                            "checks the server's role",
+    "passfile": "pgclient reads no password file; put the password in "
+                "the DSN or a secret",
+    "service": "pgclient reads no connection service file",
+    "gssencmode": "pgclient has no GSSAPI encryption",
+}
+
+
+def _check_dsn(info) -> None:
+    """Raise on a DSN this client would not honour as libpq does,
+    naming the key but never a value (a value may be a password)."""
+    for key in info.options:
+        if key not in _DSN_KEYS:
+            why = _REFUSED.get(key, "pgclient does not implement it")
+            raise ValueError(
+                f"connection option {key!r} is not supported: {why}")
+    if "," in info.host:
+        raise ValueError("a multi-host connection string is not "
+                         "supported: pgclient connects to one host")
+
+
 class Connection:
     def __init__(self, dsn: str, autocommit: bool = False):
         info = parse_dsn(dsn)
-        self.info = info
+        _check_dsn(info)
         self.autocommit = autocommit
         self.closed = False
         user = info.user or "postgres"
@@ -1083,7 +1066,8 @@ class Connection:
                     raise _SSLNegotiationFailed(exc) from exc
                 self.ssl_in_use = isinstance(sock, _ssl.SSLSocket)
             self._proto = _Proto(sock)
-            self._proto.send_startup(user, info.dbname or user)
+            self._proto.send_startup(user, info.dbname or user,
+                                     info.options)
             self._proto.authenticate(user, info.password,
                                      channel_binding=self._cb_mode)
             sock.settimeout(None)   # handshake done: blocking mode
@@ -1145,10 +1129,8 @@ class Connection:
                         vals.append(_decode(oid, body[i:i + ln]))
                         i += ln
                 res.rows.append(tuple(vals))
-            elif tag == "C":             # CommandComplete
-                res.tag = body.rstrip(b"\0").decode()
-            elif tag in ("I", "S", "n"):  # Empty/ParamStatus/NoData
-                continue
+            elif tag in ("C", "I", "S", "n"):
+                continue   # CommandComplete/Empty/ParamStatus/NoData
             elif tag in ("G", "H"):
                 raise Error(
                     {"M": "COPY statements must go through "
@@ -1159,13 +1141,9 @@ class Connection:
             else:
                 raise Error({"M": f"unexpected message {tag!r}"})
 
-    # -- psycopg-compatible surface
+    # -- public surface
     def cursor(self) -> Cursor:
         return Cursor(self)
-
-    def execute(self, sql: str, params=None) -> Cursor:
-        cur = Cursor(self)
-        return cur.execute(sql, params)
 
     def commit(self) -> None:
         if self._proto.tx_status != "I":
@@ -1203,14 +1181,7 @@ class Connection:
         return False
 
 
-def connect(dsn: str = "", autocommit: bool = False, **kw) -> Connection:
-    """psycopg.connect-shaped entry point. Accepts the same libpq
-    key=value / URI DSNs as connection.parse_dsn; kwargs override
-    (host=, port=, dbname=, user=, password=)."""
-    if kw:
-        parts = [dsn] if dsn else []
-        for k, v in kw.items():
-            if v is not None:
-                parts.append(f"{k}={v}")
-        dsn = " ".join(parts)
+def connect(dsn: str, autocommit: bool = False) -> Connection:
+    """Open a connection from a libpq key=value or URI DSN (the forms
+    connection.parse_dsn reads)."""
     return Connection(dsn, autocommit=autocommit)

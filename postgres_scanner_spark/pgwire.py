@@ -447,8 +447,8 @@ class BinaryCopyReader:
 
 class ChunkStream:
     """File-like `read(n)` over an iterator of byte chunks — adapts
-    psycopg's `Copy` chunk iterator (and any other chunked source) to
-    BinaryCopyReader's stream interface."""
+    a pgclient `Copy` iterated message by message (or any other
+    chunked source) to BinaryCopyReader's stream interface."""
 
     def __init__(self, chunks: Iterable[bytes]):
         self._it = iter(chunks)

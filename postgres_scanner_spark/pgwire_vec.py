@@ -451,8 +451,8 @@ class VectorBinaryCopyReader:
     def read(self, source) -> Iterator:
         """Decode one PGCOPY stream. `source` is a pgclient COPY OUT
         handle (framed: `blocks()` yields (buffer, row starts, row
-        ends)) or an iterable of byte chunks split anywhere — psycopg's
-        `Copy`, a list, or a file read in pieces."""
+        ends)) or an iterable of byte chunks split anywhere — a list,
+        or a file read in pieces."""
         if hasattr(source, "blocks"):
             spans = self._framed(source.blocks())
         else:

@@ -10,8 +10,7 @@ unchanged through Catalyst. For a live Postgres (or duckdb://) attach
 the query ships to the remote engine through the `postgres_scan`
 DataSource's query mode (true passthrough: the remote engine executes
 it, Spark scans the result — identical split of work to the
-reference), and postgres_execute runs on one connection from
-`pgclient.pg_driver()`.
+reference), and postgres_execute runs on one pgclient connection.
 """
 
 from __future__ import annotations
@@ -620,9 +619,9 @@ def pg_execute(catalog: Catalog, alias: str, sql: str) -> None:
     if db.read_only:
         raise PermissionError(f"database {alias!r} attached READ_ONLY")
     if db.backend == "postgres":
-        from .pgclient import pg_driver
+        from . import pgclient
         # the connection's exit commits on success, rolls back on error
-        with pg_driver().connect(db.dsn) as con, con.cursor() as cur:
+        with pgclient.connect(db.dsn) as con, con.cursor() as cur:
             cur.execute(sql)
         # a cached table's schema may be stale after remote DDL
         catalog.clear_cache(alias)

@@ -226,8 +226,10 @@ def pg_type_to_spark(
     """Map a Postgres type name (optionally an N-dim array) to Spark.
 
     Mirrors reference src/postgres_utils.cpp TypeToLogicalType:
-    - numeric with known precision/scale → decimal(p,s); unknown → double
-      (the reference falls back to double for unconstrained NUMERIC)
+    - numeric with known precision/scale → decimal(p,s), widened to
+      decimal(p-s,0) for a negative scale and decimal(s,s) for a
+      scale above p; unknown, or wider than 38 digits → double (the
+      reference falls back to double for unconstrained NUMERIC)
     - enum/unknown → varchar
     - arrays → list (or varchar if array_as_varchar: pg_array_as_varchar)
     """
@@ -236,10 +238,17 @@ def pg_type_to_spark(
         array_dims += base_name.count("[]")
         base_name = base_name.split("[", 1)[0].strip()
     if base_name == "numeric":
-        if precision is not None and precision > 0 and precision <= 38:
-            dt: T.DataType = T.DecimalType(precision, scale or 0)
-        else:
-            dt = T.DoubleType()
+        dt: T.DataType = T.DoubleType()
+        if precision:
+            # Spark needs 0 <= scale <= precision; Postgres 15 also
+            # allows numeric(5,-2) (whole hundreds, up to 9999900)
+            # and numeric(2,4) (below 0.01)
+            p, s = precision, scale or 0
+            if s < 0:
+                p, s = p - s, 0
+            p = max(p, s)
+            if p <= 38:
+                dt = T.DecimalType(p, s)
     else:
         dt = _NAME_TO_SPARK.get(base_name, T.StringType())  # enum/unknown → varchar
     if array_dims > 0:
@@ -255,7 +264,10 @@ def numeric_typmod(typmod: int) -> tuple[int | None, int | None]:
     typmod; (None, None) for an unconstrained numeric (typmod -1)."""
     if typmod < 4:
         return None, None
-    return (typmod - 4) >> 16, (typmod - 4) & 0xFFFF
+    # the scale is an 11-bit two's-complement field (PG 15+ allows
+    # -1000..1000), the precision the 16 bits above it
+    t = typmod - 4
+    return t >> 16, ((t & 0x7FF) ^ 0x400) - 0x400
 
 
 # Spark type class → the Postgres type it is written as, read back

@@ -6,8 +6,9 @@ the live scratch server (tests/conftest.py `pg_server`), as the
 reference runs test/sql/scanner/* against a live PG. The `duckdb://`
 stand-in keeps the tests of what still uses it: a DuckDB file, the
 catalog's `duckdb://` attach with `pg_query` on it, and the stream
-mechanics the registry's e16 query reads through. Mocked-psycopg
-tests pin the live code paths byte for byte."""
+mechanics the registry's e16 query reads through. A few tests swap
+`pgclient.connect` for a stub to pin what the package does without
+a server: a failing page probe, probe-connection close errors."""
 
 import duckdb
 import pytest
@@ -483,83 +484,47 @@ def test_geometry_columns_decode_by_udt_not_spark_type():
                      [2.0, 2.0, 0.0, 0.0], [0.5, 1.5])]
 
 
-def test_read_live_pg_with_mocked_psycopg(monkeypatch):
-    """Drive the ACTUAL live-scan method end-to-end: a fake psycopg
-    module whose cursor.copy() yields recorded PGCOPY chunks (split at
-    awkward boundaries) — verifies the COPY SQL issued, the unframed
-    length-word walk across chunks, and the full frame→Arrow decode,
-    i.e. everything except the TCP socket (reference:
-    postgres_connection.cpp BeginCopyTo + postgres_binary_reader.hpp)."""
-    import struct
-    import sys
-    import types as pytypes
+def _spy(monkeypatch, cls, name, log):
+    """Record the SQL passed to pgclient `cls.name`, then run it."""
+    real = getattr(cls, name)
+
+    def spy(self, sql, *args):
+        log.append(sql)
+        return real(self, sql, *args)
+    monkeypatch.setattr(cls, name, spy)
+
+
+def test_live_read_issues_binary_copy(monkeypatch, pg, pg_server):
+    """The live-scan method against the server: it issues
+    `COPY (task SQL) TO STDOUT (FORMAT binary)`, and the frames
+    decode into Arrow batches typed to the declared schema, NULLs
+    included (reference: postgres_connection.cpp BeginCopyTo +
+    postgres_binary_reader.hpp). The decoder's walk over ragged
+    chunks is pinned by test_pgwire's `_check_vector`."""
     from pyspark.sql import types as T
-    from postgres_scanner_spark import types as pgt
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from postgres_scanner_spark import pgclient
     from postgres_scanner_spark.pg_datasource import PostgresScanReader
-    from tests.test_pgwire import _field, _header, TRAILER
 
-    rows = (
-        struct.pack("!h", 3)
-        + _field(struct.pack("!i", 1)) + _field(b"alice")
-        + _field(struct.pack("!d", 1.5))
-        + struct.pack("!h", 3)
-        + _field(struct.pack("!i", 2)) + _field(None)
-        + _field(struct.pack("!d", -2.25))
-    )
-    stream = _header() + rows + TRAILER
-    # ragged chunking exercises the walk's reassembly across frames
-    chunks = [stream[i:i + 7] for i in range(0, len(stream), 7)]
+    cur = pg.cursor()
+    cur.execute("DROP TABLE IF EXISTS rd_t")
+    cur.execute("CREATE TABLE rd_t (id int4, name text, v float8)")
+    cur.execute("INSERT INTO rd_t VALUES (1, 'alice', 1.5), "
+                "(2, NULL, -2.25)")
     issued = []
-
-    class _Copy:
-        """psycopg 3's Copy: iterable over chunks, and a read() that
-        takes no size (so it is not a file object)."""
-        def __init__(self, sql):
-            issued.append(sql)
-            self._it = iter(chunks)
-        def read(self):
-            return next(self._it, b"")
-        def __iter__(self):
-            return iter(self.read, b"")
-        def __enter__(self):
-            return self
-        def __exit__(self, *a):
-            return False
-
-    class _Cursor:
-        def copy(self, sql):
-            return _Copy(sql)
-        def __enter__(self):
-            return self
-        def __exit__(self, *a):
-            return False
-
-    class _Conn:
-        def cursor(self):
-            return _Cursor()
-        def __enter__(self):
-            return self
-        def __exit__(self, *a):
-            return False
-
-    fake = pytypes.ModuleType("psycopg")
-    fake.connect = lambda dsn: _Conn()
-    monkeypatch.setitem(sys.modules, "psycopg", fake)
-
+    _spy(monkeypatch, pgclient.Cursor, "copy", issued)
     schema = T.StructType([
         T.StructField("id", T.IntegerType()),
         T.StructField("name", T.StringType()),
         T.StructField("v", T.DoubleType()),
     ])
-    r = PostgresScanReader(schema, {
-        "dsn": "host=fake dbname=db", "table": "t"})
-    out = list(r._read_live_pg('SELECT "id", "name", "v" FROM "public"."t"'))
-    from pyspark.sql.pandas.types import to_arrow_schema
+    r = PostgresScanReader(schema, {"dsn": pg_server, "table": "rd_t"})
+    sql = 'SELECT "id", "name", "v" FROM "public"."rd_t" ORDER BY "id"'
+    out = list(r._read_live_pg(sql))
     assert all(b.schema == to_arrow_schema(schema) for b in out)
     assert [tuple(row.values()) for b in out for row in b.to_pylist()] \
         == [(1, "alice", 1.5), (2, None, -2.25)]
-    assert issued == ['COPY (SELECT "id", "name", "v" FROM "public"."t") '
-                      'TO STDOUT (FORMAT binary)']
+    assert issued == [f"COPY ({sql}) TO STDOUT (FORMAT binary)"]
 
 
 def test_write_datasource_roundtrip(registered, pg, pg_server):
@@ -593,64 +558,40 @@ def test_write_datasource_roundtrip(registered, pg, pg_server):
     assert _scan(spark, pg_server, table="ds_tgt").count() == 15
 
 
-def test_query_schema_probe_live_pg_with_mocked_psycopg(monkeypatch):
+def test_live_query_schema_probe_types_result(monkeypatch, pg,
+                                              pg_server):
     """query mode over a live libpq DSN derives its schema from a
     server-side `SELECT * FROM (sql) q LIMIT 0` result descriptor —
     the reference's PostgresQueryBind approach (src/postgres_query.cpp
     binds from the executed query's result set, not the table
     catalog) — so computed/aggregate columns type correctly with no
-    explicit .schema()."""
-    import sys
-    import types as pytypes
-    from collections import namedtuple
+    explicit .schema(), and a trailing `;` does not break the
+    wrap."""
     from pyspark.sql import types as T
+    from postgres_scanner_spark import pgclient
     from postgres_scanner_spark.pg_datasource import (
         PostgresScanDataSource,
     )
 
-    Col = namedtuple(
-        "Col", "name type_code display_size internal_size "
-               "precision scale null_ok")
+    cur = pg.cursor()
+    cur.execute("DROP TABLE IF EXISTS qp_t")
+    cur.execute("DROP TYPE IF EXISTS qp_mood")
+    cur.execute("CREATE TYPE qp_mood AS ENUM ('ok', 'sad')")
+    cur.execute("CREATE TABLE qp_t (id int8, x numeric(10,2), "
+                "y float8, tags text[], mood qp_mood)")
     executed = []
-
-    class _Cursor:
-        description = None
-        def execute(self, sql):
-            executed.append(sql)
-            self.description = [
-                Col("id", 20, None, 8, None, None, True),        # int8
-                Col("total", 1700, None, -1, 12, 2, True),  # numeric(12,2)
-                Col("ratio", 701, None, 8, None, None, True),   # float8
-                Col("tags", 1009, None, -1, None, None, True),  # text[]
-                Col("mood", 734242, None, -1, None, None, True),  # enum
-            ]
-        def __enter__(self):
-            return self
-        def __exit__(self, *a):
-            return False
-
-    class _Conn:
-        def cursor(self):
-            return _Cursor()
-        def __enter__(self):
-            return self
-        def __exit__(self, *a):
-            return False
-
-    fake = pytypes.ModuleType("psycopg")
-    fake.connect = lambda dsn: _Conn()
-    monkeypatch.setitem(sys.modules, "psycopg", fake)
-
+    _spy(monkeypatch, pgclient.Cursor, "execute", executed)
     ds = PostgresScanDataSource(options={
-        "dsn": "host=fake dbname=db",
-        "query": "SELECT id, SUM(x) AS total, AVG(y) AS ratio, "
-                 "tags, mood FROM t GROUP BY id, tags, mood;  ",
+        "dsn": pg_server,
+        "query": "SELECT id, SUM(x)::numeric(12,2) AS total, "
+                 "AVG(y) AS ratio, tags, mood FROM qp_t "
+                 "GROUP BY id, tags, mood;  ",
     })
     schema = ds.schema()
     assert executed == [
-        "SELECT * FROM (SELECT id, SUM(x) AS total, AVG(y) AS ratio, "
-        "tags, mood FROM t GROUP BY id, tags, mood) _pg_spark_probe "
-        "LIMIT 0"]
+        "SELECT * FROM (SELECT id, SUM(x)::numeric(12,2) AS total, "
+        "AVG(y) AS ratio, tags, mood FROM qp_t GROUP BY id, tags, mood) "
+        "_pg_spark_probe LIMIT 0"]
     assert schema == T.StructType([
         T.StructField("id", T.LongType(), True),
         T.StructField("total", T.DecimalType(12, 2), True),
@@ -660,67 +601,30 @@ def test_query_schema_probe_live_pg_with_mocked_psycopg(monkeypatch):
     ])
 
 
-def test_write_live_pg_with_mocked_psycopg(monkeypatch):
-    """Drive the live-PG commit path: partitions spool PGCOPY binary
+def test_live_write_commit_replaces_or_truncates(monkeypatch, pg,
+                                                pg_server):
+    """The live-PG commit path: partitions spool PGCOPY binary
     (executor half, run directly), then commit() replays each spool
-    as COPY .. FROM STDIN (FORMAT binary) on one mocked connection —
-    captured bytes must decode back to the exact rows, and overwrite
-    must REPLACE the table definition (DROP + CREATE from the write
-    schema) before any COPY, inside the
-    same transaction: binary COPY maps columns positionally, so a
-    surviving table with different column order/types would load
-    mis-mapped rows. Whether the existing definition matches is the
-    server's answer to the probe (its live twins are in
-    test_live_pg.py)."""
-    import io
-    import sys
-    import types as pytypes
+    as COPY .. FROM STDIN (FORMAT binary) on one connection, and the
+    rows read back exactly. Overwrite first asks the server whether
+    the existing definition matches the wanted one (a temp table,
+    compared by format_type): an absent or different table is dropped
+    and re-created from the write schema before any COPY — binary
+    COPY maps columns positionally, so a surviving table with a
+    different column order, type or typmod would load mis-mapped or
+    silently rounded rows — and a matching one is truncated, keeping
+    its indexes, grants and views."""
+    import os
     from decimal import Decimal
     from pyspark.sql import types as T
+    from postgres_scanner_spark import pgclient
     from postgres_scanner_spark.pg_datasource import PostgresScanWriter
-    from postgres_scanner_spark.pgwire import BinaryCopyReader
-    from postgres_scanner_spark.types import wire_layout
 
-    executed, copied, committed = [], [], []
-
-    class _Copy:
-        def __init__(self, sql):
-            self.sql, self.buf = sql, bytearray()
-        def write(self, b):
-            self.buf.extend(b)
-        def __enter__(self):
-            return self
-        def __exit__(self, *a):
-            copied.append((self.sql, bytes(self.buf)))
-            return False
-
-    class _Cursor:
-        same_columns = None     # the server's answer to the match probe
-        def execute(self, sql, params=None):
-            executed.append(sql)
-        def fetchone(self):
-            return (_Cursor.same_columns,)
-        def copy(self, sql):
-            return _Copy(sql)
-        def __enter__(self):
-            return self
-        def __exit__(self, *a):
-            return False
-
-    class _Conn:
-        def cursor(self):
-            return _Cursor()
-        def commit(self):
-            committed.append(True)
-        def __enter__(self):
-            return self
-        def __exit__(self, *a):
-            return False
-
-    fake = pytypes.ModuleType("psycopg")
-    fake.connect = lambda dsn: _Conn()
-    monkeypatch.setitem(sys.modules, "psycopg", fake)
-
+    cur = pg.cursor()
+    cur.execute("DROP TABLE IF EXISTS wc_t")
+    executed, copied = [], []
+    _spy(monkeypatch, pgclient.Cursor, "execute", executed)
+    _spy(monkeypatch, pgclient.Cursor, "copy", copied)
     schema = T.StructType([
         T.StructField("id", T.IntegerType()),
         T.StructField("price", T.DecimalType(10, 2)),
@@ -731,9 +635,12 @@ def test_write_live_pg_with_mocked_psycopg(monkeypatch):
     def writer():
         # a committed writer's spool directory is gone, as after a job
         writers.append(PostgresScanWriter(
-            schema, {"dsn": "host=fake dbname=db", "table": "t"},
-            overwrite=True))
+            schema, {"dsn": pg_server, "table": "wc_t"}, overwrite=True))
         return writers[-1]
+
+    def rows():
+        cur.execute("SELECT id, price, tags FROM wc_t ORDER BY id")
+        return cur.fetchall()
     w = writer()
     msgs = [w.write(iter([(1, Decimal("10.25"), [1, 2]),
                           (2, Decimal("-3.50"), [])])),
@@ -741,49 +648,33 @@ def test_write_live_pg_with_mocked_psycopg(monkeypatch):
     assert [m.n_rows for m in msgs] == [2, 1]
     w.commit(msgs)
     cols = '("id" int4, "price" numeric(10,2), "tags" int4[])'
-    create_sql = f'CREATE TABLE IF NOT EXISTS "public"."t" {cols}'
+    create_sql = f'CREATE TABLE IF NOT EXISTS "public"."wc_t" {cols}'
     # the wanted definition goes to the server as a temp table, which
     # the probe compares with the target
     assert executed[0] == ("CREATE TEMP TABLE pg_temp._pg_spark_want "
                            f"{cols} ON COMMIT DROP")
     assert executed[1].startswith("SELECT (SELECT array_agg((attname, "
                                   "format_type(atttypid, atttypmod))")
-    assert executed[2:] == [
-        'DROP TABLE IF EXISTS "public"."t"',
-        create_sql,
-    ]
-    assert committed == [True]
-    # overwrite onto a MATCHING existing definition TRUNCATEs instead
-    # of DROP+CREATE — indexes/grants/views on the target survive
+    assert executed[2:] == ['DROP TABLE IF EXISTS "public"."wc_t"',
+                            create_sql]
+    assert copied == ['COPY "public"."wc_t" FROM STDIN (FORMAT binary)'] * 2
+    assert rows() == [(1, Decimal("10.25"), [1, 2]),
+                      (2, Decimal("-3.50"), []), (3, None, None)]
+    # overwrite onto a MATCHING existing definition TRUNCATEs
     executed.clear()
-    _Cursor.same_columns = True
     w = writer()
-    msgs2 = [w.write(iter([(9, None, None)]))]
-    w.commit(msgs2)
-    assert executed[2:] == ['TRUNCATE TABLE "public"."t"', create_sql]
+    w.commit([w.write(iter([(9, None, None)]))])
+    assert executed[2:] == ['TRUNCATE TABLE "public"."wc_t"', create_sql]
+    assert rows() == [(9, None, None)]
     # same base types but a DIFFERENT typmod (numeric scale) must
     # NOT truncate: the surviving column would silently round values
-    # (the server's judgement: test_live_overwrite_numeric_scale_drops)
+    cur.execute("ALTER TABLE wc_t ALTER price TYPE numeric(10,3)")
     executed.clear()
-    _Cursor.same_columns = False
     w = writer()
-    w.commit([w.write(iter([(7, None, None)]))])
-    assert executed[2] == 'DROP TABLE IF EXISTS "public"."t"'
-    copied.pop()
-    _Cursor.same_columns = None
-    assert [sql for sql, _ in copied] == [
-        'COPY "public"."t" FROM STDIN (FORMAT binary)'] * 3
-    copied.pop()            # the truncate-path batch; decode the rest
-    oids, _, _, array_cols = wire_layout(schema)
-    decoded = [r for _, b in copied
-               for r in BinaryCopyReader(oids, array_cols)
-               .read(io.BytesIO(b))]
-    assert decoded == [(1, Decimal("10.25"), [1, 2]),
-                       (2, Decimal("-3.50"), []),
-                       (3, None, None)]
-    import os
+    w.commit([w.write(iter([(7, Decimal("1.25"), None)]))])
+    assert executed[2] == 'DROP TABLE IF EXISTS "public"."wc_t"'
+    assert rows() == [(7, Decimal("1.25"), None)]
     assert not any(os.path.exists(w.spool) for w in writers)
-
 
 
 def test_writer_row_iterator_matches_scalar_codec():
@@ -1184,14 +1075,11 @@ def test_partitioned_stream_reader_end_to_end(registered, tmp_path):
 
 
 def _probe_reader(monkeypatch, connect):
-    """A live-PG reader whose client module's connect() is
-    `connect`."""
-    import types as pytypes
+    """A live-PG reader whose pgclient.connect() is `connect`."""
     from pyspark.sql import types as T
     from postgres_scanner_spark import pgclient
     from postgres_scanner_spark.pg_datasource import PostgresScanReader
-    fake = pytypes.SimpleNamespace(Error=pgclient.Error, connect=connect)
-    monkeypatch.setattr(pgclient, "pg_driver", lambda: fake)
+    monkeypatch.setattr(pgclient, "connect", connect)
     return PostgresScanReader(
         T.StructType([T.StructField("id", T.IntegerType())]),
         {**SETTINGS.scan_options(), "dsn": "host=fake dbname=db",
@@ -1243,9 +1131,7 @@ def _probe_conn(monkeypatch, close):
     from postgres_scanner_spark import pgclient
     from postgres_scanner_spark.pg_datasource import _ProbeConn
     con = pytypes.SimpleNamespace(close=close)
-    fake = pytypes.SimpleNamespace(Error=pgclient.Error,
-                                   connect=lambda dsn: con)
-    monkeypatch.setattr(pgclient, "pg_driver", lambda: fake)
+    monkeypatch.setattr(pgclient, "connect", lambda dsn: con)
     return _ProbeConn("host=fake dbname=db")
 
 

@@ -94,6 +94,39 @@ def test_pgclient_transactions(pg_server):
     con.close()
 
 
+def test_live_dsn_options_and_application_name(registered, pg, pg_server):
+    """The DSN's `options` and `application_name` reach the server in
+    the startup packet, as libpq sends them: the session's search_path
+    is the DSN's, so an unqualified name in a scan's query resolves
+    where libpq would resolve it."""
+    from postgres_scanner_spark import pgclient
+    cur = pg.cursor()
+    cur.execute("CREATE SCHEMA IF NOT EXISTS s1")
+    cur.execute("DROP TABLE IF EXISTS s1.sp_t")
+    cur.execute("CREATE TABLE s1.sp_t AS SELECT 7 AS x")
+    dsn = pg_server + " options='-c search_path=s1' application_name=mine"
+    with pgclient.connect(dsn) as con, con.cursor() as c:
+        c.execute("SHOW search_path")
+        assert c.fetchone() == ("s1",)
+        c.execute("SELECT current_setting('application_name')")
+        assert c.fetchone() == ("mine",)
+    with pgclient.connect(pg_server) as con, con.cursor() as c:
+        c.execute("SELECT current_setting('application_name')")
+        assert c.fetchone() == ("postgres_scanner_spark",)
+    df = (registered.read.format("postgres_scan").option("dsn", dsn)
+          .option("query", "SELECT x FROM sp_t").load())
+    assert [r.x for r in df.collect()] == [7]
+
+
+def test_live_dsn_unknown_key_raises(pg_server):
+    """A DSN key pgclient does not implement raises and names the key,
+    instead of connecting and ignoring it."""
+    from postgres_scanner_spark import pgclient
+    for key in ("bogus_key=1", "target_session_attrs=read-only"):
+        with pytest.raises(ValueError, match=key.split("=")[0]):
+            pgclient.connect(f"{pg_server} {key}")
+
+
 # ----------------------------------------------- typed scan (S2/S8)
 def test_live_attach_types_scan(registered, pg, pg_server):
     """reference: test/sql/storage/attach_types.test — one column per
@@ -617,6 +650,35 @@ def test_live_query_probe_types_numeric_array(registered, pg, pg_server):
     assert df.schema["v"].dataType == T.ArrayType(T.DecimalType(12, 6))
     assert df.collect()[0].v == [Decimal("1.500000"),
                                  Decimal("-2.000001")]
+
+
+@pytest.mark.parametrize("probe", ["table", "query"])
+def test_live_numeric_scale_outside_precision(registered, pg, pg_server,
+                                              probe):
+    """Postgres 15 allows a numeric scale below zero or above the
+    precision; Spark's decimal does not. numeric(5,-2) (whole
+    hundreds, up to 9999900) reads as decimal(7,0) and numeric(2,4)
+    (below 0.01) as decimal(4,4) — from the table probe's typmod and
+    the query probe's result descriptor alike — and every value reads
+    back exactly."""
+    from decimal import Decimal
+    cur = pg.cursor()
+    cur.execute("DROP TABLE IF EXISTS nsc_t")
+    cur.execute("CREATE TABLE nsc_t (id int4, a numeric(5,-2), "
+                "b numeric(2,4))")
+    cur.execute("INSERT INTO nsc_t VALUES (1, 12345, 0.00123), "
+                "(2, -9999949, -0.0099), (3, NULL, NULL)")
+    if probe == "table":
+        df = _scan(registered, pg_server, "nsc_t")
+    else:
+        df = (registered.read.format("postgres_scan")
+              .option("dsn", pg_server)
+              .option("query", "SELECT id, a, b FROM nsc_t").load())
+    assert [f.dataType for f in df.schema.fields] == [
+        T.IntegerType(), T.DecimalType(7, 0), T.DecimalType(4, 4)]
+    assert [tuple(r) for r in df.orderBy("id").collect()] == [
+        (1, Decimal("12300"), Decimal("0.0012")),
+        (2, Decimal("-9999900"), Decimal("-0.0099")), (3, None, None)]
 
 
 def test_live_column_types_typmod_then_words(registered, pg, pg_server):

@@ -318,12 +318,13 @@ def test_drain_ready_reraises_on_closed_connection():
     p = pgclient._Proto(_FakeSock(b""))        # immediate EOF
     with pytest.raises(pgclient.ConnectionClosed):
         p.drain_ready()
-    # and the Copy read path propagates it instead of looping
+    # and iterating a COPY OUT (perfbench's drain, Copy.__exit__ on an
+    # abandoned stream) propagates it instead of looping
     p2 = pgclient._Proto(_FakeSock(b""))
     cp = pgclient.Copy.__new__(pgclient.Copy)
     cp._p, cp._mode, cp._done = p2, "out", False
     with pytest.raises(pgclient.ConnectionClosed):
-        cp.read()
+        next(iter(cp))
 
 
 def test_connect_timeout_honored():
@@ -338,19 +339,6 @@ def test_connect_timeout_honored():
         pgclient.connect("host=192.0.2.1 port=5432 user=x "
                          "dbname=x connect_timeout=1")
     assert time.perf_counter() - t0 < 10
-
-
-def test_fetchmany_zero_returns_empty():
-    from postgres_scanner_spark import pgclient
-
-    class _C:                      # duck-typed conn; no socket needed
-        def _ensure_tx(self):
-            pass
-    cur = pgclient.Cursor(_C())
-    cur._res.rows = [(1,), (2,), (3,)]
-    assert cur.fetchmany(0) == []
-    assert cur.fetchmany(2) == [(1,), (2,)]
-    assert cur.fetchmany() == [(3,)]       # None → arraysize
 
 
 # --------------------------------------------------- live fixtures
@@ -481,7 +469,7 @@ def test_channel_binding_plus_require_and_disable(pg_ssl_server):
     for mode in ("require", "disable", "prefer"):
         con = pgclient.connect(dsn + f" channel_binding={mode}")
         assert con.ssl_in_use is True
-        assert con.execute("SELECT 3").fetchone() == (3,)
+        assert con.cursor().execute("SELECT 3").fetchone() == (3,)
         con.close()
     bad = dsn.replace(f"password='{PG_PASSWORD}'", "password=wrong")
     with pytest.raises(pgclient.Error,
@@ -504,14 +492,14 @@ def test_scram_unicode_password_saslprep(pgs, pg_ssl_server):
         f"host=127.0.0.1 port={PG_SSL_PORT} user=utest "
         f"password='päss wörd' dbname=postgres "
         f"sslmode=require")
-    assert con.execute("SELECT current_user").fetchone() == ("utest",)
+    assert con.cursor().execute("SELECT current_user").fetchone() == ("utest",)
     con.close()
     # the ALREADY-normalized spelling (plain space) authenticates too
     con = pgclient.connect(
         f"host=127.0.0.1 port={PG_SSL_PORT} user=utest "
         f"password='päss wörd' dbname=postgres "
         f"sslmode=require")
-    assert con.execute("SELECT 1").fetchone() == (1,)
+    assert con.cursor().execute("SELECT 1").fetchone() == (1,)
     con.close()
 
 
@@ -529,7 +517,8 @@ def test_md5_auth_over_ssl_and_cb_require_refuses(pgs, pg_ssl_server):
            f"password=m5pw dbname=postgres sslmode=require")
     con = pgclient.connect(dsn)
     assert con.ssl_in_use is True
-    assert con.execute("SELECT current_user").fetchone() == ("md5test",)
+    assert con.cursor().execute("SELECT current_user").fetchone() == \
+        ("md5test",)
     con.close()
     with pytest.raises(pgclient.Error, match="channel binding"):
         pgclient.connect(dsn + " channel_binding=require")
@@ -563,7 +552,7 @@ def test_sslmode_allow_falls_back_to_ssl(pg_ssl_server):
     con = pgclient.connect(dsn.replace("sslmode=require",
                                        "sslmode=allow"))
     assert con.ssl_in_use is True          # the retry path was taken
-    assert con.execute("SELECT 5").fetchone() == (5,)
+    assert con.cursor().execute("SELECT 5").fetchone() == (5,)
     con.close()
 
 
@@ -577,7 +566,7 @@ def test_sslmode_verify_ca_and_full(pg_ssl_server):
             dsn.replace("sslmode=require",
                         f"sslmode={mode} sslrootcert={crt}"))
         assert con.ssl_in_use
-        assert con.execute("SELECT 7").fetchone() == (7,)
+        assert con.cursor().execute("SELECT 7").fetchone() == (7,)
         con.close()
     # verify-ca WITHOUT the root cert must fail the chain check
     with pytest.raises((pgclient.Error, OSError)):
@@ -699,9 +688,8 @@ def test_literal_fuzz_over_ssl(pgs):
 
 
 def test_text_protocol_array_decode(pgs):
-    """Simple-query array results decode to Python lists (psycopg
-    parity): quoting, escapes, NULLs, nesting, empty arrays, typed
-    elements."""
+    """Simple-query array results decode to Python lists: quoting,
+    escapes, NULLs, nesting, empty arrays, typed elements."""
     from decimal import Decimal
     cur = pgs.cursor()
     cur.execute("""SELECT '{1,2,3}'::int4[],
@@ -922,7 +910,7 @@ def test_channel_binding_detects_tls_rewrap_mitm(pg_ssl_server,
         # negative control: without binding the MITM is invisible
         con = pgclient.connect(mitm_dsn + " channel_binding=disable")
         assert con.ssl_in_use is True
-        assert con.execute("SELECT 42").fetchone() == (42,)
+        assert con.cursor().execute("SELECT 42").fetchone() == (42,)
         con.close()
         # with -PLUS required: the rewrapped cert hash breaks the proof
         with pytest.raises(pgclient.Error):

@@ -198,3 +198,58 @@ def test_copy_blocks_connection_closed():
     with pytest.raises(pgclient.ConnectionClosed):
         for _ in cp.blocks(64):
             pass
+
+
+# ------------------------------------------------------ DSN and startup
+class _SentSock:
+    def __init__(self):
+        self.sent = b""
+
+    def sendall(self, b: bytes) -> None:
+        self.sent += b
+
+
+def _startup(dsn_options: dict) -> bytes:
+    sock = _SentSock()
+    pgclient._Proto(sock).send_startup("u", "d", dsn_options)
+    return sock.sent
+
+
+def test_startup_packet_without_dsn_keys_is_unchanged():
+    """A DSN with neither `options` nor `application_name` sends the
+    fixed startup bytes, application_name postgres_scanner_spark
+    included; with them, both follow the fixed keys."""
+    params = (b"user\0u\0database\0d\0client_encoding\0UTF8\0"
+              b"application_name\0postgres_scanner_spark\0\0")
+    body = struct.pack("!I", 196608) + params
+    assert _startup({"sslmode": "disable"}) == \
+        struct.pack("!I", len(body) + 4) + body
+    sent = _startup({"application_name": "mine",
+                     "options": "-c search_path=s1"})
+    assert sent[8:] == (b"user\0u\0database\0d\0client_encoding\0UTF8\0"
+                        b"application_name\0mine\0"
+                        b"options\0-c search_path=s1\0\0")
+
+
+@pytest.mark.parametrize("dsn, named", [
+    ("target_session_attrs=read-only", "'target_session_attrs'"),
+    ("passfile=/home/u/.pgpass", "'passfile'"),
+    ("service=mydb", "'service'"),
+    ("gssencmode=disable", "'gssencmode'"),
+    ("bogus_key=1", "'bogus_key'"),
+    ("host=a,b", "multi-host"),
+])
+def test_dsn_key_not_implemented_raises_before_connecting(
+        monkeypatch, dsn, named):
+    """A key pgclient does not implement raises before any socket
+    opens, and names the key but no value: a value may be a password."""
+    import socket
+
+    def no_socket(*a, **k):
+        raise AssertionError("a socket was opened")
+    monkeypatch.setattr(socket, "create_connection", no_socket)
+    monkeypatch.setattr(socket, "socket", no_socket)
+    with pytest.raises(ValueError, match=named) as ei:
+        pgclient.connect(f"host=h dbname=d password=sekret {dsn}")
+    assert "sekret" not in str(ei.value)
+    assert dsn.split("=", 1)[1] not in str(ei.value)

@@ -5,8 +5,8 @@ naming it. The reference runs these against a live PG server
 writes here, on the scratch server of tests/conftest.py (`pg_server`,
 `pg`). The `duckdb://` stand-in keeps only the catalog's `duckdb://`
 attach and `pg_query` on it; the managed store plays the attached
-database for the DDL/DML files, and mocked psycopg and the wire
-codec carry the halves a scan cannot show."""
+database for the DDL/DML files, and the wire codec carries the
+halves a scan cannot show."""
 
 from __future__ import annotations
 
@@ -41,39 +41,15 @@ def test_missing_table(registered, pg_server):
         _scan(registered, pg_server, "does_not_exist")
 
 
-def test_missing_table_live_pg_message(monkeypatch):
+def test_missing_table_live_pg_message(pg_server):
     """missing_table.test, live path: the information_schema probe on
     an absent table raises with the table name in the message (the
     reference surfaces PG's error text)."""
-    import sys
-    import types as pytypes
     from postgres_scanner_spark.pg_datasource import (
         PostgresScanDataSource,
     )
-
-    class _Cursor:
-        def execute(self, sql, params=None):
-            pass
-        def fetchall(self):
-            return []
-        def __enter__(self):
-            return self
-        def __exit__(self, *a):
-            return False
-
-    class _Conn:
-        def cursor(self):
-            return _Cursor()
-        def __enter__(self):
-            return self
-        def __exit__(self, *a):
-            return False
-
-    fake = pytypes.ModuleType("psycopg")
-    fake.connect = lambda dsn: _Conn()
-    monkeypatch.setitem(sys.modules, "psycopg", fake)
     ds = PostgresScanDataSource(options={
-        "dsn": "host=fake dbname=db", "table": "does_not_exist"})
+        "dsn": pg_server, "table": "does_not_exist"})
     with pytest.raises(ValueError, match="does_not_exist.*not found"):
         ds.schema()
 
@@ -141,16 +117,13 @@ def test_attach_issue_146_keyword_identifiers(spark, tmp_path):
     execute_statement(cat, "DETACH postgres_db")
 
 
-def test_bug71_enum_scan_and_typed_writeback(registered, monkeypatch,
-                                             pg, pg_server):
+def test_bug71_enum_scan_and_typed_writeback(registered, pg, pg_server):
     """reference: test/sql/scanner/bug71.test (issue #71, user-defined
     data types) — a table with an enum column scans as varchar with
     the values intact (repeatedly, as the reference loops it), and
     the write-back path can CREATE the column as its server-side enum
     type via the column_types option instead of degrading to
     VARCHAR."""
-    import sys
-    import types as pytypes
     from pyspark.sql import types as T
     from postgres_scanner_spark.pg_datasource import PostgresScanWriter
 
@@ -166,57 +139,25 @@ def test_bug71_enum_scan_and_typed_writeback(registered, monkeypatch,
             [(42, "something", "something else")]
 
     # typed write-back: CREATE uses the enum type, not VARCHAR
-    executed = []
-
-    class _Copy:
-        def __init__(self, sql):
-            pass
-        def write(self, b):
-            pass
-        def __enter__(self):
-            return self
-        def __exit__(self, *a):
-            return False
-
-    class _Cursor:
-        def execute(self, sql, params=None):
-            executed.append(sql)
-        def fetchone(self):
-            return (None,)   # no existing table → DROP+CREATE path
-        def copy(self, sql):
-            return _Copy(sql)
-        def __enter__(self):
-            return self
-        def __exit__(self, *a):
-            return False
-
-    class _Conn:
-        def cursor(self):
-            return _Cursor()
-        def commit(self):
-            pass
-        def __enter__(self):
-            return self
-        def __exit__(self, *a):
-            return False
-
-    fake = pytypes.ModuleType("psycopg")
-    fake.connect = lambda dsn: _Conn()
-    monkeypatch.setitem(sys.modules, "psycopg", fake)
     schema = T.StructType([T.StructField("i", T.IntegerType()),
                            T.StructField("e", T.StringType())])
     w = PostgresScanWriter(
-        schema, {"dsn": "host=fake dbname=db", "table": "my_table",
+        schema, {"dsn": pg_server, "table": "my_table",
                  "column_types": '{"e": "my_enum"}'}, overwrite=True)
-    msg = w.write(iter([(42, "something")]))
-    w.commit([msg])
-    assert ('CREATE TABLE IF NOT EXISTS "public"."my_table" '
-            '("i" int4, "e" my_enum)') in executed
+    w.commit([w.write(iter([(42, "something")]))])
+    cur = pg.cursor()
+    cur.execute("SELECT format_type(atttypid, atttypmod) FROM pg_attribute "
+                "WHERE attrelid = 'my_table'::regclass AND attnum > 0 "
+                "ORDER BY attnum")
+    assert [r[0] for r in cur.fetchall()] == ["integer", "my_enum"]
+    cur.execute("SELECT i, e::text FROM my_table")
+    assert cur.fetchall() == [(42, "something")]
+    # a value that could splice SQL into the CREATE raises at once
     with pytest.raises(ValueError, match="plain type name"):
         PostgresScanWriter(
-            schema, {"dsn": "host=fake dbname=db", "table": "x",
+            schema, {"dsn": pg_server, "table": "x",
                      "column_types": '{"e": "t; DROP TABLE x"}'},
-            overwrite=False)._commit_live_pg([])
+            overwrite=False)
 
 
 def test_call_postgres_attach(registered, tmp_path):

@@ -196,10 +196,9 @@ def test_sql_dml_quoted_identifiers(spark, tmp_path):
     cat.detach("qdb")
 
 
-def _fake_pg_driver(monkeypatch, log, fail_on=None):
-    """Swap pgclient.pg_driver() for a driver that logs connect,
-    execute and how each connection ends (commit / rollback)."""
-    import types as pytypes
+def _fake_connect(monkeypatch, log, fail_on=None):
+    """Swap pgclient.connect for a stub that logs connect, execute and
+    how each connection ends (commit / rollback)."""
     from postgres_scanner_spark import pgclient
 
     class Cur:
@@ -228,24 +227,23 @@ def _fake_pg_driver(monkeypatch, log, fail_on=None):
     def connect(dsn):
         log.append(("connect", dsn))
         return Conn()
-    monkeypatch.setattr(pgclient, "pg_driver", lambda: pytypes.SimpleNamespace(
-        Error=pgclient.Error, connect=connect))
+    monkeypatch.setattr(pgclient, "connect", connect)
 
 
 def test_pg_execute_postgres_routing(monkeypatch):
     """pg_execute on a live Postgres attach runs the raw statement on
-    one pg_driver() connection that commits on success and rolls back
+    one pgclient connection that commits on success and rolls back
     on error (reference: src/postgres_execute.cpp), connects with the
     libpq DSN rendered from the attach (the `postgres:` prefix gone,
     quoting kept), and drops the attach's cached tables. No server:
-    a fake driver records the calls."""
+    a stub connection records the calls."""
     import types as pytypes
 
     from postgres_scanner_spark import pgclient
     from postgres_scanner_spark.catalog import Catalog
     from postgres_scanner_spark.queryfn import pg_execute
     log = []
-    _fake_pg_driver(monkeypatch, log, fail_on="BAD")
+    _fake_connect(monkeypatch, log, fail_on="BAD")
     cat = Catalog(pytypes.SimpleNamespace(dataSource=pytypes.SimpleNamespace(
         register=lambda ds: None)))
     db = cat.attach("postgres:host=h dbname=d user=u password='p w'",
