@@ -1763,32 +1763,10 @@ def x13_neardup_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _x13_sql() -> str:
-    from ..operators.dedup import _SQL_CORPUS
+    from ..operators.dedup import exact_components_sql
     return f"""
 WITH RECURSIVE
-corpus AS ({_SQL_CORPUS}),
-full_c AS (
-  SELECT doc_id, lower(text) AS text FROM corpus
-  UNION ALL
-  SELECT doc_id + 200000,
-         array_to_string(string_split(lower(text), ' ')[1:8], ' ')
-           || ' zzz mutated tail'
-  FROM documents WHERE doc_id < 10),
-keys AS (
-  SELECT doc_id, md5(text) AS k FROM full_c
-  UNION ALL
-  SELECT doc_id,
-         md5(array_to_string(string_split(text, ' ')[1:8], ' ')) AS k
-  FROM full_c),
-hubs AS (SELECT k, MIN(doc_id) AS hub FROM keys GROUP BY k),
-star AS (SELECT DISTINCT h.hub AS src, k.doc_id AS dst
-         FROM keys k JOIN hubs h USING (k) WHERE k.doc_id <> h.hub),
-bidir AS (SELECT src, dst FROM star UNION SELECT dst, src FROM star),
-reach(doc_id, lbl) AS (
-  SELECT doc_id, doc_id FROM full_c
-  UNION
-  SELECT b.dst, r.lbl FROM reach r JOIN bidir b ON b.src = r.doc_id),
-comp AS (SELECT doc_id, MIN(lbl) AS lbl FROM reach GROUP BY doc_id),
+{exact_components_sql('lbl')},
 assigned AS (
   SELECT doc_id, lbl,
          CASE WHEN CAST(('0x' || substr(md5(CAST(lbl AS VARCHAR)), 1, 4))

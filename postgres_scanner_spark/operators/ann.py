@@ -56,55 +56,81 @@ def _with_norm(e: DataFrame) -> DataFrame:
         F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("norm"))
 
 
+def _queries(e: DataFrame, *extra: Column) -> DataFrame:
+    """The query side of a `_with_norm` frame: vec_id < N_QUERIES as
+    (query_id, q_emb, q_norm, *extra)."""
+    return e.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"),
+        F.col("norm").alias("q_norm"), *extra)
+
+
+def _cos() -> Column:
+    """Cosine of a joined (q_emb, q_norm) query row and corpus row."""
+    return dot(F.col("q_emb"), F.col("embedding")) \
+        / (F.col("q_norm") * F.col("norm"))
+
+
+def cos_top_k(scored: DataFrame) -> DataFrame:
+    """The exact cosine top-k tail shared by A1, A2, A3, A5, A8 and
+    A12: per query_id, the TOP_K rows by (cos_raw desc, neighbor_id)
+    as (query_id, neighbor_id, cos_sim = det_round(cos_raw, 5), int
+    rank), ordered by (query_id, rank). `_sql_cos_top_k` is its
+    oracle twin."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos_raw"), F.col("neighbor_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= TOP_K)
+            .select("query_id", "neighbor_id",
+                    det_round(F.col("cos_raw"), 5).alias("cos_sim"),
+                    F.col("rank").cast("int").alias("rank"))
+            .orderBy("query_id", "rank"))
+
+
 # ------------------------------------------------------ A1 brute force
 def a1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-3 for each query vector (vec_id < 5) over the
     rest of the corpus. Query side broadcasts; corpus scans once."""
     from .. import tables
     e = _with_norm(tables.load(spark, sf_dir, "embeddings"))
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"))
+    q = _queries(e)
     c = e.filter(F.col("vec_id") >= N_QUERIES)
-    cos = dot(F.col("q_emb"), F.col("embedding")) \
-        / (F.col("q_norm") * F.col("norm"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.col("neighbor_id"))
-    return (
+    return cos_top_k(
         c.crossJoin(F.broadcast(q))
         .select(F.col("query_id"), F.col("vec_id").alias("neighbor_id"),
-                cos.alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id",
-                det_round(F.col("cos_raw"), 5).alias("cos_sim"),
-                F.col("rank").cast("int").alias("rank"))
-        .orderBy("query_id", "rank")
-    )
+                _cos().alias("cos_raw")))
 
 
-_A1_SQL = f"""
-WITH n AS (
+# The oracle twins of `_queries`, `_cos` and `cos_top_k`.
+_SQL_N = f"""n AS (
   SELECT vec_id, embedding,
          sqrt({SQL_DOT.format(u='embedding', v='embedding')}) AS norm
-  FROM embeddings),
-q AS (SELECT vec_id AS query_id, embedding AS q_emb, norm AS q_norm
-      FROM n WHERE vec_id < {N_QUERIES}),
-c AS (SELECT * FROM n WHERE vec_id >= {N_QUERIES}),
-scored AS (
-  SELECT query_id, c.vec_id AS neighbor_id,
-         {SQL_DOT.format(u='q_emb', v='c.embedding')} / (q_norm * c.norm) AS cos_raw
-  FROM c CROSS JOIN q),
-ranked AS (
+  FROM embeddings)"""
+_SQL_Q = f"""q AS (SELECT vec_id AS query_id, embedding AS q_emb, norm AS q_norm
+      FROM n WHERE vec_id < {N_QUERIES})"""
+_SQL_COS = f"{SQL_DOT.format(u='q_emb', v='c.embedding')} / (q_norm * c.norm)"
+
+
+def _sql_cos_top_k(scored: str) -> str:
+    return f"""ranked AS (
   SELECT query_id, neighbor_id, cos_raw,
          ROW_NUMBER() OVER (PARTITION BY query_id
                             ORDER BY cos_raw DESC, neighbor_id) AS rank
-  FROM scored)
+  FROM {scored})
 SELECT query_id, neighbor_id, FLOOR((cos_raw) * 100000.0 + 0.5) / 100000.0 AS cos_sim,
        CAST(rank AS INT) AS rank
 FROM ranked WHERE rank <= {TOP_K}
-ORDER BY query_id, rank
+ORDER BY query_id, rank"""
+
+
+_A1_SQL = f"""
+WITH {_SQL_N},
+{_SQL_Q},
+c AS (SELECT * FROM n WHERE vec_id >= {N_QUERIES}),
+scored AS (
+  SELECT query_id, c.vec_id AS neighbor_id,
+         {_SQL_COS} AS cos_raw
+  FROM c CROSS JOIN q),
+{_sql_cos_top_k('scored')}
 """
 
 
@@ -135,25 +161,12 @@ def a2_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import tables
     e = _with_norm(tables.load(spark, sf_dir, "embeddings"))
     e = e.withColumn("bucket", _bucket("embedding"))
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"), F.col("bucket").alias("q_bucket"))
+    q = _queries(e, F.col("bucket").alias("q_bucket"))
     c = e.filter(F.col("vec_id") >= N_QUERIES)
-    cos = dot(F.col("q_emb"), F.col("embedding")) \
-        / (F.col("q_norm") * F.col("norm"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.col("neighbor_id"))
-    return (
+    return cos_top_k(
         c.join(F.broadcast(q), F.col("bucket") == F.col("q_bucket"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                cos.alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id",
-                det_round(F.col("cos_raw"), 5).alias("cos_sim"),
-                F.col("rank").cast("int").alias("rank"))
-        .orderBy("query_id", "rank")
-    )
+                _cos().alias("cos_raw")))
 
 
 def _a2_sql() -> str:
@@ -169,17 +182,9 @@ q AS (SELECT vec_id AS query_id, embedding AS q_emb, norm AS q_norm,
 c AS (SELECT * FROM n WHERE vec_id >= {N_QUERIES}),
 scored AS (
   SELECT query_id, c.vec_id AS neighbor_id,
-         {SQL_DOT.format(u='q_emb', v='c.embedding')} / (q_norm * c.norm) AS cos_raw
+         {_SQL_COS} AS cos_raw
   FROM c JOIN q ON c.bucket = q.q_bucket),
-ranked AS (
-  SELECT query_id, neighbor_id, cos_raw,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos_raw DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, FLOOR((cos_raw) * 100000.0 + 0.5) / 100000.0 AS cos_sim,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {TOP_K}
-ORDER BY query_id, rank
+{_sql_cos_top_k('scored')}
 """
 
 
@@ -221,30 +226,16 @@ def a3_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("query_id"),
                 F.col("embedding").alias("q_emb"),
                 F.col("norm").alias("q_norm"), "cent_id")
-    cos = dot(F.col("q_emb"), F.col("embedding")) \
-        / (F.col("q_norm") * F.col("norm"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.col("neighbor_id"))
-    return (
+    return cos_top_k(
         corpus_lists.join(F.broadcast(probes), "cent_id")
         .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                cos.alias("cos_raw"))
-        .distinct()
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id",
-                det_round(F.col("cos_raw"), 5).alias("cos_sim"),
-                F.col("rank").cast("int").alias("rank"))
-        .orderBy("query_id", "rank")
-    )
+                _cos().alias("cos_raw"))
+        .distinct())
 
 
 def _a3_sql() -> str:
     return f"""
-WITH n AS (
-  SELECT vec_id, embedding,
-         sqrt({SQL_DOT.format(u='embedding', v='embedding')}) AS norm
-  FROM embeddings),
+WITH {_SQL_N},
 cent AS (SELECT vec_id AS cent_id, embedding AS c_emb, norm AS c_norm
          FROM n WHERE vec_id < {N_CENTROIDS}),
 assigned AS (
@@ -261,18 +252,10 @@ probes AS (
   FROM assigned WHERE crk <= {N_PROBE} AND vec_id < {N_QUERIES}),
 scored AS (
   SELECT DISTINCT query_id, c.vec_id AS neighbor_id,
-         {SQL_DOT.format(u='q_emb', v='c.embedding')} / (q_norm * c.norm)
+         {_SQL_COS}
            AS cos_raw
   FROM corpus_lists c JOIN probes USING (cent_id)),
-ranked AS (
-  SELECT query_id, neighbor_id, cos_raw,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos_raw DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, FLOOR((cos_raw) * 100000.0 + 0.5) / 100000.0 AS cos_sim,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {TOP_K}
-ORDER BY query_id, rank
+{_sql_cos_top_k('scored')}
 """
 
 
@@ -300,14 +283,12 @@ def a4_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("true_label"),
         F.col("embedding").alias("q_emb"), F.col("norm").alias("q_norm"))
     c = n.filter(F.col("vec_id") >= _KNN_QUERIES)
-    cos = dot(F.col("q_emb"), F.col("embedding")) \
-        / (F.col("q_norm") * F.col("norm"))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_raw"), F.col("vec_id"))
     top = (
         c.crossJoin(F.broadcast(q))
         .select("query_id", "true_label", "vec_id", "label",
-                cos.alias("cos_raw"))
+                _cos().alias("cos_raw"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _KNN_K)
     )
@@ -336,7 +317,7 @@ q AS (SELECT vec_id AS query_id, label AS true_label,
 c AS (SELECT * FROM n WHERE vec_id >= {_KNN_QUERIES}),
 scored AS (
   SELECT query_id, true_label, c.vec_id, c.label,
-         {SQL_DOT.format(u='q_emb', v='c.embedding')} / (q_norm * c.norm)
+         {_SQL_COS}
            AS cos_raw
   FROM c CROSS JOIN q),
 top AS (
@@ -418,24 +399,12 @@ def _pq_exact_rerank(e: DataFrame, shortlist: DataFrame) -> DataFrame:
     """Exact-cosine rerank of an ADC shortlist → the final
     (query_id, neighbor_id, cos_sim, rank) TOP_K rows (shared A5/A12
     tail)."""
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"), F.col("norm").alias("q_norm"))
-    cos = dot(F.col("q_emb"), F.col("embedding")) \
-        / (F.col("q_norm") * F.col("norm"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.col("neighbor_id"))
-    return (
+    q = _queries(e)
+    return cos_top_k(
         shortlist
         .join(e, shortlist.neighbor_id == e.vec_id)
         .join(F.broadcast(q), "query_id")
-        .select("query_id", "neighbor_id", cos.alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id",
-                det_round(F.col("cos_raw"), 5).alias("cos_sim"),
-                F.col("rank").cast("int").alias("rank"))
-        .orderBy("query_id", "rank"))
+        .select("query_id", "neighbor_id", _cos().alias("cos_raw")))
 
 
 def a5_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -521,25 +490,16 @@ def _pq_sql_tail() -> str:
          ROW_NUMBER() OVER (PARTITION BY query_id
                             ORDER BY adc, vec_id) AS ark
   FROM adc),
-q AS (SELECT vec_id AS query_id, embedding AS q_emb, norm AS q_norm
-      FROM n WHERE vec_id < {N_QUERIES}),
+{_SQL_Q},
 scored AS (
   SELECT s.query_id, s.neighbor_id,
-         {SQL_DOT.format(u='q_emb', v='c.embedding')} / (q_norm * c.norm)
+         {_SQL_COS}
            AS cos_raw
   FROM shortlist s
   JOIN n c ON s.neighbor_id = c.vec_id
   JOIN q ON s.query_id = q.query_id
   WHERE s.ark <= {_PQ_RERANK}),
-ranked AS (
-  SELECT query_id, neighbor_id, cos_raw,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos_raw DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, FLOOR((cos_raw) * 100000.0 + 0.5) / 100000.0 AS cos_sim,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {TOP_K}
-ORDER BY query_id, rank"""
+{_sql_cos_top_k('scored')}"""
 
 
 def _a5_sql() -> str:
@@ -859,15 +819,7 @@ def a8_sq8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = dot(F.col("q_emb"), F.col("embedding")) / (
         F.sqrt(dot(F.col("q_emb"), F.col("q_emb")))
         * F.sqrt(dot(F.col("embedding"), F.col("embedding"))))
-    wr = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_raw"), F.col("neighbor_id"))
-    return (pre.withColumn("cos_raw", cos)
-            .withColumn("rank", F.row_number().over(wr))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "neighbor_id",
-                    det_round(F.col("cos_raw"), 5).alias("cos_sim"),
-                    F.col("rank").cast("int").alias("rank"))
-            .orderBy("query_id", "rank"))
+    return cos_top_k(pre.withColumn("cos_raw", cos))
 
 
 _A8_SQL = f"""
@@ -909,15 +861,7 @@ rer AS (
             * sqrt({SQL_DOT.format(u='embedding', v='embedding')}))
            AS cos_raw
   FROM pre WHERE arnk <= {_SQ_PRESELECT}),
-ranked AS (
-  SELECT query_id, neighbor_id, cos_raw,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos_raw DESC, neighbor_id) AS rank
-  FROM rer)
-SELECT query_id, neighbor_id, FLOOR((cos_raw) * 100000.0 + 0.5) / 100000.0 AS cos_sim,
-       CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {TOP_K}
-ORDER BY query_id, rank
+{_sql_cos_top_k('rer')}
 """
 
 
@@ -1059,12 +1003,9 @@ def a10_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import tables
     e = tables.load(spark, sf_dir, "embeddings")
     norm = _with_norm(e).join(e.select("vec_id", "label"), "vec_id")
-    q = norm.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"), F.col("label").alias("q_label"))
+    q = _queries(norm, F.col("label").alias("q_label"))
     c = norm.filter(F.col("vec_id") >= N_QUERIES)
-    cos = dot(F.col("q_emb"), F.col("embedding")) \
-        / (F.col("q_norm") * F.col("norm"))
+    cos = _cos()
     scored = (c.join(F.broadcast(q),
                      F.col("label") == F.col("q_label"))
               .select("query_id", F.col("vec_id").alias("neighbor_id"),
@@ -1099,7 +1040,6 @@ def a10_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _a10_sql() -> str:
-    dot = SQL_DOT.format(u="q_emb", v="c.embedding")
     return f"""
 WITH n AS (
   SELECT vec_id, embedding, label,
@@ -1113,7 +1053,7 @@ pre AS (
   SELECT query_id, neighbor_id FROM (
     SELECT query_id, c.vec_id AS neighbor_id,
            ROW_NUMBER() OVER (PARTITION BY query_id
-             ORDER BY {dot} / (q_norm * c.norm) DESC, c.vec_id) AS rk
+             ORDER BY {_SQL_COS} DESC, c.vec_id) AS rk
     FROM c JOIN q ON c.label = q.q_label)
   WHERE rk <= {TOP_K}),
 post AS (
@@ -1123,9 +1063,9 @@ post AS (
              ORDER BY cs DESC, neighbor_id) AS rk2
     FROM (
       SELECT query_id, c.vec_id AS neighbor_id, c.label, q_label,
-             {dot} / (q_norm * c.norm) AS cs,
+             {_SQL_COS} AS cs,
              ROW_NUMBER() OVER (PARTITION BY query_id
-               ORDER BY {dot} / (q_norm * c.norm) DESC, c.vec_id) AS rk
+               ORDER BY {_SQL_COS} DESC, c.vec_id) AS rk
       FROM c CROSS JOIN q)
     WHERE rk <= {_A10_POST_K} AND label = q_label)
   WHERE rk2 <= {TOP_K}),
@@ -1166,12 +1106,9 @@ def a11_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
     same doubles."""
     from .. import tables
     e = _with_norm(tables.load(spark, sf_dir, "embeddings"))
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"))
+    q = _queries(e)
     c = e.filter(F.col("vec_id") >= N_QUERIES)
-    cos = dot(F.col("q_emb"), F.col("embedding")) \
-        / (F.col("q_norm") * F.col("norm"))
+    cos = _cos()
     w = Window.partitionBy("query_id").orderBy(
         F.desc("rel"), F.col("neighbor_id"))
     cand = (c.crossJoin(F.broadcast(q))
@@ -1228,22 +1165,17 @@ def a11_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _a11_sql() -> str:
-    dot_qc = SQL_DOT.format(u="q_emb", v="c.embedding")
     dot_ab = SQL_DOT.format(u="a.embedding", v="b.embedding")
     return f"""
-WITH n AS (
-  SELECT vec_id, embedding,
-         sqrt({SQL_DOT.format(u='embedding', v='embedding')}) AS norm
-  FROM embeddings),
-q AS (SELECT vec_id AS query_id, embedding AS q_emb, norm AS q_norm
-      FROM n WHERE vec_id < {N_QUERIES}),
+WITH {_SQL_N},
+{_SQL_Q},
 c AS (SELECT * FROM n WHERE vec_id >= {N_QUERIES}),
 cand AS (
   SELECT * FROM (
     SELECT query_id, c.vec_id AS nid, c.embedding, c.norm,
-           FLOOR(({dot_qc} / (q_norm * c.norm)) * 1000000.0 + 0.5) / 1000000.0 AS rel,
+           FLOOR(({_SQL_COS}) * 1000000.0 + 0.5) / 1000000.0 AS rel,
            ROW_NUMBER() OVER (PARTITION BY query_id
-             ORDER BY FLOOR(({dot_qc} / (q_norm * c.norm)) * 1000000.0 + 0.5) / 1000000.0 DESC,
+             ORDER BY FLOOR(({_SQL_COS}) * 1000000.0 + 0.5) / 1000000.0 DESC,
                       c.vec_id) AS rk
     FROM c CROSS JOIN q)
   WHERE rk <= {_MMR_CAND}),
@@ -1439,10 +1371,7 @@ def a13_norm_bound_mips(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose max norm is below every query's bar."""
     from .. import tables
     e = _with_norm(tables.load(spark, sf_dir, "embeddings"))
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"))
+    q = _queries(e)
     c = scratch_persist(e.filter(F.col("vec_id") >= N_QUERIES))
     seeds = (c.orderBy(F.desc("norm"), "vec_id").limit(_A13_SEEDS)
              .select(F.col("embedding").alias("s_emb")))
@@ -1480,12 +1409,8 @@ def a13_norm_bound_mips(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _A13_SQL = f"""
-WITH n AS (
-  SELECT vec_id, embedding,
-         sqrt({SQL_DOT.format(u='embedding', v='embedding')}) AS norm
-  FROM embeddings),
-q AS (SELECT vec_id AS query_id, embedding AS q_emb, norm AS q_norm
-      FROM n WHERE vec_id < {N_QUERIES}),
+WITH {_SQL_N},
+{_SQL_Q},
 c AS (SELECT * FROM n WHERE vec_id >= {N_QUERIES}),
 seeds AS (
   SELECT embedding AS s_emb FROM c

@@ -457,25 +457,36 @@ def d4_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_D4_SQL = f"""
-WITH corpus AS ({_SQL_CORPUS}),
-tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM corpus),
-sh AS (SELECT doc_id, {_sql_shingles(2)} AS shingles FROM tok WHERE len(t) >= 2),
-shx AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-nd AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM shx),
+# The oracle twin of the capped inverted-index Jaccard of D4 and D19:
+# from a `shx(doc_id, s)` CTE, `_SQL_JACCARD_CHAIN` drops the hot
+# shingles and counts each pair's shared ones (`inter`), and
+# `_sql_jaccard_pairs` keeps the pairs at or above `thresh`.
+_SQL_JACCARD_CHAIN = f"""nd AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM shx),
 keep AS (SELECT s FROM shx, nd GROUP BY s, n_docs
          HAVING COUNT(*) <= LEAST({_D4_MAX_DF_FRAC} * n_docs, {_D4_MAX_DF_ABS})),
 shf AS (SELECT shx.* FROM shx JOIN keep USING (s)),
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
 inter AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS ni
           FROM shf x JOIN shf y ON x.s = y.s AND x.doc_id < y.doc_id
-          GROUP BY doc_a, doc_b)
-SELECT doc_a, doc_b, ni * 1.0 / (sa.n + sb.n - ni) AS jaccard
-FROM inter
+          GROUP BY doc_a, doc_b)"""
+
+
+def _sql_jaccard_pairs(thresh: float) -> str:
+    return f"""FROM inter
 JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
-WHERE ni * 1.0 / (sa.n + sb.n - ni) >= 0.3
-ORDER BY doc_a, doc_b
+WHERE ni * 1.0 / (sa.n + sb.n - ni) >= {thresh}
+ORDER BY doc_a, doc_b"""
+
+
+_D4_SQL = f"""
+WITH corpus AS ({_SQL_CORPUS}),
+tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM corpus),
+sh AS (SELECT doc_id, {_sql_shingles(2)} AS shingles FROM tok WHERE len(t) >= 2),
+shx AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
+{_SQL_JACCARD_CHAIN}
+SELECT doc_a, doc_b, ni * 1.0 / (sa.n + sb.n - ni) AS jaccard
+{_sql_jaccard_pairs(0.3)}
 """
 
 
@@ -740,9 +751,12 @@ def d13_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_D13_SQL = f"""
-WITH RECURSIVE
-corpus AS ({_SQL_CORPUS}),
+def exact_components_sql(label: str) -> str:
+    """The oracle's exact-duplicate components, shared by D6, D13 and
+    X13: a `WITH RECURSIVE` body from `corpus` and its mutated copies
+    (`full_c`) through `comp(doc_id, <label>)`, each doc's component
+    minimum over md5 full-text and first-8-token keys."""
+    return f"""corpus AS ({_SQL_CORPUS}),
 full_c AS (
   SELECT doc_id, lower(text) AS text FROM corpus
   UNION ALL
@@ -764,7 +778,12 @@ reach(doc_id, lbl) AS (
   SELECT doc_id, doc_id FROM full_c
   UNION
   SELECT b.dst, r.lbl FROM reach r JOIN bidir b ON b.src = r.doc_id),
-comp AS (SELECT doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY doc_id),
+comp AS (SELECT doc_id, MIN(lbl) AS {label} FROM reach GROUP BY doc_id)"""
+
+
+_D13_SQL = f"""
+WITH RECURSIVE
+{exact_components_sql('cluster_id')},
 ranked AS (
   SELECT c.doc_id, c.cluster_id,
          ROW_NUMBER() OVER (PARTITION BY c.cluster_id
@@ -781,29 +800,7 @@ WHERE r.rn > 1 ORDER BY dropped_doc_id
 
 _D6_SQL = f"""
 WITH RECURSIVE
-corpus AS ({_SQL_CORPUS}),
-full_c AS (
-  SELECT doc_id, lower(text) AS text FROM corpus
-  UNION ALL
-  SELECT doc_id + 200000,
-         array_to_string(string_split(lower(text), ' ')[1:8], ' ')
-           || ' zzz mutated tail'
-  FROM documents WHERE doc_id < 10),
-keys AS (
-  SELECT doc_id, md5(text) AS k FROM full_c
-  UNION ALL
-  SELECT doc_id,
-         md5(array_to_string(string_split(text, ' ')[1:8], ' ')) AS k
-  FROM full_c),
-hubs AS (SELECT k, MIN(doc_id) AS hub FROM keys GROUP BY k),
-star AS (SELECT DISTINCT h.hub AS src, k.doc_id AS dst
-         FROM keys k JOIN hubs h USING (k) WHERE k.doc_id <> h.hub),
-bidir AS (SELECT src, dst FROM star UNION SELECT dst, src FROM star),
-reach(doc_id, lbl) AS (
-  SELECT doc_id, doc_id FROM full_c
-  UNION
-  SELECT b.dst, r.lbl FROM reach r JOIN bidir b ON b.src = r.doc_id),
-comp AS (SELECT doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY doc_id)
+{exact_components_sql('cluster_id')}
 SELECT cluster_id, COUNT(*) AS n_members, MAX(doc_id) AS member_max
 FROM comp GROUP BY cluster_id HAVING COUNT(*) > 1 ORDER BY cluster_id
 """
@@ -1945,27 +1942,51 @@ wg AS (SELECT DISTINCT doc_id, 'w:' || g AS s
        FROM (SELECT doc_id, unnest({_sql_shingles(_D19_K)}) AS g
              FROM wt WHERE len(t) >= {_D19_K})),
 shx AS (SELECT doc_id, s FROM cg UNION ALL SELECT doc_id, s FROM wg),
-nd AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM shx),
-keep AS (SELECT s FROM shx, nd GROUP BY s, n_docs
-         HAVING COUNT(*) <= LEAST({_D4_MAX_DF_FRAC} * n_docs, {_D4_MAX_DF_ABS})),
-shf AS (SELECT shx.* FROM shx JOIN keep USING (s)),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM shf GROUP BY doc_id),
-inter AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS ni
-          FROM shf x JOIN shf y ON x.s = y.s AND x.doc_id < y.doc_id
-          GROUP BY doc_a, doc_b)
+{_SQL_JACCARD_CHAIN}
 SELECT doc_a, doc_b,
        FLOOR((ni * 1.0 / (sa.n + sb.n - ni)) * 10000.0 + 0.5) / 10000.0 AS jaccard
-FROM inter
-JOIN sizes sa ON sa.doc_id = doc_a
-JOIN sizes sb ON sb.doc_id = doc_b
-WHERE ni * 1.0 / (sa.n + sb.n - ni) >= {_D19_THRESH}
-ORDER BY doc_a, doc_b
+{_sql_jaccard_pairs(_D19_THRESH)}
 """
 
 
 # ------------------- D20 global repeated-substring dedup (ExactSubstr)
 _D20_K = 8            # seed k-gram width (tokens)
 _D20_MIN_SPAN = 15    # report repeated substrings of >= 15 tokens
+
+
+def _merge_spans(spans: DataFrame, keys: list[str],
+                 order: list[str]) -> DataFrame:
+    """Gaps-and-islands merge of D20's and D23's per-doc token spans
+    (s, e): walking each doc's spans in `order`, a span starts a new
+    island unless it overlaps or abuts the running max end; returns
+    one (*keys, island, ms, me) row per island. Both windows
+    partition by doc_id. `_sql_merge_spans` is its oracle twin."""
+    from pyspark.sql.window import Window
+    wiv = Window.partitionBy("doc_id").orderBy(*order)
+    prev = wiv.rowsBetween(Window.unboundedPreceding, -1)
+    isl = (spans
+           .withColumn("pmax", F.max("e").over(prev))
+           .withColumn("new", F.when(F.col("pmax").isNull()
+                                     | (F.col("s") > F.col("pmax") + 1),
+                                     1).otherwise(0))
+           .withColumn("island", F.sum("new").over(wiv)))
+    return (isl.groupBy(*keys, "island")
+            .agg(F.min("s").alias("ms"), F.max("e").alias("me")))
+
+
+def _sql_merge_spans(keys: str, order: str) -> str:
+    return f"""isl AS (
+  SELECT {keys}, s, e,
+         SUM(CASE WHEN pmax IS NULL OR s > pmax + 1 THEN 1 ELSE 0 END)
+           OVER (PARTITION BY doc_id ORDER BY {order}) AS island
+  FROM (SELECT {keys}, s, e,
+               MAX(e) OVER (PARTITION BY doc_id ORDER BY {order}
+                            ROWS BETWEEN UNBOUNDED PRECEDING
+                            AND 1 PRECEDING) AS pmax
+        FROM spans)),
+merged AS (
+  SELECT {keys}, island, MIN(s) AS ms, MAX(e) AS me
+  FROM isl GROUP BY {keys}, island)"""
 
 
 def d20_repeated_substrings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2085,17 +2106,7 @@ def _d20_spans(corpus: DataFrame) -> tuple:
              .agg(F.min("pos").alias("s"),
                   (F.max("pos") + _D20_K - 1).alias("e"))
              .filter(F.col("e") - F.col("s") + 1 >= _D20_MIN_SPAN))
-    wiv = Window.partitionBy("doc_id").orderBy("s")
-    prev = (Window.partitionBy("doc_id").orderBy("s")
-            .rowsBetween(Window.unboundedPreceding, -1))
-    isl = (spans
-           .withColumn("pmax", F.max("e").over(prev))
-           .withColumn("new", F.when(F.col("pmax").isNull()
-                                     | (F.col("s") > F.col("pmax") + 1),
-                                     1).otherwise(0))
-           .withColumn("island", F.sum("new").over(wiv)))
-    merged = (isl.groupBy("doc_id", "island")
-              .agg(F.min("s").alias("ms"), F.max("e").alias("me")))
+    merged = _merge_spans(spans, ["doc_id"], ["s"])
     return tok, merged
 
 
@@ -2197,18 +2208,7 @@ spans AS (
   SELECT doc_id, grp, MIN(pos) AS s, MAX(pos) + {_D20_K - 1} AS e
   FROM runs GROUP BY doc_id, grp
   HAVING MAX(pos) + {_D20_K - 1} - MIN(pos) + 1 >= {_D20_MIN_SPAN}),
-isl AS (
-  SELECT doc_id, s, e,
-         SUM(CASE WHEN pmax IS NULL OR s > pmax + 1 THEN 1 ELSE 0 END)
-           OVER (PARTITION BY doc_id ORDER BY s) AS island
-  FROM (SELECT doc_id, s, e,
-               MAX(e) OVER (PARTITION BY doc_id ORDER BY s
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND 1 PRECEDING) AS pmax
-        FROM spans)),
-merged AS (
-  SELECT doc_id, island, MIN(s) AS ms, MAX(e) AS me
-  FROM isl GROUP BY doc_id, island),
+{_sql_merge_spans('doc_id', 's')},
 sizes AS (
   SELECT doc_id, len(string_split(lower(text), ' ')) AS total_tokens
   FROM corpus)"""
@@ -2482,16 +2482,7 @@ def d23_benchmark_span_excision(spark: SparkSession, sf_dir: str
                      .alias("s"),
                      F.least(F.col("pos") + _D23_K - 1 + _D23_PAD,
                              F.col("n") - 1).alias("e")))
-    wiv = Window.partitionBy("doc_id").orderBy("s", "e")
-    prev = wiv.rowsBetween(Window.unboundedPreceding, -1)
-    isl = (spans
-           .withColumn("pmax", F.max("e").over(prev))
-           .withColumn("new", F.when(F.col("pmax").isNull()
-                                     | (F.col("s") > F.col("pmax") + 1),
-                                     1).otherwise(0))
-           .withColumn("island", F.sum("new").over(wiv)))
-    merged = (isl.groupBy("doc_id", "n", "island")
-              .agg(F.min("s").alias("ms"), F.max("e").alias("me")))
+    merged = _merge_spans(spans, ["doc_id", "n"], ["s", "e"])
     per_doc = (merged.groupBy("doc_id", "n")
                .agg(F.count("*").alias("m"),
                     F.sum(F.col("me") - F.col("ms") + 1)
@@ -2557,18 +2548,7 @@ spans AS (
          GREATEST(h.pos - {_D23_PAD}, 0) AS s,
          LEAST(h.pos + {_D23_K - 1 + _D23_PAD}, z.n - 1) AS e
   FROM hits h JOIN sizes z ON z.doc_id = h.doc_id),
-isl AS (
-  SELECT doc_id, n, s, e,
-         SUM(CASE WHEN pmax IS NULL OR s > pmax + 1 THEN 1 ELSE 0 END)
-           OVER (PARTITION BY doc_id ORDER BY s, e) AS island
-  FROM (SELECT doc_id, n, s, e,
-               MAX(e) OVER (PARTITION BY doc_id ORDER BY s, e
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND 1 PRECEDING) AS pmax
-        FROM spans)),
-merged AS (
-  SELECT doc_id, n, island, MIN(s) AS ms, MAX(e) AS me
-  FROM isl GROUP BY doc_id, n, island),
+{_sql_merge_spans('doc_id, n', 's, e')},
 per_doc AS (
   SELECT doc_id, n, COUNT(*) AS m,
          SUM(me - ms + 1) AS removed,

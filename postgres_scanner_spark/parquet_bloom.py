@@ -154,11 +154,13 @@ class _StructReader:
 # ---------------------------------------------------------------------
 
 
-def footer_bloom_index(path: str) -> list[dict]:
-    """One entry per (row_group, column chunk): the column's dotted
-    path plus every footer-index pointer the chunk carries — bloom
-    filter, OffsetIndex, ColumnIndex offsets/lengths (None when the
-    writer emitted none). Reads ONLY the footer tail bytes."""
+def _footer_chunks(path: str, meta: dict[tuple[int, int], str],
+                   chunk: dict[tuple[int, int], str]) -> list[dict]:
+    """One record per (row_group, column chunk) of the footer:
+    `row_group`, the dotted `column` path, and each integer field of
+    ColumnMetaData named in `meta` and of ColumnChunk named in `chunk`
+    ({(field id, thrift type): key}; None when the writer emitted
+    none). Reads ONLY the footer tail bytes."""
     with open(path, "rb") as f:
         f.seek(-8, 2)
         n, magic = struct.unpack("<I4s", f.read(8))
@@ -184,11 +186,8 @@ def footer_bloom_index(path: str) -> list[dict]:
                 for _c in range(n_col):
                     cc = _StructReader(b, rg.i)
                     rec = {"row_group": rg_no, "column": None,
-                           "bloom_offset": None, "bloom_length": None,
-                           "offset_index_offset": None,
-                           "offset_index_length": None,
-                           "column_index_offset": None,
-                           "column_index_length": None}
+                           **dict.fromkeys(meta.values()),
+                           **dict.fromkeys(chunk.values())}
                     for fid3, t3 in cc:
                         if fid3 == 3 and t3 == 12:
                             cm = _StructReader(b, cc.i)
@@ -202,21 +201,13 @@ def footer_bloom_index(path: str) -> list[dict]:
                                             b[cm.i:cm.i + ln].decode())
                                         cm.i += ln
                                     rec["column"] = ".".join(parts)
-                                elif fid4 == 14 and t4 == 6:
-                                    rec["bloom_offset"] = cm.int_val()
-                                elif fid4 == 15 and t4 == 5:
-                                    rec["bloom_length"] = cm.int_val()
+                                elif (fid4, t4) in meta:
+                                    rec[meta[fid4, t4]] = cm.int_val()
                                 else:
                                     cm.skip(t4)
                             cc.i = cm.i
-                        elif fid3 == 4 and t3 == 6:
-                            rec["offset_index_offset"] = cc.int_val()
-                        elif fid3 == 5 and t3 == 5:
-                            rec["offset_index_length"] = cc.int_val()
-                        elif fid3 == 6 and t3 == 6:
-                            rec["column_index_offset"] = cc.int_val()
-                        elif fid3 == 7 and t3 == 5:
-                            rec["column_index_length"] = cc.int_val()
+                        elif (fid3, t3) in chunk:
+                            rec[chunk[fid3, t3]] = cc.int_val()
                         else:
                             cc.skip(t3)
                     out.append(rec)
@@ -224,6 +215,17 @@ def footer_bloom_index(path: str) -> list[dict]:
             top.i = rg.i
             rg_no += 1
     return out
+
+
+def footer_bloom_index(path: str) -> list[dict]:
+    """One entry per (row_group, column chunk): the column's dotted
+    path plus every footer-index pointer the chunk carries — bloom
+    filter, OffsetIndex, ColumnIndex offsets/lengths (None when the
+    writer emitted none). Reads ONLY the footer tail bytes."""
+    return _footer_chunks(
+        path, {(14, 6): "bloom_offset", (15, 5): "bloom_length"},
+        {(4, 6): "offset_index_offset", (5, 5): "offset_index_length",
+         (6, 6): "column_index_offset", (7, 5): "column_index_length"})
 
 
 def read_bloom_bitset(f: BinaryIO, offset: int,
@@ -460,67 +462,10 @@ def footer_dict_index(path: str) -> list[dict]:
     value count, codec, and the dictionary/data page offsets. Reads
     ONLY the footer tail bytes (the same walk as
     footer_bloom_index, different ColumnMetaData fields)."""
-    with open(path, "rb") as f:
-        f.seek(-8, 2)
-        n, magic = struct.unpack("<I4s", f.read(8))
-        if magic != b"PAR1":
-            raise ValueError(f"{path}: not a parquet file")
-        f.seek(-8 - n, 2)
-        b = f.read(n)
-    out: list[dict] = []
-    top = _StructReader(b, 0)
-    rg_no = 0
-    for fid, t in top:
-        if not (fid == 4 and t == 9):
-            top.skip(t)
-            continue
-        n_rg, _et, top.i = _list_head(b, top.i)
-        for _ in range(n_rg):
-            rg = _StructReader(b, top.i)
-            for fid2, t2 in rg:
-                if not (fid2 == 1 and t2 == 9):
-                    rg.skip(t2)
-                    continue
-                n_col, _ct, rg.i = _list_head(b, rg.i)
-                for _c in range(n_col):
-                    cc = _StructReader(b, rg.i)
-                    rec = {"row_group": rg_no, "column": None,
-                           "codec": None, "num_values": None,
-                           "data_page_offset": None,
-                           "dictionary_page_offset": None}
-                    for fid3, t3 in cc:
-                        if fid3 == 3 and t3 == 12:
-                            cm = _StructReader(b, cc.i)
-                            for fid4, t4 in cm:
-                                if fid4 == 3 and t4 == 9:
-                                    np_, _pt, cm.i = _list_head(b, cm.i)
-                                    parts = []
-                                    for _p in range(np_):
-                                        ln, cm.i = _varint(b, cm.i)
-                                        parts.append(
-                                            b[cm.i:cm.i + ln].decode())
-                                        cm.i += ln
-                                    rec["column"] = ".".join(parts)
-                                elif fid4 == 4 and t4 == 5:
-                                    rec["codec"] = cm.int_val()
-                                elif fid4 == 5 and t4 == 6:
-                                    rec["num_values"] = cm.int_val()
-                                elif fid4 == 9 and t4 == 6:
-                                    rec["data_page_offset"] = \
-                                        cm.int_val()
-                                elif fid4 == 11 and t4 == 6:
-                                    rec["dictionary_page_offset"] = \
-                                        cm.int_val()
-                                else:
-                                    cm.skip(t4)
-                            cc.i = cm.i
-                        else:
-                            cc.skip(t3)
-                    out.append(rec)
-                    rg.i = cc.i
-            top.i = rg.i
-            rg_no += 1
-    return out
+    return _footer_chunks(
+        path, {(4, 5): "codec", (5, 6): "num_values",
+               (9, 6): "data_page_offset",
+               (11, 6): "dictionary_page_offset"}, {})
 
 
 def read_dict_page_header(f: BinaryIO, offset: int) -> dict:

@@ -25,9 +25,11 @@ Parity with the reference's execution strategy:
   blocks and decodes it column-wise (pgwire_vec
   .VectorBinaryCopyReader — the reference's postgres_binary_reader
   .hpp decodes into DuckDB vectors the same way); Python touches a
-  value only in the columns whose wire type has no numpy kernel
-  (numeric, interval, arrays, geometry…). The duckdb:// stand-in
-  yields DuckDB's own Arrow batches.
+  value only in the columns whose wire type has no numpy kernel:
+  numeric, interval, arrays, the geometry types, a ByteType column's
+  int2 and a struct or map column's text (VectorBinaryCopyReader's
+  docstring has the list).
+  The duckdb:// stand-in yields DuckDB's own Arrow batches.
 - streaming (`spark.readStream.format("postgres_scan")`): the same
   read() serves each micro-batch's stream-key slices
   (PostgresScanPartitionedStreamReader), so every row, batch or
@@ -187,14 +189,14 @@ class PostgresScanReader(DataSourceReader):
     def partitions(self):
         if self.dsn.startswith("duckdb://"):
             # the stand-in reads as one task
-            return [_Task(self.query or self._sql(""))]
+            return [self._task(self.query or self._sql(""))]
         if self.query:
             # wrap so every output column is cast to the wire format
             # the decoder expects (same as the table path)
             cols = ", ".join(
                 f'"{f.name}"{self._col_cast(f)} AS "{f.name}"'
                 for f in self.schema_.fields)
-            return [_Task(f"SELECT {cols} FROM ({self.query}) AS q")]
+            return [self._task(f"SELECT {cols} FROM ({self.query}) AS q")]
         if self.approx_pages <= 0:
             self.approx_pages = self._probe_pages()
         s = self.settings
@@ -202,8 +204,17 @@ class PostgresScanReader(DataSourceReader):
                                 pages_per_task=s.pg_pages_per_task,
                                 use_ctid_scan=s.pg_use_ctid_scan,
                                 max_tasks=s.pg_connection_limit)
-        return [_Task(self._sql(t.predicate if len(tasks) > 1 else ""))
+        return [self._task(self._sql(t.predicate if len(tasks) > 1 else ""))
                 for t in tasks]
+
+    def _task(self, sql: str) -> _Task:
+        """Every task's SQL, table, query, stand-in and stream slice
+        alike, passes here once: `pg_debug_show_queries` logs it."""
+        if self.settings.pg_debug_show_queries:
+            # WARNING: a PySpark worker drops INFO records; Python's
+            # last-resort handler prints this to the driver's stderr
+            _log.warning("pg scan %s", sql)
+        return _Task(sql)
 
     def _probe_pages(self) -> int:
         """Live PG: exact heap page count via pg_relation_size — the
@@ -273,10 +284,6 @@ class PostgresScanReader(DataSourceReader):
         sql = f"SELECT {cols} FROM {self._relation()}"
         if preds:
             sql += " WHERE " + " AND ".join(preds)
-        if self.settings.pg_debug_show_queries:
-            # WARNING: a PySpark worker drops INFO records; Python's
-            # last-resort handler prints this to the driver's stderr
-            _log.warning("pg scan %s", sql)
         return sql
 
     # -- execution: Arrow batches (the COPY-binary analog)
@@ -474,7 +481,7 @@ class PostgresScanPartitionedStreamReader(DataSourceStreamReader):
         where = f'"{self.key}" <= {int(partition.hi)}'
         if partition.lo is not None:
             where = f'"{self.key}" > {int(partition.lo)} AND {where}'
-        return self._scan.read(_Task(self._scan._sql(where)))
+        return self._scan.read(self._scan._task(self._scan._sql(where)))
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the stream checkpoint

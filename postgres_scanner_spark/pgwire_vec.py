@@ -46,16 +46,30 @@ _TEXT_FAMILY = frozenset({pgt.TEXTOID, pgt.VARCHAROID, pgt.BPCHAROID,
                           pgt.CHAROID})
 
 
-def _ints(arr, pa_type):
-    """Null-safe integral numpy view: cast to the integral arrow type,
-    zero-fill nulls (null rows are never written — the length prefix
-    is -1 — so the filler just keeps the buffer integral: a to_numpy
-    on a nullable int column would round-trip through float64 and
-    corrupt int64 values beyond 2^53)."""
-    a = arr.cast(pa_type)
-    if a.null_count:
-        a = a.fill_null(0)
-    return a.to_numpy(zero_copy_only=False)
+def _values(arr, dtype) -> np.ndarray:
+    """`arr` cast to the arrow twin of numpy `dtype`, as a view of its
+    values buffer. A null row's slot holds whatever the buffer holds:
+    null rows are never written (the length prefix is -1). Read from
+    the buffer, not with `to_numpy`, `np.asarray` or `fill_null`:
+    each of those imports pyarrow's pandas shim (~0.3 s) on a
+    worker's first encode, and a nullable int64 column's `to_numpy`
+    round-trips through float64."""
+    a = arr.cast(pa.from_numpy_dtype(dtype))
+    return np.frombuffer(a.buffers()[1], dtype,
+                         count=len(a) + a.offset)[a.offset:]
+
+
+def _null_mask(arr) -> np.ndarray:
+    """True on the null rows, read from the validity bitmap."""
+    n = len(arr)
+    if not arr.null_count:
+        return np.zeros(n, dtype=bool)
+    bitmap = arr.buffers()[0]
+    if bitmap is None:                  # a NullArray: every row null
+        return np.ones(n, dtype=bool)
+    bits = np.unpackbits(np.frombuffer(bitmap, np.uint8),
+                         count=n + arr.offset, bitorder="little")
+    return bits[arr.offset:] == 0
 
 
 def _fixed_cols(arr, oid: int):
@@ -65,29 +79,25 @@ def _fixed_cols(arr, oid: int):
     field as ONE word write through an overlapping strided view."""
     t = arr.type
     if oid == pgt.BOOLOID and pa.types.is_boolean(t):
-        return 1, _ints(arr, pa.uint8()).astype(np.uint8)
+        return 1, _values(arr, np.uint8)
     if oid == pgt.INT2OID and pa.types.is_int16(t):
-        return 2, _ints(arr, pa.int16()).astype(">i2")
+        return 2, _values(arr, np.int16).astype(">i2")
     if oid == pgt.INT4OID and pa.types.is_int32(t):
-        return 4, _ints(arr, pa.int32()).astype(">i4")
+        return 4, _values(arr, np.int32).astype(">i4")
     if oid in (pgt.INT8OID, pgt.OIDOID) and pa.types.is_int64(t):
-        return 8, _ints(arr, pa.int64()).astype(">i8")
+        return 8, _values(arr, np.int64).astype(">i8")
     if oid == pgt.FLOAT4OID and pa.types.is_float32(t):
-        a = arr.fill_null(0.0) if arr.null_count else arr
-        return 4, a.to_numpy(zero_copy_only=False).astype(">f4") \
-            .view(">i4")
+        return 4, _values(arr, np.float32).astype(">f4").view(">i4")
     if oid == pgt.FLOAT8OID and pa.types.is_float64(t):
-        a = arr.fill_null(0.0) if arr.null_count else arr
-        return 8, a.to_numpy(zero_copy_only=False).astype(">f8") \
-            .view(">i8")
+        return 8, _values(arr, np.float64).astype(">f8").view(">i8")
     if oid == pgt.DATEOID and pa.types.is_date32(t):
-        days = _ints(arr, pa.int32()) - _PG_EPOCH_DAYS
+        days = _values(arr, np.int32) - _PG_EPOCH_DAYS
         return 4, days.astype(">i4")
     if oid in (pgt.TIMESTAMPOID, pgt.TIMESTAMPTZOID) \
             and pa.types.is_timestamp(t) and t.unit == "us":
         # arrow micros are unix-epoch (tz-typed columns store UTC
         # micros, matching the scalar path's session-is-UTC contract)
-        us = _ints(arr.cast(pa.timestamp("us")), pa.int64())
+        us = _values(arr.cast(pa.timestamp("us")), np.int64)
         return 8, (us - _PG_EPOCH_US).astype(">i8")
     return None
 
@@ -171,9 +181,7 @@ def encode_batch(batch, oids, array_elem=None, array_ndims=None,
         arr = batch.column(i).combine_chunks() \
             if hasattr(batch.column(i), "combine_chunks") \
             else batch.column(i)
-        null = np.zeros(n, dtype=bool)
-        if arr.null_count:
-            null = np.asarray(arr.is_null())
+        null = _null_mask(arr)
         kind = None
         if i not in array_elem:
             kind = _fixed_cols(arr, oids[i])
@@ -410,12 +418,18 @@ class VectorBinaryCopyReader:
     Arrow-identical to the scalar `pgwire.BinaryCopyReader` rows run
     through PySpark's own row→Arrow converters.
 
-    Per column: fixed-width types (bool, int2/4/8, float4/8, date,
-    timestamp/tz) are one big-endian numpy gather; text and bytea are
-    one Arrow `take` over the row buffer; every other wire type (and
-    any OID whose natural Arrow type is not the schema's) decodes
-    THAT COLUMN with the scalar `decode_field`/`decode_array` and
-    PySpark's converter.
+    Per column: the fixed-width types of `_FIXED` (bool, int2, int4,
+    int8, oid, float4, float8, date, timestamp, timestamptz) are one
+    big-endian numpy gather; the `_TEXT_FAMILY` (text, varchar,
+    bpchar, name, json, xml, "char") and bytea are one Arrow `take`
+    over the row buffer. Every other column takes `_scalar`: the
+    scalar `decode_field`/`decode_array` per value, then PySpark's
+    converter. Of the wire types a scan sends (`types.wire_layout`)
+    that is numeric, interval, every array column, the geometry
+    types (point, line, lseg, box, path, polygon, circle), and a fast
+    OID whose Arrow type is not the schema's: int2 into a ByteType
+    column, text into a struct or map column. Any other OID a caller
+    passes (uuid, jsonb, money, ranges, ...) takes it too.
 
     Row offsets come from the input's framing when it has one — a
     pgclient COPY OUT delivers one CopyData message per row — and
@@ -577,8 +591,13 @@ class VectorBinaryCopyReader:
             pa.large_binary() if big else pa.binary(), 2 * n,
             [None, pa.py_buffer(off if big else off.astype(np.int32)),
              pa.py_buffer(buf)])
-        idx = pa.array(np.arange(0, 2 * n, 2, dtype=np.int64),
-                       mask=null if null.any() else None)
+        # from_buffers, not pa.array(ndarray): the latter imports
+        # pyarrow's pandas shim (~0.3 s) on a worker's first decode
+        validity, nulls = _validity(null)
+        idx = pa.Array.from_buffers(
+            pa.int64(), n,
+            [validity, pa.py_buffer(np.arange(0, 2 * n, 2, dtype=np.int64))],
+            nulls)
         return both.take(idx).cast(target)
 
     @staticmethod

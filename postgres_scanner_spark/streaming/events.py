@@ -67,6 +67,24 @@ def _drain(q, timeout_s: int | None = None) -> None:
     _lint_stream_plan(q)
 
 
+def _drain_foreach(spark: SparkSession, schema, stage: str, sink,
+                   ckpt: str, max_files: int | None = None) -> None:
+    """Stream the parquet files under `stage` through `sink` with
+    foreachBatch, as one availableNow run checkpointed at `ckpt`
+    (`max_files` files per micro-batch; all of them when None), and
+    `_drain` it under `_stream_shuffle`."""
+    reader = spark.readStream.schema(schema)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files))
+    with _stream_shuffle(spark):
+        q = (reader.parquet(stage)
+             .writeStream.foreachBatch(sink)
+             .trigger(availableNow=True)
+             .option("checkpointLocation", ckpt)
+             .start())
+        _drain(q)
+
+
 def _lint_stream_plan(q) -> None:
     """Drain-time scale lint for streaming plans. The batch plan lint
     (tests/test_scale_patterns.py) skips streaming queries because
@@ -518,13 +536,7 @@ def e9_stream_ingest_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         store.insert("events_bronze", batch_df)
 
-    with _stream_shuffle(spark):
-        q = (spark.readStream.schema(schema).parquet(stage)
-             .writeStream.foreachBatch(sink)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", os.path.join(root, "_ckpt"))
-             .start())
-        _drain(q)
+    _drain_foreach(spark, schema, stage, sink, os.path.join(root, "_ckpt"))
     return (
         store.scan("events_bronze")
         .groupBy("event_type")
@@ -808,13 +820,7 @@ def e13_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             finally:
                 batch_df.unpersist()
 
-        with _stream_shuffle(spark):
-            q = (spark.readStream.schema(schema).parquet(stage)
-                 .writeStream.foreachBatch(sink)
-                 .trigger(availableNow=True)
-                 .option("checkpointLocation", ckpt)
-                 .start())
-            _drain(q)
+        _drain_foreach(spark, schema, stage, sink, ckpt)
 
     run(1)
     pq.write_table(rest, os.path.join(stage, "b2.parquet"))
@@ -892,15 +898,8 @@ def e14_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                   .filter(F.col("rk") == 1).drop("rk"))
         store.merge("user_latest", latest, ["user_id"])
 
-    with _stream_shuffle(spark):
-        q = (spark.readStream.schema(schema)
-             .option("maxFilesPerTrigger", "1")
-             .parquet(stage)
-             .writeStream.foreachBatch(merge)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", os.path.join(root, "_ckpt"))
-             .start())
-        _drain(q)
+    _drain_foreach(spark, schema, stage, merge,
+                   os.path.join(root, "_ckpt"), max_files=1)
     return (
         store.scan("user_latest")
         .select("user_id", F.col("event_id").alias("last_event_id"),
@@ -1178,15 +1177,8 @@ def e17_streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             b.unpersist()
 
     schema = spark.read.parquet(src).schema
-    with _stream_shuffle(spark):
-        q = (spark.readStream.schema(schema)
-             .option("maxFilesPerTrigger", "1")
-             .parquet(stage)
-             .writeStream.foreachBatch(sink)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", os.path.join(root, "_ckpt"))
-             .start())
-        _drain(q)
+    _drain_foreach(spark, schema, stage, sink,
+                   os.path.join(root, "_ckpt"), max_files=1)
     return (store.scan("docs_dedup")
             .groupBy("lang")
             .agg(F.count("*").cast("long").alias("n_kept"),
@@ -1275,13 +1267,7 @@ def e18_streaming_quality_router(spark: SparkSession, sf_dir: str
                      routed.filter(F.col("reason").isNotNull()))
 
     schema = spark.read.parquet(src).schema
-    with _stream_shuffle(spark):
-        q = (spark.readStream.schema(schema).parquet(stage)
-             .writeStream.foreachBatch(sink)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", os.path.join(root, "_ckpt"))
-             .start())
-        _drain(q)
+    _drain_foreach(spark, schema, stage, sink, os.path.join(root, "_ckpt"))
     kept = store.scan("docs_kept").select(
         F.lit("kept").alias("route"), F.lit(None).cast("string")
         .alias("reason"), "lang", "doc_id")
@@ -1391,15 +1377,8 @@ def e20_streaming_neardup_ingest(spark: SparkSession, sf_dir: str
             bands.unpersist()
 
     schema = spark.read.parquet(src).schema
-    with _stream_shuffle(spark):
-        q = (spark.readStream.schema(schema)
-             .option("maxFilesPerTrigger", "1")
-             .parquet(stage)
-             .writeStream.foreachBatch(sink)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", os.path.join(root, "_ckpt"))
-             .start())
-        _drain(q)
+    _drain_foreach(spark, schema, stage, sink,
+                   os.path.join(root, "_ckpt"), max_files=1)
     return (store.scan("docs_lsh")
             .groupBy("lang")
             .agg(F.count("*").cast("long").alias("n_kept"),
@@ -1407,16 +1386,9 @@ def e20_streaming_neardup_ingest(spark: SparkSession, sf_dir: str
             .orderBy("lang"))
 
 
-def _e20_sql() -> str:
-    from ..operators.dedup import (
-        N_BANDS, _sql_shingles, _sql_sig_clause,
-    )
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, batch, {b} AS band_id, "
-        f"md5(mh{2*b}||mh{2*b+1}) AS band_hash FROM sig"
-        for b in range(N_BANDS))
-    return f"""
-WITH params AS (SELECT COUNT(*) AS nn, MAX(doc_id) + 1 AS mx1
+# The oracle twin of `_stage_doc_batches`: the three micro-batches E20
+# and E22 stream, planted near-dups included, as `streamed`.
+_SQL_STREAMED = """params AS (SELECT COUNT(*) AS nn, MAX(doc_id) + 1 AS mx1
                FROM documents),
 streamed AS MATERIALIZED (
   SELECT doc_id, text, lang, 1 AS batch FROM documents, params
@@ -1436,7 +1408,19 @@ streamed AS MATERIALIZED (
   UNION ALL
   SELECT doc_id + GREATEST(700000, 30 * mx1) + g.i, text, lang, 3
   FROM documents, (SELECT unnest(range(2)) AS i) g, params
-  WHERE doc_id = nn - 1),
+  WHERE doc_id = nn - 1)"""
+
+
+def _e20_sql() -> str:
+    from ..operators.dedup import (
+        N_BANDS, _sql_shingles, _sql_sig_clause,
+    )
+    band_rows = " UNION ALL ".join(
+        f"SELECT doc_id, batch, {b} AS band_id, "
+        f"md5(mh{2*b}||mh{2*b+1}) AS band_hash FROM sig"
+        for b in range(N_BANDS))
+    return f"""
+WITH {_SQL_STREAMED},
 tok AS (SELECT doc_id, batch, string_split(lower(text), ' ') AS t
         FROM streamed),
 sh AS MATERIALIZED (SELECT doc_id, batch, {_sql_shingles(3)} AS shingles
@@ -1592,24 +1576,14 @@ def e19_idempotent_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(src).schema
     ckpt = os.path.join(root, "_ckpt")
     with _stream_shuffle(spark):
-        q = (spark.readStream.schema(schema).parquet(stage)
-             .writeStream.foreachBatch(sink)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", ckpt)
-             .start())
-        _drain(q)
+        _drain_foreach(spark, schema, stage, sink, ckpt)
         # simulate the double-delivery window: re-deliver every
         # drained batch by hand — the guard must drop all of them
         for bid, bdf in replay_bait.items():
             sink(bdf, bid)
         # and a full restart against the same checkpoint: processes
         # nothing new, appends nothing
-        q = (spark.readStream.schema(schema).parquet(stage)
-             .writeStream.foreachBatch(sink)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", ckpt)
-             .start())
-        _drain(q)
+        _drain_foreach(spark, schema, stage, sink, ckpt)
     return (store.scan("events_once")
             .groupBy("event_type")
             .agg(F.count("*").cast("long").alias("n"),
@@ -1696,15 +1670,8 @@ def e22_streaming_contamination_guard(spark: SparkSession, sf_dir: str
             b.unpersist()
 
     schema = spark.read.parquet(src).schema
-    with _stream_shuffle(spark):
-        q = (spark.readStream.schema(schema)
-             .option("maxFilesPerTrigger", "1")
-             .parquet(stage)
-             .writeStream.foreachBatch(sink)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", os.path.join(root, "_ckpt"))
-             .start())
-        _drain(q)
+    _drain_foreach(spark, schema, stage, sink,
+                   os.path.join(root, "_ckpt"), max_files=1)
     return (store.scan("routed").groupBy("lang")
             .agg(F.sum("kept").cast("long").alias("n_kept"),
                  F.sum(F.when(F.col("kept") == 1, F.col("doc_id"))
@@ -1717,27 +1684,7 @@ def e22_streaming_contamination_guard(spark: SparkSession, sf_dir: str
 def _e22_sql() -> str:
     from ..operators.dedup import _sql_shingles
     return f"""
-WITH params AS (SELECT COUNT(*) AS nn, MAX(doc_id) + 1 AS mx1
-               FROM documents),
-streamed AS MATERIALIZED (
-  SELECT doc_id, text, lang, 1 AS batch FROM documents, params
-  WHERE doc_id < nn // 3
-  UNION ALL
-  SELECT doc_id, text, lang, 2 FROM documents, params
-  WHERE doc_id >= nn // 3 AND doc_id < 2 * nn // 3
-  UNION ALL
-  SELECT doc_id + GREATEST(500000, 10 * mx1), text, lang, 2
-  FROM documents, params WHERE doc_id < 10
-  UNION ALL
-  SELECT doc_id, text, lang, 3 FROM documents, params
-  WHERE doc_id >= 2 * nn // 3
-  UNION ALL
-  SELECT doc_id + GREATEST(600000, 20 * mx1), text, lang, 3
-  FROM documents, params WHERE doc_id >= 10 AND doc_id < 20
-  UNION ALL
-  SELECT doc_id + GREATEST(700000, 30 * mx1) + g.i, text, lang, 3
-  FROM documents, (SELECT unnest(range(2)) AS i) g, params
-  WHERE doc_id = nn - 1),
+WITH {_SQL_STREAMED},
 ev AS MATERIALIZED (
   SELECT DISTINCT s FROM (
     SELECT unnest({_sql_shingles(5)}) AS s
@@ -2009,13 +1956,7 @@ def e24_streaming_cms_maintenance(spark: SparkSession, sf_dir: str
 
     schema = spark.read.parquet(src).schema
     ckpt = os.path.join(root, "_ckpt")
-    with _stream_shuffle(spark):
-        q = (spark.readStream.schema(schema).parquet(stage)
-             .writeStream.foreachBatch(sink)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", ckpt)
-             .start())
-        _drain(q)
+    _drain_foreach(spark, schema, stage, sink, ckpt)
     docs = _tb.load(spark, sf_dir, "documents")
     tok = (docs.select(F.explode(F.split(F.lower("text"), " "))
                        .alias("tk"))
@@ -2147,13 +2088,7 @@ def e25_streaming_hll_distinct(spark: SparkSession, sf_dir: str
 
     schema = spark.read.parquet(src).schema
     ckpt = os.path.join(root, "_ckpt")
-    with _stream_shuffle(spark):
-        q = (spark.readStream.schema(schema).parquet(stage)
-             .writeStream.foreachBatch(sink)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", ckpt)
-             .start())
-        _drain(q)
+    _drain_foreach(spark, schema, stage, sink, ckpt)
     regs = store.scan("hll_regs")
     summ = regs.agg(
         F.count("*").cast("long").alias("m_used"),

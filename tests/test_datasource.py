@@ -1114,16 +1114,37 @@ def test_page_probe_bug_propagates(monkeypatch):
 
 
 def test_debug_show_queries_logs_reader_sql(monkeypatch, caplog):
+    """A task's SQL is logged once, when it becomes a task (a stream
+    slice's read builds its task the same way), not when rendered."""
     SETTINGS.set("pg_debug_show_queries", True)
     try:
         r = _probe_reader(monkeypatch, None)
         with caplog.at_level("WARNING",
                              logger="postgres_scanner_spark.pg_datasource"):
             sql = r._sql("id > 3")
+            assert caplog.records == []
+            assert r._task(sql).sql == sql
     finally:
         SETTINGS.set("pg_debug_show_queries", False)
     assert [rec.getMessage() for rec in caplog.records] == [f"pg scan {sql}"]
     assert sql.endswith("WHERE id > 3")
+
+
+def test_debug_show_queries_logs_passthrough_sql(pg, pg_server, caplog):
+    """A `query`-mode scan's one task logs its wrapped SQL, the same
+    way a table scan's tasks do."""
+    from postgres_scanner_spark.pg_datasource import PostgresScanDataSource
+    _items(pg)
+    query = "SELECT id, name FROM ds_items WHERE id < 5"
+    ds = PostgresScanDataSource({"dsn": pg_server, "query": query,
+                                 "pg_debug_show_queries": "true"})
+    with caplog.at_level("WARNING",
+                         logger="postgres_scanner_spark.pg_datasource"):
+        (task,) = ds.reader(ds.schema()).partitions()
+    assert task.sql.startswith("SELECT ")
+    assert task.sql.endswith(f" FROM ({query}) AS q")
+    assert [rec.getMessage() for rec in caplog.records] == [
+        f"pg scan {task.sql}"]
 
 
 def _probe_conn(monkeypatch, close):

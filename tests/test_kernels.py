@@ -326,3 +326,22 @@ def test_tile_output_is_block_count_invariant(spark, sf_dir, monkeypatch):
     d14 = at(8, dd.d14_semantic_dedup)
     assert d14, "tiny corpus must still produce co-clustered pairs"
     assert at(1, dd.d14_semantic_dedup) == d14
+
+
+def test_cos_top_k_tail(spark):
+    """`ann.cos_top_k`, the tail of A1/A2/A3/A5/A8/A12: per query the
+    TOP_K best cos_raw, ties broken on the lower neighbor_id, cos_sim
+    rounded half-up at 5 decimals, an int rank, ordered by (query,
+    rank) whatever the input order."""
+    from pyspark.sql import types as T
+    assert ann.TOP_K == 3
+    scored = spark.createDataFrame(
+        [(1, 9, 0.5), (0, 7, 0.9), (1, 4, 0.123456), (0, 2, 0.5),
+         (0, 3, 0.9), (1, 8, 0.5), (0, 1, 0.8), (1, 6, 0.123455)],
+        "query_id long, neighbor_id long, cos_raw double")
+    out = ann.cos_top_k(scored)
+    assert out.schema["rank"].dataType == T.IntegerType()
+    assert out.columns == ["query_id", "neighbor_id", "cos_sim", "rank"]
+    assert _rows(out) == [
+        (0, 3, 0.9, 1), (0, 7, 0.9, 2), (0, 1, 0.8, 3),
+        (1, 8, 0.5, 1), (1, 9, 0.5, 2), (1, 4, 0.12346, 3)]

@@ -931,3 +931,40 @@ def test_vector_reader_fuzz_matches_scalar_oracle(frame, nblocks):
     r = VectorBinaryCopyReader(oids, array_cols, schema)
     assert_arrow_identical(r.read(chunks), want)
     assert_arrow_identical(r.read(_copy_out(data, nblocks)), want)
+
+
+_NO_PANDAS_SCRIPT = """
+import datetime, io, sys
+from pyspark.sql import types as T
+from postgres_scanner_spark import pgwire, pgwire_vec, types as pgt
+oids = [pgt.INT8OID, pgt.FLOAT8OID, pgt.TEXTOID, pgt.TIMESTAMPOID]
+rows = [(1, 1.5, "x", datetime.datetime(2020, 1, 1)),
+        (None, 2.5, None, None),
+        (-3, None, "zz", datetime.datetime(1999, 5, 5, 1, 2, 3))]
+src = io.BytesIO()
+pgwire.BinaryCopyWriter(oids).write(src, rows)
+schema = T.StructType([T.StructField("a", T.LongType()),
+                       T.StructField("b", T.DoubleType()),
+                       T.StructField("c", T.StringType()),
+                       T.StructField("d", T.TimestampNTZType())])
+reader = pgwire_vec.VectorBinaryCopyReader(oids, [], schema)
+batches = list(reader.read([src.getvalue()]))
+out = io.BytesIO()
+pgwire_vec.VectorBinaryCopyWriter(oids).write_batches(out, batches)
+assert out.getvalue() == src.getvalue()
+print("pandas" in sys.modules)
+"""
+
+
+def test_vectorized_codec_does_not_import_pandas():
+    """A fresh process that decodes and re-encodes int8, float8, text
+    and timestamp PGCOPY never imports pandas: pyarrow's pandas shim
+    costs a worker's first scan ~0.3 s."""
+    import subprocess
+    import sys
+    from pathlib import Path
+    out = subprocess.run([sys.executable, "-c", _NO_PANDAS_SCRIPT],
+                         capture_output=True, text=True, timeout=120,
+                         cwd=Path(__file__).resolve().parents[1])
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ["False"]
