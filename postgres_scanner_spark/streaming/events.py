@@ -14,6 +14,7 @@ per-active-session, not per-event.
 
 from __future__ import annotations
 
+import re
 import uuid
 
 from py4j.protocol import Py4JError
@@ -162,6 +163,57 @@ def _stage_symlink(src: str) -> str:
     return stage
 
 
+# `.pid` is absent on the older form, which was wiped on each entry
+# and which nothing creates now
+_RUN_DIR = re.compile(r"pg_spark_(\w+)_[0-9a-f]{8}(?:\.(\d+))?")
+
+
+def _pid_alive(pid: int) -> bool:
+    import os
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:               # alive, another user's
+        pass
+    return True
+
+
+def run_dir_in_use(path: str) -> bool:
+    """Whether `path` is a `_run_dir` of another process that still
+    runs."""
+    import os
+    m = _RUN_DIR.fullmatch(os.path.basename(path))
+    return (m is not None and m.group(2) is not None
+            and int(m.group(2)) != os.getpid()
+            and _pid_alive(int(m.group(2))))
+
+
+def _run_dir(tag: str, key: str) -> str:
+    """This process's working dir for one run of a streaming op (its
+    store, sink and checkpoint), named by `tag`, a hash of `key` and
+    the pid: two processes running the same op never delete each
+    other's state. On entry it removes this process's earlier dir for
+    `key` and every `tag` dir whose process no longer runs or that
+    has no pid, so repeated runs do not leak a dir each.
+    Content-keyed staged inputs are built atomically and stay
+    shared."""
+    import glob
+    import hashlib
+    import os
+    import shutil
+    root = os.path.join("/tmp", f"pg_spark_{tag}_"
+                        f"{hashlib.md5(key.encode()).hexdigest()[:8]}"
+                        f".{os.getpid()}")
+    shutil.rmtree(root, ignore_errors=True)
+    for d in glob.glob(f"/tmp/pg_spark_{tag}_*"):
+        m = _RUN_DIR.fullmatch(os.path.basename(d))
+        if m and m.group(1) == tag and (
+                m.group(2) is None or not _pid_alive(int(m.group(2)))):
+            shutil.rmtree(d, ignore_errors=True)
+    return root
+
+
 def _ev(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import tables
     return tables.load(spark, sf_dir, "events")
@@ -238,8 +290,6 @@ def e3_streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     every window in state, so a full drain equals the batch hourly
     rollup — full DuckDB oracle (the watermark only bounds state in
     append mode)."""
-    import hashlib
-    import os
     # Spark's file stream source requires a directory; stage the
     # single events.parquet behind a symlink dir (testdata is read-only)
     src = f"{sf_dir}/events.parquet"
@@ -341,8 +391,6 @@ def e6_stateful_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine oracle (the per-batch emissions still exercise the
     incremental state machinery).
     """
-    import hashlib
-    import os
 
     import pandas as pd
     from pyspark.sql import types as T
@@ -423,8 +471,6 @@ def e7_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicatesWithinWatermark to bound it in event time). After a
     full drain the result equals the batch distinct count, so unlike
     most streaming ops it has a full DuckDB oracle."""
-    import hashlib
-    import os
     src = f"{sf_dir}/events.parquet"
     stage = _stage_symlink(src)
     from .. import tables as _tb
@@ -462,8 +508,6 @@ def e8_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the Spark-native extension of the scan API). Inner interval
     joins emit matches immediately, so a full availableNow drain
     equals the batch join — full DuckDB oracle."""
-    import hashlib
-    import os
     src = f"{sf_dir}/events.parquet"
     stage = _stage_symlink(src)
     from .. import tables as _tb
@@ -515,19 +559,13 @@ def e9_stream_ingest_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     as an atomic snapshot append (writers never block readers), and
     after the availableNow drain the stored table equals the batch
     source, so the aggregate has a full DuckDB oracle."""
-    import hashlib
     import os
-    import shutil
     from ..storage import ManagedStore
     from .. import tables as _tb
     _tb.ensure_session_defaults(spark)
     src = f"{sf_dir}/events.parquet"
     stage = _stage_symlink(src)
-    # deterministic per-source root, wiped on entry: repeated runs
-    # reuse ONE directory instead of leaking a fresh mkdtemp each call
-    root = os.path.join(
-        "/tmp", "pg_spark_ingest_" + hashlib.md5(src.encode()).hexdigest()[:8])
-    shutil.rmtree(root, ignore_errors=True)
+    root = _run_dir("ingest", src)
     store = ManagedStore(spark, root)
     schema = spark.read.parquet(src).schema
     store.create_table(
@@ -664,8 +702,6 @@ def e11_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     computation — the strongest cross-check a stateful streaming op
     can have. At scale the watermark evicts closed sessions in append
     mode; state is per ACTIVE session, not per event."""
-    import hashlib
-    import os
     from .. import tables as _tb
     _tb.ensure_session_defaults(spark)
     src = f"{sf_dir}/events.parquet"
@@ -760,17 +796,21 @@ def _split_events_by_ts(src: str):
             t.filter(pc.greater_equal(t["ts"], split)))
 
 
-def _content_keyed_dir(src: str, tag: str) -> str:
-    """/tmp dir name keyed on the source CONTENT (mtime+size) and the
-    split constant: regenerated testdata must never replay stale
-    staged batches."""
-    import hashlib
+def _content_key(src: str) -> str:
+    """Key of the source CONTENT (mtime+size) and the split constant:
+    regenerated testdata must never replay stale staged batches."""
     import os
     st = os.stat(src)
-    key = f"v1:{src}:{st.st_mtime_ns}:{st.st_size}:{_E13_SPLIT}"
+    return f"v1:{src}:{st.st_mtime_ns}:{st.st_size}:{_E13_SPLIT}"
+
+
+def _content_keyed_dir(src: str, tag: str) -> str:
+    """Shared /tmp dir for `src`'s staged batches, by `_content_key`."""
+    import hashlib
+    import os
     return os.path.join(
-        "/tmp",
-        f"pg_spark_{tag}_" + hashlib.md5(key.encode()).hexdigest()[:8])
+        "/tmp", f"pg_spark_{tag}_"
+        + hashlib.md5(_content_key(src).encode()).hexdigest()[:8])
 
 
 def e13_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -791,15 +831,13 @@ def e13_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the second half's row count (nothing re-read).
     """
     import os
-    import shutil
     import pyarrow.parquet as pq
     from .. import tables as _tb
     _tb.ensure_session_defaults(spark)
     src = f"{sf_dir}/events.parquet"
-    base = _content_keyed_dir(src, "resume")
     # the two-run protocol must start from an EMPTY checkpoint every
     # call — a stale checkpoint would make run 1 a no-op
-    shutil.rmtree(base, ignore_errors=True)
+    base = _run_dir("resume", _content_key(src))
     stage = os.path.join(base, "in")
     sink_dir = os.path.join(base, "sink")
     ckpt = os.path.join(base, "_ckpt")
@@ -885,8 +923,7 @@ def e14_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.rename(tmp, stage)
         except OSError:
             shutil.rmtree(tmp, ignore_errors=True)
-    root = _content_keyed_dir(src, "upsert_store")
-    shutil.rmtree(root, ignore_errors=True)
+    root = _run_dir("upsert_store", _content_key(src))
     store = ManagedStore(spark, root)
     schema = spark.read.parquet(src).schema
     store.create_table("user_latest", spark.createDataFrame([], schema))
@@ -1143,17 +1180,13 @@ def e17_streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows by survivors only; state lives in the store, not in
     executor memory — restartable from the checkpoint + store alone.
     """
-    import hashlib
     import os
-    import shutil
     from ..storage import ManagedStore
     from .. import tables as _tb
     _tb.ensure_session_defaults(spark)
     src = f"{sf_dir}/documents.parquet"
     stage, key = _stage_doc_batches(src, "pg_spark_dedupin_")
-    root = os.path.join(
-        "/tmp", "pg_spark_dedupst_" + hashlib.md5(key.encode()).hexdigest()[:8])
-    shutil.rmtree(root, ignore_errors=True)
+    root = _run_dir("dedupst", key)
     store = ManagedStore(spark, root)
     store.create_table("docs_dedup", spark.createDataFrame(
         [], "doc_id BIGINT, h STRING, lang STRING"))
@@ -1236,17 +1269,13 @@ def e18_streaming_quality_router(spark: SparkSession, sf_dir: str
     UDF); each micro-batch writes two partitioned appends; the
     router itself holds NO state — restart replays only the
     unconsumed source tail."""
-    import hashlib
     import os
-    import shutil
     from ..storage import ManagedStore
     from .. import tables as _tb
     _tb.ensure_session_defaults(spark)
     src = f"{sf_dir}/documents.parquet"
     stage = _stage_symlink(src)
-    root = os.path.join(
-        "/tmp", "pg_spark_router_" + hashlib.md5(src.encode()).hexdigest()[:8])
-    shutil.rmtree(root, ignore_errors=True)
+    root = _run_dir("router", src)
     store = ManagedStore(spark, root)
     out_schema = "doc_id BIGINT, lang STRING, batch_id BIGINT, reason STRING"
     store.create_table("docs_kept", spark.createDataFrame([], out_schema))
@@ -1320,18 +1349,14 @@ def e20_streaming_neardup_ingest(spark: SparkSession, sf_dir: str
     Scale: per batch only the batch shingles; the probe semi-joins
     the (band_id, band_hash) index — 32-hex tuples, never text; the
     index grows by survivors only. State = store, restartable."""
-    import hashlib
     import os
-    import shutil
     from ..operators.dedup import minhash_bands, shingle_index
     from ..storage import ManagedStore
     from .. import tables as _tb
     _tb.ensure_session_defaults(spark)
     src = f"{sf_dir}/documents.parquet"
     stage, key = _stage_doc_batches(src, "pg_spark_lshin_")
-    root = os.path.join(
-        "/tmp", "pg_spark_lshst_" + hashlib.md5(key.encode()).hexdigest()[:8])
-    shutil.rmtree(root, ignore_errors=True)
+    root = _run_dir("lshst", key)
     store = ManagedStore(spark, root)
     store.create_table("docs_lsh", spark.createDataFrame(
         [], "doc_id BIGINT, lang STRING"))
@@ -1545,17 +1570,13 @@ def e19_idempotent_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per micro-batch; appends stay atomic snapshots. This is
     E18's documented upgrade path from at-least-once.
     """
-    import hashlib
     import os
-    import shutil
     from ..storage import ManagedStore
     from .. import tables as _tb
     _tb.ensure_session_defaults(spark)
     src = f"{sf_dir}/events.parquet"
     stage = _stage_symlink(src)
-    root = os.path.join(
-        "/tmp", "pg_spark_once_" + hashlib.md5(src.encode()).hexdigest()[:8])
-    shutil.rmtree(root, ignore_errors=True)
+    root = _run_dir("once", src)
     store = ManagedStore(spark, root)
     store.create_table("events_once", spark.createDataFrame(
         [], "event_id BIGINT, event_type STRING, value DOUBLE, "
@@ -1622,9 +1643,7 @@ def e22_streaming_contamination_guard(spark: SparkSession, sf_dir: str
     shingles only itself; quarantine grows by flagged docs only.
     Reference: the reference has no streaming surface — this is
     test/sql decontamination practice composed with S29's loop."""
-    import hashlib
     import os
-    import shutil
     from ..operators.dedup import (
         _BLOOM_M_BITS, bloom_build, bloom_might_contain, shingle_index,
     )
@@ -1634,10 +1653,7 @@ def e22_streaming_contamination_guard(spark: SparkSession, sf_dir: str
     _tb.ensure_session_defaults(spark)
     src = f"{sf_dir}/documents.parquet"
     stage, key = _stage_doc_batches(src, "pg_spark_contamin_")
-    root = os.path.join(
-        "/tmp",
-        "pg_spark_contamst_" + hashlib.md5(key.encode()).hexdigest()[:8])
-    shutil.rmtree(root, ignore_errors=True)
+    root = _run_dir("contamst", key)
     store = ManagedStore(spark, root)
     # one routed table with a kept flag = clean set AND quarantine
     # audit trail in a single per-batch insert (kept=0 rows are the
@@ -1912,18 +1928,14 @@ def e24_streaming_cms_maintenance(spark: SparkSession, sf_dir: str
     ids), so the streamed corpus is documents ∪ shifted copies and
     the oracle unrolls exactly that union before replaying X19's
     grid arithmetic."""
-    import hashlib
     import os
-    import shutil
     from ..functions.analytics import _X19_D, _X19_K, _x19_bucket
     from ..storage import ManagedStore
     from .. import tables as _tb
     _tb.ensure_session_defaults(spark)
     src = f"{sf_dir}/documents.parquet"
     stage, key = _stage_doc_batches(src, "pg_spark_cmsin_")
-    root = os.path.join(
-        "/tmp", "pg_spark_cmsst_" + hashlib.md5(key.encode()).hexdigest()[:8])
-    shutil.rmtree(root, ignore_errors=True)
+    root = _run_dir("cmsst", key)
     store = ManagedStore(spark, root)
     store.create_table("cms_grid", spark.createDataFrame(
         [], "i INT, b BIGINT, total BIGINT"))
@@ -2048,18 +2060,14 @@ def e25_streaming_hll_distinct(spark: SparkSession, sf_dir: str
     Scale: per batch one distinct-token aggregate + a ≤512-row
     snapshot rewrite; state is CONSTANT in stream length and merge
     distributes over any fleet by GREATEST."""
-    import hashlib
     import os
-    import shutil
     from ..runtime import det_round
     from ..storage import ManagedStore
     from .. import tables as _tb
     _tb.ensure_session_defaults(spark)
     src = f"{sf_dir}/documents.parquet"
     stage, key = _stage_doc_batches(src, "pg_spark_hllin_")
-    root = os.path.join(
-        "/tmp", "pg_spark_hllst_" + hashlib.md5(key.encode()).hexdigest()[:8])
-    shutil.rmtree(root, ignore_errors=True)
+    root = _run_dir("hllst", key)
     store = ManagedStore(spark, root)
     store.create_table("hll_regs", spark.createDataFrame(
         [], "j BIGINT, m INT"))

@@ -575,3 +575,41 @@ def test_quiet_window_warns_tolerates_only_py4j_errors():
     _quiet_bounded_window_warns(session(_raises(Py4JError("no log4j2"))))
     with pytest.raises(TypeError):
         _quiet_bounded_window_warns(session(_raises(TypeError("bug"))))
+
+
+# ---- streaming run dirs --------------------------------------------
+def test_streaming_run_dirs_spare_live_processes_and_sweep_dead():
+    import os
+    import subprocess
+    import sys
+    from postgres_scanner_spark.streaming import events
+
+    live = subprocess.Popen([sys.executable, "-c",
+                             "import time; time.sleep(60)"])
+    dead = subprocess.Popen([sys.executable, "-c", "pass"])
+    dead.wait()
+    tag = f"unittest{os.getpid()}"
+    other = {pid: f"/tmp/pg_spark_{tag}_0123abcd.{pid}"
+             for pid in (live.pid, dead.pid)}
+    other[None] = f"/tmp/pg_spark_{tag}_0123abcd"    # pid-less form
+    try:
+        for d in other.values():
+            os.makedirs(d)
+        mine = events._run_dir(tag, "k")
+        assert mine.endswith(f".{os.getpid()}")
+        os.makedirs(os.path.join(mine, "_ckpt"))
+        assert events._run_dir(tag, "k") == mine
+        assert not os.path.exists(mine)         # own earlier run wiped
+        assert os.path.isdir(other[live.pid])   # a live process's kept
+        assert not os.path.exists(other[dead.pid])
+        assert not os.path.exists(other[None])
+        assert events.run_dir_in_use(other[live.pid])
+        assert not events.run_dir_in_use(other[dead.pid])
+        assert not events.run_dir_in_use(other[None])
+        assert not events.run_dir_in_use(mine)
+    finally:
+        live.kill()
+        live.wait()
+        for d in other.values():
+            if os.path.isdir(d):
+                os.rmdir(d)

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Run the headline queries' ORACLE SQL in DuckDB on the same parquet
 — the single-node baseline bench.py is graded against. Prints one
-JSON line in the same shape as bench.py.
+JSON line in the same shape as bench.py, timed by bench.py's own
+DuckDB loop (min of two passes).
 
 Usage: python tools/baseline_duckdb.py [sf_dir] [threads]
 """
@@ -10,7 +11,6 @@ from __future__ import annotations
 
 import json
 import sys
-import time
 from pathlib import Path
 
 _REPO = Path(__file__).resolve().parent.parent
@@ -18,31 +18,14 @@ sys.path.insert(0, str(_REPO))
 
 sys.path.insert(0, str(_REPO / "tests"))
 
-from bench import HEADLINE        # noqa: E402 — single source
-from oracle_harness import TABLES  # noqa: E402 — single source
+from bench import HEADLINE, _bench_duckdb  # noqa: E402 — single source
 
 
 def main() -> None:
-    import duckdb
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     threads = int(sys.argv[2]) if len(sys.argv) > 2 else 32
     import __spark_entry__ as entry
-    oracles = entry.oracle_sql()
-    con = duckdb.connect()
-    con.execute(f"SET threads TO {threads}")
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    # warm the OS page cache the same way bench.py warms Spark's
-    con.execute(oracles["q6_forecast_revenue"]).fetchall()
-    timings: dict[str, float] = {}
-    for _pass in range(2):            # min-of-2, matching bench.py
-        for name in HEADLINE:
-            t0 = time.perf_counter()
-            con.execute(oracles[name]).fetchall()
-            dt = round(time.perf_counter() - t0, 3)
-            if name not in timings or dt < timings[name]:
-                timings[name] = dt
+    timings = _bench_duckdb(entry.oracle_sql(), HEADLINE, sf_dir, threads)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     print(json.dumps({
         "metric": "duckdb_baseline_total",

@@ -2,7 +2,8 @@
 """Wall + Spark-job-count profile of streaming drain ops (e17/e18/
 e20/e22/e24/e25...). Each op runs solo in a fresh-session profile
 (AQE-on gate defaults — drains run inside the gate, not the bench),
-with /tmp state wiped first so every run pays the same cold path.
+with /tmp state wiped first so every run pays the same cold path
+(other live processes' run dirs are spared).
 Prints per-op wall seconds and the number of Spark jobs the drain
 submitted — the 'actions per batch' the r12 verdict asks to cut.
 
@@ -25,8 +26,12 @@ sys.path.insert(0, str(_REPO))
 
 
 def _wipe_state() -> None:
+    """Remove the engine's /tmp state so every pass pays the cold path,
+    sparing the run dirs of other live processes."""
+    from postgres_scanner_spark.streaming.events import run_dir_in_use
     for d in glob.glob("/tmp/pg_spark_*"):
-        shutil.rmtree(d, ignore_errors=True)
+        if not run_dir_in_use(d):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def main() -> None:
@@ -36,7 +41,7 @@ def main() -> None:
     ap.add_argument("--passes", type=int, default=2)
     args = ap.parse_args()
 
-    from postgres_scanner_spark import get_spark
+    from postgres_scanner_spark import get_spark, obs
     from postgres_scanner_spark.runtime import release_scratch
     import __spark_entry__ as entrymod
 
@@ -44,32 +49,16 @@ def main() -> None:
     qs = entrymod.queries()
     # warm JVM once so pass walls measure the op, not session startup
     qs["q6_forecast_revenue"](spark, args.sf).collect()
-
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    empty = sc._jvm.java.util.ArrayList()
-
-    def n_jobs() -> int:
-        return store.jobsList(empty).size()
-
-    def steal() -> int:
-        try:
-            with open("/proc/stat") as f:
-                return int(f.readline().split()[8])
-        except Exception:
-            return 0
-
     for name in args.names:
         for p in range(args.passes):
             _wipe_state()
             release_scratch()
-            j0, s0 = n_jobs(), steal()
-            t0 = time.perf_counter()
-            df = qs[name](spark, args.sf)
-            nrows = df.count()
-            dt = time.perf_counter() - t0
-            print(f"{name} pass{p}: wall={dt:.2f}s jobs={n_jobs()-j0} "
-                  f"rows={nrows} steal_ms={(steal()-s0)*10}",
+            with obs.measure(spark, name) as m:
+                t0 = time.perf_counter()
+                nrows = qs[name](spark, args.sf).count()
+                dt = time.perf_counter() - t0
+            print(f"{name} pass{p}: wall={dt:.2f}s jobs={m.totals['jobs']} "
+                  f"rows={nrows} steal_ms={m.totals['host_steal_ms']}",
                   flush=True)
     spark.stop()
 

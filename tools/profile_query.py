@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
-"""Per-stage profile of one (or more) bench queries, in the exact
-bench.py session profile (cache mode, AQE off, SF-dependent shuffle
-partitions). For each named query: runs N passes (default 2), prints
-per-stage rows (stage id, name-ish, tasks, summed run/cpu ms, gc,
-input/shuffle bytes) for the LAST pass plus the wall per pass, and
-optionally writes .explain("formatted") to a file.
+"""Per-stage profile of one (or more) bench queries, in bench.py's
+session profile (obs.bench_session: cache mode, AQE off, SF-dependent
+shuffle partitions). For each named query: runs N passes (default 2),
+prints per-stage rows (stage id, name-ish, tasks, summed run/cpu ms,
+gc, input/shuffle bytes) for the LAST pass plus the wall per pass,
+and optionally writes .explain("formatted") to a file.
 
 Usage:
   python tools/profile_query.py q1_pricing_summary [more...] \
@@ -37,70 +37,32 @@ def main() -> None:
 
     os.environ.setdefault("SPARK_GRAFT_CACHE",
                           "0" if args.no_cache else "1")
-    from postgres_scanner_spark import get_spark, tables
+    from postgres_scanner_spark import get_spark, obs
     from postgres_scanner_spark.runtime import release_scratch
     import __spark_entry__ as entrymod
 
-    spark = get_spark(cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    data_bytes = sum(p.stat().st_size
-                     for p in Path(args.sf).rglob("*.parquet"))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   "8" if data_bytes < (500 << 20) else "32")
-    tables.warm(spark, args.sf)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    spark = get_spark(cpus=cpus)
     qs = entrymod.queries()
-    qs["q6_forecast_revenue"](spark, args.sf).collect()  # warm JVM
-
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    empty = sc._jvm.java.util.ArrayList()
-    darr = sc._gateway.new_array(sc._jvm.double, 0)
-
-    def stages_since(watermark: int):
-        it = store.stageList(empty, False, False, darr, empty).iterator()
-        out = []
-        hi = watermark
-        while it.hasNext():
-            s = it.next()
-            sid = s.stageId()
-            if sid <= watermark:
-                continue
-            hi = max(hi, sid)
-            out.append({
-                "id": sid,
-                "tasks": s.numCompleteTasks(),
-                "run_ms": s.executorRunTime(),
-                "cpu_ms": s.executorCpuTime() // 1_000_000,
-                "gc_ms": s.jvmGcTime(),
-                "in_mb": round(s.inputBytes() / 1e6, 1),
-                "sr_mb": round(s.shuffleReadBytes() / 1e6, 2),
-                "sw_mb": round(s.shuffleWriteBytes() / 1e6, 2),
-                "name": s.name()[:70],
-            })
-        return hi, sorted(out, key=lambda d: d["id"])
-
-    wm, _ = stages_since(-1)
+    obs.bench_session(spark, args.sf, cpus, qs)
     for name in args.names:
         walls = []
-        last_stages = []
         for p in range(args.passes):
             release_scratch()
-            t0 = time.perf_counter()
-            df = qs[name](spark, args.sf)
-            n = (df.count() if name.startswith(("d", "a", "e", "t"))
-                 else len(df.collect()))
-            walls.append(round(time.perf_counter() - t0, 3))
-            wm, last_stages = stages_since(wm)
+            with obs.measure(spark, name) as m:
+                t0 = time.perf_counter()
+                n = obs.run_query(qs[name](spark, args.sf), name)
+                walls.append(round(time.perf_counter() - t0, 3))
         release_scratch()
         print(f"\n=== {name} rows={n} walls={walls}")
-        tot_run = sum(s["run_ms"] for s in last_stages)
-        for s in last_stages:
+        for s in m.stages:
             print(f"  st{s['id']:4d} tasks={s['tasks']:3d} "
                   f"run={s['run_ms']:6d} cpu={s['cpu_ms']:6d} "
                   f"gc={s['gc_ms']:4d} in={s['in_mb']:7.1f} "
-                  f"sr={s['sr_mb']:7.2f} sw={s['sw_mb']:7.2f}  {s['name']}")
-        print(f"  last-pass stages={len(last_stages)} "
-              f"sum_run_ms={tot_run} wall={walls[-1]}")
+                  f"sr={s['shuf_r_mb']:7.2f} sw={s['shuf_w_mb']:7.2f}  "
+                  f"{s['name'][:70]}")
+        print(f"  last-pass stages={m.totals['stages']} "
+              f"sum_run_ms={m.totals['run_ms']} wall={walls[-1]}")
         if args.explain_dir:
             d = _REPO / args.explain_dir
             d.mkdir(parents=True, exist_ok=True)
