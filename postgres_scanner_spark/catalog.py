@@ -5,15 +5,15 @@ postgres_catalog.cpp: an attached database exposes its tables as
 queryable relations, supports listing, size introspection, a schema
 cache with pg_clear_cache, and (through storage.py) writable DML.
 
-Spark-first: an attached source registers each table as a temp view
-`{alias}_{table}` and in `spark.sql` via those names. Backends:
+Spark-first: an attached directory registers each table as a temp
+view `{alias}_{table}` and in `spark.sql` via those names. Backends:
   - "parquet": a directory of {table}.parquet (a database stand-in).
   - "store": a ManagedStore directory (storage.py), writable.
-  - "duckdb" (`duckdb://file`) and "postgres" (a libpq DSN, a
-    `postgres:` prefix or a `secret:` name): read through the
-    `postgres_scan` DataSource (pg_datasource.py); only the DSN
-    differs. A postgres attach is lazy: no connection is opened and
-    no views are registered until a table is read.
+  - "postgres" (a libpq DSN, a `postgres:` prefix or a `secret:`
+    name): a live server, read through the `postgres_scan`
+    DataSource (pg_datasource.py). The attach is lazy: it opens no
+    connection and registers no views; a table is read through
+    `Catalog.table`, and SQL reaches the server through `pg_query`.
 """
 
 from __future__ import annotations
@@ -58,7 +58,7 @@ def _is_store_dir(path: str) -> bool:
 class AttachedDatabase:
     alias: str
     source: str                   # dsn or directory path
-    backend: str                  # "parquet" | "store" | "duckdb" | "postgres"
+    backend: str                  # "parquet" | "store" | "postgres"
     read_only: bool = False
     conn: ConnectionInfo | None = None   # backend == "postgres"
     store: object = None          # ManagedStore when backend == "store"
@@ -82,25 +82,28 @@ class AttachedDatabase:
                 for f in os.listdir(self.source)
                 if f.endswith(".parquet")
             )
-        # duckdb:// or live Postgres: the tables of the attached schema
-        # (reference: postgres_table_set.cpp LoadEntries), restricted
-        # to `schema` when given (bug63.test source_schema)
-        from .pg_datasource import _ProbeConn
+        # live Postgres: the tables of the attached schema (reference:
+        # postgres_table_set.cpp LoadEntries), restricted to `schema`
+        # when given (bug63.test source_schema)
         from .pushdown import quote_literal
-        default = "main" if self.backend == "duckdb" else "public"
-        with _ProbeConn(self.dsn) as pc:
-            rows = pc.exec(
-                "SELECT table_name FROM information_schema.tables "
-                "WHERE table_catalog = current_database() AND "
-                f"table_schema = {quote_literal(self.schema or default)}")
+        rows = self._probe(
+            "SELECT table_name FROM information_schema.tables "
+            "WHERE table_catalog = current_database() AND "
+            f"table_schema = {quote_literal(self.schema or 'public')}")
         return sorted(r[0] for r in rows)
+
+    def _probe(self, sql: str) -> list:
+        """The rows of one catalog query on the live server."""
+        from .pg_datasource import _ProbeConn
+        with _ProbeConn(self.dsn) as pc:
+            return pc.exec(sql)
 
     @property
     def dsn(self) -> str:
-        """What the `postgres_scan` DataSource connects with: the
-        duckdb:// source, or a postgres attach's libpq DSN rendered
-        from `conn` (so a secret or `postgres:` prefix never leaks)."""
-        return self.conn.dsn if self.conn is not None else self.source
+        """What the `postgres_scan` DataSource connects with: the libpq
+        DSN rendered from `conn` (so a secret or `postgres:` prefix
+        never leaks)."""
+        return self.conn.dsn
 
 
 class Catalog:
@@ -140,11 +143,9 @@ class Catalog:
             db.store = ManagedStore(self.spark, source)
         elif os.path.isdir(source):
             db = AttachedDatabase(alias, source, "parquet", read_only)
-        elif source.startswith("duckdb://"):
-            # live-database stand-in: reads go through the postgres_scan
-            # DataSource connector (partitioned scan + pushdown)
-            db = AttachedDatabase(alias, source, "duckdb", read_only)
         else:
+            from .pg_datasource import refuse_standin
+            refuse_standin(source, "ATTACH")
             if os.path.sep in source and "=" not in source \
                     and "://" not in source:
                 # a filesystem path that is NOT a directory — failing
@@ -153,20 +154,18 @@ class Catalog:
                 if os.path.exists(source):
                     raise ValueError(
                         f"database path {source!r} is not a database "
-                        f"directory (a single-file database needs its "
-                        f"scheme, e.g. 'duckdb://{source}')")
+                        f"directory")
                 raise ValueError(
                     f"database path {source!r} does not exist")
             db = AttachedDatabase(alias, source, "postgres", read_only,
                                   conn=parse_dsn(source))
         db.schema = schema
-        if db.backend in ("duckdb", "postgres"):
+        if db.backend == "postgres":
             from .pg_datasource import ensure_registered
             ensure_registered(self.spark)
         self.attached[alias] = db
         try:
-            if register_views and db.backend in ("parquet", "duckdb",
-                                                 "store"):
+            if register_views and db.backend in ("parquet", "store"):
                 for t in db.table_names():
                     self.register_table_views(db, t)
                 if db.backend == "store":
@@ -261,8 +260,8 @@ class Catalog:
         if db.backend == "parquet":
             df = parquet_scan(self.spark, os.path.join(db.source, f"{name}.parquet"))
         else:
-            # duckdb:// or postgres: the postgres_scan DataSource, with
-            # the session's settings as options. Pushdown off: attached
+            # postgres: the postgres_scan DataSource, with the
+            # session's settings as options. Pushdown off: attached
             # relations are long-lived (temp views, repeated queries)
             # and the Python DS API scopes pushed filters to the
             # relation, not the query (see pg_datasource)
@@ -281,11 +280,12 @@ class Catalog:
         return self.attached[alias].table_names()
 
     def database_size(self, alias: str) -> int:
-        """reference: postgres_database_size → pg_database_size();
-        here: bytes on disk of the attached dataset."""
+        """reference: postgres_database_size → pg_database_size(); a
+        directory attach: bytes on disk of the attached dataset."""
         db = self.attached[alias]
-        if db.backend not in ("parquet", "store"):
-            raise NotImplementedError
+        if db.backend == "postgres":
+            return int(db._probe(
+                "SELECT pg_database_size(current_database())")[0][0])
         total = 0
         for root, _, files in os.walk(db.source):
             total += sum(os.path.getsize(os.path.join(root, f)) for f in files)

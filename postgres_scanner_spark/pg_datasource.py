@@ -29,7 +29,6 @@ Parity with the reference's execution strategy:
   numeric, interval, arrays, the geometry types, a ByteType column's
   int2 and a struct or map column's text (VectorBinaryCopyReader's
   docstring has the list).
-  The duckdb:// stand-in yields DuckDB's own Arrow batches.
 - streaming (`spark.readStream.format("postgres_scan")`): the same
   read() serves each micro-batch's stream-key slices
   (PostgresScanPartitionedStreamReader), so every row, batch or
@@ -41,11 +40,13 @@ Backends:
   behaviour (types, ctid tasks, pushdown, writes) is tested against a
   live server the test suite starts (tests/conftest.py `pg_server`).
 - `duckdb:///path/file.db` — a local DuckDB file standing in for the
-  server where none is needed: the registry's e16 stream, the
-  catalog's `duckdb://` attach and `pg_query` on it. The stand-in is
-  read-only and plans one task; it reads the plain types
-  (`_DUCK_TO_SPARK`, DECIMAL(p,s) and arrays of them) and its schema
-  probe raises on any other column type.
+  server in one place only: the registry's e16 stream, a
+  `readStream` with a declared schema. Its key probes run on
+  `_ProbeConn` and its slices run the live task SQL (DuckDB takes
+  the `::int8`/`::text`/`::float8` read casts) in DuckDB, which
+  yields its own Arrow batches. Every other use of a `duckdb://`
+  DSN — a schema probe, a batch read, a write, an attach — raises
+  at its first call (`refuse_standin`).
 """
 
 from __future__ import annotations
@@ -68,33 +69,15 @@ from .settings import Settings
 
 _log = logging.getLogger(__name__)
 
-# The scalars the duckdb:// stand-in reads (with DECIMAL(p,s) and
-# arrays of them): DuckDB hands them to Spark's Arrow ingest as they are
-_DUCK_TO_SPARK = {
-    "BOOLEAN": T.BooleanType(), "TINYINT": T.ByteType(),
-    "SMALLINT": T.ShortType(), "INTEGER": T.IntegerType(),
-    "BIGINT": T.LongType(), "HUGEINT": T.DecimalType(38, 0),
-    "FLOAT": T.FloatType(), "DOUBLE": T.DoubleType(),
-    "VARCHAR": T.StringType(), "BLOB": T.BinaryType(),
-    "DATE": T.DateType(), "TIMESTAMP": T.TimestampNTZType(),
-    "TIMESTAMP WITH TIME ZONE": T.TimestampType(),
-}
 
-
-def _duck_type(column: str, name: str) -> T.DataType:
-    """The Spark type of a stand-in column of DuckDB type `name`; any
-    type outside the plain set raises, naming the column."""
-    if name.endswith("[]"):
-        return T.ArrayType(_duck_type(column, name[:-2]))
-    if name.startswith("DECIMAL("):
-        p, sc = name[len("DECIMAL("):-1].split(",")
-        return T.DecimalType(int(p), int(sc))
-    if name not in _DUCK_TO_SPARK:
+def refuse_standin(dsn: str, use: str) -> None:
+    """Raise for `use` of a duckdb:// DSN: the stand-in serves e16's
+    stream and nothing else."""
+    if dsn.startswith("duckdb://"):
         raise ValueError(
-            f"the duckdb:// stand-in does not read column {column!r} of "
-            f"type {name}: it reads only plain types (use a Postgres "
-            f"server)")
-    return _DUCK_TO_SPARK[name]
+            f"{use}: the duckdb:// stand-in is read-only and serves one "
+            f"use, e16's stream (a readStream postgres_scan with a "
+            f"declared schema); use a Postgres server")
 
 
 class _Task(InputPartition):
@@ -142,7 +125,6 @@ class PostgresScanReader(DataSourceReader):
         # single stream (same as the reference's postgres_query)
         self.query = options.get("query", "")
         self.pg_schema = options.get("schema", "public")
-        self.schema_explicit = "schema" in options
         self.approx_pages = int(options.get("approx_pages", "0"))
         # the reader plans and reads in Python workers, which never see
         # the driver's settings: a scan's settings are its pg_* options
@@ -187,9 +169,6 @@ class PostgresScanReader(DataSourceReader):
 
     # -- task decomposition (reference: postgres_scanner.cpp PrepareBind)
     def partitions(self):
-        if self.dsn.startswith("duckdb://"):
-            # the stand-in reads as one task
-            return [self._task(self.query or self._sql(""))]
         if self.query:
             # wrap so every output column is cast to the wire format
             # the decoder expects (same as the table path)
@@ -208,8 +187,8 @@ class PostgresScanReader(DataSourceReader):
                 for t in tasks]
 
     def _task(self, sql: str) -> _Task:
-        """Every task's SQL, table, query, stand-in and stream slice
-        alike, passes here once: `pg_debug_show_queries` logs it."""
+        """Every task's SQL, table, query and stream slice alike,
+        passes here once: `pg_debug_show_queries` logs it."""
         if self.settings.pg_debug_show_queries:
             # WARNING: a PySpark worker drops INFO records; Python's
             # last-resort handler prints this to the driver's stderr
@@ -260,20 +239,11 @@ class PostgresScanReader(DataSourceReader):
 
     def _relation(self) -> str:
         """The scanned table as it appears in every query's FROM."""
-        if self.dsn.startswith("duckdb://") and not self.schema_explicit:
-            # the duckdb stand-in stays unqualified by default because
-            # duckdb's default schema is main, not public; an EXPLICIT
-            # schema qualifies it (source_schema attaches, bug63.test)
-            return f'"{self.table}"'
         return f'"{self.pg_schema}"."{self.table}"'
 
     def _sql(self, task_where: str) -> str:
-        if self.dsn.startswith("duckdb://"):
-            cols = ", ".join(f'"{f.name}"' for f in self.schema_.fields)
-        else:
-            cols = ", ".join(
-                f'"{f.name}"{self._col_cast(f)} AS "{f.name}"'
-                for f in self.schema_.fields)
+        cols = ", ".join(f'"{f.name}"{self._col_cast(f)} AS "{f.name}"'
+                         for f in self.schema_.fields)
         where = transform_filters(
             self.pushed, self.settings.pg_null_byte_replacement)
         preds = []
@@ -290,6 +260,7 @@ class PostgresScanReader(DataSourceReader):
     def read(self, partition: _Task) -> Iterator:
         sql = partition.sql
         if self.dsn.startswith("duckdb://"):
+            # e16's stream slice (the only reader a stand-in DSN gets)
             import duckdb
             con = duckdb.connect(self.dsn[len("duckdb://"):],
                                  read_only=True)
@@ -534,7 +505,7 @@ class PostgresScanWriter(DataSourceArrowWriter):
     The spool directory is made here, where Spark builds the writer,
     and never by a task: once commit() or abort() has removed it, a
     task still running fails to open its spool instead of leaving one
-    behind. The duckdb:// stand-in is read-only.
+    behind.
     """
 
     def __init__(self, schema: T.StructType, options, overwrite: bool,
@@ -547,10 +518,7 @@ class PostgresScanWriter(DataSourceArrowWriter):
         self.overwrite = overwrite
         self.dsn = self.options.get("dsn", "")
         self.table = self.options.get("table", "")
-        if self.dsn.startswith("duckdb://"):
-            raise ValueError(
-                "the duckdb:// stand-in is read-only: postgres_scan "
-                "writes go to a Postgres server")
+        refuse_standin(self.dsn, "postgres_scan write")
         if not self.table:
             raise ValueError("postgres_scan write needs .option('table')")
         self.null_byte_replacement = Settings.from_options(
@@ -717,14 +685,9 @@ def ensure_registered(spark) -> None:
         # Spark raises DATA_SOURCE_ALREADY_EXISTS for a duplicate
         # register; match that condition specifically — a bare
         # "exist" substring would also swallow "... does not exist"
-        cond = ""
         get_cond = getattr(exc, "getCondition", None) or \
             getattr(exc, "getErrorClass", None)
-        if callable(get_cond):
-            try:
-                cond = get_cond() or ""
-            except Exception:  # noqa: BLE001
-                cond = ""
+        cond = (get_cond() or "") if callable(get_cond) else ""
         msg = str(exc).lower()
         if ("ALREADY_EXISTS" not in cond
                 and "already exists" not in msg
@@ -745,32 +708,7 @@ class PostgresScanDataSource(DataSource):
         dsn = self.options.get("dsn", "")
         table = self.options.get("table", "")
         query = self.options.get("query", "")
-        if dsn.startswith("duckdb://"):
-            import duckdb
-            con = duckdb.connect(dsn[len("duckdb://"):], read_only=True)
-            try:
-                if query:
-                    probe = query
-                elif "schema" in self.options:
-                    probe = (f'SELECT * FROM '
-                             f'"{self.options["schema"]}"."{table}"')
-                else:
-                    probe = f'SELECT * FROM "{table}"'
-                desc = con.execute(f'DESCRIBE {probe}').fetchall()
-            finally:
-                con.close()
-            schema = T.StructType([
-                T.StructField(n, _duck_type(n, t), True)
-                for n, t, *_ in desc
-            ])
-            arrays = [f.name for f in schema.fields
-                      if isinstance(f.dataType, T.ArrayType)]
-            if as_varchar and arrays:
-                # DuckDB has no Postgres array text form to read back
-                raise ValueError(
-                    "pg_array_as_varchar is not supported by the "
-                    f"duckdb:// stand-in (array columns: {arrays})")
-            return schema
+        refuse_standin(dsn, "postgres_scan schema probe")
         from . import pgclient
         from .types import numeric_typmod, pg_type_to_spark
         if query:
@@ -857,6 +795,8 @@ class PostgresScanDataSource(DataSource):
         return opts
 
     def reader(self, schema: T.StructType) -> PostgresScanReader:
+        refuse_standin(self.options.get("dsn", ""),
+                       "postgres_scan batch read")
         return PostgresScanReader(schema, self._reader_options())
 
     def writer(self, schema: T.StructType,

@@ -6,8 +6,8 @@ DDL/DML remotely, no result).
 
 Spark-first: for an attached parquet-backed database the "remote
 side" is Spark SQL over the registered views — the query text runs
-unchanged through Catalyst. For a live Postgres (or duckdb://) attach
-the query ships to the remote engine through the `postgres_scan`
+unchanged through Catalyst. For a live Postgres attach the query
+ships to the remote engine through the `postgres_scan`
 DataSource's query mode (true passthrough: the remote engine executes
 it, Spark scans the result — identical split of work to the
 reference), and postgres_execute runs on one pgclient connection.
@@ -39,7 +39,7 @@ def pg_query(catalog: Catalog, alias: str, sql: str) -> DataFrame:
         # routing DDL here would bypass pg_execute's READ_ONLY gate
         raise ValueError(
             "postgres_query: input must be a SELECT statement")
-    if db.backend in ("duckdb", "postgres"):
+    if db.backend == "postgres":
         # true passthrough: the attached engine executes the SQL and the
         # postgres_scan DataSource streams the result on the EXECUTORS
         # (reference: PostgresQueryBind runs the text on the PG side and
@@ -839,16 +839,19 @@ _CALL_KWARG_RE = re.compile(
 
 def _call_postgres_attach(catalog: Catalog, dsn: str, argstr: str):
     """`CALL postgres_attach(dsn, ...)` — the reference's table-
-    function attach (src/postgres_attach.cpp AttachFunction): list
-    the source schema's tables and register one view per table under
-    its BARE name (the reference creates them in the sink schema;
-    Spark temp views are schema-less, and Catalog.attach already
-    registers both alias-prefixed and bare names). Named args map:
-    source_schema → attach(schema=...); overwrite=true re-attaches
-    (CREATE OR REPLACE VIEW) where the default keeps an existing
-    attach (CREATE VIEW IF NOT EXISTS); filter_pushdown and
-    sink_schema are accepted — pushdown is always on in the
-    connector, and the sink namespace has no Spark equivalent."""
+    function attach (src/postgres_attach.cpp AttachFunction), which
+    creates one view per table of the source schema. Here the call is
+    `Catalog.attach(dsn)` under the DSN's dbname as alias (else
+    "pg"), made the current database when none is: a live attach is
+    lazy and registers NO views, so a table reads through
+    `Catalog.table` and a bare table name in routed SQL reaches the
+    server through `pg_query`. Named args map: source_schema →
+    attach(schema=...); overwrite=true re-attaches where the default
+    keeps an existing attach of the same DSN; filter_pushdown and
+    sink_schema are accepted — attached tables scan with pushdown
+    off, and the sink namespace has no Spark equivalent."""
+    from .pg_datasource import refuse_standin
+    refuse_standin(dsn, "CALL postgres_attach")
     kwargs: dict = {}
     overwrite = False
     # anchored scan: every byte of the argument list must parse as a
@@ -883,10 +886,6 @@ def _call_postgres_attach(catalog: Catalog, dsn: str, argstr: str):
     alias = "pg"
     if dm := re.search(r"dbname=([\w-]+)", dsn):
         alias = dm.group(1)
-    elif dsn.startswith("duckdb://"):
-        import os
-        alias = os.path.splitext(os.path.basename(
-            dsn[len("duckdb://"):]))[0] or "pg"
     if alias in catalog.attached:
         existing = catalog.attached[alias]
         if not overwrite:

@@ -1068,8 +1068,8 @@ def e16_connector_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
     stream = (
         spark.readStream.format("postgres_scan").schema(schema)
-        .option("dsn", f"duckdb://{db}").option("table", "events")
-        .option("stream_key", "event_id").load()
+        .option("dsn", f"duckdb://{db}").option("schema", "main")
+        .option("table", "events").option("stream_key", "event_id").load()
         .groupBy("event_type")
         .agg(F.count("*").alias("n"),
              _sum_money(_money_u("value"), 2)

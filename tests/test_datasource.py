@@ -3,10 +3,10 @@
 The Postgres behaviours — partition decomposition over ctid ranges,
 pushdown, null semantics, nested arrays and every write — run against
 the live scratch server (tests/conftest.py `pg_server`), as the
-reference runs test/sql/scanner/* against a live PG. The `duckdb://`
-stand-in keeps the tests of what still uses it: a DuckDB file, the
-catalog's `duckdb://` attach with `pg_query` on it, and the stream
-mechanics the registry's e16 query reads through. A few tests swap
+reference runs test/sql/scanner/* against a live PG; so do the
+catalog's attach and `pg_query`. The `duckdb://` stand-in keeps the
+tests of its one use, the stream the registry's e16 query reads
+through, and of its refusal of every other use. A few tests swap
 `pgclient.connect` for a stub to pin what the package does without
 a server: a failing page probe, probe-connection close errors."""
 
@@ -18,25 +18,10 @@ from pyspark.sql import functions as F
 from postgres_scanner_spark.settings import SETTINGS
 
 
-@pytest.fixture(scope="module")
-def duck_db(tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("duck") / "pg_standin.db")
-    con = duckdb.connect(path)
-    con.execute("""
-        CREATE TABLE items AS
-        SELECT i AS id, 'name_' || (i % 100) AS name,
-               (i % 7) * 1.5 AS price,
-               CASE WHEN i % 10 = 0 THEN NULL ELSE i % 50 END AS bucket
-        FROM range(10000) t(i)
-    """)
-    con.close()
-    return path
-
-
-def _items(pg):
-    """The live twin of the stand-in's `items`: 10,000 rows."""
-    pg.cursor().execute("""
-        CREATE TABLE IF NOT EXISTS ds_items AS
+def _items(pg, table="ds_items"):
+    """A live table of 10,000 rows."""
+    pg.cursor().execute(f"""
+        CREATE TABLE IF NOT EXISTS {table} AS
         SELECT i::int8 AS id, 'name_' || (i % 100) AS name,
                (i % 7) * 1.5 AS price,
                CASE WHEN i % 10 = 0 THEN NULL ELSE i % 50 END AS bucket
@@ -88,26 +73,51 @@ def test_null_semantics_through_source(registered, pg, pg_server):
     assert n_null == 1000
 
 
-def test_attach_duckdb_backend(registered, duck_db, tmp_path):
-    """ATTACH a live-database stand-in: tables scan through the
-    postgres_scan connector; copy_database snapshots into a store
-    (reference: attach_simple.test + attach_copy_from_database.test)."""
+def test_attach_live_backend(registered, pg, pg_server, tmp_path):
+    """ATTACH a live Postgres: the attach is lazy and registers no
+    views; the attached schema's table lists, scans through the
+    postgres_scan connector, answers SQL through pg_query, and
+    copy_database snapshots it into a store (reference:
+    attach_simple.test + attach_copy_from_database.test)."""
     from postgres_scanner_spark.catalog import Catalog
+    from postgres_scanner_spark.queryfn import pg_query
     from postgres_scanner_spark.storage import ManagedStore
+    pg.cursor().execute("CREATE SCHEMA IF NOT EXISTS ds_attach")
+    _items(pg, "ds_attach.items")
     cat = Catalog(registered)
-    cat.attach(f"duckdb://{duck_db}", alias="pgdb")
+    db = cat.attach(pg_server, alias="pgdb", schema="ds_attach")
+    assert db.views == []
     assert cat.list_tables("pgdb") == ["items"]
-    assert cat.table("pgdb", "items").count() == 10000
-    # SQL over the attached view
-    n = registered.sql(
-        "SELECT COUNT(*) AS n FROM pgdb_items WHERE bucket IS NULL"
-    ).collect()[0].n
+    items = cat.table("pgdb", "items")
+    assert items.count() == 10000
+    assert items.filter(F.col("bucket").isNull()).count() == 1000
+    n = pg_query(cat, "pgdb", "SELECT COUNT(*) AS n FROM ds_attach.items "
+                 "WHERE bucket IS NULL").collect()[0].n
     assert n == 1000
     store = ManagedStore(registered, str(tmp_path / "migrated"))
     copied = cat.copy_database("pgdb", store)
     assert copied == ["items"]
     assert store.scan("items").count() == 10000
     cat.detach("pgdb")
+
+
+def test_database_size_on_live_attach(registered, pg, pg_server):
+    """postgres_database_size parity: a live attach reports the
+    server's pg_database_size of the attached database."""
+    from postgres_scanner_spark.catalog import Catalog
+    cat = Catalog(registered)
+    cat.attach(pg_server, alias="sz")
+    cur = pg.cursor()
+
+    def server_size():
+        cur.execute("SELECT pg_database_size('postgres')")
+        return cur.fetchone()[0]
+    before = server_size()
+    got = cat.database_size("sz")
+    after = server_size()
+    assert min(before, after) <= got <= max(before, after)
+    assert got > 0
+    cat.detach("sz")
 
 
 def test_relation_reuse_no_filter_leak(registered, pg, pg_server):
@@ -149,50 +159,65 @@ def test_binary_copy_option_fails_the_load(registered, pg, pg_server):
         _scan(registered, pg_server, pg_use_binary_copy="false")
 
 
-def test_session_binary_copy_setting_keeps_catalog_reads(registered,
-                                                         duck_db):
+def test_session_binary_copy_setting_keeps_catalog_reads(registered, pg,
+                                                         pg_server):
     """The driver-only setting stays on the driver: after a session SET,
     Catalog.table passes no pg_use_binary_copy option and still
     reads."""
     from postgres_scanner_spark.catalog import Catalog
     from postgres_scanner_spark.settings import SETTINGS
+    _items(pg)
     cat = Catalog(registered)
-    cat.attach(f"duckdb://{duck_db}", alias="bincopy")
+    cat.attach(pg_server, alias="bincopy")
     SETTINGS.set("pg_use_binary_copy", False)
     try:
         assert SETTINGS.scan_options() == {}
-        assert cat.table("bincopy", "items").count() == 10000
+        assert cat.table("bincopy", "ds_items").count() == 10000
     finally:
         SETTINGS.reset()
         cat.detach("bincopy")
 
 
-def test_array_as_varchar_rejected_by_duckdb_standin(registered, tmp_path):
-    """The duckdb:// stand-in has no Postgres array text form: under
-    pg_array_as_varchar a table with an array column fails its schema
-    probe, naming the stand-in, instead of typing the column array<…>
-    as live Postgres would not. A table without arrays reads as
-    before."""
+def test_duckdb_standin_refuses_all_but_the_stream(registered, tmp_path):
+    """The duckdb:// stand-in serves e16's stream only: a schema probe,
+    a batch read with a declared schema, a write, ATTACH and CALL
+    postgres_attach each raise one ValueError at their first call,
+    naming the stand-in and its one use. CALL postgres_attach raises
+    before it replaces the attach that holds the alias it derives."""
     from pyspark.sql import types as T
-    db = str(tmp_path / "arr.db")
+    from postgres_scanner_spark.catalog import Catalog
+    from postgres_scanner_spark.pg_datasource import PostgresScanDataSource
+    from postgres_scanner_spark.queryfn import execute_statement
+    db = str(tmp_path / "ev.db")
     con = duckdb.connect(db)
-    con.execute("CREATE TABLE a AS SELECT 1 AS id, [1, 2] AS xs")
-    con.execute("CREATE TABLE b AS SELECT 1 AS id, 'x' AS s")
+    con.execute("CREATE TABLE t AS SELECT 1::BIGINT AS id")
     con.close()
-
-    def load(table, **opts):
-        r = (registered.read.format("postgres_scan")
-             .option("dsn", f"duckdb://{db}").option("table", table))
-        for k, v in opts.items():
-            r = r.option(k, v)
-        return r.load()
-
-    assert load("a").schema["xs"].dataType == \
-        T.ArrayType(T.IntegerType(), True)
-    with pytest.raises(Exception, match=r"duckdb:// stand-in.*\['xs'\]"):
-        load("a", pg_array_as_varchar="true")
-    assert [tuple(r) for r in
-            load("b", pg_array_as_varchar="true").collect()] == [(1, "x")]
+    dsn = f"duckdb://{db}"
+    refusal = ("the duckdb:// stand-in is read-only and serves one use, "
+               "e16's stream")
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    ds = PostgresScanDataSource({"dsn": dsn, "schema": "main",
+                                 "table": "t"})
+    for call in (ds.schema, lambda: ds.reader(schema),
+                 lambda: ds.writer(schema, False),
+                 lambda: ds.streamWriter(schema, False)):
+        with pytest.raises(ValueError, match=refusal):
+            call()
+    load = (registered.read.format("postgres_scan").option("dsn", dsn)
+            .option("schema", "main").option("table", "t"))
+    with pytest.raises(Exception, match=refusal):
+        load.load()
+    with pytest.raises(Exception, match=refusal):
+        load.schema(schema).load().collect()
+    cat = Catalog(registered)
+    with pytest.raises(ValueError, match=refusal):
+        cat.attach(dsn, alias="d")
+    assert cat.attached == {}
+    held = cat.attach("host=h dbname=x", alias="pg")   # lazy: no connect
+    with pytest.raises(ValueError, match=refusal):
+        execute_statement(
+            cat, f"CALL postgres_attach('{dsn}', overwrite=true)")
+    assert cat.attached == {"pg": held}
 
 
 def test_duckdb_standin_write_raises(registered, tmp_path):
@@ -214,32 +239,9 @@ def test_duckdb_standin_write_raises(registered, tmp_path):
     assert _spool_dirs() - before == set()
 
 
-def test_duckdb_standin_rejects_non_plain_types(tmp_path):
-    """The stand-in reads only plain types: a table with an ENUM,
-    UBIGINT, TIME, INTERVAL, STRUCT or MAP column fails its schema
-    probe, naming the stand-in and the column."""
-    from postgres_scanner_spark.pg_datasource import PostgresScanDataSource
-    db = str(tmp_path / "exotic.db")
-    con = duckdb.connect(db)
-    con.execute("CREATE TYPE mood AS ENUM ('sad', 'ok')")
-    cols = {"e": "mood", "u": "UBIGINT", "tm": "TIME", "iv": "INTERVAL",
-            "st": "STRUCT(a INTEGER)", "mp": "MAP(VARCHAR, INTEGER)",
-            "ua": "UBIGINT[]"}
-    for name, typ in cols.items():
-        con.execute(f"CREATE TABLE t_{name} (id BIGINT, {name} {typ})")
-    con.close()
-    for name in cols:
-        ds = PostgresScanDataSource({"dsn": f"duckdb://{db}",
-                                     "table": f"t_{name}"})
-        with pytest.raises(ValueError,
-                           match=f"duckdb:// stand-in .*column '{name}'"):
-            ds.schema()
-
-
 def test_duckdb_standin_reads_e16_shape(registered, tmp_path):
     """The registry's e16 reads a bigint/varchar/double table through
-    the stand-in as a stream; a batch load of the same table probes
-    those types and plans one task whatever the page options say."""
+    the stand-in as a stream with a declared schema."""
     from pyspark.sql import types as T
     db = str(tmp_path / "ev.db")
     con = duckdb.connect(db)
@@ -252,15 +254,9 @@ def test_duckdb_standin_reads_e16_shape(registered, tmp_path):
         T.StructField("event_id", T.LongType()),
         T.StructField("event_type", T.StringType()),
         T.StructField("value", T.DoubleType())])
-    df = (registered.read.format("postgres_scan")
-          .option("dsn", f"duckdb://{db}").option("table", "events")
-          .option("approx_pages", "1024").option("pg_pages_per_task", "1")
-          .load())
-    assert df.schema == T.StructType(
-        [T.StructField(f.name, f.dataType, True) for f in schema.fields])
-    assert df.rdd.getNumPartitions() == 1
     q = (registered.readStream.format("postgres_scan").schema(schema)
-         .option("dsn", f"duckdb://{db}").option("table", "events")
+         .option("dsn", f"duckdb://{db}").option("schema", "main")
+         .option("table", "events")
          .option("stream_key", "event_id").load()
          .writeStream.format("memory").queryName("standin_e16")
          .trigger(availableNow=True).start())
@@ -343,15 +339,16 @@ def test_write_takes_null_byte_replacement_option(registered, pg_server):
     assert _spool_dirs() - before == set()
 
 
-def test_pg_query_passthrough_duckdb(registered, duck_db):
-    """postgres_query parity: the attached engine executes the SQL
+def test_pg_query_passthrough_live(registered, pg, pg_server):
+    """postgres_query parity: the attached server executes the SQL
     text; Spark scans the result (reference: postgres_query.cpp)."""
     from postgres_scanner_spark.catalog import Catalog
     from postgres_scanner_spark.queryfn import pg_query
+    _items(pg)
     cat = Catalog(registered)
-    cat.attach(f"duckdb://{duck_db}", alias="q", register_views=False)
+    cat.attach(pg_server, alias="q", register_views=False)
     df = pg_query(cat, "q",
-                  "SELECT bucket, COUNT(*) AS n FROM items "
+                  "SELECT bucket, COUNT(*) AS n FROM ds_items "
                   "WHERE bucket IS NOT NULL GROUP BY bucket ORDER BY bucket")
     rows = df.collect()
     # i%50 for i not divisible by 10 → 0..49 minus {0,10,20,30,40} = 45
@@ -360,23 +357,29 @@ def test_pg_query_passthrough_duckdb(registered, duck_db):
     cat.detach("q")
 
 
-def test_pg_query_streams_on_executors(registered, duck_db):
+def test_pg_query_streams_on_executors(registered, pg, pg_server):
     """pg_query must route through the postgres_scan DataSource (no
     driver-side to_pandas materialization) and survive results larger
-    than one Arrow batch (reader batches at 8192 rows)."""
+    than one Arrow batch."""
     from postgres_scanner_spark.catalog import Catalog
+    from postgres_scanner_spark.pgwire_vec import VectorBinaryCopyReader
     from postgres_scanner_spark.queryfn import pg_query
+    n = VectorBinaryCopyReader._CHUNK + 10_000   # > one Arrow batch
+    cur = pg.cursor()
+    cur.execute("DROP TABLE IF EXISTS ds_wide")
+    cur.execute("CREATE TABLE ds_wide AS SELECT i::int8 AS id "
+                f"FROM generate_series(0, {n - 1}) i")
     cat = Catalog(registered)
-    cat.attach(f"duckdb://{duck_db}", alias="qs", register_views=False)
-    df = pg_query(cat, "qs", "SELECT id, id * 2 AS dbl FROM items")
+    cat.attach(pg_server, alias="qs", register_views=False)
+    df = pg_query(cat, "qs", "SELECT id, id * 2 AS dbl FROM ds_wide")
     # must be a DataSource relation — a regression back to driver-side
     # to_pandas materialization would plan as LocalRelation/LogicalRDD
     plan = df._jdf.queryExecution().logical().toString()
     assert "DataSource" in plan or "postgres_scan" in plan, plan[:500]
     assert "LocalRelation" not in plan and "LogicalRDD" not in plan, \
         plan[:500]
-    assert df.count() == 10000             # > one 8192-row Arrow batch
-    assert df.agg(F.sum("dbl")).collect()[0][0] == 2 * sum(range(10000))
+    assert df.count() == n
+    assert df.agg(F.sum("dbl")).collect()[0][0] == 2 * sum(range(n))
     cat.detach("qs")
 
 
@@ -776,7 +779,8 @@ def test_stream_reader_incremental_offsets(registered, tmp_path):
 
     def run():
         q = (spark.readStream.format("postgres_scan").schema(schema)
-             .option("dsn", f"duckdb://{db}").option("table", "ev")
+             .option("dsn", f"duckdb://{db}").option("schema", "main")
+             .option("table", "ev")
              .option("stream_key", "id").load()
              .writeStream.format("parquet").option("path", sink)
              .option("checkpointLocation", ckpt)
@@ -885,7 +889,8 @@ def test_stream_reader_poll_cap(registered, tmp_path):
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ck")
 
     q = (spark.readStream.format("postgres_scan").schema(schema)
-         .option("dsn", f"duckdb://{db}").option("table", "ev")
+         .option("dsn", f"duckdb://{db}").option("schema", "main")
+         .option("table", "ev")
          .option("stream_key", "id")
          .option("max_rows_per_poll", "10").load()
          .writeStream.format("parquet").option("path", sink)
@@ -898,34 +903,27 @@ def test_stream_reader_poll_cap(registered, tmp_path):
 
 
 def test_call_postgres_attach_rejects_malformed_and_collision(
-        registered, tmp_path):
+        registered, pg_server):
     """Malformed/positional CALL arguments raise instead of silently
     attaching the wrong surface, and a second CALL deriving the SAME
-    alias for a DIFFERENT source errors without overwrite=true."""
-    import duckdb
-    import pytest as _pytest
+    alias (the DSN's dbname) for a DIFFERENT source errors without
+    overwrite=true."""
     from postgres_scanner_spark.catalog import Catalog
     from postgres_scanner_spark.queryfn import execute_statement
-    a = str(tmp_path / "x" / "data.db")
-    b = str(tmp_path / "y" / "data.db")
-    for p in (a, b):
-        __import__("os").makedirs(__import__("os").path.dirname(p))
-        con = duckdb.connect(p)
-        con.execute("CREATE TABLE t AS SELECT 1 AS v")
-        con.close()
+    a = pg_server
+    b = f"{pg_server} application_name=second"   # same dbname
     cat = Catalog(registered)
-    with _pytest.raises(ValueError, match="malformed postgres_attach"):
-        execute_statement(
-            cat, f"CALL postgres_attach('duckdb://{a}', 'public')")
-    execute_statement(cat, f"CALL postgres_attach('duckdb://{a}')")
+    with pytest.raises(ValueError, match="malformed postgres_attach"):
+        execute_statement(cat, f"CALL postgres_attach('{a}', 'public')")
+    execute_statement(cat, f"CALL postgres_attach('{a}')")
     # same source again: IF NOT EXISTS no-op
-    execute_statement(cat, f"CALL postgres_attach('duckdb://{a}')")
-    with _pytest.raises(ValueError, match="DIFFERENT source"):
-        execute_statement(cat, f"CALL postgres_attach('duckdb://{b}')")
-    execute_statement(
-        cat, f"CALL postgres_attach('duckdb://{b}', overwrite=true)")
-    assert cat.attached["data"].source == f"duckdb://{b}"
-    cat.detach("data")
+    execute_statement(cat, f"CALL postgres_attach('{a}')")
+    with pytest.raises(ValueError, match="DIFFERENT source"):
+        execute_statement(cat, f"CALL postgres_attach('{b}')")
+    assert cat.attached["postgres"].source == a
+    execute_statement(cat, f"CALL postgres_attach('{b}', overwrite=true)")
+    assert cat.attached["postgres"].source == b
+    cat.detach("postgres")
 
 
 # ---------------------------------------------------------------------------
@@ -1017,12 +1015,13 @@ def test_partitioned_stream_reader_empty_and_uncapped(tmp_path):
     con.execute("CREATE TABLE ev AS SELECT range AS id FROM range(10)")
     con.close()
     r2 = pgd.PostgresScanPartitionedStreamReader(
-        schema, {"dsn": f"duckdb://{db}", "table": "ev",
-                 "stream_key": "id"})
+        schema, {"dsn": f"duckdb://{db}", "schema": "main",
+                 "table": "ev", "stream_key": "id"})
     (s1,) = r2.partitions({"last_key": 3}, {"last_key": 9})
     assert (s1.lo, s1.hi) == (3, 9)          # under the cap: one slice
     r3 = pgd.PostgresScanPartitionedStreamReader(
-        schema, {"dsn": f"duckdb://{db}", "table": "ev",
+        schema, {"dsn": f"duckdb://{db}", "schema": "main",
+                 "table": "ev",
                  "stream_key": "id", "max_rows_per_poll": "2"})
     assert r3.max_rows == 2
     parts = r3.partitions({"last_key": None}, {"last_key": 9})
@@ -1051,7 +1050,8 @@ def test_partitioned_stream_reader_end_to_end(registered, tmp_path):
 
     def run():
         q = (spark.readStream.format("postgres_scan").schema(schema)
-             .option("dsn", f"duckdb://{db}").option("table", "ev")
+             .option("dsn", f"duckdb://{db}").option("schema", "main")
+             .option("table", "ev")
              .option("stream_key", "id")
              .option("max_rows_per_poll", "10")
              .load()

@@ -374,6 +374,23 @@ def test_one_postgres_client():
     assert named == []
 
 
+def test_duckdb_standin_serves_only_e16():
+    """The duckdb:// stand-in is e16's stream source and nothing else:
+    no package module but pg_datasource.py and streaming/events.py
+    names a duckdb:// DSN, and neither the catalog nor postgres_query
+    has a "duckdb" backend."""
+    import re
+    from pathlib import Path
+    import postgres_scanner_spark
+    root = Path(postgres_scanner_spark.__file__).parent
+    named = sorted(str(f.relative_to(root)) for f in root.rglob("*.py")
+                   if "duckdb://" in f.read_text())
+    assert named == ["pg_datasource.py", "streaming/events.py"]
+    for mod in ("catalog.py", "queryfn.py"):
+        assert not re.search(r"""["']duckdb["']""",
+                             (root / mod).read_text()), mod
+
+
 # Spark type classes, for the guard below
 _SPARK_TYPES = {n for n in dir(T) if n.endswith("Type")
                 and isinstance(getattr(T, n), type)

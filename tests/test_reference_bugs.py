@@ -1,12 +1,11 @@
 """Statement-for-statement parity with the reference's regression
 (bug) corpus — one pytest per reference test file, each docstring
 naming it. The reference runs these against a live PG server
-(require-env POSTGRES_TEST_DATABASE_AVAILABLE); so do the scans and
-writes here, on the scratch server of tests/conftest.py (`pg_server`,
-`pg`). The `duckdb://` stand-in keeps only the catalog's `duckdb://`
-attach and `pg_query` on it; the managed store plays the attached
-database for the DDL/DML files, and the wire codec carries the
-halves a scan cannot show."""
+(require-env POSTGRES_TEST_DATABASE_AVAILABLE); so do the scans,
+writes, attaches and `postgres_query` calls here, on the scratch
+server of tests/conftest.py (`pg_server`, `pg`). The managed store
+plays the attached database for the DDL/DML files, and the wire
+codec carries the halves a scan cannot show."""
 
 from __future__ import annotations
 
@@ -160,46 +159,50 @@ def test_bug71_enum_scan_and_typed_writeback(registered, pg, pg_server):
             overwrite=False)
 
 
-def test_call_postgres_attach(registered, tmp_path):
+def test_call_postgres_attach(registered, pg, pg_server):
     """reference: CALL postgres_attach(...) as used across the bug
-    corpus (bug71.test, decimals.test, postgres_binary.test:
-    bare-name views for every table) and bug63.test
-    (source_schema='some_schema' restricts the listing; the views
-    must read the schema-qualified tables)."""
-    import duckdb
+    corpus (bug71.test, decimals.test, postgres_binary.test) and
+    bug63.test (source_schema='some_schema' restricts the listing,
+    and its tables read schema-qualified). The reference creates one
+    view per table; the live attach here registers none, so a bare
+    table name reaches the server through routed SQL."""
     from postgres_scanner_spark.catalog import Catalog
     from postgres_scanner_spark.queryfn import execute_statement
     spark = registered
-    db = str(tmp_path / "postgresscanner.db")
-    con = duckdb.connect(db)
-    con.execute("CREATE TABLE cars (i INT, name VARCHAR)")
-    con.execute("INSERT INTO cars VALUES (1, 'vw'), (2, 'saab')")
-    con.execute("CREATE SCHEMA some_schema")
-    con.execute("CREATE TABLE some_schema.tbl AS SELECT 42 AS x")
-    con.close()
+    _run(pg, "DROP TABLE IF EXISTS cpa_cars",
+         "CREATE TABLE cpa_cars (i INT, name VARCHAR)",
+         "INSERT INTO cpa_cars VALUES (1, 'vw'), (2, 'saab')",
+         "DROP SCHEMA IF EXISTS some_schema CASCADE",
+         "CREATE SCHEMA some_schema",
+         "CREATE TABLE some_schema.tbl AS SELECT 42 AS x")
     cat = Catalog(spark)
-    execute_statement(cat, f"CALL postgres_attach('duckdb://{db}');")
-    # bare table name resolves, like the reference's main-schema views
-    assert execute_statement(cat, "SELECT COUNT(*) AS n FROM cars") \
+    db = execute_statement(cat, f"CALL postgres_attach('{pg_server}');")
+    assert cat.current == "postgres"          # the DSN's dbname
+    assert db.views == []
+    assert not spark.catalog.tableExists("cpa_cars")
+    # a bare table name in routed SQL runs on the server
+    assert execute_statement(cat, "SELECT COUNT(*) AS n FROM cpa_cars") \
         .collect()[0].n == 2
-    # repeated CALL without overwrite = CREATE VIEW IF NOT EXISTS
-    execute_statement(cat, f"CALL postgres_attach('duckdb://{db}')")
-    # overwrite=true re-attaches (CREATE OR REPLACE VIEW)
-    execute_statement(
-        cat, f"CALL postgres_attach('duckdb://{db}', overwrite=true, "
+    # repeated CALL without overwrite keeps the attach
+    assert execute_statement(
+        cat, f"CALL postgres_attach('{pg_server}')") is db
+    # overwrite=true re-attaches
+    again = execute_statement(
+        cat, f"CALL postgres_attach('{pg_server}', overwrite=true, "
              f"filter_pushdown=true)")
-    assert spark.table("cars").count() == 2
-    cat.detach("postgresscanner")
+    assert again is not db and again.views == []
+    assert cat.table("postgres", "cpa_cars").count() == 2
+    cat.detach("postgres")
 
     # source_schema restriction (bug63.test)
     cat2 = Catalog(spark)
     execute_statement(
-        cat2, f"CALL postgres_attach('duckdb://{db}', "
+        cat2, f"CALL postgres_attach('{pg_server}', "
               f"source_schema='some_schema')")
-    names = cat2.attached["postgresscanner"].table_names()
+    names = cat2.attached["postgres"].table_names()
     assert names == ["tbl"]
-    assert spark.table("tbl").collect()[0].x == 42
-    cat2.detach("postgresscanner")
+    assert cat2.table("postgres", "tbl").collect()[0].x == 42
+    cat2.detach("postgres")
 
 
 def test_bug77_empty_array_dimensions(registered, pg, pg_server):
@@ -456,46 +459,44 @@ def test_intervals_matrix(registered, pg, pg_server):
     assert decode_field(pgt.INTERVALOID, b) == dt.timedelta(days=1260)
 
 
-def test_count_star_and_postgres_query(registered, tmp_path):
+def test_count_star_and_postgres_query(registered, pg, pg_server):
     """reference: count_star.test + postgres_query.test — count(*)
     over an attached table, and the postgres_query passthrough with
     remote WHERE, post-filter, projection, and count(*) on the
     passthrough result."""
-    import duckdb
     from postgres_scanner_spark.catalog import Catalog
     from postgres_scanner_spark.queryfn import pg_query
-    db = str(tmp_path / "cars.db")
-    con = duckdb.connect(db)
-    con.execute("CREATE TABLE cars (brand VARCHAR, model VARCHAR, "
-                "color VARCHAR)")
-    con.execute("INSERT INTO cars VALUES "
-                "('ferari','testarosa','red'),"
-                "('aston martin','db2','blue'),"
-                "('bentley','mulsanne','gray'),('ford','T','black')")
-    con.close()
+    _run(pg, "DROP TABLE IF EXISTS cs_cars",
+         "CREATE TABLE cs_cars (brand VARCHAR, model VARCHAR, "
+         "color VARCHAR)",
+         "INSERT INTO cs_cars VALUES "
+         "('ferari','testarosa','red'),"
+         "('aston martin','db2','blue'),"
+         "('bentley','mulsanne','gray'),('ford','T','black')")
     cat = Catalog(registered)
-    cat.attach(f"duckdb://{db}", alias="s1")
-    assert registered.sql("SELECT COUNT(*) AS n FROM s1_cars") \
+    cat.attach(pg_server, alias="s1")
+    assert cat.table("s1", "cs_cars").count() == 4
+    assert pg_query(cat, "s1", "SELECT COUNT(*) AS n FROM cs_cars") \
         .collect()[0].n == 4
-    q = pg_query(cat, "s1", "SELECT * FROM cars")
+    q = pg_query(cat, "s1", "SELECT * FROM cs_cars")
     assert [tuple(r) for r in q.collect()] == [
         ("ferari", "testarosa", "red"),
         ("aston martin", "db2", "blue"),
         ("bentley", "mulsanne", "gray"), ("ford", "T", "black")]
     # remote WHERE inside the passthrough SQL
     assert [tuple(r) for r in pg_query(
-        cat, "s1", "SELECT * FROM cars WHERE color='red'").collect()
+        cat, "s1", "SELECT * FROM cs_cars WHERE color='red'").collect()
     ] == [("ferari", "testarosa", "red")]
     # Spark-side filter over the passthrough result
     from pyspark.sql import functions as F
     assert q.filter(F.col("color") == "red").count() == 1
     # projection over the passthrough result
     assert [r.color for r in pg_query(
-        cat, "s1", "SELECT color, brand FROM cars").select("color")
+        cat, "s1", "SELECT color, brand FROM cs_cars").select("color")
         .collect()] == ["red", "blue", "gray", "black"]
     assert pg_query(
         cat, "s1",
-        "SELECT * FROM cars WHERE color='red'").count() == 1
+        "SELECT * FROM cs_cars WHERE color='red'").count() == 1
     cat.detach("s1")
 
 
@@ -711,26 +712,25 @@ def test_interval_array_scan(registered, pg, pg_server):
     assert got[2] is None
 
 
-def test_attach_non_existent(spark, tmp_path):
+def test_attach_non_existent(registered, pg_server):
     """reference: test/sql/storage/attach_non_existent.test — a bad
     source errors CLEANLY, and a failed attach never leaks a
     half-registered alias (the retry must not die on 'already
-    attached')."""
+    attached'). A live attach is lazy: a database the server does not
+    have fails at its first read."""
     from postgres_scanner_spark.catalog import Catalog
-    cat = Catalog(spark)
+    cat = Catalog(registered)
     with pytest.raises(ValueError, match="does not exist"):
         cat.attach("/nonexistent/dir", alias="bad")
-    with pytest.raises(Exception, match="does not exist|Cannot open"):
-        cat.attach("duckdb:///nonexistent/x.db", alias="bad")
     assert "bad" not in cat.attached
-    # alias is reusable after the failures
-    import duckdb
-    db = str(tmp_path / "ok.db")
-    con = duckdb.connect(db)
-    con.execute("CREATE TABLE t AS SELECT 1 AS v")
-    con.close()
-    cat.attach(f"duckdb://{db}", alias="bad")
-    assert cat.attached["bad"].table_names() == ["t"]
+    missing = pg_server.replace("dbname=postgres", "dbname=no_such_db")
+    cat.attach(missing, alias="gone")
+    with pytest.raises(Exception, match="does not exist"):
+        cat.list_tables("gone")
+    cat.detach("gone")
+    # alias is reusable after the failure
+    cat.attach(pg_server, alias="bad")
+    assert isinstance(cat.list_tables("bad"), list)
     cat.detach("bad")
 
 
@@ -1024,33 +1024,30 @@ def test_attach_types_macaddr_wire():
         io.BytesIO(buf.getvalue()))) == [(mac,), (None,)]
 
 
-def test_array_as_varchar_set_clears_cache(spark, tmp_path):
+def test_array_as_varchar_set_clears_cache(registered, pg, pg_server):
     """reference: postgres_extension.cpp:171-173 — SET
     pg_array_as_varchar runs ClearCacheOnSetting, so a table schema
-    probed BEFORE the flip must not be served stale after it. (The
-    duckdb:// stand-in refuses the setting on array tables, so this
-    table has none.)"""
-    import os
-    import duckdb
+    probed BEFORE the flip must not be served stale after it: the
+    array column reads as array<int>, then as its text form."""
+    from pyspark.sql import types as T
     from postgres_scanner_spark.catalog import Catalog
     from postgres_scanner_spark.settings import SETTINGS
-    db_path = str(tmp_path / "cache.db")
-    con = duckdb.connect(db_path)
-    con.execute("CREATE TABLE t (id INTEGER, a VARCHAR)")
-    con.execute("INSERT INTO t VALUES (1, '{1,2}')")
-    con.close()
-    cat = Catalog(spark)
-    d = cat.attach(f"duckdb://{db_path}", alias="whc",
-                   register_views=False)
-    cat.table("whc", "t")
-    assert "t" in d._table_cache
+    _run(pg, "DROP TABLE IF EXISTS whc_t",
+         "CREATE TABLE whc_t (id INTEGER, a INTEGER[])",
+         "INSERT INTO whc_t VALUES (1, '{1,2}')")
+    cat = Catalog(registered)
+    d = cat.attach(pg_server, alias="whc", register_views=False)
+    assert cat.table("whc", "whc_t").schema["a"].dataType == \
+        T.ArrayType(T.IntegerType(), True)
+    assert "whc_t" in d._table_cache
     try:
         SETTINGS.set("pg_array_as_varchar", True)
         assert d._table_cache == {}      # flipped -> cache invalidated
-        cat.table("whc", "t")
-        assert "t" in d._table_cache
+        assert cat.table("whc", "whc_t").schema["a"].dataType == \
+            T.StringType()
+        assert "whc_t" in d._table_cache
         SETTINGS.set("pg_array_as_varchar", True)   # no-op: same value
-        assert "t" in d._table_cache
+        assert "whc_t" in d._table_cache
     finally:
         SETTINGS.set("pg_array_as_varchar", False)
     assert d._table_cache == {}          # flip back also clears

@@ -266,7 +266,7 @@ def test_pg_execute_postgres_routing(monkeypatch):
         pg_execute(cat, "ro", "DROP TABLE t")
 
 
-def test_attach_datasource_register_error_propagates(tmp_path):
+def test_attach_datasource_register_error_propagates():
     """Only DATA_SOURCE_ALREADY_EXISTS is tolerated when a DataSource
     attach registers postgres_scan; any other error surfaces and the
     alias is not left half-attached."""
@@ -279,7 +279,7 @@ def test_attach_datasource_register_error_propagates(tmp_path):
     spark = pytypes.SimpleNamespace(
         dataSource=pytypes.SimpleNamespace(register=register))
     cat = Catalog(spark)
-    for source in (f"duckdb://{tmp_path / 'src.db'}", "host=h dbname=d"):
+    for source in ("postgres:host=h dbname=d", "host=h dbname=d"):
         with pytest.raises(TypeError, match="bad DataSource"):
             cat.attach(source, alias="d")
         assert "d" not in cat.attached
