@@ -220,6 +220,64 @@ def test_duckdb_standin_refuses_all_but_the_stream(registered, tmp_path):
     assert cat.attached == {"pg": held}
 
 
+def test_array_as_varchar_rejected_by_duckdb_standin(registered, tmp_path):
+    """The duckdb:// stand-in has no Postgres array text form and no
+    schema probe: under pg_array_as_varchar a batch load of a table,
+    with or without an array column, raises the stand-in's refusal.
+    A stream with a declared schema reads the array-free table as
+    before."""
+    from pyspark.sql import types as T
+    db = str(tmp_path / "arr.db")
+    con = duckdb.connect(db)
+    con.execute("CREATE TABLE a AS SELECT 1::BIGINT AS id, [1, 2] AS xs")
+    con.execute("CREATE TABLE b AS SELECT 1::BIGINT AS id, 'x' AS s")
+    con.close()
+    dsn = f"duckdb://{db}"
+
+    def reader(table, stream=False):
+        r = registered.readStream if stream else registered.read
+        return (r.format("postgres_scan").option("dsn", dsn)
+                .option("schema", "main").option("table", table)
+                .option("pg_array_as_varchar", "true"))
+
+    for table in ("a", "b"):
+        with pytest.raises(Exception,
+                           match="schema probe: the duckdb:// stand-in"):
+            reader(table).load()
+    schema = T.StructType([T.StructField("id", T.LongType()),
+                           T.StructField("s", T.StringType())])
+    q = (reader("b", stream=True).schema(schema)
+         .option("stream_key", "id").load()
+         .writeStream.format("memory").queryName("standin_arr_b")
+         .trigger(availableNow=True).start())
+    assert q.awaitTermination(120)
+    assert [tuple(r) for r in
+            registered.table("standin_arr_b").collect()] == [(1, "x")]
+
+
+def test_duckdb_standin_rejects_non_plain_types(tmp_path):
+    """The stand-in types no column: a table with an ENUM, UBIGINT,
+    TIME, INTERVAL, STRUCT or MAP column fails its schema probe with
+    the stand-in's refusal, before any column is read."""
+    from postgres_scanner_spark.pg_datasource import PostgresScanDataSource
+    db = str(tmp_path / "exotic.db")
+    con = duckdb.connect(db)
+    con.execute("CREATE TYPE mood AS ENUM ('sad', 'ok')")
+    cols = {"e": "mood", "u": "UBIGINT", "tm": "TIME", "iv": "INTERVAL",
+            "st": "STRUCT(a INTEGER)", "mp": "MAP(VARCHAR, INTEGER)",
+            "ua": "UBIGINT[]"}
+    for name, typ in cols.items():
+        con.execute(f"CREATE TABLE t_{name} (id BIGINT, {name} {typ})")
+    con.close()
+    for name in cols:
+        ds = PostgresScanDataSource({"dsn": f"duckdb://{db}",
+                                     "table": f"t_{name}"})
+        with pytest.raises(ValueError,
+                           match="schema probe: the duckdb:// stand-in "
+                                 "is read-only"):
+            ds.schema()
+
+
 def test_duckdb_standin_write_raises(registered, tmp_path):
     """The stand-in is read-only: a batch or stream write to a
     duckdb:// DSN raises when Spark builds the writer, naming the
