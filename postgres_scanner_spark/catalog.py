@@ -54,6 +54,13 @@ def _is_store_dir(path: str) -> bool:
         return False
 
 
+def _bind_view(df: DataFrame, name: str) -> None:
+    """Register `df` as the temp view `name`, quoted so that a table
+    name which is no bare identifier (a Postgres "a;b") binds as
+    written."""
+    df.createOrReplaceTempView("`" + name.replace("`", "``") + "`")
+
+
 @dataclass
 class AttachedDatabase:
     alias: str
@@ -130,6 +137,15 @@ class Catalog:
         qualified and by bare table name."""
         if alias in self.attached:
             raise ValueError(f"database {alias!r} already attached")
+        return self.add(self.resolve(source, alias, read_only=read_only,
+                                     schema=schema),
+                        register_views=register_views)
+
+    def resolve(self, source: str, alias: str, *, read_only: bool = False,
+                schema: str | None = None) -> AttachedDatabase:
+        """The database `source` names, checked but not yet attached:
+        a source that cannot attach raises here, before anything in
+        the session changes."""
         if source.startswith("secret:"):
             # credential-free attach (reference: attach_secret.test):
             # the DSN comes from the secret registry, never the string
@@ -160,29 +176,41 @@ class Catalog:
             db = AttachedDatabase(alias, source, "postgres", read_only,
                                   conn=parse_dsn(source))
         db.schema = schema
+        return db
+
+    def add(self, db: AttachedDatabase, *,
+            register_views: bool = True) -> AttachedDatabase:
+        """Attach a resolved database under its alias."""
         if db.backend == "postgres":
             from .pg_datasource import ensure_registered
             ensure_registered(self.spark)
-        self.attached[alias] = db
+        self.attached[db.alias] = db
         try:
             if register_views and db.backend in ("parquet", "store"):
-                for t in db.table_names():
-                    self.register_table_views(db, t)
-                if db.backend == "store":
-                    # stored views resolve AFTER their base tables
-                    # exist (reference: attach_views.test)
-                    for v in db.store.views():
-                        df = db.store.scan_view(v, register=False)
-                        for name in (f"{alias}_{v}", v):
-                            df.createOrReplaceTempView(name)
-                            if name not in db.views:
-                                db.views.append(name)
+                self.refresh_views(db)
         except Exception:
             # a failed attach must not leak a half-registered alias
             # (the next attempt would die on 'already attached')
-            self.attached.pop(alias, None)
+            self.attached.pop(db.alias, None)
             raise
         return db
+
+    def refresh_views(self, db: AttachedDatabase) -> None:
+        """(Re)bind the temp views of every table of `db` and, for a
+        store, of every stored view to the current snapshot. The
+        names are tracked on `db` so detach() drops them all;
+        db.table_names() honours a SCHEMA-scoped attach."""
+        for t in db.table_names():
+            self.register_table_views(db, t)
+        if db.backend == "store":
+            # stored views resolve AFTER their base tables exist
+            # (reference: attach_views.test)
+            for v in db.store.views():
+                df = db.store.scan_view(v, register=False)
+                for name in (f"{db.alias}_{v}", v):
+                    _bind_view(df, name)
+                    if name not in db.views:
+                        db.views.append(name)
 
     def register_table_views(self, db: AttachedDatabase, t: str) -> None:
         safe = t.replace(".", "_")   # schema-qualified → underscore form
@@ -193,7 +221,7 @@ class Catalog:
             names.append(t.partition(".")[2])
         df = self.table(db.alias, t)
         for v in names:
-            df.createOrReplaceTempView(v)
+            _bind_view(df, v)
             if v not in db.views:
                 db.views.append(v)
 
@@ -227,7 +255,7 @@ class Catalog:
                         continue
                 else:
                     src = self.table(other.alias, name)
-                src.createOrReplaceTempView(name)
+                _bind_view(src, name)
                 return
             except _LOOKUP_ERRORS as exc:
                 _log.warning("view %r: cannot rebind it to attached "

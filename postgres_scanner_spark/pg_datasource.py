@@ -29,6 +29,11 @@ Parity with the reference's execution strategy:
   numeric, interval, arrays, the geometry types, a ByteType column's
   int2 and a struct or map column's text (VectorBinaryCopyReader's
   docstring has the list).
+- query mode (`.option("query", sql)`, what `pg_query` sends): the
+  server runs the statement in one task. The schema probe and the
+  task wrap the statement's body (`pushdown.sql_body`: the text
+  without the whitespace, comments and `;` around it), so
+  `SELECT 1; -- done` runs as `(SELECT 1)`.
 - streaming (`spark.readStream.format("postgres_scan")`): the same
   read() serves each micro-batch's stream-key slices
   (PostgresScanPartitionedStreamReader), so every row, batch or
@@ -63,7 +68,7 @@ from pyspark.sql.datasource import (
     IsNull, LessThan, LessThanOrEqual, WriterCommitMessage,
 )
 
-from .pushdown import transform_filters
+from .pushdown import sql_body, transform_filters
 from .scan import plan_scan_tasks
 from .settings import Settings
 
@@ -123,7 +128,7 @@ class PostgresScanReader(DataSourceReader):
         # ad-hoc passthrough (postgres_query): the remote engine runs
         # this SQL; a query result has no ctid, so it reads as a
         # single stream (same as the reference's postgres_query)
-        self.query = options.get("query", "")
+        self.query = sql_body(options.get("query", ""))
         self.pg_schema = options.get("schema", "public")
         self.approx_pages = int(options.get("approx_pages", "0"))
         # the reader plans and reads in Python workers, which never see
@@ -707,7 +712,7 @@ class PostgresScanDataSource(DataSource):
         as_varchar = Settings.from_options(self.options).pg_array_as_varchar
         dsn = self.options.get("dsn", "")
         table = self.options.get("table", "")
-        query = self.options.get("query", "")
+        query = sql_body(self.options.get("query", ""))
         refuse_standin(dsn, "postgres_scan schema probe")
         from . import pgclient
         from .types import numeric_typmod, pg_type_to_spark
@@ -718,9 +723,7 @@ class PostgresScanDataSource(DataSource):
             # PostgresQueryBind executes the user SQL and derives the
             # bind schema from the result set, not the table catalog),
             # so computed/expression columns type correctly
-            probe = (f"SELECT * FROM ("
-                     f"{query.rstrip().rstrip(';')}) _pg_spark_probe "
-                     f"LIMIT 0")
+            probe = f"SELECT * FROM ({query}) _pg_spark_probe LIMIT 0"
             from .types import spark_type_from_oid
             with pgclient.connect(dsn) as con, con.cursor() as cur:
                 cur.execute(probe)

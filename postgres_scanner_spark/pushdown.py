@@ -10,11 +10,16 @@ pushdown uses (("col", "op", value)), plus nested ("and"/"or",
 [children]). The `postgres_scan` DataSource feeds these from
 Catalyst's pushed filters (pg_datasource._spark_filter_to_tuple);
 unit tests feed them directly.
+
+The module also holds the one Postgres SQL lexer (`sql_tokens`): the
+statement router (queryfn.py) and the connector's query mode
+(pg_datasource.py) read quotes, comments and `;` only through it.
 """
 
 from __future__ import annotations
 
 import math
+import re
 from datetime import date, datetime
 from typing import Any, Sequence
 
@@ -116,3 +121,40 @@ def transform_filters(filters: Sequence[Sequence[Any]] | None,
         return ""
     return "WHERE " + " AND ".join(
         transform_filter(f, null_byte_replacement) for f in filters)
+
+
+# One token per match, named by the group that matched (`m.lastgroup`).
+# Quoted text and comments are whole tokens, so a `'`, `;`, `,` or
+# parenthesis inside them is never seen as code. Comments do not nest;
+# an unterminated quote or comment runs to the end of the text. An
+# E'...' string starts only where an identifier cannot continue.
+_SQL_TOKEN = re.compile(r"""
+    (?P<space>\s+)
+  | (?P<comment>--[^\n]*|/\*.*?(?:\*/|\Z))
+  | (?P<dollar>(?P<tag>\$(?:[A-Za-z_]\w*)?\$)(?P<dbody>.*?)(?:(?P=tag)|\Z))
+  | (?P<estring>(?<![\w"`])[eE]'(?P<ebody>(?:\\.|''|[^'\\])*\\?)'?)
+  | (?P<string>'(?:''|[^'])*'?)
+  | (?P<ident>"(?P<ibody>(?:""|[^"])*)(?P<iclose>"?))
+  | (?P<semi>;)
+  | (?P<comma>,)
+  | (?P<open>\()
+  | (?P<close>\))
+  | (?P<other>(?:[^\s\-/$eE'";,()]|-(?!-)|/(?!\*)|[eE](?!'))+|.)
+""", re.DOTALL | re.VERBOSE)
+
+# tokens that never start, end or classify a statement
+_BLANK = frozenset({"space", "comment", "semi"})
+
+
+def sql_tokens(sql: str):
+    """The Postgres lexer: an iterator of `re.Match`, one per token,
+    whose `lastgroup` names its kind (space, comment, dollar, estring,
+    string, ident, semi, comma, open, close, other)."""
+    return _SQL_TOKEN.finditer(sql)
+
+
+def sql_body(sql: str) -> str:
+    """One statement's text without the whitespace, comments and `;`
+    that lead or trail it ("" when nothing else is left)."""
+    words = [m for m in sql_tokens(sql) if m.lastgroup not in _BLANK]
+    return sql[words[0].start():words[-1].end()] if words else ""

@@ -11,13 +11,22 @@ ships to the remote engine through the `postgres_scan`
 DataSource's query mode (true passthrough: the remote engine executes
 it, Spark scans the result — identical split of work to the
 reference), and postgres_execute runs on one pgclient connection.
+
+Statement text is read only through `pushdown.sql_tokens`, the one
+Postgres lexer: a `;`, `,` or parenthesis inside '...', E'...',
+$tag$...$tag$, "..." or a comment is never code, and every statement
+is classified by its body, the text without the whitespace, comments
+and `;` around it (`pushdown.sql_body`).
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import Catalog
+from .pushdown import sql_body, sql_tokens
 from .settings import SETTINGS
 
 
@@ -26,15 +35,15 @@ def pg_query(catalog: Catalog, alias: str, sql: str) -> DataFrame:
     engine; the result is a scannable DataFrame.
 
     reference: src/postgres_query.cpp PostgresQueryBind — validates
-    the db handle, strips trailing ';', requires a SELECT.
+    the db handle, requires a SELECT. The statement's body decides;
+    a live server gets the text as given and the `postgres_scan`
+    query mode takes its body.
     """
     if alias not in catalog.attached:
         raise KeyError(f"Failed to find attached database {alias!r}")
     db = catalog.attached[alias]
-    # strip any run of trailing semicolons/whitespace ('SELECT ...; ; ')
-    # — the reference's PostgresQueryBind does the same before wrapping
-    sql = sql.strip().rstrip("; \t\r\n")
-    if not sql or not _READ_STMT_RE.match(sql):
+    body = sql_body(sql)
+    if not _READ_STMT_RE.match(body):
         # reference: PostgresQueryBind rejects non-SELECT input — and
         # routing DDL here would bypass pg_execute's READ_ONLY gate
         raise ValueError(
@@ -55,27 +64,23 @@ def pg_query(catalog: Catalog, alias: str, sql: str) -> DataFrame:
     if db.backend == "store":
         # DESCRIBE / PRAGMA table_info carry constraint+default info
         # the session catalog doesn't know (attach_describe.test)
-        if m := re.match(rf"^\s*DESCRIBE\s+{_QIDENT}\s*;?\s*$", sql,
-                         re.IGNORECASE):
-            rows = db.store.describe(_unquote_table(m.group(1)))
+        if m := re.match(rf"DESCRIBE\s+{_QIDENT}$", body, re.IGNORECASE):
+            rows = db.store.describe(_unquote(m.group(1)))
             return catalog.spark.createDataFrame(
                 [(r["column_name"], r["column_type"], r["null"],
                   r["key"], r["default"], None) for r in rows],
                 "column_name STRING, column_type STRING, null STRING, "
                 "key STRING, default STRING, extra STRING")
-        if m := re.match(r"^\s*PRAGMA\s+table_info\s*\(\s*'(.+?)'\s*\)"
-                         r"\s*;?\s*$", sql, re.IGNORECASE):
-            rows = db.store.describe(_unquote_table(m.group(1)))
+        if m := re.match(r"PRAGMA\s+table_info\s*\(\s*'(.+?)'\s*\)$",
+                         body, re.IGNORECASE):
+            rows = db.store.describe(_unquote(m.group(1)))
             return catalog.spark.createDataFrame(
                 [(r["cid"], r["column_name"], r["column_type"],
                   r["null"] == "NO", r["default"], r["key"] == "PRI")
                  for r in rows],
                 "cid INT, name STRING, type STRING, notnull BOOLEAN, "
                 "dflt_value STRING, pk BOOLEAN")
-    return _pg_sql(catalog.spark, sql)
-
-
-import re
+    return _pg_sql(catalog.spark, body)
 
 
 def _escape_pg_literals(sql: str) -> str:
@@ -92,101 +97,34 @@ def _escape_pg_literals(sql: str) -> str:
       arithmetic semantics.) Reference: attach_backslash.test.
     - identifiers: PG "Quoted_Ident" ("" escapes a quote) becomes
       Spark `Quoted_Ident` (`` escapes a backtick). Reference:
-      attach_case_sensitive_columns.test, attach_keywords.test."""
+      attach_case_sensitive_columns.test, attach_keywords.test.
+    - dollar-quoted strings ($$...$$ / $tag$...$tag$): the body is RAW
+      (no escapes) and Spark has no dollar quoting, so it becomes a
+      standard literal with Spark's escaping ('' for quotes, doubled
+      backslashes).
+    - E'...' escape strings: backslash escapes are real there, which is
+      Spark's default literal semantics — the E drops, the body stays.
+    - comments pass through untouched."""
     out = []
-    in_s = in_d = False
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        # comments pass through untouched — an apostrophe inside
-        # '-- ...' or '/* ... */' must not flip literal state
-        if not in_s and not in_d:
-            if ch == "-" and sql.startswith("--", i):
-                j = sql.find("\n", i)
-                j = n if j < 0 else j
-                out.append(sql[i:j])
-                i = j
-                continue
-            if ch == "/" and sql.startswith("/*", i):
-                j = sql.find("*/", i + 2)
-                j = n if j < 0 else j + 2
-                out.append(sql[i:j])
-                i = j
-                continue
-            # PG dollar-quoted string ($$...$$ / $tag$...$tag$): the
-            # body is RAW — no escapes, quotes/backslashes literal.
-            # Spark has no dollar quoting, so re-emit as a standard
-            # literal with Spark's escaping ('' for quotes, doubled
-            # backslashes). An apostrophe in the body must not flip
-            # the literal state machine.
-            if ch == "$":
-                if m := re.match(r"\$([A-Za-z_]\w*)?\$", sql[i:]):
-                    tag = m.group(0)
-                    j = sql.find(tag, i + len(tag))
-                    body = sql[i + len(tag):j if j >= 0 else n]
-                    out.append("'" + body.replace("\\", "\\\\")
-                               .replace("'", "''") + "'")
-                    i = (j + len(tag)) if j >= 0 else n
-                    continue
-            # PG E'...' escape string: backslash escapes are REAL
-            # here (unlike standard '...'), which is exactly Spark's
-            # default literal semantics — drop the E, copy the body
-            # verbatim (\x pairs opaque), keep '' handling
-            if (ch in "eE" and sql.startswith("'", i + 1)
-                    and (i == 0 or not (sql[i - 1].isalnum()
-                                        or sql[i - 1] in '_"`'))):
-                out.append("'")
-                j = i + 2
-                while j < n:
-                    if sql[j] == "\\" and j + 1 < n:
-                        out.append(sql[j:j + 2])
-                        j += 2
-                        continue
-                    if sql[j] == "'":
-                        if sql.startswith("''", j):
-                            out.append("''")
-                            j += 2
-                            continue
-                        break
-                    out.append(sql[j])
-                    j += 1
-                out.append("'")
-                i = j + 1
-                continue
-        if in_s:
-            if ch == "\\":
-                out.append("\\\\")
-                i += 1
-                continue
-            if ch == "'":
-                if i + 1 < n and sql[i + 1] == "'":
-                    out.append("''")
-                    i += 2
-                    continue
-                in_s = False
-            out.append(ch)
-        elif in_d:
-            if ch == '"':
-                if i + 1 < n and sql[i + 1] == '"':
-                    out.append('"')
-                    i += 2
-                    continue
-                in_d = False
-                out.append("`")
-            elif ch == "`":
-                out.append("``")
-            else:
-                out.append(ch)
-        elif ch == "'":
-            in_s = True
-            out.append(ch)
-        elif ch == '"':
-            in_d = True
-            out.append("`")
-        else:
-            out.append(ch)
-        i += 1
+    for m in sql_tokens(sql):
+        kind, text = m.lastgroup, m.group()
+        if kind == "string":
+            text = text.replace("\\", "\\\\")
+        elif kind == "estring":
+            text = f"'{m.group('ebody')}'"
+        elif kind == "dollar":
+            body = m.group("dbody").replace("\\", "\\\\").replace("'", "''")
+            text = f"'{body}'"
+        elif kind == "ident":
+            text = ("`" + _ident_name(m).replace("`", "``")
+                    + "`" * len(m.group("iclose")))
+        out.append(text)
     return "".join(out)
+
+
+def _ident_name(m) -> str:
+    """The name an `ident` token spells ("" unescapes a quote)."""
+    return m.group("ibody").replace('""', '"')
 
 
 def _pg_sql(spark: SparkSession, sql: str) -> DataFrame:
@@ -210,7 +148,7 @@ _MERGE_PREFIX_RE = re.compile(
 _MERGE_CLAUSES_RE = re.compile(
     r"^ON\s+(.+?)"
     r"(\s+WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+\*)?"
-    r"(\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*)?\s*;?\s*$",
+    r"(\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*)?$",
     re.IGNORECASE | re.DOTALL)
 
 # COPY t TO 'path' (FORMAT fmt) / COPY (SELECT ..) TO 'path' /
@@ -221,11 +159,11 @@ _MERGE_CLAUSES_RE = re.compile(
 # parquet → the Spark-native columnar path.
 _COPY_TO_RE = re.compile(
     rf"^\s*COPY\s+(?:{_QIDENT}|\((.+)\))\s+TO\s+'([^']+)'"
-    r"(?:\s*\(\s*FORMAT\s+(\w+)\s*\))?\s*;?\s*$",
+    r"(?:\s*\(\s*FORMAT\s+(\w+)\s*\))?$",
     re.IGNORECASE | re.DOTALL)
 _COPY_FROM_RE = re.compile(
     rf"^\s*COPY\s+{_QIDENT}\s+FROM\s+'([^']+)'"
-    r"(?:\s*\(\s*FORMAT\s+(\w+)\s*\))?\s*;?\s*$",
+    r"(?:\s*\(\s*FORMAT\s+(\w+)\s*\))?$",
     re.IGNORECASE | re.DOTALL)
 
 
@@ -238,21 +176,21 @@ def _copy_fmt(word: str | None) -> str | None:
 
 
 _DELETE_RE = re.compile(
-    rf"^\s*DELETE\s+FROM\s+{_QIDENT}(?:\s+WHERE\s+(.+?))?;?\s*$",
+    rf"^\s*DELETE\s+FROM\s+{_QIDENT}(?:\s+WHERE\s+(.+?))?$",
     re.IGNORECASE | re.DOTALL)
 # PG TRUNCATE: unconditionally empty the table (fast path of DELETE)
 _TRUNCATE_RE = re.compile(
-    rf"^\s*TRUNCATE\s+(?:TABLE\s+)?{_QIDENT};?\s*$", re.IGNORECASE)
+    rf"^\s*TRUNCATE\s+(?:TABLE\s+)?{_QIDENT}$", re.IGNORECASE)
 _UPDATE_RE = re.compile(
-    rf"^\s*UPDATE\s+{_QIDENT}\s+SET\s+(.+?)(?:\s+WHERE\s+(.+?))?;?\s*$",
+    rf"^\s*UPDATE\s+{_QIDENT}\s+SET\s+(.+?)(?:\s+WHERE\s+(.+?))?$",
     re.IGNORECASE | re.DOTALL)
 _INSERT_RE = re.compile(
     rf"^\s*INSERT\s+INTO\s+{_QIDENT}\s*"
     rf"(?:\(([^()]*)\)\s*)?"   # optional explicit column list
-    rf"(SELECT\s+.+?|VALUES\s*\(.+?\));?\s*$",
+    rf"(SELECT\s+.+?|VALUES\s*\(.+?\))$",
     re.IGNORECASE | re.DOTALL)
 _DROP_RE = re.compile(
-    rf"^\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?{_QIDENT};?\s*$", re.IGNORECASE)
+    rf"^\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?{_QIDENT}$", re.IGNORECASE)
 # CREATE TEMP/TEMPORARY TABLE x → CREATE TABLE pg_temp.x (reference:
 # attach_temporary_table.test — PG session temp tables live in the
 # lazily-created pg_temp schema, dropped at session end / detach)
@@ -273,37 +211,37 @@ _TEMP_QUALIFIED_RE = re.compile(
     re.IGNORECASE)
 _CTAS_RE = re.compile(
     rf"^\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?"
-    rf"{_QIDENT}\s+AS\s+(SELECT\s+.+?);?\s*$",
+    rf"{_QIDENT}\s+AS\s+(SELECT\s+.+?)$",
     re.IGNORECASE | re.DOTALL)
 _CREATE_SCHEMA_RE = re.compile(
-    rf"^\s*CREATE\s+SCHEMA\s+(IF\s+NOT\s+EXISTS\s+)?{_IDENT};?\s*$",
+    rf"^\s*CREATE\s+SCHEMA\s+(IF\s+NOT\s+EXISTS\s+)?{_IDENT}$",
     re.IGNORECASE)
 _DROP_SCHEMA_RE = re.compile(
-    rf"^\s*DROP\s+SCHEMA\s+(IF\s+EXISTS\s+)?{_IDENT}\s*(CASCADE)?;?\s*$",
+    rf"^\s*DROP\s+SCHEMA\s+(IF\s+EXISTS\s+)?{_IDENT}\s*(CASCADE)?$",
     re.IGNORECASE)
 _CREATE_VIEW_RE = re.compile(
-    rf"^\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+{_IDENT}\s+AS\s+(SELECT\s+.+?);?\s*$",
+    rf"^\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+{_IDENT}\s+AS\s+(SELECT\s+.+?)$",
     re.IGNORECASE | re.DOTALL)
 _DROP_VIEW_RE = re.compile(
-    rf"^\s*DROP\s+VIEW\s+(IF\s+EXISTS\s+)?{_IDENT};?\s*$", re.IGNORECASE)
+    rf"^\s*DROP\s+VIEW\s+(IF\s+EXISTS\s+)?{_IDENT}$", re.IGNORECASE)
 _CREATE_TABLE_RE = re.compile(
     rf"^\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?"
-    rf"{_QIDENT}\s*\((.+)\);?\s*$",
+    rf"{_QIDENT}\s*\((.+)\)$",
     re.IGNORECASE | re.DOTALL)
 _ALTER_ADD_RE = re.compile(
-    rf"^\s*ALTER\s+TABLE\s+{_QIDENT}\s+ADD\s+(?:COLUMN\s+)?{_IDENT}\s+([\w(), ]+?);?\s*$",
+    rf"^\s*ALTER\s+TABLE\s+{_QIDENT}\s+ADD\s+(?:COLUMN\s+)?{_IDENT}\s+([\w(), ]+?)$",
     re.IGNORECASE)
 _ALTER_RENAME_TABLE_RE = re.compile(
-    rf"^\s*ALTER\s+TABLE\s+{_QIDENT}\s+RENAME\s+TO\s+{_IDENT};?\s*$",
+    rf"^\s*ALTER\s+TABLE\s+{_QIDENT}\s+RENAME\s+TO\s+{_IDENT}$",
     re.IGNORECASE)
 _ALTER_RENAME_RE = re.compile(
-    rf"^\s*ALTER\s+TABLE\s+{_QIDENT}\s+RENAME\s+(?:COLUMN\s+)?{_IDENT}\s+TO\s+{_IDENT};?\s*$",
+    rf"^\s*ALTER\s+TABLE\s+{_QIDENT}\s+RENAME\s+(?:COLUMN\s+)?{_IDENT}\s+TO\s+{_IDENT}$",
     re.IGNORECASE)
 _ALTER_DROP_RE = re.compile(
-    rf"^\s*ALTER\s+TABLE\s+{_QIDENT}\s+DROP\s+(?:COLUMN\s+)?{_IDENT};?\s*$",
+    rf"^\s*ALTER\s+TABLE\s+{_QIDENT}\s+DROP\s+(?:COLUMN\s+)?{_IDENT}$",
     re.IGNORECASE)
 _CREATE_INDEX_RE = re.compile(
-    rf"^\s*CREATE\s+INDEX\s+(?:{_ID}\s+)?ON\s+{_QIDENT}\s*\(\s*{_IDENT}\s*\);?\s*$",
+    rf"^\s*CREATE\s+INDEX\s+(?:{_ID}\s+)?ON\s+{_QIDENT}\s*\(\s*{_IDENT}\s*\)$",
     re.IGNORECASE)
 
 
@@ -312,57 +250,43 @@ _CONSTRAINT_KW = re.compile(
     r"REFERENCES\s+)", re.IGNORECASE)
 
 
-def _search_outside_quotes(pattern: re.Pattern, text: str):
-    """First regex match whose start lies OUTSIDE single-quoted SQL
-    string literals — a DEFAULT like 'no default given' must not be
-    split at the ' default ' inside the literal."""
-    pos = 0
-    while True:
-        m = pattern.search(text, pos)
-        if m is None:
-            return None
-        if text.count("'", 0, m.start()) % 2 == 0:
-            return m
-        pos = m.start() + 1
+# tokens whose text is never code
+_QUOTED = frozenset({"comment", "dollar", "estring", "string", "ident"})
+
+
+def _code_only(text: str) -> str:
+    """`text` with each quoted token and comment masked to '_' of the
+    same length, so a regex over it matches code only — a DEFAULT like
+    'no default given' must not be split at the ' default ' inside
+    the literal."""
+    return "".join(
+        "_" * len(m.group()) if m.lastgroup in _QUOTED else m.group()
+        for m in sql_tokens(text))
+
+
+def _split_top(text: str, kind: str) -> list[str]:
+    """`text` cut at each token of `kind` outside parentheses."""
+    parts, start, depth = [], 0, 0
+    for m in sql_tokens(text):
+        depth += (m.lastgroup == "open") - (m.lastgroup == "close")
+        if m.lastgroup == kind and depth == 0:
+            parts.append(text[start:m.start()])
+            start = m.end()
+    return parts + [text[start:]]
 
 
 def _split_top_commas(text: str) -> list[str]:
-    """Split on commas outside parens AND outside single-quoted
-    string literals ('' is the SQL escape for a quote)."""
-    parts, cur, depth, inq = [], [], 0, False
-    for ch in text:
-        if ch == "'":
-            inq = not inq
-        elif not inq:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-        if ch == "," and depth == 0 and not inq:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur))
-    return [p.strip() for p in parts if p.strip()]
+    """The non-empty comma-separated items of `text`, split outside
+    parentheses, quotes and comments."""
+    return [p.strip() for p in _split_top(text, "comma") if p.strip()]
 
 
 def _balanced_paren(text: str) -> tuple[str, str]:
-    """text starts at '('; return (inner, rest-after-close).
-    Parens inside single-quoted literals don't count."""
-    depth, inq = 0, False
-    for i, ch in enumerate(text):
-        if ch == "'":
-            inq = not inq
-        elif not inq:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    return text[1:i], text[i + 1:]
-    raise ValueError(f"unbalanced parens in {text!r}")
+    """text starts at '('; return (inner, rest-after-close)."""
+    head, *tail = _split_top(text, "close")
+    if not tail:
+        raise ValueError(f"unbalanced parens in {text!r}")
+    return head[1:], text[len(head) + 1:]
 
 
 def _parse_merge(sql: str):
@@ -442,7 +366,7 @@ def _parse_col_constraints(name: str, tail: str, meta: dict) -> None:
             continue
         if up.startswith("DEFAULT"):
             after = tail[7:].lstrip()
-            m = _search_outside_quotes(_CONSTRAINT_KW, after)
+            m = _CONSTRAINT_KW.search(_code_only(after))
             expr, tail = (after[:m.start()], after[m.start():]) if m \
                 else (after, "")
             meta.setdefault("defaults", {})[name] = expr.strip()
@@ -476,14 +400,14 @@ def _parse_coldefs(coldefs: str):
             up = part.upper()
         if up.startswith("PRIMARY"):
             inner, _ = _balanced_paren(part[part.index("("):])
-            cols = [_unquote(c.strip()) for c in inner.split(",")]
+            cols = [_unquote(c) for c in _split_top_commas(inner)]
             meta.setdefault("keys", []).append(cols)
             meta.setdefault("not_null", []).extend(cols)
             continue
         if up.startswith("UNIQUE"):
             inner, _ = _balanced_paren(part[part.index("("):])
             meta.setdefault("keys", []).append(
-                [_unquote(c.strip()) for c in inner.split(",")])
+                [_unquote(c) for c in _split_top_commas(inner)])
             continue
         if up.startswith("CHECK"):
             inner, _ = _balanced_paren(part[part.index("("):])
@@ -493,7 +417,7 @@ def _parse_coldefs(coldefs: str):
             continue   # catalog-only
         m = re.match(rf"{_IDENT}\s+(.+)$", part, re.DOTALL)
         name, rest = _unquote(m.group(1)), m.group(2).strip()
-        km = _search_outside_quotes(_CONSTRAINT_KW, " " + rest)
+        km = _CONSTRAINT_KW.search(_code_only(" " + rest))
         if km:
             typ = rest[: max(km.start() - 1, 0)].strip()
             _parse_col_constraints(name, rest[km.start() - 1:], meta)
@@ -526,30 +450,12 @@ def _parse_coldefs(coldefs: str):
     return T.StructType(fields), meta
 
 
-def _unquote(ident: str) -> str:
-    """Strip surrounding double quotes and unescape doubled quotes;
-    bare names pass through verbatim (the store is case-preserving,
-    like Spark's catalog)."""
-    if ident.startswith('"') and ident.endswith('"'):
-        return ident[1:-1].replace('""', '"')
-    return ident
-
-
-def _unquote_table(ident: str) -> str:
-    """Unquote each dot-separated part of a possibly schema-qualified,
-    possibly quoted table reference."""
-    parts, cur, inq = [], [], False
-    for ch in ident:
-        if ch == '"':
-            inq = not inq
-            cur.append(ch)
-        elif ch == "." and not inq:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
-    return ".".join(_unquote(p) for p in parts)
+def _unquote(name: str) -> str:
+    """A possibly schema-qualified name with each double-quoted part
+    unquoted; bare parts pass through verbatim (the store is
+    case-preserving, like Spark's catalog)."""
+    return "".join(_ident_name(m) if m.lastgroup == "ident" else m.group()
+                   for m in sql_tokens(name))
 
 
 def _expand_default_values(store, table: str, values_sql: str,
@@ -577,20 +483,10 @@ def _expand_default_values(store, table: str, values_sql: str,
 
 
 def _split_statements(sql: str) -> list[str]:
-    """Split a multi-statement string on semicolons outside quotes
-    (reference: postgres_execute ships the whole string to PQexec,
-    which executes each statement)."""
-    parts, cur, inq = [], [], False
-    for ch in sql:
-        if ch == "'":
-            inq = not inq
-        if ch == ";" and not inq:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
-    return [p.strip() for p in parts if p.strip()]
+    """The bodies of the `;`-separated statements in `sql` (reference:
+    postgres_execute ships the whole string to PQexec, which executes
+    each statement); a statement of only comments is dropped."""
+    return [b for p in _split_top(sql, "semi") if (b := sql_body(p))]
 
 
 def _split_assignments(set_clause: str) -> dict[str, str]:
@@ -628,27 +524,28 @@ def pg_execute(catalog: Catalog, alias: str, sql: str) -> None:
         return
     if db.backend == "store":
         # postgres_execute accepts multiple ';'-separated statements
-        # (reference: postgres_execute_transaction.test)
-        sql = _TEMP_TABLE_RE.sub(r"\1TABLE \2pg_temp.\3", sql)
-        sql = _TEMP_QUALIFIED_RE.sub(r"\1TABLE ", sql)
+        # (reference: postgres_execute_transaction.test); each routes
+        # by its body, and one of only comments does nothing
         stmts = _split_statements(sql)
-        if len(stmts) > 1:
+        if len(stmts) != 1:
             for s in stmts:
                 pg_execute(catalog, alias, s)
             return
+        sql = _TEMP_TABLE_RE.sub(r"\1TABLE \2pg_temp.\3", stmts[0])
+        sql = _TEMP_QUALIFIED_RE.sub(r"\1TABLE ", sql)
         store = db.store
-        if re.match(r"^\s*BEGIN(\s+TRANSACTION)?\s*;?\s*$", sql,
+        if re.match(r"^\s*BEGIN(\s+TRANSACTION)?\s*$", sql,
                     re.IGNORECASE):
             store.begin()
             return
-        if re.match(r"^\s*COMMIT\s*;?\s*$", sql, re.IGNORECASE):
+        if re.match(r"^\s*COMMIT\s*$", sql, re.IGNORECASE):
             store.commit()
-        elif re.match(r"^\s*ROLLBACK\s*;?\s*$", sql, re.IGNORECASE):
+        elif re.match(r"^\s*ROLLBACK\s*$", sql, re.IGNORECASE):
             store.rollback()
-        elif re.match(r"^\s*CHECKPOINT(\s+\w+)?\s*;?\s*$", sql,
+        elif re.match(r"^\s*CHECKPOINT(\s+\w+)?\s*$", sql,
                       re.IGNORECASE):
             store.checkpoint()
-        elif m := re.match(rf"^\s*VACUUM(\s+{_ID})?\s*;?\s*$", sql,
+        elif m := re.match(rf"^\s*VACUUM(\s+{_ID})?\s*$", sql,
                            re.IGNORECASE):
             store.vacuum(_unquote(m.group(1).strip()) if m.group(1)
                          else None)
@@ -656,43 +553,43 @@ def pg_execute(catalog: Catalog, alias: str, sql: str) -> None:
             from .copyio import copy_to
             table, sub, path, fmt = m.groups()
             df = (_pg_sql(catalog.spark, sub) if sub
-                  else store.scan(_unquote_table(table)))
+                  else store.scan(_unquote(table)))
             copy_to(df, path, format=_copy_fmt(fmt))
         elif m := _COPY_FROM_RE.match(sql):
             from .copyio import copy_from
             table, path, fmt = m.groups()
-            t = _unquote_table(table)
+            t = _unquote(table)
             cur = store.scan(t)
             store.insert(t, copy_from(catalog.spark, path,
                                       format=_copy_fmt(fmt),
                                       schema=cur.schema))
         elif parsed := _parse_merge(sql):
             table, src_sql, keys, upd, ins = parsed
-            store.merge(_unquote_table(table),
+            store.merge(_unquote(table),
                         _pg_sql(catalog.spark, src_sql),
                         keys, update_all=upd, insert_all=ins)
         elif m := _TRUNCATE_RE.match(sql):
-            store.delete(_unquote_table(m.group(1)), "true")
+            store.delete(_unquote(m.group(1)), "true")
         elif m := _DELETE_RE.match(sql):
             # no WHERE = whole-table delete (standard SQL). WHERE/SET
             # fragments run through F.expr (Spark's parser) inside the
             # store, so they need the same PG-dialect translation the
             # full-statement paths get
-            store.delete(_unquote_table(m.group(1)),
+            store.delete(_unquote(m.group(1)),
                          _escape_pg_literals(m.group(2))
                          if m.group(2) else "true")
         elif m := _UPDATE_RE.match(sql):
-            store.update(_unquote_table(m.group(1)),
+            store.update(_unquote(m.group(1)),
                          _escape_pg_literals(m.group(3))
                          if m.group(3) else "true",
                          {k: _escape_pg_literals(v) for k, v in
                           _split_assignments(m.group(2)).items()})
         elif m := _INSERT_RE.match(sql):
-            table, collist, src = (_unquote_table(m.group(1)),
+            table, collist, src = (_unquote(m.group(1)),
                                    m.group(2), m.group(3))
             # explicit column list fills the rest from DEFAULTs
             # (attach_defaults.test); without one INSERT is positional
-            cols = ([_unquote(c.strip()) for c in collist.split(",")]
+            cols = ([_unquote(c) for c in _split_top_commas(collist)]
                     if collist else None)
             if src.upper().startswith("VALUES"):
                 src = _expand_default_values(store, table, src, cols)
@@ -700,41 +597,41 @@ def pg_execute(catalog: Catalog, alias: str, sql: str) -> None:
             df = _pg_sql(catalog.spark, src)
             store.insert(table, df, columns=cols)
         elif m := _CTAS_RE.match(sql):
-            store.create_table(_unquote_table(m.group(3)),
+            store.create_table(_unquote(m.group(3)),
                                _pg_sql(catalog.spark, m.group(4)),
                                if_not_exists=bool(m.group(2)),
                                or_replace=bool(m.group(1)))
         elif m := _CREATE_TABLE_RE.match(sql):
             schema, tmeta = _parse_coldefs(m.group(4))
             empty = catalog.spark.createDataFrame([], schema)
-            store.create_table(_unquote_table(m.group(3)), empty,
+            store.create_table(_unquote(m.group(3)), empty,
                                if_not_exists=bool(m.group(2)),
                                or_replace=bool(m.group(1)),
                                meta=tmeta or None)
         elif m := _ALTER_ADD_RE.match(sql):
             typ = m.group(3).strip()
             dt = _coldefs_to_schema(f"c {typ}")["c"].dataType
-            store.add_column(_unquote_table(m.group(1)),
+            store.add_column(_unquote(m.group(1)),
                              _unquote(m.group(2)), "NULL",
                              dt.simpleString())
         elif m := _ALTER_RENAME_TABLE_RE.match(sql):
-            old, new = _unquote_table(m.group(1)), _unquote(m.group(2))
+            old, new = _unquote(m.group(1)), _unquote(m.group(2))
             store.rename_table(old, new)
             catalog.drop_table_views(db, old)
             target = (old.partition(".")[0] + "." + new
                       if "." in old else new)
             catalog.register_table_views(db, target)
         elif m := _ALTER_RENAME_RE.match(sql):
-            store.rename_column(_unquote_table(m.group(1)),
+            store.rename_column(_unquote(m.group(1)),
                                 _unquote(m.group(2)), _unquote(m.group(3)))
         elif m := _ALTER_DROP_RE.match(sql):
-            store.drop_column(_unquote_table(m.group(1)),
+            store.drop_column(_unquote(m.group(1)),
                               _unquote(m.group(2)))
         elif m := _CREATE_INDEX_RE.match(sql):
-            store.create_index(_unquote_table(m.group(1)),
+            store.create_index(_unquote(m.group(1)),
                                _unquote(m.group(2)))
         elif m := _DROP_RE.match(sql):
-            dropped = _unquote_table(m.group(2))
+            dropped = _unquote(m.group(2))
             store.drop_table(dropped, if_exists=bool(m.group(1)))
             catalog.drop_table_views(db, dropped)
         elif m := _CREATE_SCHEMA_RE.match(sql):
@@ -752,11 +649,6 @@ def pg_execute(catalog: Catalog, alias: str, sql: str) -> None:
             # of ManagedStore.create_view's Python API)
             store.create_view(vname, _escape_pg_literals(m.group(3)),
                               or_replace=bool(m.group(1)))
-            df = store.scan_view(vname, register=False)
-            for name in (f"{alias}_{vname}", vname):
-                df.createOrReplaceTempView(name)
-                if name not in db.views:
-                    db.views.append(name)
         elif m := _DROP_VIEW_RE.match(sql):
             vname = _unquote(m.group(2))
             store.drop_view(vname, if_exists=bool(m.group(1)))
@@ -766,21 +658,10 @@ def pg_execute(catalog: Catalog, alias: str, sql: str) -> None:
                     db.views.remove(name)
         else:
             _pg_sql(catalog.spark, sql)
-        # refresh the registered views to the new snapshot (tracked on
-        # the AttachedDatabase so detach() can drop them all);
-        # db.table_names() honors a SCHEMA-scoped attach — iterating
-        # store.tables() here would leak out-of-schema tables
-        for t in db.table_names():
-            catalog.register_table_views(db, t)
-        # stored views must rebind too: a stale DataFrame pins the OLD
-        # snapshot (wrong rows after DML; FileNotFound after a
+        # rebind every view to the new snapshot: a stale DataFrame pins
+        # the OLD one (wrong rows after DML; FileNotFound after a
         # CHECKPOINT/VACUUM garbage-collects its version dir)
-        for v in store.views():
-            vdf = store.scan_view(v, register=False)
-            for name in (f"{alias}_{v}", v):
-                vdf.createOrReplaceTempView(name)
-                if name not in db.views:
-                    db.views.append(name)
+        catalog.refresh_views(db)
         return
     _pg_sql(catalog.spark, sql)
 
@@ -792,10 +673,10 @@ def pg_execute(catalog: Catalog, alias: str, sql: str) -> None:
 # postgres_attach.cpp AttachFunction; test/sql/storage/attach_*.test).
 _ATTACH_RE = re.compile(
     rf"^\s*ATTACH\s+(?:DATABASE\s+)?'((?:[^']|'')*)'\s+AS\s+{_IDENT}\s*"
-    rf"(?:\(([^()]*)\))?\s*;*\s*$", re.IGNORECASE)
+    rf"(?:\(([^()]*)\))?$", re.IGNORECASE)
 _DETACH_RE = re.compile(
-    rf"^\s*DETACH\s+(?:DATABASE\s+)?{_IDENT}\s*;?\s*$", re.IGNORECASE)
-_USE_RE = re.compile(rf"^\s*USE\s+{_IDENT}\s*;?\s*$", re.IGNORECASE)
+    rf"^\s*DETACH\s+(?:DATABASE\s+)?{_IDENT}\s*$", re.IGNORECASE)
+_USE_RE = re.compile(rf"^\s*USE\s+{_IDENT}\s*$", re.IGNORECASE)
 # statements that produce a result set without mutating anything —
 # safe on READ_ONLY attaches, routed to pg_query
 _READ_STMT_RE = re.compile(
@@ -831,7 +712,7 @@ def _parse_attach_options(opts: str) -> dict:
 
 _CALL_ATTACH_RE = re.compile(
     r"^\s*CALL\s+postgres_attach\s*\(\s*'((?:[^']|'')*)'\s*"
-    r"(?:,\s*(.*?))?\s*\)\s*;?\s*$",
+    r"(?:,\s*(.*?))?\s*\)\s*$",
     re.IGNORECASE | re.DOTALL)
 _CALL_KWARG_RE = re.compile(
     r"\s*(\w+)\s*(?::?=|=>)\s*(?:'((?:[^']|'')*)'|(\w+))\s*(?:,|$)")
@@ -847,7 +728,8 @@ def _call_postgres_attach(catalog: Catalog, dsn: str, argstr: str):
     `Catalog.table` and a bare table name in routed SQL reaches the
     server through `pg_query`. Named args map: source_schema →
     attach(schema=...); overwrite=true re-attaches where the default
-    keeps an existing attach of the same DSN; filter_pushdown and
+    keeps an existing attach of the same DSN, and resolves the new
+    source before it detaches the old one; filter_pushdown and
     sink_schema are accepted — attached tables scan with pushdown
     off, and the sink namespace has no Spark equivalent."""
     from .pg_datasource import refuse_standin
@@ -886,17 +768,20 @@ def _call_postgres_attach(catalog: Catalog, dsn: str, argstr: str):
     alias = "pg"
     if dm := re.search(r"dbname=([\w-]+)", dsn):
         alias = dm.group(1)
-    if alias in catalog.attached:
-        existing = catalog.attached[alias]
-        if not overwrite:
-            if existing.source != dsn:
-                raise ValueError(
-                    f"database {alias!r} is already attached to "
-                    f"{existing.source!r}; re-attaching a DIFFERENT "
-                    f"source needs overwrite=true")
-            return existing                 # VIEW IF NOT EXISTS
+    existing = catalog.attached.get(alias)
+    if existing is not None and not overwrite:
+        if existing.source != dsn:
+            raise ValueError(
+                f"database {alias!r} is already attached to "
+                f"{existing.source!r}; re-attaching a DIFFERENT "
+                f"source needs overwrite=true")
+        return existing                     # VIEW IF NOT EXISTS
+    # a source that cannot attach fails here, with the old attach and
+    # its views untouched
+    db = catalog.resolve(dsn, alias, **kwargs)
+    if existing is not None:
         catalog.detach(alias)               # CREATE OR REPLACE VIEW
-    db = catalog.attach(dsn, alias=alias, **kwargs)
+    catalog.add(db)
     if catalog.current is None:
         catalog.current = alias
     return db
@@ -907,11 +792,12 @@ def execute_statement(catalog: Catalog, sql: str):
     ATTACH/DETACH/USE here (incl. the reference's CALL
     postgres_attach table function), everything else to `pg_execute`
     against the current database (set by USE, else the sole attached
-    one)."""
-    if m := _CALL_ATTACH_RE.match(sql):
+    one). Each statement routes by its body."""
+    body = sql_body(sql)
+    if m := _CALL_ATTACH_RE.match(body):
         return _call_postgres_attach(
             catalog, m.group(1).replace("''", "'"), m.group(2))
-    if m := _ATTACH_RE.match(sql):
+    if m := _ATTACH_RE.match(body):
         source = m.group(1).replace("''", "'")
         alias, opts = _unquote(m.group(2)), m.group(3)
         kwargs = _parse_attach_options(opts or "")
@@ -921,10 +807,10 @@ def execute_statement(catalog: Catalog, sql: str):
             # hijack routing away from a database already in use
             catalog.current = alias
         return db
-    if m := _DETACH_RE.match(sql):
+    if m := _DETACH_RE.match(body):
         catalog.detach(_unquote(m.group(1)))
         return None
-    if m := _USE_RE.match(sql):
+    if m := _USE_RE.match(body):
         alias = _unquote(m.group(1))
         if alias not in catalog.attached:
             raise KeyError(f"no attached database {alias!r}")
@@ -941,6 +827,6 @@ def execute_statement(catalog: Catalog, sql: str):
     # read statements return result sets → pg_query (works on
     # READ_ONLY attaches); DDL/DML routes through pg_execute — a
     # single SQL entry point, like the reference's DuckDB shell
-    if _READ_STMT_RE.match(sql):
+    if _READ_STMT_RE.match(body):
         return pg_query(catalog, current, sql)
     return pg_execute(catalog, current, sql)

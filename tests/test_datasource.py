@@ -415,6 +415,27 @@ def test_pg_query_passthrough_live(registered, pg, pg_server):
     cat.detach("q")
 
 
+def test_query_mode_runs_the_statement_body(registered, pg, pg_server):
+    """A `query` scan wraps the statement without the `;` and comments
+    around it, in its schema probe and its task alike, and pg_query
+    decides SELECT-ness on that body (reference: postgres_query.cpp
+    hands the text to Postgres's lexer)."""
+    from postgres_scanner_spark.catalog import Catalog
+    from postgres_scanner_spark.queryfn import pg_query
+    for query in ("SELECT 1 AS a;", "SELECT 1 AS a -- note",
+                  "/* it's; */ SELECT 1 AS a; -- done"):
+        df = (registered.read.format("postgres_scan")
+              .option("dsn", pg_server).option("query", query).load())
+        assert [tuple(r) for r in df.collect()] == [(1,)], query
+    cat = Catalog(registered)
+    cat.attach(pg_server, alias="qb", register_views=False)
+    for query in ("-- header\nSELECT 1 AS a", "SELECT 1 AS a; -- done"):
+        assert [r.a for r in pg_query(cat, "qb", query).collect()] == [1]
+    with pytest.raises(ValueError, match="must be a SELECT"):
+        pg_query(cat, "qb", "-- SELECT\nDROP TABLE ds_items")
+    cat.detach("qb")
+
+
 def test_pg_query_streams_on_executors(registered, pg, pg_server):
     """pg_query must route through the postgres_scan DataSource (no
     driver-side to_pandas materialization) and survive results larger

@@ -459,6 +459,62 @@ def test_spark_to_pg_type_decision_lives_in_types():
         assert _spark_to_pg_maps((pkg / mod).read_text()) == [], mod
 
 
+# what the SQL lexer (pushdown.sql_tokens) reads, for the guard below
+_LEXED = frozenset("'\"$;,()")
+
+
+def _char_scans(source: str) -> list[str]:
+    """Where `source` reads SQL a character at a time: a comparison
+    with a short string that holds a quote, `$`, `;`, `,` or a
+    parenthesis, or a count of one."""
+    import ast
+
+    def lexed(n):
+        return (isinstance(n, ast.Constant) and isinstance(n.value, str)
+                and 0 < len(n.value) <= 3 and bool(_LEXED & set(n.value)))
+
+    found = []
+
+    def visit(node, scope):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            scope = node.name
+        if (isinstance(node, ast.Compare)
+                and any(lexed(n) for n in [node.left, *node.comparators])
+                or isinstance(node, ast.Call)
+                and getattr(node.func, "attr", "") == "count"
+                and node.args and lexed(node.args[0])):
+            found.append(scope)
+        for child in ast.iter_child_nodes(node):
+            visit(child, scope)
+
+    visit(ast.parse(source), "<module>")
+    return found
+
+
+def test_one_sql_lexer():
+    """One Postgres lexer (pushdown.sql_tokens) reads quotes, comments
+    and `;` for the statement router and the connector's query mode:
+    no function there tracks quoting or punctuation by hand."""
+    from pathlib import Path
+    pkg = Path(__file__).resolve().parents[1] / "postgres_scanner_spark"
+    # the detector sees a character loop, a quote count and a
+    # membership test, and passes a pass over the lexer's tokens
+    assert _char_scans(
+        "def split(sql):\n"
+        "    for ch in sql:\n"
+        "        if ch == ';':\n"
+        "            pass\n"
+        "def odd(t):\n"
+        "    return t.count(\"'\") % 2\n"
+        "def quoted(ch):\n"
+        "    return ch in '\"`'\n"
+        "def statements(sql):\n"
+        "    return [m for m in sql_tokens(sql) if m.lastgroup == 'semi']\n"
+    ) == ["split", "odd", "quoted"]
+    for mod in ("queryfn.py", "pg_datasource.py", "pushdown.py"):
+        assert _char_scans((pkg / mod).read_text()) == [], mod
+
+
 def test_filter_pushdown_setting_gates_remote_where():
     filters = [(">", 1), ("isnull",)]
     SETTINGS.set("pg_experimental_filter_pushdown", False)

@@ -205,6 +205,28 @@ def test_call_postgres_attach(registered, pg, pg_server):
     cat2.detach("postgres")
 
 
+def test_call_postgres_attach_overwrite_keeps_old_on_failure(spark,
+                                                           tmp_path):
+    """CALL postgres_attach(..., overwrite=true) checks the new source
+    before it replaces anything: a source that cannot attach leaves
+    the old attach, its views and the current database as they were."""
+    from postgres_scanner_spark.catalog import Catalog
+    from postgres_scanner_spark.queryfn import execute_statement
+    root = tmp_path / "pqdb"
+    spark.range(3).write.parquet(str(root / "nums.parquet"))
+    cat = Catalog(spark)
+    old = cat.attach(str(root), alias="pg")
+    cat.current = "pg"
+    views = list(old.views)
+    with pytest.raises(ValueError, match="does not exist"):
+        execute_statement(
+            cat, "CALL postgres_attach('/nonexistent/x', overwrite=true)")
+    assert cat.attached == {"pg": old} and old.views == views
+    assert cat.current == "pg"
+    assert spark.table("pg_nums").count() == 3
+    cat.detach("pg")
+
+
 def test_bug77_empty_array_dimensions(registered, pg, pg_server):
     """reference: test/sql/scanner/bug77.test (issue #77, array
     dimension detection fails for EMPTY arrays) — an empty array in
@@ -694,6 +716,45 @@ def test_pg_dialect_in_where_set_and_views(spark, tmp_path):
         cat, 'CREATE VIEW mv AS SELECT "MyCol" AS c FROM s_t')
     assert [r.c for r in spark.table("s_mv").collect()] == [42]
     execute_statement(cat, "DETACH s")
+
+
+def test_router_reads_quotes_and_comments_as_postgres(spark, tmp_path):
+    """postgres_execute and postgres_query hand their text to
+    Postgres's lexer: a `;` inside a $$ body or a quoted identifier
+    ends no statement, a `,` inside a quoted column name splits no
+    column list, a comment between statements belongs to neither, and
+    a leading comment does not change what kind a statement is."""
+    from postgres_scanner_spark.catalog import Catalog
+    from postgres_scanner_spark.queryfn import execute_statement
+    from postgres_scanner_spark.storage import ManagedStore
+    root = str(tmp_path / "lex")
+    store = ManagedStore(spark, root)
+    cat = Catalog(spark)
+    execute_statement(cat, f"ATTACH '{root}' AS s (TYPE POSTGRES)")
+    execute_statement(cat, "CREATE TABLE t (id INT, v VARCHAR)")
+    execute_statement(cat, "INSERT INTO t VALUES (1, $$a;b$$); "
+                           "INSERT INTO t VALUES (2, 'c')")
+    # each INSERT writes its own snapshot through the store
+    v = store.current_version("t")
+    execute_statement(cat, "INSERT INTO t VALUES (3, 'x'); "
+                           "-- it's done\nINSERT INTO t VALUES (4, 'y')")
+    assert store.current_version("t") == v + 2
+    assert sorted(tuple(r) for r in store.scan("t").collect()) == [
+        (1, "a;b"), (2, "c"), (3, "x"), (4, "y")]
+    execute_statement(cat, 'CREATE TABLE "a;b" (x INT); '
+                           'INSERT INTO "a;b" VALUES (1)')
+    assert [r.x for r in store.scan("a;b").collect()] == [1]
+    execute_statement(cat, 'CREATE TABLE q ("a,b" INT, c INT)')
+    assert store.scan("q").columns == ["a,b", "c"]
+    for sql in ("-- note\nSELECT COUNT(*) AS n FROM s_t",
+                "/* it's; */ SELECT COUNT(*) AS n FROM s_t; -- done"):
+        assert execute_statement(cat, sql).collect()[0].n == 4
+    execute_statement(cat, "DETACH s")
+    ro = Catalog(spark)
+    execute_statement(ro, f"ATTACH '{root}' AS r (TYPE POSTGRES, READ_ONLY)")
+    assert execute_statement(
+        ro, "-- note\nSELECT COUNT(*) AS n FROM r_t").collect()[0].n == 4
+    execute_statement(ro, "DETACH r")
 
 
 def test_interval_array_scan(registered, pg, pg_server):

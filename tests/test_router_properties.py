@@ -2,9 +2,12 @@
 
 Both review rounds found quote/paren-handling bugs in the DDL parser
 (DEFAULT literals containing commas, constraint keywords inside
-strings). These hypothesis strategies build CREATE TABLE column lists
-and UPDATE SET clauses together with their EXPECTED parse, then
-assert the parser recovers exactly that — pure Python, no Spark.
+strings). These hypothesis strategies build CREATE TABLE column lists,
+UPDATE SET clauses and statement lists together with their EXPECTED
+parse, then assert the parser recovers exactly that — pure Python, no
+Spark. The text mixes every quoting form Postgres lexes ('...',
+E'...', $$...$$, $tag$...$tag$, "..." and both comment forms) with
+the quotes, `;`, `,` and parentheses that must not count inside them.
 """
 
 from __future__ import annotations
@@ -23,11 +26,28 @@ _ident = st.from_regex(r"[a-z][a-z0-9_]{0,8}", fullmatch=True)
 # string literals that contain every character class that has broken
 # the parser: commas, parens, doubled quotes, constraint keywords
 _literal_body = st.text(
-    alphabet="abc,()' DEFAULTnulcheck", min_size=0, max_size=12)
+    alphabet="abc,()' DEFAULTnulcheck;\"\\", min_size=0, max_size=12)
 
 
 def _sql_quote(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
+
+
+# a literal in any Postgres quoting form: standard, E'...' (backslash
+# escapes), $$...$$ and $tag$...$tag$ (raw bodies)
+_literal = st.one_of(
+    _literal_body.map(_sql_quote),
+    _literal_body.map(lambda s: "E'" + s.replace("\\", "\\\\")
+                      .replace("'", "\\'") + "'"),
+    _literal_body.map(lambda s: "$$" + s + "$$"),
+    _literal_body.map(lambda s: f"$q${s}$q$"))
+
+# a column name, bare or double-quoted with quotes, `;`, `,` and
+# parentheses inside ("" escapes a quote)
+_quoted_name = st.text(alphabet="ab,;()' \"", min_size=1, max_size=6)
+_name = st.one_of(
+    _ident.map(lambda n: (n, n)),
+    _quoted_name.map(lambda n: ('"' + n.replace('"', '""') + '"', n)))
 
 
 _types = st.sampled_from(
@@ -37,13 +57,13 @@ _types = st.sampled_from(
 
 @st.composite
 def _coldef(draw):
-    name = draw(_ident)
+    name, unquoted = draw(_name)
     typ = draw(_types)
     parts = [f"{name} {typ}"]
-    expected = {"name": name, "default": None, "not_null": False,
+    expected = {"name": unquoted, "default": None, "not_null": False,
                 "pk": False, "check": None}
     if draw(st.booleans()):
-        lit = _sql_quote(draw(_literal_body))
+        lit = draw(_literal)
         parts.append(f"DEFAULT {lit}")
         expected["default"] = lit
     if draw(st.booleans()):
@@ -54,7 +74,7 @@ def _coldef(draw):
         expected["pk"] = True
         expected["not_null"] = True
     if draw(st.booleans()):
-        lit = _sql_quote(draw(_literal_body))
+        lit = draw(_literal)
         parts.append(f"CHECK ({name} <> {lit})")
         expected["check"] = f"{name} <> {lit}"
     return " ".join(parts), expected
@@ -83,7 +103,9 @@ def test_parse_coldefs_roundtrip(coldefs):
 @given(st.lists(
     st.tuples(_ident, st.sampled_from(
         ["1 + 2", "greatest(a, b)", "'x,y'", "coalesce(v, 'a,b', 0)",
-         "'it''s'", "f(g(1,2), 3)"])),
+         "'it''s'", "f(g(1,2), 3)", "$$a,b'$$", "$q$x, (y$q$",
+         "E'it\\'s, ok'", "coalesce(v /* it's, ( */, 0)",
+         '"we,ird" + 1'])),
     min_size=1, max_size=4, unique_by=lambda t: t[0]))
 def test_split_assignments_roundtrip(pairs):
     clause = ", ".join(f"{c} = {e}" for c, e in pairs)
@@ -92,18 +114,29 @@ def test_split_assignments_roundtrip(pairs):
 
 
 @settings(max_examples=200, deadline=None)
-@given(st.lists(st.sampled_from(
-    ["INSERT INTO t VALUES (1, 'a;b')", "DELETE FROM t WHERE s = ';'",
-     "COMMIT", "UPDATE t SET v = 'x;y' WHERE id = 1"]),
-    min_size=1, max_size=4))
-def test_split_statements_ignores_quoted_semicolons(stmts):
-    joined = "; ".join(stmts)
-    assert _split_statements(joined) == stmts, joined
+@given(st.sampled_from(["", "-- it's; (\n", "/* ; */ "]),
+       st.lists(st.tuples(st.sampled_from(
+           ["INSERT INTO t VALUES (1, 'a;b')", "DELETE FROM t WHERE s = ';'",
+            "COMMIT", "UPDATE t SET v = 'x;y' WHERE id = 1",
+            'CREATE TABLE "a;b" (x INT)', 'INSERT INTO "it\'s;" VALUES (1)',
+            "INSERT INTO t VALUES (1, $$a;b'$$)", "SELECT $q$x; 'y$q$",
+            "SELECT E'it\\'s; ok'", "SELECT 1 /* it's; (, */ + 2",
+            "SELECT 1 -- it's; done\n  + 2"]),
+           # what follows each statement: its `;` and maybe a comment
+           st.sampled_from(["; ", ";", " ;\n", "; -- it's; done, (\n",
+                            ";/* ' ; , ) */ "])),
+           min_size=1, max_size=4))
+def test_split_statements_ignores_quoted_semicolons(head, stmts):
+    joined = head + "".join(s + end for s, end in stmts)
+    assert _split_statements(joined) == [s for s, _ in stmts], joined
 
 
 def test_split_top_commas_quote_aware():
     assert _split_top_commas("a 'x,y', b (1,2), c") == \
         ["a 'x,y'", "b (1,2)", "c"]
+    assert _split_top_commas(
+        '"a,b" INT, $$x,y$$, E\'p\\\',q\', c /* d, ( */') == \
+        ['"a,b" INT', "$$x,y$$", "E'p\\',q'", "c /* d, ( */"]
 
 
 @settings(max_examples=200, deadline=None)
